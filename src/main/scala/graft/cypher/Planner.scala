@@ -2274,9 +2274,10 @@ final class Planner(
     throw new UnsupportedOperationException(
       "mutating clauses require a MutableGraph (use Cypher.execute)"))
 
-  /** Dense 1-based row numbers, partition-parallel (graph.DfUtils). */
-  private def withRowNum(df0: DataFrame, out: String): DataFrame =
-    graft.graph.DfUtils.withRowNum(df0, out)
+  /** Pin `df0`, append dense 1-based row numbers and count its rows — one
+    * job over the pinned partitions (graph.DfUtils.withRowNumCount). */
+  private def withRowNumCount(df0: DataFrame, out: String): (DataFrame, Long) =
+    graft.graph.DfUtils.withRowNumCount(df0, out)
 
   private def gid(labelId: Int, entry: Column): Column =
     lit(labelId.toLong * (1L << graft.types.GraphId.EntryIdBits)) + entry
@@ -2297,13 +2298,13 @@ final class Planner(
         val labelId = st.vertexLabelId(label)
         val base = st.vertexMaxEntry(label)
         val propEntries = n.props.map(_.entries).getOrElse(Nil)
-        var df = withRowNum(scope.df, "__rn")
-          .withColumn(idCol(v), gid(labelId, lit(base) + col("__rn"))).drop("__rn")
-          .withColumn(labelCol(v), lit(label))
+        // property values are computed before the pin, so a
+        // nondeterministic one (rand()) is the same in scope and store
+        var df = scope.df.withColumn(labelCol(v), lit(label))
         for ((k, e) <- propEntries)
           df = df.withColumn(propCol(v, k), exprc.compile(e, scope))
-        df = df.localCheckpoint(true)
-        val cnt = df.count()
+        val (numbered, cnt) = withRowNumCount(df, "__rn")
+        df = numbered.withColumn(idCol(v), gid(labelId, lit(base) + col("__rn"))).drop("__rn")
         val propNames = propEntries.map(_._1)
         st.appendVertices(label,
           df.select(col(idCol(v)).as("id") +: propNames.map(k => col(propCol(v, k)).as(graft.graph.PropName.enc(k))): _*),
@@ -2327,15 +2328,14 @@ final class Planner(
           case _ => (prevVar, nv)
         }
         val propEntries = rel.props.map(_.entries).getOrElse(Nil)
-        var df = withRowNum(scope.df, "__rn")
-          .withColumn(idCol(ev), gid(labelId, lit(base) + col("__rn"))).drop("__rn")
+        var df = scope.df
           .withColumn(labelCol(ev), lit(label))
           .withColumn(startCol(ev), col(idCol(sVar)))
           .withColumn(endCol(ev), col(idCol(eVar)))
         for ((k, e) <- propEntries)
           df = df.withColumn(propCol(ev, k), exprc.compile(e, scope))
-        df = df.localCheckpoint(true)
-        val cnt = df.count()
+        val (numbered, cnt) = withRowNumCount(df, "__rn")
+        df = numbered.withColumn(idCol(ev), gid(labelId, lit(base) + col("__rn"))).drop("__rn")
         val propNames = propEntries.map(_._1)
         st.appendEdges(label,
           df.select(Seq(col(idCol(ev)).as("id"), col(startCol(ev)).as("start_id"),
@@ -2677,16 +2677,15 @@ final class Planner(
 
     val markerIdCol = idCol(relVars.head)
     val (probe1, _) = probe("left_outer")
-    val missing = distinctCanon(probe1.filter(col(markerIdCol).isNull)
-      .select(lit(1).as("__one") +: keyCols.map(qcol): _*))
-    val nMissing = missing.count()
+    val (missing, nMissing) = withRowNumCount(distinctCanon(probe1.filter(col(markerIdCol).isNull)
+      .select(lit(1).as("__one") +: keyCols.map(qcol): _*)), "__rn")
     val firstRelLabel = rels.head.types.head
     val firstRelBase = st.edgeMaxEntry(firstRelLabel)
 
     if (nMissing > 0) {
       // one whole-pattern instance per distinct key combination; labels
       // shared by several pattern elements get disjoint id ranges
-      var created = withRowNum(missing, "__rn")
+      var created = missing
       var vBase = Map.empty[String, Long] // label -> next unallocated base
       // a node variable repeated within the pattern is ONE entity
       // (reference: MERGE p=()-[:B]->(x:C)-[:E]->(x:C)… creates a
@@ -2720,7 +2719,6 @@ final class Planner(
           gid(st.edgeLabelId(l), lit(base) + col("__rn")))
         (i, l, base)
       }
-      created = created.localCheckpoint(true)
       for ((i, l, base) <- nodeAlloc)
         st.appendVertices(l, created.select(col(s"__idn$i").as("id") +:
           nodeKeys(i).map(k => qcol(s"__kn$i#${k._1}").as(graft.graph.PropName.enc(k._1))): _*), base + nMissing)
@@ -2791,14 +2789,12 @@ final class Planner(
     // find missing key combinations and create them
     val ex1 = existing()
     val probe = keyed.join(ex1, matchCond(ex1), "left_outer")
-    val missingKeys = distinctCanon(probe.filter(col(idCol(v)).isNull)
-      .select(keyNames.map(k => col(s"__key#$k")): _*))
-    val nMissing = missingKeys.count()
+    val (missingKeys, nMissing) = withRowNumCount(distinctCanon(probe.filter(col(idCol(v)).isNull)
+      .select(keyNames.map(k => col(s"__key#$k")): _*)), "__rn")
     if (nMissing > 0) {
       val base = st.vertexMaxEntry(label)
-      val created = withRowNum(missingKeys, "__rn")
+      val created = missingKeys
         .withColumn("id", gid(labelId, lit(base) + col("__rn"))).drop("__rn")
-        .localCheckpoint(true)
       st.appendVertices(label,
         created.select(col("id") +: keyNames.map(k => col(s"__key#$k").as(graft.graph.PropName.enc(k))): _*),
         base + nMissing)
@@ -2859,15 +2855,13 @@ final class Planner(
 
     val ex1 = existing()
     val probe = keyed.join(ex1, matchCond(ex1), "left_outer")
-    val missing = distinctCanon(probe.filter(col(idCol(ev)).isNull)
+    val (missing, nMissing) = withRowNumCount(distinctCanon(probe.filter(col(idCol(ev)).isNull)
       .select(col(idCol(sVar)).as("start_id") +: col(idCol(eVar)).as("end_id") +:
-        keyNames.map(k => col(s"__key#$k")): _*))
-    val nMissing = missing.count()
+        keyNames.map(k => col(s"__key#$k")): _*)), "__rn")
     if (nMissing > 0) {
       val base = st.edgeMaxEntry(label)
-      val created = withRowNum(missing, "__rn")
+      val created = missing
         .withColumn("id", gid(labelId, lit(base) + col("__rn"))).drop("__rn")
-        .localCheckpoint(true)
       st.appendEdges(label,
         created.select(Seq(col("id"), col("start_id"), col("end_id")) ++
           keyNames.map(k => col(s"__key#$k").as(graft.graph.PropName.enc(k))): _*),

@@ -29,20 +29,22 @@ object CsvLoader {
       .csv(path)
     val labelId = store.vertexLabelId(label)
     val base = store.vertexMaxEntry(label)
-    val withEntry =
-      if (idFieldExists && raw.columns.contains("id"))
-        raw.withColumn("__entry", col("id").cast(LongType)).drop("id")
-      else DfUtils.withRowNum(raw, "__rn")
-        .withColumn("__entry", lit(base) + col("__rn")).drop("__rn")
-    val props = withEntry.columns.filterNot(_ == "__entry").toSeq
-    val rows = withEntry.select(
+    def withId(withEntry: DataFrame): DataFrame = withEntry.select(
       (lit(labelId.toLong * (1L << GraphId.EntryIdBits)) + col("__entry")).as("id") +:
-        props.map(col): _*)
-      .localCheckpoint(true)
-    val n = rows.count()
-    val maxEntry = rows.agg(max(col("id"))).collect().head.getLong(0)
-    store.appendVertices(label, rows, GraphId.entryId(maxEntry))
-    n
+        withEntry.columns.filterNot(_ == "__entry").toSeq.map(col): _*)
+    if (idFieldExists && raw.columns.contains("id")) {
+      val rows = withId(raw.withColumn("__entry", col("id").cast(LongType)).drop("id"))
+        .localCheckpoint(true)
+      val n = rows.count()
+      val maxEntry = rows.agg(max(col("id"))).collect().head.getLong(0)
+      store.appendVertices(label, rows, GraphId.entryId(maxEntry))
+      n
+    } else {
+      val (numbered, n) = DfUtils.withRowNumCount(raw, "__rn")
+      store.appendVertices(label,
+        withId(numbered.withColumn("__entry", lit(base) + col("__rn")).drop("__rn")), base + n)
+      n
+    }
   }
 
   def loadEdgeLabel(
@@ -71,15 +73,14 @@ object CsvLoader {
       case (acc, (l, id)) => when(col("end_vertex_type") === l, lit(id.toLong)).otherwise(acc)
     }
     val props = raw.columns.filterNot(required.contains).toSeq
-    val rows = DfUtils.withRowNum(raw, "__rn")
+    val (numbered, n) = DfUtils.withRowNumCount(raw, "__rn")
+    val rows = numbered
       .withColumn("__entry", lit(base) + col("__rn")).drop("__rn")
       .select(Seq(
         (lit(labelId.toLong * (1L << GraphId.EntryIdBits)) + col("__entry")).as("id"),
         (labelIdCol * (1L << GraphId.EntryIdBits) + col("start_id").cast(LongType)).as("start_id"),
         (labelIdColEnd * (1L << GraphId.EntryIdBits) + col("end_id").cast(LongType)).as("end_id")) ++
         props.map(col): _*)
-      .localCheckpoint(true)
-    val n = rows.count()
     store.appendEdges(label, rows, base + n)
     n
   }

@@ -1,6 +1,9 @@
 package graft.graph
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 object DfUtils {
@@ -26,27 +29,40 @@ object DfUtils {
       .drop("__salt")
   }
 
-  /** Append a dense 1-based row number without a global single-partition
-    * window (which would serialize every row through one task at scale):
-    * local row_number per partition + broadcast-joined partition offsets.
-    * The only non-parallel step is a window over one row per partition.
-    * The input is checkpointed so both passes see the same partitioning.
-    */
-  def withRowNum(df0: DataFrame, out: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pid = "__rn_pid"; val loc = "__rn_loc"; val off = "__rn_off"
-    val withPid = df0.withColumn(pid, spark_partition_id()).localCheckpoint(true)
-    val offsets = withPid.groupBy(col(pid)).agg(count(lit(1)).as("__rn_cnt"))
-      .withColumn(off, coalesce(
-        sum(col("__rn_cnt")).over(
-          Window.orderBy(col(pid)).rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(col(pid), col(off))
-    withPid
-      .withColumn(loc, row_number().over(
-        Window.partitionBy(col(pid)).orderBy(monotonically_increasing_id())))
-      .join(broadcast(offsets), Seq(pid))
-      .withColumn(out, (col(off) + col(loc)).cast("long"))
-      .drop(pid, loc, off)
+  /** `f` of each partition of `df` (index i of the result is partition
+    * i), in one job that adds no shuffle. */
+  def summarize[A: ClassTag](df: DataFrame)(f: Iterator[InternalRow] => A): Array[A] =
+    df.queryExecution.toRdd.mapPartitions(it => Iterator.single(f(it))).collect()
+
+  /** Pin `df` and [[summarize]] it in ONE job: a lazy local checkpoint
+    * marks the rows for pinning, and the summary job is the first to
+    * compute them, so the same tasks store the pinned blocks and return
+    * the summaries. An eager checkpoint would spend a job of its own
+    * before the summary could run. Shuffle stages under `df` still run as
+    * their own jobs when the checkpoint is planned. */
+  def pinAndSummarize[A: ClassTag](df: DataFrame)(
+      f: Iterator[InternalRow] => A): (DataFrame, Array[A]) = {
+    val pinned = df.localCheckpoint(eager = false)
+    (pinned, summarize(pinned)(f))
+  }
+
+  /** Append a dense 1-based row number and return it with the row count:
+    * one pin plus one job, no window and no shuffle. The input is pinned
+    * while its per-partition counts are collected ([[pinAndSummarize]]);
+    * a row's number is its partition's offset (the sum of the counts
+    * before it) plus its index within the partition (the low 33 bits of
+    * `monotonically_increasing_id`, whose high bits are the partition
+    * index) plus one. The numbers are deterministic because the pinned
+    * partitions never change: every query over the returned frame, the
+    * caller's scope and the store alike, sees the same number per row.
+    * Expressions that must agree with the numbers (nondeterministic
+    * property values included) belong in `df0`, before the pin. */
+  def withRowNumCount(df0: DataFrame, out: String): (DataFrame, Long) = {
+    val (pinned, counts) = pinAndSummarize(df0)(_.size.toLong)
+    val offsets = counts.scanLeft(0L)(_ + _)
+    val mid = monotonically_increasing_id()
+    val rowNum = element_at(typedLit(offsets.init), shiftright(mid, 33).cast("int") + 1) +
+      mid.bitwiseAND(lit((1L << 33) - 1)) + 1L
+    (pinned.withColumn(out, rowNum), offsets.last)
   }
 }

@@ -3,8 +3,6 @@ package graft.graph
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.types.GraphId
-
 /** Parquet-backed graph persistence — the durable analogue of the
   * reference's per-label heap tables + ag_catalog rows (reference:
   * sql/age_main.sql:54-86; table shape label_commands.c:361-420).
@@ -127,21 +125,9 @@ object GraphStore {
   }
 
   /** Load into a mutable store (max entry ids recovered from the data —
-    * the analogue of sequence state). */
+    * the analogue of sequence state — in one job over every label). */
   def loadMutable(spark: SparkSession, path: String): MutableGraph = {
-    val g = load(spark, path)
-    val m = new MutableGraph(g.name, spark)
-    def maxEntry(df: org.apache.spark.sql.DataFrame): Long =
-      if (df.isEmpty) 0L
-      else df.agg(max(col("id"))).collect()(0).getLong(0) & GraphId.EntryIdMax
-    for (l <- g.vertexLabels) {
-      m.registerVertexLabel(l.name, l.labelId)
-      m.appendVertices(l.name, l.df, maxEntry(l.df))
-    }
-    for (l <- g.edgeLabels) {
-      m.registerEdgeLabel(l.name, l.labelId)
-      m.appendEdges(l.name, l.df, maxEntry(l.df))
-    }
+    val m = MutableGraph.from(load(spark, path), spark)
     m.markClean()
     m
   }
@@ -360,8 +346,16 @@ object GraphStore {
   // ---- versioned commits (Delta-inspired manifest log) -------------------
   //
   //   <path>/_log/v<N>/          manifest: one JSON row per label with the
-  //                              data dir holding that label AT version N
+  //                              data dir holding that label AT version N,
+  //                              its id sequence state (max_entry) and its
+  //                              Spark schema as JSON (schema)
   //   <path>/data/<k>_<label>@<N>/   immutable parquet written by commit N
+  //
+  // Readers parse the manifest with a fixed schema and each label's
+  // parquet with its recorded schema, so opening a version runs one job
+  // (the manifest read) instead of one schema-inference job per label. A
+  // manifest written before the schema column existed reads it as null,
+  // and those labels fall back to parquet schema inference.
   //
   // A commit writes parquet for DIRTY labels only (MutableGraph tracks
   // them); unchanged labels' manifest rows point at the dir an earlier
@@ -378,6 +372,30 @@ object GraphStore {
   private def fs(spark: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private val ManifestSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq("name", "kind", "label", "label_id", "dir", "max_entry", "schema").map {
+      case f @ ("label_id" | "max_entry") => StructField(f, LongType)
+      case f => StructField(f, StringType)
+    })
+  }
+
+  private def readManifest(spark: SparkSession, path: String, v: Long) =
+    spark.read.schema(ManifestSchema).json(s"$path/_log/v$v").collect().toSeq
+
+  /** A label's committed parquet, read with the manifest's recorded
+    * schema (inferred for manifests that predate it). */
+  private def readLabel(spark: SparkSession, path: String, r: org.apache.spark.sql.Row) = {
+    val dir = s"$path/${r.getAs[String]("dir")}"
+    Option(r.getAs[String]("schema")) match {
+      case Some(js) => spark.read
+        .schema(org.apache.spark.sql.types.DataType.fromJson(js)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+        .parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+  }
 
   /** Committed version numbers, ascending (complete commits only). */
   def versions(spark: SparkSession, path: String): Seq[Long] = {
@@ -399,7 +417,7 @@ object GraphStore {
     val newV = prev.map(_ + 1).getOrElse(0L)
     val prevDirs: Map[(String, String), String] = prev match {
       case Some(v) =>
-        spark.read.json(s"$path/_log/v$v").collect().toSeq
+        readManifest(spark, path, v)
           .map(r => (r.getAs[String]("kind"), r.getAs[String]("label")) ->
             r.getAs[String]("dir")).toMap
       case None => Map.empty
@@ -417,12 +435,14 @@ object GraphStore {
         dir
       }
     }
+    // a clean label's frame holds what its reused directory holds, so
+    // the frame's schema is the directory's for dirty and clean alike
     val rows =
       g.vertexLabels.map(l => (m.name, "v", l.name, l.labelId,
-        place("v", l.name, l.df, dirtyV(l.name)), m.vertexMaxEntry(l.name))) ++
+        place("v", l.name, l.df, dirtyV(l.name)), m.vertexMaxEntry(l.name), l.df.schema.json)) ++
       g.edgeLabels.map(l => (m.name, "e", l.name, l.labelId,
-        place("e", l.name, l.df, dirtyE(l.name)), m.edgeMaxEntry(l.name)))
-    rows.toDF("name", "kind", "label", "label_id", "dir", "max_entry")
+        place("e", l.name, l.df, dirtyE(l.name)), m.edgeMaxEntry(l.name), l.df.schema.json))
+    rows.toDF(ManifestSchema.fieldNames.toSeq: _*)
       .coalesce(1).write.mode(SaveMode.ErrorIfExists).json(s"$path/_log/v$newV")
     m.markClean()
     newV
@@ -439,10 +459,9 @@ object GraphStore {
   def commitAndRebind(m: MutableGraph, path: String): Long = {
     val spark = m.spark
     val v = commit(m, path)
-    val rows = spark.read.json(s"$path/_log/v$v").collect().toSeq
-    for (r <- rows) {
+    for (r <- readManifest(spark, path, v)) {
       val label = r.getAs[String]("label")
-      val df = spark.read.parquet(s"$path/${r.getAs[String]("dir")}")
+      val df = readLabel(spark, path, r)
       if (r.getAs[String]("kind") == "v") m.rebindVertexLabel(label, df)
       else m.rebindEdgeLabel(label, df)
     }
@@ -456,18 +475,16 @@ object GraphStore {
     require(vs.nonEmpty, s"no committed versions at $path")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"version $v not committed at $path (have ${vs.mkString(",")})")
-    val rows = spark.read.json(s"$path/_log/v$v").collect().toSeq
+    val rows = readManifest(spark, path, v)
     val name = rows.headOption.map(_.getAs[String]("name")).getOrElse("graph")
     def side(kind: String) = rows.filter(_.getAs[String]("kind") == kind)
       .sortBy(_.getAs[Long]("label_id"))
     new PropertyGraph(
       name,
       side("v").map(r => VertexLabel(r.getAs[String]("label"),
-        r.getAs[Long]("label_id").toInt,
-        spark.read.parquet(s"$path/${r.getAs[String]("dir")}"))),
+        r.getAs[Long]("label_id").toInt, readLabel(spark, path, r))),
       side("e").map(r => EdgeLabel(r.getAs[String]("label"),
-        r.getAs[Long]("label_id").toInt,
-        spark.read.parquet(s"$path/${r.getAs[String]("dir")}"))))
+        r.getAs[Long]("label_id").toInt, readLabel(spark, path, r))))
   }
 
   /** Resume a committed version as a mutable store — id allocation
@@ -477,12 +494,12 @@ object GraphStore {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"no committed versions at $path")
     val v = version.getOrElse(vs.last)
-    val rows = spark.read.json(s"$path/_log/v$v").collect().toSeq
+    val rows = readManifest(spark, path, v)
     val name = rows.headOption.map(_.getAs[String]("name")).getOrElse("graph")
     val m = new MutableGraph(name, spark)
     for (r <- rows.sortBy(_.getAs[Long]("label_id"))) {
       val label = r.getAs[String]("label")
-      val df = spark.read.parquet(s"$path/${r.getAs[String]("dir")}")
+      val df = readLabel(spark, path, r)
       if (r.getAs[String]("kind") == "v") {
         m.registerVertexLabel(label, r.getAs[Long]("label_id").toInt)
         m.appendVertices(label, df, r.getAs[Long]("max_entry"))

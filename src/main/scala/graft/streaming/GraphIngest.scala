@@ -39,8 +39,8 @@ final case class IngestBatchMetrics(
   *      rows to CREATE — an O(batch) probe of one label scan, never a
   *      full-label re-aggregation (same scale contract as the unique-
   *      constraint batch probe, MutableGraph.checkUniqueBatch);
-  *   3. new entries get ids partition-parallel (DfUtils.withRowNum —
-  *      local row numbers + broadcast offsets, no global window);
+  *   3. new entries get ids partition-parallel (DfUtils.withRowNumCount —
+  *      per-partition offsets plus in-partition indexes, no window);
   *   4. keys that already exist get property overwrites through
   *      MutableGraph.setVertexProperties (one copy-on-write column swap
   *      for the whole batch).
@@ -215,14 +215,14 @@ object GraphIngest {
       if (n > 0) {
         val labelId = store.vertexLabelId(label)
         val maxE = store.vertexMaxEntry(label)
-        val withIds = DfUtils.withRowNum(cached, "__rn")
+        // the numbered frame is pinned: a later recompute of the lazy
+        // union appendVertices builds never renumbers
+        val withIds = DfUtils.withRowNumCount(cached, "__rn")._1
           .withColumn("id",
             (lit(labelId.toLong << GraphId.EntryIdBits) + lit(maxE) + col("__rn"))
               .cast("long"))
           .select((col("id") +: props.map(p => qc(p).as(p))): _*)
-        // localCheckpoint: pin the allocated ids — appendVertices unions
-        // lazily and a later recompute must not renumber
-        store.appendVertices(label, withIds.localCheckpoint(true), maxE + n)
+        store.appendVertices(label, withIds, maxE + n)
       }
       n
     } finally if (knownCount < 0L) cached.unpersist()
@@ -308,13 +308,13 @@ object GraphIngest {
           if (n > 0) {
             val labelId = store.edgeLabelId(edgeLabel)
             val maxE = store.edgeMaxEntry(edgeLabel)
-            val withIds = DfUtils.withRowNum(fresh, "__rn")
+            val withIds = DfUtils.withRowNumCount(fresh, "__rn")._1
               .withColumn("id",
                 (lit(labelId.toLong << GraphId.EntryIdBits) + lit(maxE) + col("__rn"))
                   .cast("long"))
               .select((Seq(col("id"), col("start_id"), col("end_id")) ++
                 props.map(p => qc(p).as(p))): _*)
-            store.appendEdges(edgeLabel, withIds.localCheckpoint(true), maxE + n)
+            store.appendEdges(edgeLabel, withIds, maxE + n)
           }
           // "updated" for edges = resolved pairs that already existed
           // (MERGE matched instead of creating)
