@@ -30,7 +30,8 @@ object Procedures {
   }
 
   val registry: Map[String, Proc] = Map(
-    // analytics (GraphX bridge)
+    // analytics: driver endgame on driver-sized graphs, GraphX
+    // (pagerank, components, sssp) above the collect budget
     "pagerank" -> ((s, g, args) =>
       GraphAlgos.pageRank(g,
         tol = args.headOption.map(num(_, 0.0001)).getOrElse(0.0001),

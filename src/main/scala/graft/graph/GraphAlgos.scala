@@ -5,9 +5,14 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** GraphX bridge for whole-graph analytics (the BASELINE.json north star:
-  * "graph analytics queries map to GraphX"). The property graph's long
-  * ids are GraphX VertexIds directly — no re-keying shuffle.
+/** Whole-graph analytics. Every procedure has two paths: a driver
+  * endgame that collects the graph once per snapshot (see [[collected]])
+  * and replays the distributed arithmetic in tight array loops, taken
+  * while the graph fits the collect budget and the kernel's step bound
+  * fits the work budget ([[endgameFits]]); and a distributed path for
+  * everything above it — DataFrame rounds, or the GraphX library for
+  * `pageRank`, `connectedComponents` and `sssp` (the property graph's
+  * long ids are GraphX VertexIds directly — no re-keying shuffle).
   */
 object GraphAlgos {
 
@@ -334,10 +339,6 @@ object GraphAlgos {
     * (~30-50M steps/s vs ~500M/s for the flat-array kernels). */
   private[graph] val LocalTriangleWork = 50000000L
 
-  /** Shared endgame gate: `localWork` < 0 → default [[LocalIterWork]]
-    * budget, 0 → distributed path forced (specs and the IterScale
-    * harness), > 0 → explicit step budget. `rows` is the collect
-    * volume, `work` the kernel's elementary-step count. */
   /** Path-decision journal for EXPLAIN: every algorithm gate records
     * the path it took and the MEASURED gate values (ring-bounded;
     * cleared by the Cypher EXPLAIN entry before planning). Motivation:
@@ -368,15 +369,23 @@ object GraphAlgos {
     buf += line; if (buf.length > 64) buf.remove(0)
   }
 
+  /** Shared endgame gate: `localWork` < 0 → default [[LocalIterWork]]
+    * budget, 0 → distributed path forced (specs and the IterScale
+    * harness), > 0 → explicit step budget. `rows` is the collect
+    * volume, `work` the kernel's elementary-step count — negative when
+    * the kernel has no step bound, which fails the gate. `detail`
+    * appends operator-specific gate values to the recorded decision. */
   private def endgameFits(spark: SparkSession, op: String, rows: Long,
-      work: Long, localWork: Long): Boolean = {
+      work: Long, localWork: Long, detail: String = ""): Boolean = {
     val budget = if (localWork >= 0L) localWork else LocalIterWork
     val rowBudget = sccLocalBudget(spark)
-    val fits = budget > 0 && rows <= rowBudget && work <= budget
+    val fits = budget > 0 && rows <= rowBudget && work >= 0L && work <= budget
     recordPath(spark,
       s"$op: ${if (fits) "driver endgame" else "distributed path"} " +
         s"(rows=$rows vs collect budget=$rowBudget, " +
-        s"steps=$work vs work budget=${math.max(0L, budget)})")
+        s"steps=${if (work >= 0L) work.toString else "unbounded"} " +
+        s"vs work budget=${math.max(0L, budget)}" +
+        s"${if (detail.isEmpty) "" else ", " + detail})")
     fits
   }
 
@@ -487,10 +496,6 @@ object GraphAlgos {
     (s, d)
   }
 
-  /** The directed (start_id, end_id) list as primitive arrays. */
-  private def collectDirected(g: PropertyGraph): (Array[Long], Array[Long]) =
-    collectPairs(g.allEdges.select(col("start_id"), col("end_id")))
-
   /** Primitive-array collect of a one-long-column frame. */
   private def collectLongs(df: DataFrame): Array[Long] = {
     val rows = df.queryExecution.executedPlan.executeCollect()
@@ -500,27 +505,27 @@ object GraphAlgos {
     out
   }
 
-  private def collectVerts(g: PropertyGraph): Array[Long] =
-    collectLongs(g.allVertices.select(col("id")))
+  /** (vertex ids, start ids, end ids) per immutable graph snapshot, in
+    * collect order. Every driver endgame reads these arrays, so a
+    * session that calls several procedures against one snapshot
+    * collects it once instead of twice per call. Weak keys, like
+    * [[sizeCache]]: store reloads and mutable-graph snapshots are
+    * fresh objects and never see stale arrays. Values sit behind a
+    * SoftReference, so heap pressure drops them (the next call
+    * collects again) instead of failing the JVM. Callers share the
+    * arrays and must never mutate them. */
+  private val collectCache: java.util.Map[PropertyGraph,
+      java.lang.ref.SoftReference[(Array[Long], Array[Long], Array[Long])]] =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[PropertyGraph,
+      java.lang.ref.SoftReference[(Array[Long], Array[Long], Array[Long])]]())
 
-  /** Gate-then-collect prelude for endgames: hands (nV, nE,
-    * collect-thunk) to `body`. The gate counts run UN-persisted — at
-    * scale the gate fails and the at-scale caller must not have paid a
-    * MEMORY_AND_DISK write of the edge list for two counts it threw
-    * away. When the gate passes (driver-sized graph by definition) the
-    * thunk reads each projection exactly once more; the second
-    * lineage computation is bounded by the same row budget that let
-    * the collect through. The thunk must be invoked at most once,
-    * inside `body`. */
-  private def withPinnedFrames[T](g: PropertyGraph)(
-      body: (Long, Long, () => (Array[Long], Array[Long], Array[Long])) => T): T = {
-    val vDf = g.allVertices.select(col("id"))
-    val eDf = g.allEdges.select(col("start_id"), col("end_id"))
-    body(vDf.count(), eDf.count(), () => {
-      val (s, d) = collectPairs(eDf)
-      (collectLongs(vDf), s, d)
-    })
-  }
+  private[graph] def collected(g: PropertyGraph): (Array[Long], Array[Long], Array[Long]) =
+    Option(collectCache.get(g)).flatMap(r => Option(r.get)).getOrElse {
+      val (s, d) = collectPairs(g.allEdges.select(col("start_id"), col("end_id")))
+      val v = (collectLongs(g.allVertices.select(col("id"))), s, d)
+      collectCache.put(g, new java.lang.ref.SoftReference(v))
+      v
+    }
 
   /** Vertices ∪ edge endpoints (sorted, deduped) — the vertex closure
     * GraphX's `Graph(vs, es)` builds by materializing dangling
@@ -550,10 +555,106 @@ object GraphAlgos {
     XGraph(vs, es)
   }
 
-  /** PageRank → (id, rank). */
-  def pageRank(g: PropertyGraph, tol: Double = 0.0001, resetProb: Double = 0.15): DataFrame = {
+  /** Upper bound on [[pageRankLocal]]'s edge passes for `n` vertices,
+    * or -1 when none exists (tol ≤ 0, resetProb ∉ (0, 1)). A round's
+    * messages carry the senders' deltas, and a recipient's new delta is
+    * (1 − resetProb) × its message sum, so the total message mass of
+    * round k is at most n·resetProb·(1 − resetProb)^k; a round sends
+    * only while some delta exceeds tol, so at most
+    * ⌈log(tol / (n·resetProb)) / log(1 − resetProb)⌉ rounds send, and
+    * the +2 covers the final empty pass and rounding. */
+  private[graph] def pageRankRoundBound(n: Long, tol: Double,
+      resetProb: Double): Long =
+    if (!(tol > 0.0) || !(resetProb > 0.0 && resetProb < 1.0)) -1L
+    else {
+      val r = math.log(tol / (math.max(1L, n) * resetProb)) /
+        math.log(1.0 - resetProb)
+      math.min(1e15, math.max(0.0, math.ceil(r))).toLong + 2L
+    }
+
+  /** Driver-local PageRank — exact replay of GraphX
+    * `PageRank.runUntilConvergence` over the closed vertex set `verts`
+    * (sorted, see [[closeVerts]]): vertex state (pr, delta) starts at
+    * the library's first vertex-program step, edge weight is
+    * 1/outDegree over the raw directed list (multi-edges and self-loops
+    * count), and each round only vertices that received a message in
+    * the previous round send, and only while delta > tol. A recipient
+    * adds (1 − resetProb) × its message sum. Ranks are finally rescaled
+    * to sum to the vertex count (SPARK-18847). Message sums accumulate
+    * in edge order instead of GraphX's partition order, ~1e-15
+    * relative. */
+  private[graph] def pageRankLocal(verts: Array[Long], srcs: Array[Long],
+      dsts: Array[Long], tol: Double, resetProb: Double): Array[(Long, Double)] = {
+    val n = verts.length
+    val idx = new LongIndex(verts)
+    val m = srcs.length
+    val srcI = new Array[Int](m)
+    val dstI = new Array[Int](m)
+    val od = new Array[Int](n)
+    var i = 0
+    while (i < m) {
+      srcI(i) = idx.get(srcs(i)); dstI(i) = idx.get(dsts(i)); od(srcI(i)) += 1
+      i += 1
+    }
+    val w = Array.tabulate(n)(v => if (od(v) > 0) 1.0 / od(v) else 0.0)
+    // the library's initial message resetProb / (1 − resetProb) through
+    // its vertex program, from (0, 0)
+    val pr0 = 0.0 + (1.0 - resetProb) * (resetProb / (1.0 - resetProb))
+    val pr = Array.fill(n)(pr0)
+    val delta = Array.fill(n)(pr0)
+    var active = Array.fill(n)(true)
+    var got = new Array[Boolean](n)
+    val msg = new Array[Double](n)
+    var sent = true
+    while (sent) {
+      sent = false
+      java.util.Arrays.fill(msg, 0.0)
+      java.util.Arrays.fill(got, false)
+      i = 0
+      while (i < m) {
+        val a = srcI(i)
+        if (active(a) && delta(a) > tol) {
+          val b = dstI(i)
+          msg(b) += delta(a) * w(a); got(b) = true; sent = true
+        }
+        i += 1
+      }
+      var v = 0
+      while (v < n) {
+        if (got(v)) {
+          val np = pr(v) + (1.0 - resetProb) * msg(v)
+          delta(v) = np - pr(v); pr(v) = np
+        }
+        v += 1
+      }
+      val t = active; active = got; got = t
+    }
+    val scale = n.toDouble / pr.sum
+    Array.tabulate(n)(k => (verts(k), pr(k) * scale))
+  }
+
+  /** PageRank until convergence → (id, rank) over the vertices and
+    * every edge endpoint, ranks summing to the vertex count. A
+    * driver-sized graph runs the exact [[pageRankLocal]] replay, gated
+    * on rows × [[pageRankRoundBound]]; above the collect or work budget
+    * (or with no round bound) GraphX's `pageRank` runs. `localWork`
+    * follows [[endgameFits]]; 0 forces GraphX. */
+  def pageRank(g: PropertyGraph, tol: Double = 0.0001, resetProb: Double = 0.15,
+      localWork: Long = -1L): DataFrame = {
     val spark = g.allVertices.sparkSession
     import spark.implicits._
+    val (nV, nE) = graphSizes(g)
+    val rows = nV + nE
+    // nV + 2·nE bounds the closed vertex count without collecting
+    val bound = pageRankRoundBound(nV + 2 * nE, tol, resetProb)
+    val work = if (bound < 0L) -1L
+      else math.min(Long.MaxValue.toDouble, rows.toDouble * bound).toLong
+    if (endgameFits(spark, "pagerank", rows, work, localWork,
+        s"round bound=${if (bound < 0L) "none" else bound.toString}")) {
+      val (vA, srcs, dsts) = collected(g)
+      return pageRankLocal(closeVerts(vA, srcs, dsts), srcs, dsts, tol, resetProb)
+        .toSeq.toDF("id", "rank")
+    }
     toGraphX(g).pageRank(tol, resetProb).vertices
       .map { case (id, rank) => (id, rank) }.toDF("id", "rank")
   }
@@ -595,20 +696,16 @@ object GraphAlgos {
     // bounded-collect endgame (see [[LocalIterWork]]): union-find is
     // near-linear integer work, and GraphX CC's multi-round Pregel is
     // pure scheduling cost on a driver-sized graph
-    val local = withPinnedFrames(g) { (nV, nE, collect) =>
-      val endRows = nV + 2 * nE
-      if (endgameFits(spark, "connected_components", endRows,
-          2L * endRows, localWork)) {
-        val (vA, srcs, dsts) = collect()
-        Some(ccLocal(new LocalCsr(closeVerts(vA, srcs, dsts), srcs, dsts)))
-      } else None
+    val (nV, nE) = graphSizes(g)
+    val endRows = nV + 2 * nE
+    if (endgameFits(spark, "connected_components", endRows,
+        2L * endRows, localWork)) {
+      val (vA, srcs, dsts) = collected(g)
+      return ccLocal(new LocalCsr(closeVerts(vA, srcs, dsts), srcs, dsts))
+        .toSeq.toDF("id", "component")
     }
-    local match {
-      case Some(rows) => rows.toSeq.toDF("id", "component")
-      case None =>
-        toGraphX(g).connectedComponents().vertices
-          .map { case (id, comp) => (id, comp) }.toDF("id", "component")
-    }
+    toGraphX(g).connectedComponents().vertices
+      .map { case (id, comp) => (id, comp) }.toDF("id", "component")
   }
 
   /** Triangle count per vertex → (id, triangles). */
@@ -697,8 +794,7 @@ object GraphAlgos {
           recordPath(spark, "triangles: driver endgame " +
             s"(merge-intersection bound=${workUb.toLong} <= work budget=$budget, " +
             s"rows=${nV + 2 * nE} <= collect budget=${sccLocalBudget(spark)})")
-          val vA = collectVerts(g)
-          val (srcs, dsts) = collectDirected(g)
+          val (vA, srcs, dsts) = collected(g)
           Some(trianglesLocal(
             new LocalCsr(closeVerts(vA, srcs, dsts), srcs, dsts)))
         }
@@ -805,29 +901,67 @@ object GraphAlgos {
     (res, e1, o)
   }
 
+  /** Driver-local hop distances to `landmark` — exact replay of GraphX
+    * `ShortestPaths` for one landmark: one BFS from the landmark over
+    * IN-edges (a vertex's distance is one more than its out-neighbor's)
+    * on the closed vertex set `verts`. Empty when the landmark is
+    * absent. */
+  private[graph] def ssspLocal(verts: Array[Long], srcs: Array[Long],
+      dsts: Array[Long], landmark: Long): Array[(Long, Long)] = {
+    val idx = new LongIndex(verts)
+    val root = idx.get(landmark)
+    if (root < 0) return Array.empty
+    val n = verts.length
+    val m = srcs.length
+    // reverse CSR: inStart(v) until inStart(v + 1) indexes v's in-neighbors
+    val inStart = new Array[Int](n + 1)
+    val dstI = Array.tabulate(m)(i => idx.get(dsts(i)))
+    dstI.foreach(d => inStart(d + 1) += 1)
+    var v = 0
+    while (v < n) { inStart(v + 1) += inStart(v); v += 1 }
+    val fill = inStart.clone()
+    val inFrom = new Array[Int](m)
+    var i = 0
+    while (i < m) {
+      inFrom(fill(dstI(i))) = idx.get(srcs(i)); fill(dstI(i)) += 1; i += 1
+    }
+    val dist = Array.fill(n)(-1)
+    val queue = new Array[Int](n)
+    dist(root) = 0; queue(0) = root
+    var head = 0; var tail = 1
+    while (head < tail) {
+      val u = queue(head); head += 1
+      var e = inStart(u)
+      while (e < inStart(u + 1)) {
+        val s = inFrom(e)
+        if (dist(s) < 0) { dist(s) = dist(u) + 1; queue(tail) = s; tail += 1 }
+        e += 1
+      }
+    }
+    Array.tabulate(tail)(k => (verts(queue(k)), dist(queue(k)).toLong))
+  }
+
   /** Single-source shortest-path hop distances along edge direction →
     * (id, dist) for every vertex that can reach `landmark` (the BFS the
-    * reference runs per shortestpath activation, age_vle.c:2983, here as
-    * whole-graph Pregel — O(diameter) rounds, no driver loop). */
-  def sssp(g: PropertyGraph, landmark: Long): DataFrame = {
+    * reference runs per shortestpath activation, age_vle.c:2983). A
+    * driver-sized graph runs the one-BFS [[ssspLocal]] replay; above
+    * the collect budget GraphX `ShortestPaths` runs it as whole-graph
+    * Pregel — O(diameter) rounds, no driver loop. `localWork` follows
+    * [[endgameFits]]; 0 forces GraphX. */
+  def sssp(g: PropertyGraph, landmark: Long, localWork: Long = -1L): DataFrame = {
     val spark = g.allVertices.sparkSession
     import spark.implicits._
+    val (nV, nE) = graphSizes(g)
+    val rows = nV + nE
+    if (endgameFits(spark, "sssp", rows, 2L * rows, localWork)) {
+      val (vA, srcs, dsts) = collected(g)
+      return ssspLocal(closeVerts(vA, srcs, dsts), srcs, dsts, landmark)
+        .toSeq.toDF("id", "dist")
+    }
     org.apache.spark.graphx.lib.ShortestPaths.run(toGraphX(g), Seq(landmark))
       .vertices
       .flatMap { case (id, spMap) => spMap.get(landmark).map(d => (id, d.toLong)) }
       .toDF("id", "dist")
-  }
-
-  /** Label propagation communities → (id, community_label); synchronous
-    * LPA, fixed rounds (GraphX lib). Kept for comparison; the CALL
-    * procedure uses [[labelPropagationDet]] because GraphX's tie-break
-    * (first max in hash-map iteration order) is not reproducible across
-    * runs or partitionings. */
-  def labelPropagation(g: PropertyGraph, maxSteps: Int = 5): DataFrame = {
-    val spark = g.allVertices.sparkSession
-    import spark.implicits._
-    org.apache.spark.graphx.lib.LabelPropagation.run(toGraphX(g), maxSteps)
-      .vertices.map { case (id, l) => (id, l) }.toDF("id", "community")
   }
 
   /** Deterministic synchronous label propagation → (id, community).
@@ -901,8 +1035,8 @@ object GraphAlgos {
     if (endgameFits(spark, "lpa", endRows,
         math.max(1L, steps.toLong) * endRows, localWork)) {
       import spark.implicits._
-      val (srcs, dsts) = collectDirected(g)
-      return lpaLocal(new LocalCsr(collectVerts(g), srcs, dsts), steps)
+      val (vA, srcs, dsts) = collected(g)
+      return lpaLocal(new LocalCsr(vA, srcs, dsts), steps)
         .toSeq.toDF("id", "community")
     }
     // every round's vote join streams 2|E| rows through one exchange —
@@ -1032,8 +1166,7 @@ object GraphAlgos {
       // closed vertex set: the distributed peel works on the edge
       // frame alone, so a dangling endpoint peels (and can be
       // emitted) like any vertex — the kernel must see it too
-      val vA = collectVerts(g)
-      val (srcs, dsts) = collectDirected(g)
+      val (vA, srcs, dsts) = collected(g)
       return kcoreLocal(new LocalCsr(closeVerts(vA, srcs, dsts), srcs, dsts),
           k, maxIter)
         .toSeq.toDF("id", "degree")
@@ -1250,8 +1383,8 @@ object GraphAlgos {
     if (endgameFits(spark, "hits", endNV + endNE,
         2L * math.max(1L, rounds.toLong) * (endNV + endNE), localWork)) {
       import spark.implicits._
-      val (srcs, dsts) = collectDirected(g)
-      return hitsLocal(collectVerts(g), srcs, dsts, rounds)
+      val (vA, srcs, dsts) = collected(g)
+      return hitsLocal(vA, srcs, dsts, rounds)
         .toSeq.toDF("id", "hub", "auth")
     }
     val parts = spark.sessionState.conf.numShufflePartitions
@@ -1709,8 +1842,8 @@ object GraphAlgos {
     if (endgameFits(spark, "ppr", endNV + endNE,
         math.max(1L, rounds.toLong) * (endNV + endNE), localWork)) {
       import spark.implicits._
-      val (srcs, dsts) = collectDirected(g)
-      return pprLocal(collectVerts(g), srcs, dsts, source, alpha, rounds)
+      val (vA, srcs, dsts) = collected(g)
+      return pprLocal(vA, srcs, dsts, source, alpha, rounds)
         .toSeq.toDF("id", "rank")
     }
     val parts = spark.sessionState.conf.numShufflePartitions
@@ -1948,14 +2081,15 @@ object GraphAlgos {
         s"steps=${nS * endRows} vs work budget=$workBudget)")
     if (btwLocal) {
       import spark.implicits._
-      val (sA, dA) = collectDirected(g)
-      val vA = collectVerts(g)
+      val (vShared, sA, dA) = collected(g)
       // the distributed level loop expands over the raw edge frame, so
       // shortest paths ROUTE THROUGH dangling endpoints — the CSR must
       // include them; sources and emitted rows stay the REAL vertices
       // (the distributed pick draws from the vertex frame and the
       // result left-joins onto it)
-      val csr = new LocalCsr(closeVerts(vA, sA, dA), sA, dA)
+      val csr = new LocalCsr(closeVerts(vShared, sA, dA), sA, dA)
+      // sorted COPY: the collected arrays are shared across calls
+      val vA = vShared.clone()
       java.util.Arrays.sort(vA)
       // the same seeded portable-hash top-k as the distributed pick:
       // md5Long(s) == portableHash64(lit(s)) by construction, and the
@@ -2615,8 +2749,7 @@ object GraphAlgos {
       // walkers start from REAL vertices, but the distributed step
       // never vertex-joins its neighbor index — a walk may step onto
       // a dangling endpoint, so the CSR is built over the closed set
-      val vA = collectVerts(g)
-      val (srcs, dsts) = collectDirected(g)
+      val (vA, srcs, dsts) = collected(g)
       return walksLocal(new LocalCsr(closeVerts(vA, srcs, dsts), srcs, dsts),
           vA, steps, saltPrefix)
         .toSeq.toDF("walker", "dest")

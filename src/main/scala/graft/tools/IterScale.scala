@@ -196,11 +196,14 @@ object IterScale {
       "triangles" -> (() =>
         GraphAlgos.triangleCount(TpchGraph(spark, sfDir), localWork = 0L)),
       "triangles_auto" -> (() => GraphAlgos.triangleCount(TpchGraph(spark, sfDir))),
-      // GraphX-backed survivors (Pregel with combiners — message
+      // GraphX at-scale paths (Pregel with combiners — message
       // volume is degree-bounded, unlike TriangleCount's neighborhood
       // sets): timed here so an OOM-class regression at 10× surfaces
-      "pagerank" -> (() => GraphAlgos.pageRank(TpchGraph(spark, sfDir))),
-      "sssp_hops" -> (() => GraphAlgos.sssp(TpchGraph(spark, sfDir), landmark)))
+      "pagerank" -> (() => GraphAlgos.pageRank(TpchGraph(spark, sfDir), localWork = 0L)),
+      "pagerank_auto" -> (() => GraphAlgos.pageRank(TpchGraph(spark, sfDir))),
+      "sssp_hops" -> (() =>
+        GraphAlgos.sssp(TpchGraph(spark, sfDir), landmark, localWork = 0L)),
+      "sssp_hops_auto" -> (() => GraphAlgos.sssp(TpchGraph(spark, sfDir), landmark)))
 
     val tg = tradeGraph()
     println(s"[iterscale] dir=$sfDir trade nV=${tg.allVertices.count()} " +

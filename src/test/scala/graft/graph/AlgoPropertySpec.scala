@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{SparkJobs, SparkTestBase}
 import graft.types.GraphId
 
 /** Property-style checks for the deterministic iterative algorithms
@@ -554,6 +554,8 @@ class AlgoPropertySpec extends SparkTestBase {
       pairs(GraphAlgos.connectedComponents(g, localWork = 0L)))
     assert(pairs(GraphAlgos.triangleCount(g)) ===
       pairs(GraphAlgos.triangleCount(g, localWork = 0L)))
+    assertPageRankAndSsspReplay(g, Seq(GraphId.make(VL, 1), GraphId.make(VL, 77),
+      GraphId.make(VL, 999)))
     // closed form: K5 has C(5,3) = 10 triangles, 6 per vertex
     val k5 = Generators.completeGraph(spark, 5)
     val tri = pairs(GraphAlgos.triangleCount(k5))
@@ -643,6 +645,27 @@ class AlgoPropertySpec extends SparkTestBase {
       assert(math.abs(a._2 - b._2) < 1e-9, s"hits hub ${a._1}")
       assert(math.abs(a._3 - b._3) < 1e-9, s"hits auth ${a._1}")
     }
+    // landmarks: a real vertex, a dangling endpoint, an absent id
+    assertPageRankAndSsspReplay(g, Seq(v(2), v(91), v(500)))
+  }
+
+  /** pageRank's driver replay equals GraphX within 1e-9 relative, and
+    * sssp's equals GraphX exactly at every landmark (an absent landmark
+    * gives the empty result on both paths). */
+  private def assertPageRankAndSsspReplay(g: PropertyGraph, landmarks: Seq[Long]): Unit = {
+    def ranks(localWork: Long) = GraphAlgos.pageRank(g, localWork = localWork)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
+    val (pL, pX) = (ranks(-1L), ranks(0L))
+    assert(pL.map(_._1) === pX.map(_._1), "pagerank ids")
+    for ((a, b) <- pL.zip(pX))
+      assert(math.abs(a._2 - b._2) <= 1e-9 * math.max(math.abs(a._2), math.abs(b._2)),
+        s"pagerank ${a._1}: ${a._2} vs ${b._2}")
+    for (lm <- landmarks) {
+      def dists(localWork: Long) = GraphAlgos.sssp(g, lm, localWork = localWork)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+      assert(dists(-1L) === dists(0L), s"sssp landmark $lm")
+    }
+    assert(GraphAlgos.sssp(g, GraphId.make(VL, 12345)).count() === 0L)
   }
 
   test("iterative endgames equal their distributed paths: lpa, walks, kcore") {
@@ -700,6 +723,83 @@ class AlgoPropertySpec extends SparkTestBase {
     assert(pL.map(_._1).toSeq === pD.map(_._1).toSeq)
     for ((a, b) <- pL.zip(pD))
       assert(math.abs(a._2 - b._2) < 1e-9, s"rank ${a._1}")
+  }
+
+  test("endgames collect a snapshot once: later procedures launch no Spark job") {
+    val g = randomGraph(60, 150, seed = 31, parts = 3)
+    assert(SparkJobs.count(spark)(GraphAlgos.connectedComponents(g)) > 0)
+    val src = GraphId.make(VL, 3)
+    val later = Seq[(String, () => Unit)](
+      "pagerank" -> (() => GraphAlgos.pageRank(g)),
+      "sssp" -> (() => GraphAlgos.sssp(g, src)),
+      "hits" -> (() => GraphAlgos.hits(g)),
+      "ppr" -> (() => GraphAlgos.personalizedPageRank(g, src)),
+      "lpa" -> (() => GraphAlgos.labelPropagationDet(g, 3)),
+      "kcore" -> (() => GraphAlgos.kCore(g, 2)),
+      "walks" -> (() => GraphAlgos.randomWalks(g, 3)),
+      "betweenness" -> (() => GraphAlgos.betweenness(g, nSources = 0)),
+      "connected_components" -> (() => GraphAlgos.connectedComponents(g)))
+    for ((name, call) <- later)
+      assert(SparkJobs.count(spark)(call()) === 0, name)
+  }
+
+  test("endgame snapshot cache: a MutableGraph write is seen by connected_components") {
+    val m = new MutableGraph("cc_cache", spark)
+    graft.cypher.Cypher.execute(spark, m,
+      "UNWIND range(1, 4) AS i CREATE (:N {i: i})-[:R]->(:N {i: i + 10})")
+    def components: Long = graft.cypher.Cypher.query(spark, m.snapshot,
+        "CALL connected_components() YIELD id, component " +
+          "RETURN count(DISTINCT component) AS n")
+      .collect().head.getLong(0)
+    assert(components === 4L)
+    graft.cypher.Cypher.execute(spark, m,
+      "MATCH (a:N {i: 11}), (b:N {i: 2}) CREATE (a)-[:R]->(b)")
+    assert(components === 3L)
+  }
+
+  test("endgame snapshot cache: no endgame mutates the shared arrays") {
+    // betweenness sorts the vertex ids; it must sort a copy, or every
+    // later endgame on the snapshot reads reordered arrays
+    val g = randomGraph(70, 160, seed = 37, parts = 3)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    val cc = pairs(GraphAlgos.connectedComponents(g))
+    val (v0, s0, d0) = GraphAlgos.collected(g)
+    val copies = (v0.clone(), s0.clone(), d0.clone())
+    GraphAlgos.betweenness(g, nSources = 0).collect()
+    GraphAlgos.randomWalks(g, 3).collect()
+    GraphAlgos.hits(g).collect()
+    GraphAlgos.pageRank(g).collect()
+    GraphAlgos.sssp(g, GraphId.make(VL, 5)).collect()
+    val (v1, s1, d1) = GraphAlgos.collected(g)
+    assert((v1 eq v0) && (s1 eq s0) && (d1 eq d0), "cache miss on one snapshot")
+    assert(v1.sameElements(copies._1) && s1.sameElements(copies._2) &&
+      d1.sameElements(copies._3), "cached arrays mutated")
+    assert(pairs(GraphAlgos.connectedComponents(g)) === cc)
+  }
+
+  test("pagerank and sssp record their path decisions with their gate values") {
+    val g = randomGraph(40, 90, seed = 43, parts = 2)
+    def decisions(f: => Unit): Seq[String] = {
+      GraphAlgos.clearPathDecisions(spark)
+      f
+      GraphAlgos.recentPathDecisions(spark)
+    }
+    val pr = decisions(GraphAlgos.pageRank(g))
+    assert(pr.exists(d => d.startsWith("pagerank: driver endgame") &&
+      d.contains("round bound=")), pr)
+    assert(decisions(GraphAlgos.pageRank(g, localWork = 0L))
+      .exists(_.startsWith("pagerank: distributed path")))
+    assert(decisions(GraphAlgos.sssp(g, GraphId.make(VL, 1)))
+      .exists(_.startsWith("sssp: driver endgame")))
+    assert(decisions(GraphAlgos.sssp(g, GraphId.make(VL, 1), localWork = 0L))
+      .exists(_.startsWith("sssp: distributed path")))
+    // no provable round bound → the gate fails whatever the budget
+    assert(GraphAlgos.pageRankRoundBound(100L, 0.0, 0.15) === -1L)
+    assert(GraphAlgos.pageRankRoundBound(100L, 1e-4, 1.0) === -1L)
+    assert(GraphAlgos.pageRankRoundBound(100L, 1e-4, 0.0) === -1L)
+    // n·resetProb·(1 − resetProb)^k ≤ tol ⇔ k ≥ log(1e-4/15)/log(0.85) ≈ 73.3
+    assert(GraphAlgos.pageRankRoundBound(100L, 1e-4, 0.15) === 76L)
   }
 
   test("kCore satisfies its fixpoint definition and is partition-invariant") {

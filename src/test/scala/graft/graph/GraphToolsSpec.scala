@@ -361,7 +361,7 @@ class GraphToolsSpec extends SparkTestBase {
 
   test("label propagation assigns every vertex a community") {
     val g = graft.graph.TpchGraph(spark, "/root/testdata/sf0.001")
-    val df = GraphAlgos.labelPropagation(g, maxSteps = 3)
+    val df = GraphAlgos.labelPropagationDet(g, steps = 3)
     assert(df.count() === g.allVertices.count())
   }
 

@@ -1,14 +1,11 @@
 package graft.graph
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{SparkJobs, SparkTestBase}
 import graft.cypher.Cypher
 
 /** The copy-on-write write path: row numbering, label-local rewrites,
@@ -190,39 +187,7 @@ class WritePathSpec extends SparkTestBase {
 
   // ---- job budget ------------------------------------------------------
 
-  private val BudgetKey = "graft.test.jobBudget"
-  private val budgetTag = new java.util.concurrent.atomic.AtomicLong()
-  private val jobsByTag = new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]()
-  private val markers = new java.util.concurrent.ConcurrentHashMap[String, CountDownLatch]()
-  private lazy val listener = {
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(BudgetKey))).foreach { t =>
-          Option(markers.get(t)).fold(
-            jobsByTag.computeIfAbsent(t, _ => new AtomicInteger()).incrementAndGet(): Unit)(
-            _.countDown())
-        }
-    }
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-
-  /** Spark jobs `f` launches from this thread (AQE stages and broadcasts
-    * inherit the tag). A marker job posted after `f` flushes the listener
-    * queue, which delivers events in order. */
-  private def jobs(f: => Unit): Int = {
-    listener
-    val sc = spark.sparkContext
-    val tag = s"budget-${budgetTag.incrementAndGet()}"
-    val marker = s"$tag-marker"
-    markers.put(marker, new CountDownLatch(1))
-    sc.setLocalProperty(BudgetKey, tag)
-    try f finally sc.setLocalProperty(BudgetKey, null)
-    sc.setLocalProperty(BudgetKey, marker)
-    try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(BudgetKey, null)
-    assert(markers.get(marker).await(60, TimeUnit.SECONDS), "listener queue did not drain")
-    Option(jobsByTag.get(tag)).fold(0)(_.get)
-  }
+  private def jobs(f: => Unit): Int = SparkJobs.count(spark)(f)
 
   test("job budget of the write path: CREATE, MERGE create arm, DETACH DELETE, commit, loadVersion") {
     val dir = Files.createTempDirectory("graft-wp-budget").toString
