@@ -1127,15 +1127,13 @@ final class Planner(
             // whole conjunct is EXISTS — semi join, no flag column needed
             val (outer, rid) = withRid(merged, Some(clauseVars(cs)))
             val inner = planCorrelated(dedupByRid(outer, rid), cs, rid)
-            merged = Scope(
-              outer.df.join(inner.df.select(col(rid)), Seq(rid), "left_semi").drop(rid),
-              merged.bindings)
+            merged = merged.withDf(
+              outer.df.join(inner.df.select(col(rid)), Seq(rid), "left_semi").drop(rid))
           case Not(ExistsSubquery(cs)) =>
             val (outer, rid) = withRid(merged, Some(clauseVars(cs)))
             val inner = planCorrelated(dedupByRid(outer, rid), cs, rid)
-            merged = Scope(
-              outer.df.join(inner.df.select(col(rid)), Seq(rid), "left_anti").drop(rid),
-              merged.bindings)
+            merged = merged.withDf(
+              outer.df.join(inner.df.select(col(rid)), Seq(rid), "left_anti").drop(rid))
           case other if elidedConjuncts.contains(other) =>
             // fully pushed into every edge scan of its traversal —
             // pre-filtering already enumerated exactly the surviving
@@ -1154,7 +1152,7 @@ final class Planner(
             val keepCols = merged.bindings.flatMap(b => s4.colsOf(b)).toSet
             val dropCols = s4.bindings.filterNot(b => keepNames(b.name))
               .flatMap(b => s4.colsOf(b)).filterNot(keepCols)
-            merged = Scope(filteredDf.drop(dropCols: _*), merged.bindings)
+            merged = merged.withDf(filteredDf.drop(dropCols: _*))
         }
       }
       merged
@@ -1164,7 +1162,7 @@ final class Planner(
       val (d, b) =
         if (isUnit(scope)) (pdf, pbind)
         else joinOnSharedVars(scope.df, scope.bindings, pdf, pbind, "inner")
-      applyFilters(Scope(d, b))
+      applyFilters(scope.rebind(d, b))
     } else {
       // OPTIONAL MATCH: the WHERE belongs to the optional side — rows of
       // the incoming scope survive with nulls when no candidate match
@@ -1175,13 +1173,13 @@ final class Planner(
       val (outer, rid) = withRid(scope, Some(clauseVars(Seq(m))))
       val (d, b) = joinOnSharedVars(
         dedupByRid(outer, rid).df, outer.bindings, pdf, pbind, "inner")
-      val filtered = applyFilters(Scope(d, b))
+      val filtered = applyFilters(scope.rebind(d, b))
       val outerNames = outer.bindings.map(_.name).toSet
       val patternOnly = filtered.bindings.filterNot(x => outerNames(x.name))
       val rightCols = qcol(rid) +: patternOnly.flatMap(x => filtered.colsOf(x)).map(qcol)
       val res = outer.df.join(filtered.df.select(rightCols: _*), Seq(rid), "left_outer")
         .drop(rid)
-      Scope(res, scope.bindings ++ patternOnly)
+      scope.rebind(res, scope.bindings ++ patternOnly)
     }
   }
 
@@ -1331,21 +1329,24 @@ final class Planner(
     // keys through the dedup, flags-distinct and join-back exchanges).
     // Container bindings keep their full columns (a VLE/path's arrays
     // ARE its identity; zero-length ids=[] does not determine the
-    // endpoints).
-    def keyColsOf(b: Binding): Seq[String] = b match {
-      case _: NodeB | _: EdgeB => Seq(Columns.idCol(b.name))
-      case other => scope.colsOf(other)
+    // endpoints). So does an entity a SET/REMOVE earlier in the
+    // statement rewrote: `MATCH (n),(m) SET n.x = m.v` leaves one id
+    // with a different n.x per row, and keying by id alone would let
+    // one row's subquery answer stand for the others.
+    def idKeyed(b: Binding): Boolean = b match {
+      case _: NodeB | _: EdgeB => !scope.rewritten(b.name)
+      case _ => false
     }
+    def keyColsOf(b: Binding): Seq[String] =
+      if (idKeyed(b)) Seq(Columns.idCol(b.name)) else scope.colsOf(b)
     val keyCols: Seq[String] = refVars match {
       case Some(vs) =>
         scope.bindings.filter(b => vs(b.name)).flatMap(keyColsOf)
       case None =>
         // whole row, entity bindings narrowed to their id — columns not
         // owned by any binding (planner temps) stay in the key
-        val dependent: Set[String] = scope.bindings.collect {
-          case b @ (_: NodeB | _: EdgeB) =>
-            scope.colsOf(b).filterNot(_ == Columns.idCol(b.name))
-        }.flatten.toSet
+        val dependent: Set[String] = scope.bindings.filter(idKeyed)
+          .flatMap(b => scope.colsOf(b).filterNot(_ == Columns.idCol(b.name))).toSet
         scope.df.columns.toSeq.filterNot(dependent)
     }
     // an empty key (uncorrelated subquery) gets a constant: one
@@ -1355,7 +1356,7 @@ final class Planner(
       else struct(keyCols.map(c =>
         groupableKey(col(c), scope.df.schema(c).dataType).as(c)): _*)
     val df = scope.df.withColumn(rid, key)
-    (Scope(df, scope.bindings :+ ValueB(rid)), rid)
+    (scope.rebind(df, scope.bindings :+ ValueB(rid)), rid)
   }
 
   /** distinct() that tolerates map-typed columns (Spark set operations
@@ -1448,7 +1449,7 @@ final class Planner(
     * outer rows would double-count in COUNT{}/CALL{}; for EXISTS it is
     * pure wasted work. */
   private def dedupByRid(outer: Scope, rid: String): Scope =
-    Scope(outer.df.dropDuplicates(Seq(rid)), outer.bindings)
+    outer.withDf(outer.df.dropDuplicates(Seq(rid)))
 
   private def hasUpdatingClause(cs: Seq[Clause]): Boolean = cs.exists {
     case _: CreateClause | _: MergeClause | _: SetClause | _: DeleteClause => true
@@ -1465,7 +1466,7 @@ final class Planner(
     val flags = inner.df.select(col(rid)).distinct().withColumn(flag, lit(true))
     val joined = outer.df.join(flags, Seq(rid), "left_outer")
       .withColumn(flag, coalesce(col(flag), lit(false))).drop(rid)
-    (Scope(joined, scope.bindings :+ ValueB(flag)), flag)
+    (scope.rebind(joined, scope.bindings :+ ValueB(flag)), flag)
   }
 
   /** COUNT { … } as a per-row long column. */
@@ -1476,7 +1477,7 @@ final class Planner(
     val counts = inner.df.groupBy(col(rid)).agg(count(lit(1)).as(cnt))
     val joined = outer.df.join(counts, Seq(rid), "left_outer")
       .withColumn(cnt, coalesce(col(cnt), lit(0L))).drop(rid)
-    (Scope(joined, scope.bindings :+ ValueB(cnt)), cnt)
+    (scope.rebind(joined, scope.bindings :+ ValueB(cnt)), cnt)
   }
 
   /** Replace EXISTS{}/COUNT{} nodes inside `exprs` with Var references to
@@ -1541,7 +1542,7 @@ final class Planner(
               (acc, vl) => when(lid === vl.labelId, lit(vl.name)).otherwise(acc)
             }
           }
-        scope = Scope(scope.df.withColumn(tmp, c), scope.bindings :+ ValueB(tmp))
+        scope = scope.rebind(scope.df.withColumn(tmp, c), scope.bindings :+ ValueB(tmp))
         mapping += (fn -> Var(tmp))
         Some(fn)
       case _ => None
@@ -1560,7 +1561,7 @@ final class Planner(
             val ndf = base.select(
               col("id").as(idCol(nv)) +: col("label").as(labelCol(nv)) +:
                 props.map(p => col(p).as(propCol(nv, p))): _*)
-            scope = Scope(
+            scope = scope.rebind(
               scope.df.join(ndf, col(endpoint) === col(idCol(nv)), "left_outer"),
               scope.bindings :+ NodeB(nv, props))
             mapping += (fn -> Var(nv))
@@ -1613,7 +1614,7 @@ final class Planner(
               (b.isInstanceOf[VleB] && pf == "relationships")) =>
         val idcol = if (pf == "nodes") nidsCol(pv) else idsCol(pv)
         if (!scope.bindings.exists(_.name == idcol))
-          scope = Scope(scope.df, scope.bindings :+ ValueB(idcol))
+          scope = scope.rebind(scope.df, scope.bindings :+ ValueB(idcol))
         mapping += (fn -> FuncCall("size", Seq(Var(idcol)), distinct = false))
         Some(fn)
       case _ => None
@@ -1731,7 +1732,7 @@ final class Planner(
           .withColumn(tmpR,
             when(eidsC.isNull, lit(null).cast(arrTR))
               .otherwise(coalesce(col(tmpR), array().cast(arrTR))))
-        scope = Scope(joined,
+        scope = scope.rebind(joined,
           scope.bindings :+ ValueB(tmpN) :+ ValueB(tmpR))
         fns.foreach {
           case fn @ FuncCall("nodes", _, _) => mapping += (fn -> Var(tmpN))
@@ -1818,7 +1819,7 @@ final class Planner(
           .withColumn(tmp,
             when(idsC.isNull, lit(null).cast(arrT))
               .otherwise(coalesce(col(tmp), array().cast(arrT))))
-        scope = Scope(joined, scope.bindings :+ ValueB(tmp))
+        scope = scope.rebind(joined, scope.bindings :+ ValueB(tmp))
         mapping += (fn -> Var(tmp))
         Some(fn)
       case _ => None
@@ -1829,7 +1830,7 @@ final class Planner(
 
   private def dropTemps(scope: Scope, temps: Seq[String]): Scope =
     if (temps.isEmpty) scope
-    else Scope(scope.df.drop(temps: _*),
+    else scope.rebind(scope.df.drop(temps: _*),
       scope.bindings.filterNot(b => temps.contains(b.name)))
 
   /** CALL { subquery }: lateral per-row execution. A trailing RETURN adds
@@ -1894,7 +1895,7 @@ final class Planner(
         }
         j.drop(rid)
       }
-    Scope(joined, scope.bindings ++ newBs)
+    scope.rebind(joined, scope.bindings ++ newBs)
   }
 
   /** CALL { A UNION [ALL] B ... }: every arm must end in RETURN with the
@@ -1914,7 +1915,7 @@ final class Planner(
         acc = acc.unionByName(df.df)
         if (!allFlag) acc = acc.distinct()
       }
-      return Scope(acc, dfs.head.bindings)
+      return scope.rebind(acc, dfs.head.bindings)
     }
     val allVars = Some(arms.flatMap(clauseVars).toSet)
     val (outer, rid) = withRid(scope, allVars)
@@ -1936,7 +1937,7 @@ final class Planner(
       if (!allFlag) acc = acc.distinct()
     }
     val joined = outer.df.join(acc, Seq(rid), "inner").drop(rid)
-    Scope(joined, scope.bindings ++ newBs)
+    scope.rebind(joined, scope.bindings ++ newBs)
   }
 
   // ---- CALL -------------------------------------------------------------
@@ -1959,7 +1960,7 @@ final class Planner(
       val selected = proc.select(
         yields.map { case (cn, al) => col(cn).as(al.getOrElse(cn)) }: _*)
       val df = if (isUnit(scope)) selected else scope.df.crossJoin(selected)
-      var out = Scope(df,
+      var out = scope.rebind(df,
         scope.bindings ++ yields.map { case (cn, al) => ValueB(al.getOrElse(cn)) })
       c.where.foreach(w => out = out.withDf(out.df.filter(exprc.compile(w, out))))
       return out
@@ -1973,7 +1974,7 @@ final class Planner(
         s"procedure ${c.name} has no column $cn (has: ${proc.columns.mkString(", ")})")
     val selected = proc.select(yields.map { case (cn, al) => col(cn).as(al.getOrElse(cn)) }: _*)
     val df = if (isUnit(scope)) selected else scope.df.crossJoin(selected)
-    var out = Scope(df, scope.bindings ++ yields.map { case (cn, al) => ValueB(al.getOrElse(cn)) })
+    var out = scope.rebind(df, scope.bindings ++ yields.map { case (cn, al) => ValueB(al.getOrElse(cn)) })
     c.where.foreach(w => out = out.withDf(out.df.filter(exprc.compile(w, out))))
     out
   }
@@ -2017,7 +2018,7 @@ final class Planner(
         val joined = exploded.join(base.select(renames: _*),
           col("__uw") === col(idCol(alias))).drop("__uw")
         val binding = if (isNodes) NodeB(alias, props) else EdgeB(alias, props)
-        return Scope(joined, scope.bindings :+ binding)
+        return scope.rebind(joined, scope.bindings :+ binding)
       case _ => ()
     }
     val listC0 = exprc.compile(listE, scope)
@@ -2029,7 +2030,7 @@ final class Planner(
       case _ => listC0
     }
     val df = scope.df.withColumn(alias, explode(listC))
-    Scope(df, scope.bindings :+ ValueB(alias))
+    scope.rebind(df, scope.bindings :+ ValueB(alias))
   }
 
   // ---- WITH / RETURN ----------------------------------------------------
@@ -2160,7 +2161,10 @@ final class Planner(
 
     if (distinct) df = df.distinct()
 
-    var out = Scope(df, outBindings)
+    // `WITH n AS k` carries n's rewritten columns under k
+    val rewrittenOut = named.collect { case (name, it)
+      if passthrough(it).exists(b => scope.rewritten(b.name)) => name }.toSet
+    var out = Scope(df, outBindings, scope.rewritten ++ rewrittenOut)
     // WITH … WHERE sees the projected values; subqueries there correlate
     // against the projected frame, and endpoint/path accessors (incl.
     // HOFs over a passed-through VLE binding) materialize like any other
@@ -2176,7 +2180,7 @@ final class Planner(
       val keepCols = out.bindings.flatMap(b => s4.colsOf(b)).toSet
       val dropCols = s4.bindings.filterNot(b => keepNames(b.name))
         .flatMap(b => s4.colsOf(b)).filterNot(keepCols)
-      out = Scope(filteredDf.drop(dropCols: _*), out.bindings)
+      out = out.withDf(filteredDf.drop(dropCols: _*))
     }
 
     // sort items resolve: output aliases first (by AST equality),
@@ -2259,7 +2263,7 @@ final class Planner(
           col(nidsCol(v)).as("nodes"), col(idsCol(v)).as("relationships")).as(v)
         case ValueB(n) => qcol(n)
       }
-      out = Scope(out.df.select(finalCols: _*), out.bindings.map(b => ValueB(b.name)))
+      out = out.rebind(out.df.select(finalCols: _*), out.bindings.map(b => ValueB(b.name)))
     }
     out
   }
@@ -2309,7 +2313,7 @@ final class Planner(
         st.appendVertices(label,
           df.select(col(idCol(v)).as("id") +: propNames.map(k => col(propCol(v, k)).as(graft.graph.PropName.enc(k))): _*),
           base + cnt)
-        scope = Scope(df, scope.bindings :+ NodeB(v, propNames))
+        scope = scope.rebind(df, scope.bindings :+ NodeB(v, propNames))
       }
 
       // create edges along the path
@@ -2342,7 +2346,7 @@ final class Planner(
             col(endCol(ev)).as("end_id")) ++
             propNames.map(k => col(propCol(ev, k)).as(graft.graph.PropName.enc(k))): _*),
           base + cnt)
-        scope = Scope(df, scope.bindings :+ EdgeB(ev, propNames))
+        scope = scope.rebind(df, scope.bindings :+ EdgeB(ev, propNames))
         prevVar = nv
       }
 
@@ -2356,7 +2360,7 @@ final class Planner(
         val df = scope.df.withColumn(idsCol(pv), ids)
           .withColumn(nidsCol(pv), nids)
           .withColumn(hopsCol(pv), size(col(idsCol(pv))).cast("long"))
-        scope = Scope(df, scope.bindings :+ PathB(pv, hopRelTypes(path.tail)))
+        scope = scope.rebind(df, scope.bindings :+ PathB(pv, hopRelTypes(path.tail)))
       }
     }
     scope
@@ -2459,7 +2463,7 @@ final class Planner(
               case NodeB(n, props) if n == v => NodeB(n, (props :+ k).distinct)
               case EdgeB(n, props) if n == v => EdgeB(n, (props :+ k).distinct)
               case x => x
-            })
+            }, cur.rewritten + v)
           case "remove" =>
             val isEdge = b match {
               case _: NodeB => false
@@ -2472,8 +2476,8 @@ final class Planner(
               // `SET n = {map}` clearing untouched keys is one write
               val dt = cur.df.schema(propCol(v, k)).dataType
               defer(v, isEdge, k)
-              cur = cur.withDf(cur.df.withColumn(propCol(v, k),
-                lit(null).cast(dt)))
+              cur = cur.copy(df = cur.df.withColumn(propCol(v, k), lit(null).cast(dt)),
+                rewritten = cur.rewritten + v)
             } else {
               // property unknown to the scope (no matched label carries
               // it): keep the eager store-side remove, which is a no-op
@@ -2583,7 +2587,7 @@ final class Planner(
         val df = merged.df.withColumn(idsCol(pv), ids)
           .withColumn(nidsCol(pv), array(nodeVs.map(v => col(idCol(v))): _*))
           .withColumn(hopsCol(pv), size(col(idsCol(pv))).cast("long"))
-        Scope(df, merged.bindings :+ PathB(pv, hopRelTypes(m.pattern.tail)))
+        merged.rebind(df, merged.bindings :+ PathB(pv, hopRelTypes(m.pattern.tail)))
     }
   }
 
@@ -2743,7 +2747,7 @@ final class Planner(
       .withColumn("__created#m",
         if (nMissing > 0) qcol(markerIdCol) >= createdLo else lit(false))
       .drop(keyCols.filter(_.startsWith("__k")): _*)
-    var scope = Scope(out, outBindings)
+    var scope = scope0.rebind(out, outBindings)
     scope = applyOnSetAll(scope, m.onCreate, col("__created#m"))
     scope = applyOnSetAll(scope, m.onMatch, !col("__created#m"))
     scope.withDf(scope.df.drop("__created#m"))
@@ -2807,7 +2811,7 @@ final class Planner(
       .withColumn(s"__created#$v",
         if (nMissing > 0) col(idCol(v)) >= createdLo else lit(false))
       .drop(keyNames.map(k => s"__key#$k"): _*)
-    var scope = Scope(out, scope0.bindings :+
+    var scope = scope0.rebind(out, scope0.bindings :+
       NodeB(v, graph.vertexLabel(label).propColumns.map(f => graft.graph.PropName.dec(f.name))))
     scope = applyOnSet(scope, v, m.onCreate, col(s"__created#$v"))
     scope = applyOnSet(scope, v, m.onMatch, !col(s"__created#$v"))
@@ -2873,7 +2877,7 @@ final class Planner(
       .withColumn(s"__created#$ev",
         if (nMissing > 0) col(idCol(ev)) >= createdLo else lit(false))
       .drop(keyNames.map(k => s"__key#$k"): _*)
-    var scope = Scope(out, scope0.bindings :+
+    var scope = scope0.rebind(out, scope0.bindings :+
       EdgeB(ev, graph.edgeLabel(label).propColumns.map(_.name)))
     scope = applyOnSet(scope, ev, m.onCreate, col(s"__created#$ev"))
     scope = applyOnSet(scope, ev, m.onMatch, !col(s"__created#$ev"))
@@ -2907,7 +2911,7 @@ final class Planner(
             case NodeB(n, props) if n == v => NodeB(n, (props :+ k).distinct)
             case EdgeB(n, props) if n == v => EdgeB(n, (props :+ k).distinct)
             case x => x
-          })
+          }, cur.rewritten + v)
       case other => throw new UnsupportedOperationException(
         s"unsupported ON CREATE/ON MATCH SET item: $other")
     }

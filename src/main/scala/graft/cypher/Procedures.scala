@@ -65,10 +65,13 @@ object Procedures {
         rounds = args.headOption.map(num(_, 4.0).toInt).getOrElse(4))),
     // neighborhood Jaccard similarity for link prediction, wedges
     // routed through degree-capped mid vertices —
-    // jaccard_similarity([deg_cap = 64 [, threshold = 0]]). A positive
-    // threshold switches to the prefix-filtered plan (pairs ≥ t only,
-    // pair volume bounded by matches instead of Σ C(deg, 2) — the
-    // pg_trgm similarity_threshold usage pattern)
+    // jaccard_similarity([deg_cap = 64 [, threshold = 0]]). A graph
+    // whose rows (nV + nE + nE·(deg_cap − 1) output bound) and wedge
+    // steps (2·nE·deg_cap) fit the endgame budgets is scored on the
+    // driver; above them a positive threshold switches to the
+    // prefix-filtered plan (pairs ≥ t only, pair volume bounded by
+    // matches instead of Σ C(deg, 2) — the pg_trgm
+    // similarity_threshold usage pattern)
     "jaccard_similarity" -> ((s, g, args) =>
       GraphAlgos.jaccardSimilarity(g,
         degCap = args.headOption.map(num(_, 64.0).toInt).getOrElse(64),

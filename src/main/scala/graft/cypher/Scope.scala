@@ -21,12 +21,18 @@ final case class PathB(name: String, relTypes: Set[String] = Set.empty)
 /** Plain value from WITH/UNWIND/RETURN: single column named `name`. */
 final case class ValueB(name: String) extends Binding
 
-/** Insertion-ordered variable scope over a DataFrame. */
-final case class Scope(df: DataFrame, bindings: Vector[Binding]) {
+/** Insertion-ordered variable scope over a DataFrame. `rewritten` names
+  * the entity bindings whose property columns a SET/REMOVE earlier in
+  * the statement rewrote: rows sharing such an entity's id may then
+  * carry different column values, so the id no longer determines them. */
+final case class Scope(df: DataFrame, bindings: Vector[Binding],
+    rewritten: Set[String] = Set.empty) {
   def get(v: String): Option[Binding] = bindings.find(_.name == v)
   def has(v: String): Boolean = bindings.exists(_.name == v)
   def add(b: Binding): Scope = copy(bindings = bindings.filterNot(_.name == b.name) :+ b)
   def withDf(d: DataFrame): Scope = copy(df = d)
+  /** A new frame and binding list, keeping what the statement rewrote. */
+  def rebind(d: DataFrame, bs: Vector[Binding]): Scope = copy(df = d, bindings = bs)
 
   /** All physical column names owned by a binding. */
   def colsOf(b: Binding): Seq[String] = b match {

@@ -438,7 +438,7 @@ object GraphAlgos {
     * (lpa's vote), the [[closeVerts]] closure for operators that
     * expand over the raw edge frame (kcore's peel, betweenness's
     * level loop, walks' neighbor index, cc, triangles). */
-  private[graph] final class LocalCsr(
+  private[graft] final class LocalCsr(
       verts0: Array[Long], srcs: Array[Long], dsts: Array[Long]) {
     val verts: Array[Long] = {
       val v = verts0.clone(); java.util.Arrays.sort(v); v
@@ -531,7 +531,7 @@ object GraphAlgos {
     * GraphX's `Graph(vs, es)` builds by materializing dangling
     * endpoints with the default attribute, for endgames replaying
     * GraphX-backed operators. */
-  private def closeVerts(vA: Array[Long], srcs: Array[Long],
+  private[graft] def closeVerts(vA: Array[Long], srcs: Array[Long],
       dsts: Array[Long]): Array[Long] = {
     val all = new Array[Long](vA.length + srcs.length + dsts.length)
     System.arraycopy(vA, 0, all, 0, vA.length)
@@ -666,7 +666,7 @@ object GraphAlgos {
     * become vertices too. `verts` must be sorted ascending with the
     * dangling endpoints already unioned in; union-by-smaller-index
     * keeps rep = min id because dense index order IS id order. */
-  private[graph] def ccLocal(csr: LocalCsr): Array[(Long, Long)] = {
+  private[graft] def ccLocal(csr: LocalCsr): Array[(Long, Long)] = {
     val n = csr.n
     val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = {
@@ -1449,6 +1449,83 @@ object GraphAlgos {
     out
   }
 
+  /** Wedge-pair volume floor under which the THRESHOLDED path runs the
+    * full wedge plan + filter instead of the prefix machinery: the
+    * AllPairs candidate generation pays ~3 persists + a rank window +
+    * an extra verify join — ~6 s of scaffolding at sf0.1 for a 226-pair
+    * answer — while the full plan streams its Σ C(deg,2) pairs in ~4 s
+    * whenever that volume is small. The two are value-identical (the
+    * prefix lemma is lossless, §46), so the gate is pure cost: measured
+    * crossover sits near the 10× census (~2×10⁸ wedge pairs, where full
+    * = 28.6 s ≈ prefix = 31 s); above it the full plan's aggregate
+    * state/output is the §41 wall. Conf-overridable for deployment
+    * bisection (spark.graft.jaccard.fullPlanPairBound). */
+  private[graph] val FullPlanPairBound = 200000000L
+
+  /** (pairVol, wedgeRows) degree-census results per immutable graph
+    * snapshot, keyed by degCap — weak on the graph so store reloads and
+    * mutable-graph snapshots never see a stale census. */
+  private val censusCache: java.util.Map[
+      PropertyGraph, Map[Int, (Double, Double)]] =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[PropertyGraph, Map[Int, (Double, Double)]]())
+
+  /** Driver-local wedge scoring — replays [[jaccardSimilarity]]'s pairs
+    * over the undirected simple view in `csr`: for each vertex a (index
+    * order = id order), every capped mid m (deg(m) ≤ degCap) adds one
+    * common neighbor to each neighbor b > a of m, counted in a dense
+    * array reset through a touched list. J = common / (da + db − common)
+    * over the true degrees is the double expression Spark's `/` on longs
+    * evaluates, so values are bit-identical; rows with J < threshold
+    * drop when threshold > 0 (the distributed filter's arm). Rows come
+    * out sorted by (id_a, id_b). */
+  private[graph] def jaccardLocal(csr: LocalCsr, degCap: Int,
+      threshold: Double): Array[(Long, Long, Long, Double)] = {
+    val n = csr.n
+    val cnt = new Array[Int](n)
+    val touched = new Array[Int](n)
+    val out = scala.collection.mutable.ArrayBuilder.make[(Long, Long, Long, Double)]
+    var a = 0
+    while (a < n) {
+      var nt = 0
+      var e = csr.adjStart(a)
+      while (e < csr.adjStart(a + 1)) {
+        val m = csr.adjTo(e)
+        if (csr.deg(m) <= degCap) {
+          var f = csr.adjStart(m)
+          while (f < csr.adjStart(m + 1)) {
+            val b = csr.adjTo(f)
+            if (b > a) {
+              if (cnt(b) == 0) { touched(nt) = b; nt += 1 }
+              cnt(b) += 1
+            }
+            f += 1
+          }
+        }
+        e += 1
+      }
+      java.util.Arrays.sort(touched, 0, nt)
+      val da = csr.deg(a).toLong
+      var k = 0
+      while (k < nt) {
+        val b = touched(k)
+        val common = cnt(b).toLong
+        val j = common.toDouble / (da + csr.deg(b) - common).toDouble
+        if (!(threshold > 0.0) || j >= threshold)
+          out += ((csr.verts(a), csr.verts(b), common, j))
+        cnt(b) = 0
+        k += 1
+      }
+      a += 1
+    }
+    out.result()
+  }
+
+  /** `a · b`, or -1 (unbounded) when an operand is unbounded (< 0) or
+    * the product does not fit a Long. */
+  private def boundedProduct(a: Long, b: Long): Long =
+    if (a < 0L || b < 0L || (a != 0L && b > Long.MaxValue / a)) -1L else a * b
+
   /** Neighborhood Jaccard similarity for link prediction — for every
     * vertex pair sharing at least one LOW-DEGREE common neighbor,
     * J = common / (deg(a) + deg(b) - common) over the undirected
@@ -1472,31 +1549,37 @@ object GraphAlgos {
     * free while deg broadcasts, but two extra sort-merge shuffles of
     * the quadratic frame the moment deg outgrows the broadcast
     * threshold (measured: 16× wall for 10× rows at bench scale; this
-    * shape restores ~linear). */
-  /** Wedge-pair volume floor under which the THRESHOLDED path runs the
-    * full wedge plan + filter instead of the prefix machinery: the
-    * AllPairs candidate generation pays ~3 persists + a rank window +
-    * an extra verify join — ~6 s of scaffolding at sf0.1 for a 226-pair
-    * answer — while the full plan streams its Σ C(deg,2) pairs in ~4 s
-    * whenever that volume is small. The two are value-identical (the
-    * prefix lemma is lossless, §46), so the gate is pure cost: measured
-    * crossover sits near the 10× census (~2×10⁸ wedge pairs, where full
-    * = 28.6 s ≈ prefix = 31 s); above it the full plan's aggregate
-    * state/output is the §41 wall. Conf-overridable for deployment
-    * bisection (spark.graft.jaccard.fullPlanPairBound). */
-  private[graph] val FullPlanPairBound = 200000000L
-
-  /** (pairVol, wedgeRows) degree-census results per immutable graph
-    * snapshot, keyed by degCap — weak on the graph so store reloads and
-    * mutable-graph snapshots never see a stale census. */
-  private val censusCache: java.util.Map[
-      PropertyGraph, Map[Int, (Double, Double)]] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[PropertyGraph, Map[Int, (Double, Double)]]())
-
+    * shape restores ~linear).
+    *
+    * Driver endgame: a graph whose rows (nV + nE plus the output bound
+    * nE·(degCap − 1) ≥ Σ_{deg≤cap} C(deg, 2)) and wedge steps
+    * (2·nE·degCap) pass [[endgameFits]] is scored by [[jaccardLocal]]
+    * on the snapshot's cached arrays, bit-identical to the plans below
+    * and without the degree census. `localWork` follows [[endgameFits]];
+    * 0 forces the distributed plans. */
   def jaccardSimilarity(g: PropertyGraph, degCap: Int = 64,
-      threshold: Double = 0.0): DataFrame = {
+      threshold: Double = 0.0, localWork: Long = -1L): DataFrame = {
     val spark = g.allVertices.sparkSession
+    // bounded-collect endgame (see [[LocalIterWork]]): every plan
+    // below pays ~8 jobs of wedge shuffles even when the graph fits the
+    // driver. Rows = nV + nE collected plus the output, which is at
+    // most Σ_{deg≤cap} C(deg, 2) ≤ nE·(cap − 1) pairs; the kernel walks
+    // each capped mid's neighbors once per neighbor, ≤ 2·nE·cap steps.
+    // Gated on the cached sizes alone, so the degree census never runs.
+    val (nV, nE) = graphSizes(g)
+    val cap = math.max(0, degCap).toLong
+    val pairBound = boundedProduct(nE, math.max(0L, cap - 1L))
+    val rows = if (pairBound < 0L || pairBound > Long.MaxValue - nV - nE)
+      Long.MaxValue else nV + nE + pairBound
+    val work = boundedProduct(boundedProduct(2L, nE), cap)
+    if (endgameFits(spark, "jaccard", rows, work, localWork,
+        s"degCap=$degCap, t=$threshold")) {
+      import spark.implicits._
+      val (vA, srcs, dsts) = collected(g)
+      return jaccardLocal(new LocalCsr(closeVerts(vA, srcs, dsts), srcs, dsts),
+          degCap, threshold)
+        .toSeq.toDF("id_a", "id_b", "common", "jaccard")
+    }
     // single-scan both-directions + dedup through the aggregate's OWN
     // exchange: the helper's coalesce survives under an Aggregate
     // (CollapseRepartition erases it under an explicit repartition), so
@@ -1531,8 +1614,7 @@ object GraphAlgos {
     // against the edge frame. The thresholded path always needs the
     // exact census (its gate and persist level read it).
     val parts0 = spark.sessionState.conf.numShufflePartitions
-    lazy val pairVolUpper =
-      2.0 * graphSizes(g)._2 * math.max(0, degCap - 1) / 2.0
+    val pairVolUpper = nE.toDouble * math.max(0, degCap - 1)
     val needCensus = threshold > 0.0 ||
       scaledWidthOf(spark, pairVolUpper) > parts0
     // the census is a pure function of the immutable graph snapshot and
@@ -1569,10 +1651,7 @@ object GraphAlgos {
     // per-task state). Unpacking is exact integer arithmetic, so
     // jaccard values are bit-identical; graphs too big for the proof
     // keep the two-column shape (the recorded decision says which ran).
-    lazy val degPack = {
-      val (nVg, nEg) = graphSizes(g)
-      math.min(nVg, 2L * nEg) < (1L << 31)
-    }
+    val degPack = math.min(nV, 2L * nE) < (1L << 31)
     def fullPlan: DataFrame = {
       val stream0 = mids.as("x").join(mids.as("y"), col("x.mid") === col("y.mid"))
         .filter(col("x.leaf") < col("y.leaf"))

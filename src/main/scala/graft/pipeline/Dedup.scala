@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.graph.GraphAlgos
+
 /** Deduplication operators for training-data pipelines.
   *
   * Scale design: exact dedup is one hash-shuffle; MinHash-LSH turns the
@@ -42,7 +44,9 @@ object Dedup {
     // span identity = the fused 60-bit span hash (shingleHashRows), so
     // the distinct + df-count + membership join all key on 8-byte longs
     // instead of span strings — same counts barring a disclosed 2^-60
-    // md5-prefix collision (the p_containment discipline, guide §2.3)
+    // md5-prefix collision per pair (the p_containment discipline,
+    // guide §2.3); over N distinct spans the birthday bound is
+    // ~N²/2^61 for any collision at all (~0.4 expected pairs at 10^9)
     val sp = TextOps.shingleHashRows(df, textCol, idCol, k)
       .select(col("__id"), col("__sh")).distinct()
     val dup = sp.groupBy("__sh").agg(count(lit(1)).as("__ndocs"))
@@ -183,9 +187,11 @@ object Dedup {
     * id in the component — the "keep one document per cluster" decision
     * at corpus scale. Transitive closure matters because near-dup is not
     * transitive (A~B, B~C does not imply the detector paired A,C) yet a
-    * dedup pass must keep exactly one of {A,B,C}. GraphX
-    * connectedComponents (pointer-jumping, O(log n) rounds) rather than
-    * a per-round DataFrame loop. */
+    * dedup pass must keep exactly one of {A,B,C}. A pair frame under
+    * `localThreshold` rows (default: a quarter of the driver's result
+    * budget) finishes in the union-find endgame shared with
+    * `connected_components` ([[GraphAlgos.ccLocal]]); larger ones run
+    * GraphX connectedComponents (pointer-jumping, O(log n) rounds). */
   def dupClusters(pairs: DataFrame, localThreshold: Int = -1): DataFrame = {
     import org.apache.spark.graphx.{Edge, Graph => XGraph}
     val spark = pairs.sparkSession
@@ -206,7 +212,8 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // near-dup pair graphs are usually tiny relative to the corpus —
-      // below the threshold a driver-side union-find beats GraphX's
+      // below the threshold the driver-side union-find endgame
+      // (GraphAlgos.ccLocal over the pair endpoints) beats GraphX's
       // multi-round RDD jobs by an order of magnitude; past it, GraphX
       // pointer-jumping is the scale path. count() first: one job fully
       // materializes the persisted pair frame, and the collect below
@@ -216,25 +223,10 @@ object Dedup {
       val n = p.count()
       if (n <= threshold) {
         val local = p.collect()
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        for (row <- local) {
-          val (a, b) = (row.getLong(0), row.getLong(1))
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) {
-            // union by smaller representative so rep = min id
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-          }
-          parent.getOrElseUpdate(a, find(a)); parent.getOrElseUpdate(b, find(b))
-        }
-        val ids = local.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
-        ids.map(id => (id, find(id))).toSeq.toDF("id", "rep")
+        val a = local.map(_.getLong(0))
+        val b = local.map(_.getLong(1))
+        GraphAlgos.ccLocal(new GraphAlgos.LocalCsr(
+          GraphAlgos.closeVerts(Array.empty, a, b), a, b)).toSeq.toDF("id", "rep")
       } else {
         val es = p.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 0L))
         XGraph.fromEdges(es, 0L).connectedComponents().vertices

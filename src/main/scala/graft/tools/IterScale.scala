@@ -121,11 +121,17 @@ object IterScale {
         GraphAlgos.betweenness(TpchGraph(spark, sfDir), nSources = 8,
           localWork = 0L)),
       "jaccard" -> (() =>
+        GraphAlgos.jaccardSimilarity(TpchGraph(spark, sfDir), degCap = 64,
+          localWork = 0L)),
+      "jaccard_auto" -> (() =>
         GraphAlgos.jaccardSimilarity(TpchGraph(spark, sfDir), degCap = 64)),
       // prefix-filtered thresholded jaccard: same wedge universe, pair
       // volume bounded by matches — the scale answer to the operator's
       // inherent output-volume wall (§41 second addendum)
       "jaccard_t" -> (() =>
+        GraphAlgos.jaccardSimilarity(TpchGraph(spark, sfDir), degCap = 64,
+          threshold = 0.5, localWork = 0L)),
+      "jaccard_t_auto" -> (() =>
         GraphAlgos.jaccardSimilarity(TpchGraph(spark, sfDir), degCap = 64,
           threshold = 0.5)),
       // traversal rows (r10 verdict #4): the graded VLE and

@@ -118,14 +118,14 @@ object ValueAgree {
       // never materializing the §41 output). Arm B = the prefix-filtered
       // AllPairs plan at t just below the 10th value — by the lossless
       // prefix lemma it must contain every pair ≥ t; same sort, same 10.
-      val full = GraphAlgos.jaccardSimilarity(g, degCap = 64)
+      val full = GraphAlgos.jaccardSimilarity(g, degCap = 64, localWork = 0L)
         .orderBy(desc("jaccard"), col("id_a"), col("id_b")).limit(10)
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2),
             math.rint(r.getDouble(3) * 1e6))).toSeq
       val t10 = full.map(_._4).min / 1e6
       val pref = GraphAlgos.jaccardSimilarity(g, degCap = 64,
-          threshold = math.max(1e-9, t10 - 1e-6))
+          threshold = math.max(1e-9, t10 - 1e-6), localWork = 0L)
         .orderBy(desc("jaccard"), col("id_a"), col("id_b")).limit(10)
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -146,7 +146,8 @@ object ValueAgree {
       // restricted.
       val k = 4
       val t = 0.5
-      val graded = GraphAlgos.jaccardSimilarity(g, degCap = 64, threshold = t)
+      val graded = GraphAlgos.jaccardSimilarity(g, degCap = 64, threshold = t,
+          localWork = 0L)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nAll = graded.count()
       // independent brute force, built here from the raw edge frame

@@ -312,6 +312,28 @@ class MutationSpec extends SparkTestBase {
       Seq(Seq(null, "x", null)))
   }
 
+  test("subqueries after a cross-variable SET correlate on the rewritten row") {
+    // one n, two m rows: SET leaves n's id on both rows with a different
+    // n.x each, so the EXISTS/COUNT correlation must not key by id alone
+    val g = freshGraph()
+    Cypher.execute(spark, g,
+      "CREATE (:P {x: 1})-[:R]->(:T {x: 10}), (:Q {v: 10}), (:Q {v: 20})")
+    assert(rows(Cypher.execute(spark, g,
+      "MATCH (n:P),(m:Q) SET n.x = m.v " +
+        "RETURN n.x AS nx, EXISTS { (n)-[:R]->(t:T) WHERE t.x = n.x } AS e " +
+        "ORDER BY nx")) === Seq(Seq(10L, true), Seq(20L, false)))
+    // the rewrite survives a WITH alias and feeds COUNT { } the same way
+    assert(rows(Cypher.execute(spark, g,
+      "MATCH (n:P),(m:Q) SET n.x = m.v WITH n AS k " +
+        "RETURN k.x AS nx, COUNT { (k)-[:R]->(t:T) WHERE t.x = k.x } AS c " +
+        "ORDER BY nx")) === Seq(Seq(10L, 1L), Seq(20L, 0L)))
+    // MERGE's ON MATCH SET rewrites the matched entity per input row
+    assert(rows(Cypher.execute(spark, g,
+      "MATCH (m:Q) MERGE (n:P) ON MATCH SET n.y = m.v " +
+        "RETURN n.y AS ny, EXISTS { (n)-[:R]->(t:T) WHERE t.x = n.y } AS e " +
+        "ORDER BY ny")) === Seq(Seq(10L, true), Seq(20L, false)))
+  }
+
   test("runtime-map key probe is cardinality-capped") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

@@ -96,12 +96,12 @@ class AlgoPropertySpec extends SparkTestBase {
     // the repartition must BE the aggregate's exchange — a second
     // session-width shuffle above it would reintroduce the §61 spill
     val g = randomGraph(40, 120, seed = 7, parts = 3)
-    val plain = GraphAlgos.jaccardSimilarity(g)
+    val plain = GraphAlgos.jaccardSimilarity(g, localWork = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         math.rint(r.getDouble(3) * 1e9))).sortBy(x => (x._1, x._2)).toSeq
     spark.conf.set("spark.graft.scaledWidth.rowsPerPart", "1")
     try {
-      val wide = GraphAlgos.jaccardSimilarity(g)
+      val wide = GraphAlgos.jaccardSimilarity(g, localWork = 0L)
       val got = wide.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getLong(2), math.rint(r.getDouble(3) * 1e9)))
         .sortBy(x => (x._1, x._2)).toSeq
@@ -154,9 +154,10 @@ class AlgoPropertySpec extends SparkTestBase {
       for (seed <- Seq(11L, 12L); t <- Seq(0.2, 1.0 / 3, 0.5, 0.75, 1.0);
            cap <- Seq(4, 64)) {
         val g = randomGraph(60, 220, seed = seed, parts = 3)
-        val full = GraphAlgos.jaccardSimilarity(g, degCap = cap)
+        val full = GraphAlgos.jaccardSimilarity(g, degCap = cap, localWork = 0L)
           .filter(col("jaccard") >= t)
-        val pruned = GraphAlgos.jaccardSimilarity(g, degCap = cap, threshold = t)
+        val pruned = GraphAlgos.jaccardSimilarity(g, degCap = cap, threshold = t,
+          localWork = 0L)
         assert(canon(pruned) === canon(full), s"seed=$seed t=$t cap=$cap")
       }
     } finally spark.conf.unset("spark.graft.jaccard.fullPlanPairBound")
@@ -170,18 +171,62 @@ class AlgoPropertySpec extends SparkTestBase {
         .sortBy(x => (x._1, x._2)).toSeq
     val g = randomGraph(60, 220, seed = 13, parts = 3)
     GraphAlgos.clearPathDecisions(spark)
-    val fast = GraphAlgos.jaccardSimilarity(g, threshold = 0.5)
+    val fast = GraphAlgos.jaccardSimilarity(g, threshold = 0.5, localWork = 0L)
     val fastCanon = canon(fast)
     val dec = GraphAlgos.recentPathDecisions(spark)
     assert(dec.exists(_.contains("full wedge plan + threshold filter")), dec)
     spark.conf.set("spark.graft.jaccard.fullPlanPairBound", "0")
     try {
       GraphAlgos.clearPathDecisions(spark)
-      val pruned = GraphAlgos.jaccardSimilarity(g, threshold = 0.5)
+      val pruned = GraphAlgos.jaccardSimilarity(g, threshold = 0.5, localWork = 0L)
       assert(canon(pruned) === fastCanon)
       val dec2 = GraphAlgos.recentPathDecisions(spark)
       assert(dec2.exists(_.contains("prefix-filtered thresholded plan")), dec2)
     } finally spark.conf.unset("spark.graft.jaccard.fullPlanPairBound")
+  }
+
+  test("jaccard endgame equals the distributed plans exactly across caps " +
+      "and thresholds") {
+    // self-loops, multi-edges and endpoints missing from the vertex
+    // frame on top of the random edges; values compare bit for bit
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        .sortBy(x => (x._1, x._2)).toSeq
+    def v(i: Long) = GraphId.make(VL, i)
+    for (seed <- Seq(51L, 52L)) {
+      val rnd = new scala.util.Random(seed)
+      val n = 40
+      val random = Seq.fill(130)((v(rnd.nextInt(n) + 1L), v(rnd.nextInt(n + 6) + 1L)))
+      val odd = Seq((v(1), v(1)), (v(2), v(3)), (v(2), v(3)), (v(3), v(2)),
+        (v(n + 10L), v(4)), (v(n + 10L), v(n + 11L)), (v(5), v(n + 11L)))
+      val es = (random ++ odd).zipWithIndex
+        .map { case ((s, t), j) => (GraphId.make(EL, j + 1L), s, t) }
+        .toDF("id", "start_id", "end_id").repartition(3)
+      val vs = (1L to n).map(i => Tuple1(v(i))).toDF("id").repartition(2)
+      val g = new PropertyGraph(s"jac_diff_$seed",
+        Seq(VertexLabel("node", VL, vs)), Seq(EdgeLabel("edge", EL, es)))
+      for (cap <- Seq(1, 2, 4, 64); t <- Seq(0.0, 0.2, 1.0 / 3, 0.5, 1.0)) {
+        val local = canon(GraphAlgos.jaccardSimilarity(g, cap, t))
+        assert(local === canon(GraphAlgos.jaccardSimilarity(g, cap, t, localWork = 0L)),
+          s"seed=$seed cap=$cap t=$t")
+        if (cap == 64 && t == 0.0) assert(local.nonEmpty)
+      }
+    }
+  }
+
+  test("jaccard records its path decision with its gate values") {
+    val g = randomGraph(40, 90, seed = 45, parts = 2)
+    def decisions(f: => Unit): Seq[String] = {
+      GraphAlgos.clearPathDecisions(spark)
+      f
+      GraphAlgos.recentPathDecisions(spark)
+    }
+    val auto = decisions(GraphAlgos.jaccardSimilarity(g, 64, 0.5))
+    assert(auto.exists(d => d.startsWith("jaccard: driver endgame") &&
+      d.contains("degCap=64")), auto)
+    val forced = decisions(GraphAlgos.jaccardSimilarity(g, 64, 0.5, localWork = 0L))
+    assert(forced.exists(_.startsWith("jaccard: distributed path")), forced)
   }
 
   test("personalizedPageRank matches the hand-computed rounds on a path") {
@@ -738,6 +783,8 @@ class AlgoPropertySpec extends SparkTestBase {
       "kcore" -> (() => GraphAlgos.kCore(g, 2)),
       "walks" -> (() => GraphAlgos.randomWalks(g, 3)),
       "betweenness" -> (() => GraphAlgos.betweenness(g, nSources = 0)),
+      "jaccard" -> (() => GraphAlgos.jaccardSimilarity(g)),
+      "jaccard_t" -> (() => GraphAlgos.jaccardSimilarity(g, 64, 0.5)),
       "connected_components" -> (() => GraphAlgos.connectedComponents(g)))
     for ((name, call) <- later)
       assert(SparkJobs.count(spark)(call()) === 0, name)

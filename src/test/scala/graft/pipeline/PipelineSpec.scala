@@ -59,6 +59,22 @@ class PipelineSpec extends SparkTestBase {
     assert(c2 === Map(10L -> 10L, 11L -> 10L, 12L -> 10L))
   }
 
+  test("dupClusters: the driver union-find equals the GraphX path") {
+    // random pairs over 60 ids plus chains, duplicate pairs, reversed
+    // pairs and a self-pair; localThreshold = 0 forces GraphX
+    val rnd = new scala.util.Random(17)
+    val random = Seq.fill(40)((rnd.nextInt(60).toLong + 100, rnd.nextInt(60).toLong + 100))
+    val chains = (200L until 210L).map(i => (i, i + 1)) ++ Seq((305L, 304L), (304L, 303L))
+    val extra = Seq((200L, 201L), (201L, 200L), (150L, 100L), (400L, 400L))
+    val pairs = (random ++ chains ++ extra).toDF("id_a", "id_b").repartition(3)
+    def clusters(t: Int) = Dedup.dupClusters(pairs, localThreshold = t)
+      .as[(Long, Long)].collect().sortBy(_._1).toSeq
+    val local = clusters(-1)
+    assert(local === clusters(0))
+    assert(local.toMap.apply(210L) === 200L && local.toMap.apply(303L) === 303L)
+    assert(local.toMap.apply(400L) === 400L)
+  }
+
   test("shingleRows matches array shingles and handles short docs") {
     val rows = TextOps.shingleRows(docs, "text", "doc_id", 3)
       .groupBy("__id").agg(count(lit(1)).as("n"))
