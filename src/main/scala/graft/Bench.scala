@@ -51,12 +51,13 @@ object Bench {
     // warm-up: JIT + parquet reader init outside the timed region
     spark.range(1000).selectExpr("sum(id)").count()
     spark.read.parquet(s"$sfDir/region.parquet").count()
-    // headline per-query latency: exclude the iterative whole-graph
-    // analytics (GraphX pagerank/components run O(iterations) jobs and
-    // their GC churn perturbs neighboring measurements) and the mutation
-    // pipeline (scratch-graph writes are constant-time driver overhead,
-    // not a data-scaled signal); both remain in the Verify correctness
-    // gate
+    // headline per-query latency: exclude pagerank/components/sssp
+    // (excluded while they ran as GraphX jobs, whose O(iterations) jobs
+    // and GC churn perturbed neighboring measurements; they now finish
+    // as driver endgames at these scales, and stay out so the timed set
+    // matches earlier artifacts) and the mutation pipeline (scratch-
+    // graph writes are constant-time driver overhead, not a data-scaled
+    // signal); both remain in the Verify correctness gate
     val skip = Set("cy_call_pagerank", "cy_call_cc", "cy_call_sssp",
       "cy_mutate", "cy_set_remove", "cy_variant_props", "q_csv_load",
       "q_graph_ingest")

@@ -30,8 +30,12 @@ object Procedures {
   }
 
   val registry: Map[String, Proc] = Map(
-    // analytics: driver endgame on driver-sized graphs, GraphX
-    // (pagerank, components, sssp) above the collect budget
+    // analytics: each procedure with a driver endgame goes through
+    // GraphAlgos.run — the local arm while the graph fits the collect
+    // and work budgets, the distributed arm above them (GraphX for
+    // pagerank, components and sssp; DataFrame rounds for the rest).
+    // clustering_coefficient and the statistics are distributed only;
+    // scc gates its own Tarjan finish on the residual of its passes
     "pagerank" -> ((s, g, args) =>
       GraphAlgos.pageRank(g,
         tol = args.headOption.map(num(_, 0.0001)).getOrElse(0.0001),
@@ -94,8 +98,8 @@ object Procedures {
         s"kcore(k) expects an integer k >= 1, got $other")
     }),
     // Brandes betweenness centrality over the undirected simple graph;
-    // optional arg = number of (smallest-id) sampled sources, 0 = force
-    // exact. Bare CALL betweenness() derives the mode from graph size:
+    // optional arg = number of sampled sources (a seeded portable-hash
+    // top-k over vertex ids), 0 = force exact. Bare CALL betweenness() derives the mode from graph size:
     // exact on small graphs, 64-source scaled estimator above
     // AutoExactSourceVerts — a bare call on a big graph must not
     // materialize O(V·reach) frontier rows (r8 verdict #2)

@@ -187,52 +187,42 @@ object Dedup {
     * id in the component — the "keep one document per cluster" decision
     * at corpus scale. Transitive closure matters because near-dup is not
     * transitive (A~B, B~C does not imply the detector paired A,C) yet a
-    * dedup pass must keep exactly one of {A,B,C}. A pair frame under
-    * `localThreshold` rows (default: a quarter of the driver's result
-    * budget) finishes in the union-find endgame shared with
+    * dedup pass must keep exactly one of {A,B,C}. A pair frame within
+    * the collect budget finishes in the union-find endgame shared with
     * `connected_components` ([[GraphAlgos.ccLocal]]); larger ones run
-    * GraphX connectedComponents (pointer-jumping, O(log n) rounds). */
-  def dupClusters(pairs: DataFrame, localThreshold: Int = -1): DataFrame = {
+    * GraphX connectedComponents (pointer-jumping, O(log n) rounds). The
+    * pair frame is persisted for the call: one count() materializes it
+    * for the gate, and the endgame's collect reads the cache —
+    * limit().collect() instead ran CollectLimit's incremental partition
+    * waves, re-launching the tail stage of the whole LSH pipeline
+    * several times. */
+  def dupClusters(pairs: DataFrame): DataFrame = {
+    val p = pairs.select(col("id_a"), col("id_b"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try GraphAlgos.run(dupClustersArms(p)) finally p.unpersist(false)
+  }
+
+  /** [[dupClusters]]' two arms; `rows` is the pair count (one job). */
+  private[graft] def dupClustersArms(pairs: DataFrame): GraphAlgos.Endgame[(Long, Long)] = {
     import org.apache.spark.graphx.{Edge, Graph => XGraph}
     val spark = pairs.sparkSession
     import spark.implicits._
-    // default threshold sized from what the driver is allowed to hold:
-    // a pair row collects to ~16 bytes of longs (~48 with Row overhead);
-    // stay within a quarter of spark.driver.maxResultSize so the
-    // union-find collect never becomes the failure point
-    val threshold: Long =
-      if (localThreshold >= 0) localThreshold.toLong
-      else {
-        val maxResult = spark.sparkContext.getConf
-          .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-        if (maxResult <= 0) 4000000L // "unlimited": keep the old bound's order
-        else math.max(100000L, maxResult / 4 / 48)
-      }
     val p = pairs.select(col("id_a").cast(LongType), col("id_b").cast(LongType))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // near-dup pair graphs are usually tiny relative to the corpus —
-      // below the threshold the driver-side union-find endgame
-      // (GraphAlgos.ccLocal over the pair endpoints) beats GraphX's
-      // multi-round RDD jobs by an order of magnitude; past it, GraphX
-      // pointer-jumping is the scale path. count() first: one job fully
-      // materializes the persisted pair frame, and the collect below
-      // reads from cache — limit().collect() instead ran CollectLimit's
-      // incremental partition waves, re-launching the tail stage of the
-      // whole LSH pipeline several times
-      val n = p.count()
-      if (n <= threshold) {
+    val n = p.count()
+    // union-find over the CSR of ≤ 2n endpoints and 2n adjacency rows
+    GraphAlgos.Endgame(spark, "dup_clusters", Seq("id", "rep"), n, () => 4L * n, "",
+      () => {
         val local = p.collect()
         val a = local.map(_.getLong(0))
         val b = local.map(_.getLong(1))
-        GraphAlgos.ccLocal(new GraphAlgos.LocalCsr(
-          GraphAlgos.closeVerts(Array.empty, a, b), a, b)).toSeq.toDF("id", "rep")
-      } else {
+        GraphAlgos.ccLocal(
+          new GraphAlgos.LocalCsr(GraphAlgos.closeVerts(Array.empty, a, b), a, b))
+      },
+      () => {
         val es = p.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 0L))
         XGraph.fromEdges(es, 0L).connectedComponents().vertices
           .map { case (id, comp) => (id, comp) }.toDF("id", "rep")
-      }
-    } finally p.unpersist(false)
+      })
   }
 
   /** Exact n-gram Jaccard similarity for the given candidate pairs

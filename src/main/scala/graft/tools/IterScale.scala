@@ -103,12 +103,11 @@ object IterScale {
     val algos: Seq[(String, () => DataFrame)] = Seq(
       "scc_endgame" -> (() => GraphAlgos.scc(tradeGraph())),
       "scc_distributed" -> (() => GraphAlgos.scc(tradeGraph(), localRowBudget = 0L)),
-      // localWork = 0 forces the distributed level loop: this harness
-      // times the SCALE path (at sf0.1 the default call now finishes
-      // on the driver via the brandesLocal endgame in ~1 s)
+      // the distributed arm: this harness times the SCALE path (at
+      // sf0.1 the default call now finishes on the driver via the
+      // brandesLocal endgame in ~1 s)
       "betweenness_s64" -> (() =>
-        GraphAlgos.betweenness(TpchGraph(spark, sfDir), nSources = 64,
-          localWork = 0L)),
+        GraphAlgos.betweennessArms(TpchGraph(spark, sfDir), 64, 64).distributed()),
       // the default gates: small graphs take the brandesLocal endgame
       "betweenness_s64_auto" -> (() =>
         GraphAlgos.betweenness(TpchGraph(spark, sfDir), nSources = 64)),
@@ -118,19 +117,16 @@ object IterScale {
       // width?) is answered by ANY S whose per-round frames exceed the
       // s64-at-10× volume, and s8 at 100× is ~1.25× that per round
       "betweenness_s8" -> (() =>
-        GraphAlgos.betweenness(TpchGraph(spark, sfDir), nSources = 8,
-          localWork = 0L)),
+        GraphAlgos.betweennessArms(TpchGraph(spark, sfDir), 8, 64).distributed()),
       "jaccard" -> (() =>
-        GraphAlgos.jaccardSimilarity(TpchGraph(spark, sfDir), degCap = 64,
-          localWork = 0L)),
+        GraphAlgos.jaccardArms(TpchGraph(spark, sfDir), 64, 0.0).distributed()),
       "jaccard_auto" -> (() =>
         GraphAlgos.jaccardSimilarity(TpchGraph(spark, sfDir), degCap = 64)),
       // prefix-filtered thresholded jaccard: same wedge universe, pair
       // volume bounded by matches — the scale answer to the operator's
       // inherent output-volume wall (§41 second addendum)
       "jaccard_t" -> (() =>
-        GraphAlgos.jaccardSimilarity(TpchGraph(spark, sfDir), degCap = 64,
-          threshold = 0.5, localWork = 0L)),
+        GraphAlgos.jaccardArms(TpchGraph(spark, sfDir), 64, 0.5).distributed()),
       "jaccard_t_auto" -> (() =>
         GraphAlgos.jaccardSimilarity(TpchGraph(spark, sfDir), degCap = 64,
           threshold = 0.5)),
@@ -169,46 +165,46 @@ object IterScale {
           """MATCH p = shortestpath((c:Customer)-[:TRADES*..6]->(s:Supplier))
             |WHERE id(c) % 1021 = 1
             |RETURN length(p) AS hops, count(*) AS n ORDER BY hops""".stripMargin)),
-      // each iterative operator twice: localWork = 0 forces the
-      // distributed rounds (the SCALE path this harness exists to
-      // time); the bare call takes the driver-local endgame while the
-      // graph fits the collect budget — at 10× it no longer does and
-      // both variants time the same distributed path
+      // each iterative operator twice: the distributed arm (the SCALE
+      // path this harness exists to time), and the bare call, which
+      // takes the driver-local endgame while the graph fits the
+      // collect budget — at 10× it no longer does and both variants
+      // time the same distributed path
       "wsssp" -> (() =>
-        GraphAlgos.weightedSssp(TpchGraph(spark, sfDir), landmark, "quantity",
-          rounds = 6, localWork = 0L)),
+        GraphAlgos.weightedSsspArms(TpchGraph(spark, sfDir), landmark, "quantity", 6)
+          .distributed()),
       "wsssp_auto" -> (() =>
         GraphAlgos.weightedSssp(TpchGraph(spark, sfDir), landmark, "quantity", rounds = 6)),
       "lpa" -> (() =>
-        GraphAlgos.labelPropagationDet(TpchGraph(spark, sfDir), 3, localWork = 0L)),
+        GraphAlgos.labelPropagationArms(TpchGraph(spark, sfDir), 3).distributed()),
       "lpa_auto" -> (() =>
         GraphAlgos.labelPropagationDet(TpchGraph(spark, sfDir), 3)),
       "walks" -> (() =>
-        GraphAlgos.randomWalks(TpchGraph(spark, sfDir), steps = 4, localWork = 0L)),
+        GraphAlgos.randomWalksArms(TpchGraph(spark, sfDir), 4, "walk").distributed()),
       "walks_auto" -> (() => GraphAlgos.randomWalks(TpchGraph(spark, sfDir), steps = 4)),
       "hits" -> (() =>
-        GraphAlgos.hits(TpchGraph(spark, sfDir), rounds = 4, localWork = 0L)),
+        GraphAlgos.hitsArms(TpchGraph(spark, sfDir), 4).distributed()),
       "hits_auto" -> (() => GraphAlgos.hits(TpchGraph(spark, sfDir), rounds = 4)),
-      "kcore" -> (() => GraphAlgos.kCore(TpchGraph(spark, sfDir), 3, localWork = 0L)),
+      "kcore" -> (() => GraphAlgos.kCoreArms(TpchGraph(spark, sfDir), 3, 1000).distributed()),
       "kcore_auto" -> (() => GraphAlgos.kCore(TpchGraph(spark, sfDir), 3)),
       "ppr" -> (() =>
-        GraphAlgos.personalizedPageRank(TpchGraph(spark, sfDir), landmark,
-          rounds = 4, localWork = 0L)),
+        GraphAlgos.pprArms(TpchGraph(spark, sfDir), landmark, 0.15, 4).distributed()),
       "ppr_auto" -> (() =>
         GraphAlgos.personalizedPageRank(TpchGraph(spark, sfDir), landmark, rounds = 4)),
       "cc" -> (() =>
-        GraphAlgos.connectedComponents(TpchGraph(spark, sfDir), localWork = 0L)),
+        GraphAlgos.connectedComponentsArms(TpchGraph(spark, sfDir)).distributed()),
       "cc_auto" -> (() => GraphAlgos.connectedComponents(TpchGraph(spark, sfDir))),
       "triangles" -> (() =>
-        GraphAlgos.triangleCount(TpchGraph(spark, sfDir), localWork = 0L)),
+        GraphAlgos.triangleCountArms(TpchGraph(spark, sfDir)).distributed()),
       "triangles_auto" -> (() => GraphAlgos.triangleCount(TpchGraph(spark, sfDir))),
       // GraphX at-scale paths (Pregel with combiners — message
       // volume is degree-bounded, unlike TriangleCount's neighborhood
       // sets): timed here so an OOM-class regression at 10× surfaces
-      "pagerank" -> (() => GraphAlgos.pageRank(TpchGraph(spark, sfDir), localWork = 0L)),
+      "pagerank" -> (() =>
+        GraphAlgos.pageRankArms(TpchGraph(spark, sfDir), 0.0001, 0.15).distributed()),
       "pagerank_auto" -> (() => GraphAlgos.pageRank(TpchGraph(spark, sfDir))),
       "sssp_hops" -> (() =>
-        GraphAlgos.sssp(TpchGraph(spark, sfDir), landmark, localWork = 0L)),
+        GraphAlgos.ssspArms(TpchGraph(spark, sfDir), landmark).distributed()),
       "sssp_hops_auto" -> (() => GraphAlgos.sssp(TpchGraph(spark, sfDir), landmark)))
 
     val tg = tradeGraph()

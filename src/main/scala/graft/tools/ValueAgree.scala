@@ -60,9 +60,9 @@ object ValueAgree {
       // reclaim dead shuffle files promptly (see IterScale — a big
       // probe heap GCs too rarely for the ContextCleaner otherwise)
       .config("spark.cleaner.periodicGC.interval", "90s")
-      // the endgame arms COLLECT the graph (primitive-array kernels);
-      // at 100× that is ~137M edge rows — raise the result-size gate so
-      // endgameFits admits them (this is the evidence run's whole point;
+      // the local arms COLLECT the graph (primitive-array kernels); at
+      // 100× that is ~137M edge rows — raise the result-size limit so
+      // the collects fit (this is the evidence run's whole point;
       // graded runs keep the 1g default and its conservative budgets)
       .config("spark.driver.maxResultSize", "64g")
       .config("spark.ui.enabled", "false")
@@ -93,8 +93,8 @@ object ValueAgree {
     if (only.isEmpty || only("lpa")) timed("lpa") {
       // the graded cy_call_lpa runs 3 deterministic vote rounds; both
       // arms must emit the IDENTICAL (id, community) set
-      val dist = GraphAlgos.labelPropagationDet(g, 3, localWork = 0L)
-      val end = GraphAlgos.labelPropagationDet(g, 3, localWork = Long.MaxValue)
+      val arms = GraphAlgos.labelPropagationArms(g, 3)
+      val (dist, end) = (arms.distributed(), arms.localFrame())
       val diff = dist.union(end).except(dist.intersect(end)).count()
       record("cy_call_lpa", diff == 0L,
         "engine dual-path agreement: distributed vote loop vs " +
@@ -103,8 +103,8 @@ object ValueAgree {
     }
 
     if (only.isEmpty || only("walks")) timed("walks") {
-      val dist = GraphAlgos.randomWalks(g, steps = 4, localWork = 0L)
-      val end = GraphAlgos.randomWalks(g, steps = 4, localWork = Long.MaxValue)
+      val arms = GraphAlgos.randomWalksArms(g, 4, "walk")
+      val (dist, end) = (arms.distributed(), arms.localFrame())
       val diff = dist.union(end).except(dist.intersect(end)).count()
       record("cy_call_walks", diff == 0L,
         "engine dual-path agreement: distributed hash-choice walk vs " +
@@ -118,14 +118,14 @@ object ValueAgree {
       // never materializing the §41 output). Arm B = the prefix-filtered
       // AllPairs plan at t just below the 10th value — by the lossless
       // prefix lemma it must contain every pair ≥ t; same sort, same 10.
-      val full = GraphAlgos.jaccardSimilarity(g, degCap = 64, localWork = 0L)
+      val full = GraphAlgos.jaccardArms(g, 64, 0.0).distributed()
         .orderBy(desc("jaccard"), col("id_a"), col("id_b")).limit(10)
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2),
             math.rint(r.getDouble(3) * 1e6))).toSeq
       val t10 = full.map(_._4).min / 1e6
-      val pref = GraphAlgos.jaccardSimilarity(g, degCap = 64,
-          threshold = math.max(1e-9, t10 - 1e-6), localWork = 0L)
+      val pref = GraphAlgos.jaccardArms(g, 64, math.max(1e-9, t10 - 1e-6))
+          .distributed()
         .orderBy(desc("jaccard"), col("id_a"), col("id_b")).limit(10)
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -146,8 +146,7 @@ object ValueAgree {
       // restricted.
       val k = 4
       val t = 0.5
-      val graded = GraphAlgos.jaccardSimilarity(g, degCap = 64, threshold = t,
-          localWork = 0L)
+      val graded = GraphAlgos.jaccardArms(g, 64, t).distributed()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nAll = graded.count()
       // independent brute force, built here from the raw edge frame
@@ -208,8 +207,9 @@ object ValueAgree {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val pairs = Dedup.minhashLsh(exact, "text", "doc_id",
           shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.3)
-        val clusters = Dedup.dupClusters(pairs,
-          localThreshold = if (forceLocal) Int.MaxValue else 0)
+        val arms = Dedup.dupClustersArms(
+          pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val clusters = (if (forceLocal) arms.localFrame() else arms.distributed())
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val cl = clusters.collect().map(x => (x.getLong(0), x.getLong(1)))
           .sortBy(identity).toSeq

@@ -96,12 +96,12 @@ class AlgoPropertySpec extends SparkTestBase {
     // the repartition must BE the aggregate's exchange — a second
     // session-width shuffle above it would reintroduce the §61 spill
     val g = randomGraph(40, 120, seed = 7, parts = 3)
-    val plain = GraphAlgos.jaccardSimilarity(g, localWork = 0L)
+    val plain = GraphAlgos.jaccardArms(g, 64, 0.0).distributed()
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         math.rint(r.getDouble(3) * 1e9))).sortBy(x => (x._1, x._2)).toSeq
     spark.conf.set("spark.graft.scaledWidth.rowsPerPart", "1")
     try {
-      val wide = GraphAlgos.jaccardSimilarity(g, localWork = 0L)
+      val wide = GraphAlgos.jaccardArms(g, 64, 0.0).distributed()
       val got = wide.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getLong(2), math.rint(r.getDouble(3) * 1e9)))
         .sortBy(x => (x._1, x._2)).toSeq
@@ -154,10 +154,9 @@ class AlgoPropertySpec extends SparkTestBase {
       for (seed <- Seq(11L, 12L); t <- Seq(0.2, 1.0 / 3, 0.5, 0.75, 1.0);
            cap <- Seq(4, 64)) {
         val g = randomGraph(60, 220, seed = seed, parts = 3)
-        val full = GraphAlgos.jaccardSimilarity(g, degCap = cap, localWork = 0L)
+        val full = GraphAlgos.jaccardArms(g, cap, 0.0).distributed()
           .filter(col("jaccard") >= t)
-        val pruned = GraphAlgos.jaccardSimilarity(g, degCap = cap, threshold = t,
-          localWork = 0L)
+        val pruned = GraphAlgos.jaccardArms(g, cap, t).distributed()
         assert(canon(pruned) === canon(full), s"seed=$seed t=$t cap=$cap")
       }
     } finally spark.conf.unset("spark.graft.jaccard.fullPlanPairBound")
@@ -171,48 +170,18 @@ class AlgoPropertySpec extends SparkTestBase {
         .sortBy(x => (x._1, x._2)).toSeq
     val g = randomGraph(60, 220, seed = 13, parts = 3)
     GraphAlgos.clearPathDecisions(spark)
-    val fast = GraphAlgos.jaccardSimilarity(g, threshold = 0.5, localWork = 0L)
+    val fast = GraphAlgos.jaccardArms(g, 64, 0.5).distributed()
     val fastCanon = canon(fast)
     val dec = GraphAlgos.recentPathDecisions(spark)
     assert(dec.exists(_.contains("full wedge plan + threshold filter")), dec)
     spark.conf.set("spark.graft.jaccard.fullPlanPairBound", "0")
     try {
       GraphAlgos.clearPathDecisions(spark)
-      val pruned = GraphAlgos.jaccardSimilarity(g, threshold = 0.5, localWork = 0L)
+      val pruned = GraphAlgos.jaccardArms(g, 64, 0.5).distributed()
       assert(canon(pruned) === fastCanon)
       val dec2 = GraphAlgos.recentPathDecisions(spark)
       assert(dec2.exists(_.contains("prefix-filtered thresholded plan")), dec2)
     } finally spark.conf.unset("spark.graft.jaccard.fullPlanPairBound")
-  }
-
-  test("jaccard endgame equals the distributed plans exactly across caps " +
-      "and thresholds") {
-    // self-loops, multi-edges and endpoints missing from the vertex
-    // frame on top of the random edges; values compare bit for bit
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .sortBy(x => (x._1, x._2)).toSeq
-    def v(i: Long) = GraphId.make(VL, i)
-    for (seed <- Seq(51L, 52L)) {
-      val rnd = new scala.util.Random(seed)
-      val n = 40
-      val random = Seq.fill(130)((v(rnd.nextInt(n) + 1L), v(rnd.nextInt(n + 6) + 1L)))
-      val odd = Seq((v(1), v(1)), (v(2), v(3)), (v(2), v(3)), (v(3), v(2)),
-        (v(n + 10L), v(4)), (v(n + 10L), v(n + 11L)), (v(5), v(n + 11L)))
-      val es = (random ++ odd).zipWithIndex
-        .map { case ((s, t), j) => (GraphId.make(EL, j + 1L), s, t) }
-        .toDF("id", "start_id", "end_id").repartition(3)
-      val vs = (1L to n).map(i => Tuple1(v(i))).toDF("id").repartition(2)
-      val g = new PropertyGraph(s"jac_diff_$seed",
-        Seq(VertexLabel("node", VL, vs)), Seq(EdgeLabel("edge", EL, es)))
-      for (cap <- Seq(1, 2, 4, 64); t <- Seq(0.0, 0.2, 1.0 / 3, 0.5, 1.0)) {
-        val local = canon(GraphAlgos.jaccardSimilarity(g, cap, t))
-        assert(local === canon(GraphAlgos.jaccardSimilarity(g, cap, t, localWork = 0L)),
-          s"seed=$seed cap=$cap t=$t")
-        if (cap == 64 && t == 0.0) assert(local.nonEmpty)
-      }
-    }
   }
 
   test("jaccard records its path decision with its gate values") {
@@ -225,7 +194,8 @@ class AlgoPropertySpec extends SparkTestBase {
     val auto = decisions(GraphAlgos.jaccardSimilarity(g, 64, 0.5))
     assert(auto.exists(d => d.startsWith("jaccard: driver endgame") &&
       d.contains("degCap=64")), auto)
-    val forced = decisions(GraphAlgos.jaccardSimilarity(g, 64, 0.5, localWork = 0L))
+    val forced = decisions(GraphAlgos.run(
+      GraphAlgos.jaccardArms(g, 64, 0.5).copy(rows = Long.MaxValue)))
     assert(forced.exists(_.startsWith("jaccard: distributed path")), forced)
   }
 
@@ -293,21 +263,6 @@ class AlgoPropertySpec extends SparkTestBase {
       assert(math.abs(got(v) - bc(v) / 2.0) < 1e-6, s"vertex $v: ${got(v)} vs ${bc(v) / 2.0}")
   }
 
-  test("betweenness: driver-local endgame equals the distributed level " +
-      "loop, exact and sampled") {
-    // the default call takes the brandesLocal endgame on a graph this
-    // small; localWork = 0 forces the distributed path — both must
-    // produce the same centralities (incl. the same hash source pick)
-    val g = randomGraph(120, 300, seed = 47, parts = 5)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e6)))
-        .sortBy(_._1).toSeq
-    assert(canon(GraphAlgos.betweenness(g, nSources = 0)) ===
-      canon(GraphAlgos.betweenness(g, nSources = 0, localWork = 0L)))
-    assert(canon(GraphAlgos.betweenness(g, nSources = 16)) ===
-      canon(GraphAlgos.betweenness(g, nSources = 16, localWork = 0L)))
-  }
-
   test("betweenness: source-batched level loop equals the single-batch " +
       "run (bc is additive over sources)") {
     // batchRows small enough that the 16 sampled sources split into
@@ -316,11 +271,11 @@ class AlgoPropertySpec extends SparkTestBase {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e6)))
         .sortBy(_._1).toSeq
-    val single = canon(GraphAlgos.betweenness(g, nSources = 16, localWork = 0L))
+    def distributed = canon(GraphAlgos.betweennessArms(g, 16, 64).distributed())
+    val single = distributed
     spark.conf.set("spark.graft.betweenness.batchRows", "240")
     try {
-      val batched = canon(GraphAlgos.betweenness(g, nSources = 16, localWork = 0L))
-      assert(batched === single)
+      assert(distributed === single)
     } finally spark.conf.unset("spark.graft.betweenness.batchRows")
   }
 
@@ -333,7 +288,7 @@ class AlgoPropertySpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("btw-ckpt-spec")
     spark.sparkContext.setCheckpointDir(dir.toString)
     val g = randomGraph(80, 200, seed = 31, parts = 3)
-    val out = GraphAlgos.betweenness(g, nSources = 8, localWork = 0L)
+    val out = GraphAlgos.betweennessArms(g, 8, 64).distributed()
     assert(out.count() === 80L)
     def rddDirs: Seq[java.nio.file.Path] = {
       import scala.jdk.CollectionConverters._
@@ -588,19 +543,10 @@ class AlgoPropertySpec extends SparkTestBase {
     assert(walks2 === expected)
   }
 
-  test("GraphX-replay endgames equal GraphX: connected components and triangles") {
-    // integer results — the union-find / merge-intersection kernels
-    // must agree EXACTLY with the GraphX library paths, including on a
-    // graph with self-loops, parallel edges, and multiple components
+  test("triangles: K5 closed form and a shuffle-only distributed plan") {
     val g = randomGraph(120, 200, seed = 71, parts = 4)
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    assert(pairs(GraphAlgos.connectedComponents(g)) ===
-      pairs(GraphAlgos.connectedComponents(g, localWork = 0L)))
-    assert(pairs(GraphAlgos.triangleCount(g)) ===
-      pairs(GraphAlgos.triangleCount(g, localWork = 0L)))
-    assertPageRankAndSsspReplay(g, Seq(GraphId.make(VL, 1), GraphId.make(VL, 77),
-      GraphId.make(VL, 999)))
     // closed form: K5 has C(5,3) = 10 triangles, 6 per vertex
     val k5 = Generators.completeGraph(spark, 5)
     val tri = pairs(GraphAlgos.triangleCount(k5))
@@ -622,152 +568,21 @@ class AlgoPropertySpec extends SparkTestBase {
     val g1 = randomGraph(80, 200, seed = 101, parts = 3)
     val g2 = randomGraph(80, 200, seed = 102, parts = 3)
     val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val seq1 = GraphAlgos.labelPropagationDet(g1, 3, localWork = 0L)
+    def lpa = GraphAlgos.labelPropagationArms(g1, 3).distributed()
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val seq2 = GraphAlgos.kCore(g2, 3, localWork = 0L)
+    def kcore = GraphAlgos.kCoreArms(g2, 3, 1000).distributed()
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    val seq1 = lpa
+    val seq2 = kcore
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val f1 = Future(GraphAlgos.labelPropagationDet(g1, 3, localWork = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq)
-    val f2 = Future(GraphAlgos.kCore(g2, 3, localWork = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq)
+    val f1 = Future(lpa)
+    val f2 = Future(kcore)
     assert(Await.result(f1, 5.minutes) === seq1)
     assert(Await.result(f2, 5.minutes) === seq2)
     assert(spark.conf.get("spark.sql.shuffle.partitions") === before,
       "tuned conf leaked past the procedure calls")
-  }
-
-  test("endgames equal distributed paths on a graph with DANGLING edge endpoints") {
-    // edges referencing ids absent from the vertex frames are legal
-    // input (an ingest race, a partial delete) and each distributed
-    // operator has a defined behavior: vote joins drop them (lpa),
-    // edge-frame expansions traverse/emit them (kcore, walks,
-    // betweenness, cc, triangles), normalizations count their mass
-    // (hits) — the endgames must replay each behavior exactly
-    def v(i: Long) = GraphId.make(VL, i)
-    val vdf = (1L to 8L).map(i => Tuple1(v(i))).toDF("id").repartition(3)
-    val real = Seq((v(1), v(2)), (v(2), v(3)), (v(3), v(1)), (v(3), v(4)),
-      (v(4), v(5)), (v(5), v(6)), (v(6), v(4)), (v(7), v(7)), (v(1), v(2)))
-    val dangling = Seq((v(1), v(91)), (v(91), v(2)), (v(92), v(93)), (v(6), v(92)))
-    val edf = (real ++ dangling).zipWithIndex
-      .map { case ((s, t), j) => (GraphId.make(EL, j + 1L), s, t) }
-      .toDF("id", "start_id", "end_id").repartition(3)
-    val g = new PropertyGraph("dangling",
-      Seq(VertexLabel("node", VL, vdf)), Seq(EdgeLabel("edge", EL, edf)))
-    def longs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    def dbls(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9)))
-        .sortBy(_._1).toSeq
-    assert(longs(GraphAlgos.labelPropagationDet(g, 3)) ===
-      longs(GraphAlgos.labelPropagationDet(g, 3, localWork = 0L)), "lpa")
-    assert(longs(GraphAlgos.kCore(g, 2)) ===
-      longs(GraphAlgos.kCore(g, 2, localWork = 0L)), "kcore")
-    assert(longs(GraphAlgos.randomWalks(g, steps = 3)) ===
-      longs(GraphAlgos.randomWalks(g, steps = 3, localWork = 0L)), "walks")
-    assert(longs(GraphAlgos.connectedComponents(g)) ===
-      longs(GraphAlgos.connectedComponents(g, localWork = 0L)), "cc")
-    assert(longs(GraphAlgos.scc(g)) ===
-      longs(GraphAlgos.scc(g, localRowBudget = 0L)), "scc")
-    assert(longs(GraphAlgos.triangleCount(g)) ===
-      longs(GraphAlgos.triangleCount(g, localWork = 0L)), "triangles")
-    assert(dbls(GraphAlgos.betweenness(g, nSources = 0)) ===
-      dbls(GraphAlgos.betweenness(g, nSources = 0, localWork = 0L)), "betweenness")
-    assert(dbls(GraphAlgos.weightedSssp(g, v(1), "nope", rounds = 4)) ===
-      dbls(GraphAlgos.weightedSssp(g, v(1), "nope", rounds = 4, localWork = 0L)),
-      "wsssp")
-    assert(dbls(GraphAlgos.personalizedPageRank(g, v(1), 0.15, rounds = 3)) ===
-      dbls(GraphAlgos.personalizedPageRank(g, v(1), 0.15, rounds = 3,
-        localWork = 0L)), "ppr")
-    val hL = GraphAlgos.hits(g, rounds = 3).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1).toSeq
-    val hD = GraphAlgos.hits(g, rounds = 3, localWork = 0L).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1).toSeq
-    assert(hL.map(_._1) === hD.map(_._1), "hits ids")
-    for ((a, b) <- hL.zip(hD)) {
-      assert(math.abs(a._2 - b._2) < 1e-9, s"hits hub ${a._1}")
-      assert(math.abs(a._3 - b._3) < 1e-9, s"hits auth ${a._1}")
-    }
-    // landmarks: a real vertex, a dangling endpoint, an absent id
-    assertPageRankAndSsspReplay(g, Seq(v(2), v(91), v(500)))
-  }
-
-  /** pageRank's driver replay equals GraphX within 1e-9 relative, and
-    * sssp's equals GraphX exactly at every landmark (an absent landmark
-    * gives the empty result on both paths). */
-  private def assertPageRankAndSsspReplay(g: PropertyGraph, landmarks: Seq[Long]): Unit = {
-    def ranks(localWork: Long) = GraphAlgos.pageRank(g, localWork = localWork)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
-    val (pL, pX) = (ranks(-1L), ranks(0L))
-    assert(pL.map(_._1) === pX.map(_._1), "pagerank ids")
-    for ((a, b) <- pL.zip(pX))
-      assert(math.abs(a._2 - b._2) <= 1e-9 * math.max(math.abs(a._2), math.abs(b._2)),
-        s"pagerank ${a._1}: ${a._2} vs ${b._2}")
-    for (lm <- landmarks) {
-      def dists(localWork: Long) = GraphAlgos.sssp(g, lm, localWork = localWork)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-      assert(dists(-1L) === dists(0L), s"sssp landmark $lm")
-    }
-    assert(GraphAlgos.sssp(g, GraphId.make(VL, 12345)).count() === 0L)
-  }
-
-  test("iterative endgames equal their distributed paths: lpa, walks, kcore") {
-    // the default call takes the driver-local kernel on a graph this
-    // small; localWork = 0 forces the distributed rounds — integer
-    // algorithms must agree EXACTLY
-    val g = randomGraph(90, 240, seed = 53, parts = 4)
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    assert(pairs(GraphAlgos.labelPropagationDet(g, 4)) ===
-      pairs(GraphAlgos.labelPropagationDet(g, 4, localWork = 0L)))
-    assert(pairs(GraphAlgos.randomWalks(g, steps = 4)) ===
-      pairs(GraphAlgos.randomWalks(g, steps = 4, localWork = 0L)))
-    assert(pairs(GraphAlgos.kCore(g, 3)) ===
-      pairs(GraphAlgos.kCore(g, 3, localWork = 0L)))
-  }
-
-  test("iterative endgames equal their distributed paths: wsssp (weighted, exact)") {
-    // weighted digraph with a real edge property; min-combine arithmetic
-    // is order-independent, so doubles must be BIT-equal across paths
-    val rnd = new scala.util.Random(9)
-    val vs = (1 to 30).map(i => Tuple1(GraphId.make(VL, i))).toDF("id")
-    val es = (1 to 70).map { j =>
-      (GraphId.make(EL, j), GraphId.make(VL, rnd.nextInt(30) + 1),
-        GraphId.make(VL, rnd.nextInt(30) + 1), (rnd.nextInt(9) + 1).toDouble)
-    }.toDF("id", "start_id", "end_id", "w")
-    val g = new PropertyGraph("wsssp_paths",
-      Seq(VertexLabel("node", VL, vs.repartition(3))),
-      Seq(EdgeLabel("edge", EL, es.repartition(3))))
-    def dists(localWork: Long) =
-      GraphAlgos.weightedSssp(g, GraphId.make(VL, 1), "w", rounds = 5,
-          localWork = localWork)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
-    assert(dists(-1L) === dists(0L))
-  }
-
-  test("iterative endgames equal their distributed paths: hits and ppr (1e-9)") {
-    // float sums accumulate in a different order on the two paths —
-    // agreement must hold far beneath every graded rounding
-    val g = randomGraph(80, 220, seed = 59, parts = 4)
-    val hL = GraphAlgos.hits(g, rounds = 4)
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1)
-    val hD = GraphAlgos.hits(g, rounds = 4, localWork = 0L)
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1)
-    assert(hL.map(_._1).toSeq === hD.map(_._1).toSeq)
-    for ((a, b) <- hL.zip(hD)) {
-      assert(math.abs(a._2 - b._2) < 1e-9, s"hub ${a._1}")
-      assert(math.abs(a._3 - b._3) < 1e-9, s"auth ${a._1}")
-    }
-    val src = GraphId.make(VL, 7)
-    val pL = GraphAlgos.personalizedPageRank(g, src, 0.15, rounds = 4)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
-    val pD = GraphAlgos.personalizedPageRank(g, src, 0.15, rounds = 4, localWork = 0L)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
-    assert(pL.map(_._1).toSeq === pD.map(_._1).toSeq)
-    for ((a, b) <- pL.zip(pD))
-      assert(math.abs(a._2 - b._2) < 1e-9, s"rank ${a._1}")
   }
 
   test("endgames collect a snapshot once: later procedures launch no Spark job") {
@@ -835,11 +650,13 @@ class AlgoPropertySpec extends SparkTestBase {
     val pr = decisions(GraphAlgos.pageRank(g))
     assert(pr.exists(d => d.startsWith("pagerank: driver endgame") &&
       d.contains("round bound=")), pr)
-    assert(decisions(GraphAlgos.pageRank(g, localWork = 0L))
+    assert(decisions(GraphAlgos.run(
+        GraphAlgos.pageRankArms(g, 0.0001, 0.15).copy(rows = Long.MaxValue)))
       .exists(_.startsWith("pagerank: distributed path")))
     assert(decisions(GraphAlgos.sssp(g, GraphId.make(VL, 1)))
       .exists(_.startsWith("sssp: driver endgame")))
-    assert(decisions(GraphAlgos.sssp(g, GraphId.make(VL, 1), localWork = 0L))
+    assert(decisions(GraphAlgos.run(
+        GraphAlgos.ssspArms(g, GraphId.make(VL, 1)).copy(rows = Long.MaxValue)))
       .exists(_.startsWith("sssp: distributed path")))
     // no provable round bound → the gate fails whatever the budget
     assert(GraphAlgos.pageRankRoundBound(100L, 0.0, 0.15) === -1L)
