@@ -37,6 +37,12 @@ object Bench {
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // a failure the bench survives is still reported: one stderr line
+    def brief(e: Throwable): String =
+      s"${e.getClass.getName}: ${String.valueOf(e.getMessage)}"
+        .replaceAll("[\\n\\r\\t]", " ").take(300)
+    def warn(what: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $what failed: ${brief(e)}")
     // self-attribution (r13 verdict #2): count Spark jobs per timed run
     // so a drifted query's artifact shows WHAT it did, not just how long
     // it took — 95 s with the same job count as a 7 s run is box state;
@@ -101,7 +107,7 @@ object Bench {
     val tWarm = System.nanoTime()
     for (wd <- warmDirs; (name, fn) <- qs0
          if !(warmOnce(name) && wd != warmDirs.head)) {
-      try fn(spark, wd).count() catch { case _: Throwable => () }
+      try fn(spark, wd).count() catch { case e: Throwable => warn(s"warm-up $name at $wd", e) }
     }
     val warmupS = (System.nanoTime() - tWarm) / 1e9
     // one-time bucketed-table materialization for the store-backed
@@ -111,7 +117,7 @@ object Bench {
     // the initial load
     val tSave = System.nanoTime()
     try graft.graph.TpchGraph.storeBacked(spark, sfDir)
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => warn("bucketed-table save", e) }
     val saveS = (System.nanoTime() - tSave) / 1e9
     // queries whose algo-path decisions land in the artifact: the r12/r13
     // drift movers plus both jaccard paths — the census gate's
@@ -140,12 +146,16 @@ object Bench {
       // let ContextCleaner's async block/broadcast removals (triggered by
       // the gc above) drain before the timed window opens
       Thread.sleep(200)
-      def run1(): (Double, Int, Long) = {
+      // (seconds, jobs, gc ms, error): a failed run keeps its time and
+      // counters in the per-query maps but never enters a total
+      def run1(): (Double, Int, Long, Option[Throwable]) = {
         val j0 = jobCount.get()
         val g0 = gcNowMs()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        ((System.nanoTime() - t0) / 1e9, jobCount.get() - j0, gcNowMs() - g0)
+        val err =
+          try { fn(spark, sfDir).count(); None }
+          catch { case e: Throwable => Some(e) }
+        ((System.nanoTime() - t0) / 1e9, jobCount.get() - j0, gcNowMs() - g0, err)
       }
       // cold first (the 100 TB cold-read protocol, unchanged), then two
       // warm repeats: the median of the three separates genuine plan
@@ -154,34 +164,44 @@ object Bench {
       // round-over-round per-query deltas noisy by ±2× on sub-second
       // queries
       graft.graph.GraphAlgos.clearPathDecisions(spark)
-      val (cold, jCold, gCold) = run1()
-      val (w1, jW1, gW1) = run1()
-      val (w2, jW2, gW2) = run1()
+      val runs = Seq("cold", "warm1", "warm2").map(label => label -> run1())
+      val Seq(cold, w1, w2) = runs.map(_._2._1)
       val med = Seq(cold, w1, w2).sorted.apply(1)
       val dec =
         if (decisionsFor(name))
           graft.graph.GraphAlgos.recentPathDecisions(spark).distinct
         else Nil
-      name -> ((cold, med, Seq(jCold, jW1, jW2), dec, Seq(gCold, gW1, gW2)))
+      val failed = runs.collect { case (label, (_, _, _, Some(e))) =>
+        warn(s"$name $label run", e)
+        label -> brief(e)
+      }
+      name -> ((cold, med, runs.map(_._2._2), dec, runs.map(_._2._3), failed))
     }
-    val qs = results.map { case (k, (c, _, _, _, _)) => s"\"" + k + "\":" + c }
+    val qs = results.map { case (k, (c, _, _, _, _, _)) => s"\"" + k + "\":" + c }
       .mkString("{", ",", "}")
-    val qsMed = results.map { case (k, (_, m, _, _, _)) => s"\"" + k + "\":" + m }
+    val qsMed = results.map { case (k, (_, m, _, _, _, _)) => s"\"" + k + "\":" + m }
       .mkString("{", ",", "}")
-    val qsJobs = results.map { case (k, (_, _, j, _, _)) =>
+    val qsJobs = results.map { case (k, (_, _, j, _, _, _)) =>
       s"\"" + k + "\":" + j.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val qsGc = results.map { case (k, (_, _, _, _, g)) =>
+    val qsGc = results.map { case (k, (_, _, _, _, g, _)) =>
       s"\"" + k + "\":" + g.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     def jstr(s: String): String =
       "\"" + s.replace("\\", "/").replace("\"", "'")
         .replaceAll("[\\n\\r\\t]", " ") + "\""
-    val qsDecisions = results.collect { case (k, (_, _, _, d, _)) if d.nonEmpty =>
+    val qsDecisions = results.collect { case (k, (_, _, _, d, _, _)) if d.nonEmpty =>
       s"\"" + k + "\":" + d.map(jstr).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
-    val totalMed = if (results.nonEmpty) results.values.map(_._2).sum else 0.0
+    val qsFailures = results.collect { case (k, (_, _, _, _, _, f)) if f.nonEmpty =>
+      s"\"" + k + "\":" + f.map { case (label, err) => s"\"" + label + "\":" + jstr(err) }
+        .mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
+    // totals count passed runs only: the cold sum skips failed cold runs,
+    // the median sum skips any query with a failed run
+    val total = results.values.collect {
+      case (c, _, _, _, _, f) if !f.exists(_._1 == "cold") => c }.sum
+    val totalMed = results.values.collect { case (_, m, _, _, _, f) if f.isEmpty => m }.sum
     // numeric sf when the dir follows the /root/testdata/sfN.NN convention
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1))
     val sfJson = sfNum.getOrElse("\"" + sfDir + "\"")
@@ -280,6 +300,7 @@ object Bench {
       s""""queries_median":$qsMed,"timed_median_s":$totalMed,""" +
       s""""warmup_s":$warmupS,"save_s":$saveS,"timed_s":$total,""" +
       s""""jobs":$qsJobs,"gc_ms":$qsGc,"decisions":$qsDecisions,""" +
+      s""""failures":$qsFailures,""" +
       s""""control":$controlJson,"sf":$sfJson}"""
     println(line)
     // belt-and-braces copy of the SAME line as a file (r14 verdict #2c:
@@ -290,7 +311,7 @@ object Bench {
       java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
         "bench_last.json")),
       (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => warn("bench_last.json write", e) }
     spark.stop()
   }
 }

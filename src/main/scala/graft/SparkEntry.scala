@@ -1263,8 +1263,8 @@ object SparkEntry {
         .select(col("doc_id"), Dedup.simhash(col("text")).as("sig"))
         .orderBy("doc_id")),
 
-    // transitive dedup decision: connected components (GraphX) over the
-    // LSH near-dup pairs — one representative per duplicate cluster
+    // transitive dedup decision: connected components over the LSH
+    // near-dup pairs — one representative per duplicate cluster
     "p_dedup_clusters" -> ((s, dir) =>
       Dedup.dupClusters(
         Dedup.minhashLsh(t(s, dir, "documents"), "text", "doc_id",
@@ -2575,8 +2575,8 @@ object SparkEntry {
          |ORDER BY id_a, id_b""".stripMargin,
 
     // transitive closure of the LSH near-dup pairs: component rep per doc
-    // (DuckDB's recursive CTE is the oracle for the GraphX connected
-    // components in Dedup.dupClusters)
+    // (DuckDB's recursive CTE is the oracle for the connected components
+    // in Dedup.dupClusters)
     "p_dedup_clusters" ->
       s"""WITH RECURSIVE ${oraMinhashCtes()},
          |pr AS (SELECT id_a, id_b FROM v WHERE jaccard >= 0.3),

@@ -380,23 +380,33 @@ object GraphAlgos {
     * (negative when it has none), evaluated only once `rows` fits, so a
     * bound that needs a census job pays it only for a graph the driver
     * could hold. `local` runs the driver kernel, `distributed` the
-    * at-scale plan; both yield the same rows under `columns`. [[run]]
+    * at-scale plan; both yield the same rows under `columns`. `encode`
+    * turns the local rows into the LocalRelation [[run]] returns. [[run]]
     * picks one arm; specs and tools call either directly. */
-  private[graft] final case class Endgame[T <: Product : TypeTag](
+  private[graft] final case class Endgame[T](
       spark: SparkSession, op: String, columns: Seq[String], rows: Long,
       work: () => Long, detail: String,
-      local: () => Array[T], distributed: () => DataFrame) {
-    /** The local arm as the result frame [[run]] returns: a
-      * LocalRelation with the tuple encoder's schema. */
-    def localFrame(): DataFrame =
-      spark.createDataset(local().toSeq)(Encoders.product[T]).toDF(columns: _*)
+      local: () => Array[T], distributed: () => DataFrame,
+      encode: Array[T] => DataFrame) {
+    /** The local arm as the result frame [[run]] returns. */
+    def localFrame(): DataFrame = encode(local())
+  }
+
+  private[graft] object Endgame {
+    /** A member whose local rows are tuples, encoded with the tuple
+      * encoder under `columns`. */
+    def apply[T <: Product : TypeTag](spark: SparkSession, op: String, columns: Seq[String],
+        rows: Long, work: () => Long, detail: String,
+        local: () => Array[T], distributed: () => DataFrame): Endgame[T] =
+      Endgame(spark, op, columns, rows, work, detail, local, distributed,
+        (rs: Array[T]) => spark.createDataset(rs.toSeq)(Encoders.product[T]).toDF(columns: _*))
   }
 
   /** The one endgame gate: the local arm runs iff `rows` fits
     * [[collectBudget]] and `work` fits [[LocalIterWork]]. Records
     * `<op>: driver endgame|distributed path (rows=…, steps=…[, detail])`
     * either way. */
-  private[graft] def run[T <: Product](e: Endgame[T]): DataFrame = {
+  private[graft] def run[T](e: Endgame[T]): DataFrame = {
     val rowBudget = collectBudget(e.spark)
     val work = if (e.rows <= rowBudget) Some(e.work()) else None
     val fits = work.exists(w => w >= 0L && w <= LocalIterWork)
@@ -411,8 +421,13 @@ object GraphAlgos {
 
   /** `a · b`, or -1 (unbounded) when an operand is unbounded (< 0) or
     * the product does not fit a Long. */
-  private def boundedProduct(a: Long, b: Long): Long =
+  private[graft] def boundedProduct(a: Long, b: Long): Long =
     if (a < 0L || b < 0L || (a != 0L && b > Long.MaxValue / a)) -1L else a * b
+
+  /** `a + b`, or -1 (unbounded) when an operand is unbounded (< 0) or
+    * the sum does not fit a Long. */
+  private[graft] def boundedSum(a: Long, b: Long): Long =
+    if (a < 0L || b < 0L || b > Long.MaxValue - a) -1L else a + b
 
   /** Open-addressing primitive long→int map (linear probing, ≤ 0.5
     * load) for the endgame kernels' id→dense-index lookups — a boxed

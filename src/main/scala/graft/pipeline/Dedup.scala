@@ -1,7 +1,12 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FrameBridge
 import org.apache.spark.sql.types._
 
 import graft.graph.GraphAlgos
@@ -12,8 +17,12 @@ import graft.graph.GraphAlgos
   * O(n²) near-dup problem into band-bucket equi-joins (shuffle on band
   * signature, candidate pairs only within buckets) — the standard
   * shingle→minhash→band→bucket-join pipeline; SimHash reduces each doc
-  * to a 64-bit signature joinable on rotated prefixes. No driver-side
-  * loops; everything is DataFrame ops.
+  * to a 64-bit signature joinable on rotated prefixes. Every operator is
+  * DataFrame ops, except that [[Dedup.minhashLsh]] and
+  * [[Dedup.dupClusters]] run behind the endgame gate
+  * ([[graft.graph.GraphAlgos.run]]): a corpus or pair set the driver
+  * provably holds finishes in one driver kernel over one collect, and
+  * anything larger runs the distributed plan.
   */
 object Dedup {
 
@@ -87,23 +96,228 @@ object Dedup {
     }: _*)
   }
 
-  /** LSH candidate pairs: split the signature into `bands` bands of
-    * `rows` hashes; docs sharing any band bucket are candidates, then
+  /** LSH near-duplicate pairs: split each document's MinHash signature
+    * into `bands` bands of `rowsPerBand` hashes; documents sharing a band
+    * bucket (2..`maxBucketSize` documents) are candidates, then
     * exact-Jaccard-verified on their shingle sets.
     *
-    * Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard >=
-    * threshold. The band join shuffles on (band index, band hash) —
-    * candidate generation never materializes the n² pair space.
+    * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard rounded
+    * half-up to 4 places and >= threshold. Runs behind the endgame gate
+    * as `minhash_lsh` (see [[minhashLshArms]]): a corpus whose
+    * signatures and shingle sets provably fit the driver collects its
+    * signature table once and finishes there, with a LocalRelation
+    * result; a larger one runs the distributed plan, whose band join
+    * shuffles on (band index, band hash) — candidate generation never
+    * materializes the n² pair space.
     */
   def minhashLsh(
       df: DataFrame, textCol: String, idCol: String,
       shingleK: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-      threshold: Double = 0.5, maxBucketSize: Int = 200): DataFrame = {
-    val sigs = sigTable(df, textCol, idCol, shingleK, bands * rowsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val candidates = bucketPairs(bandedRows(sigs, bands, rowsPerBand), maxBucketSize)
-    verifyPairs(candidates, sigs, sigs, threshold)
+      threshold: Double = 0.5, maxBucketSize: Int = 200): DataFrame =
+    GraphAlgos.run(minhashLshArms(df, textCol, idCol, shingleK, bands, rowsPerBand,
+      threshold, maxBucketSize))
+
+  /** [[minhashLsh]]'s two arms.
+    *
+    * `rows` is the collect volume in longs — per document its id,
+    * `bands · rowsPerBand` minima and at most its token count of
+    * distinct shingles — from one map-only census job over the input. `work`
+    * collects the signature table once (the local arm reuses it) and
+    * bounds the driver steps: `bands · docs` for banding plus, per kept
+    * bucket, the merge cost of verifying every pair in it. The local arm
+    * replays the distributed plan's semantics: null ids never pair
+    * (collect_list skips them), a duplicate id verifies against every
+    * document carrying it (the inner joins' fan-out), a pair found in
+    * several bands is verified once, and the Jaccard is rounded like
+    * Spark's `round`. An id column that is neither `int` nor `bigint`
+    * has no local encoding and always runs the distributed plan. */
+  private[graft] def minhashLshArms(
+      df: DataFrame, textCol: String, idCol: String, shingleK: Int, bands: Int,
+      rowsPerBand: Int, threshold: Double,
+      maxBucketSize: Int): GraphAlgos.Endgame[InternalRow] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val numHashes = bands * rowsPerBand
+    val idType = df.select(col(idCol)).schema.head.dataType
+    // the distributed arm's result schema (its ids come out of the
+    // non-null collect_list elements; round() over a division is nullable)
+    val schema = StructType(Seq(StructField("id_a", idType, nullable = false),
+      StructField("id_b", idType, nullable = false), StructField("jaccard", DoubleType)))
+    val toId: Option[Long => Any] = idType match {
+      case LongType => Some(v => v)
+      case IntegerType => Some(_.toInt)
+      case _ => None
+    }
+    val (rows, detail) = toId match {
+      case None => (Long.MaxValue, s"id type ${idType.simpleString} has no local encoding")
+      case Some(_) =>
+        // per-partition sums, so the census is one map-only job
+        val (docs, tokens) = docTokens(df, textCol, idCol).select(size(col("__toks"))).as[Int]
+          .mapPartitions { sizes =>
+            var (d, t) = (0L, 0L)
+            sizes.foreach { n => d += 1; t += n }
+            Iterator((d, t))
+          }.collect().foldLeft((0L, 0L)) { case ((d, t), (pd, pt)) => (d + pd, t + pt) }
+        (GraphAlgos.boundedSum(GraphAlgos.boundedProduct(docs, 1L + numHashes), tokens),
+          s"docs=$docs")
+    }
+    lazy val kernel = {
+      // one map-only collect: a corpus within the collect budget is
+      // hashed where its partitions stand, without sigTable's rebalancing
+      // shuffle. Minima are never null here: a document with text has at
+      // least one shingle
+      val sigs = signatures(docTokens(df, textCol, idCol), shingleK, numHashes)
+        .filter(col("__id").isNotNull)
+        .select(col("__id").cast(LongType), col("__set"), col("__mins"))
+        .as[(Long, Array[Long], Array[Long])].collect()
+      new LshKernel(sigs.map(_._1), sigs.map(_._2), sigs.map(_._3), bands, rowsPerBand,
+        maxBucketSize)
+    }
+    def distributed(): DataFrame = {
+      val sigs = sigTable(df, textCol, idCol, shingleK, numHashes)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      pinUntilDropped(verifyPairs(bucketPairs(bandedRows(sigs, bands, rowsPerBand),
+        maxBucketSize), sigs, sigs, threshold), sigs)
+    }
+    GraphAlgos.Endgame[InternalRow](spark, "minhash_lsh", schema.fieldNames.toSeq, rows,
+      () => kernel.work, detail, () => kernel.pairs(threshold, toId.get),
+      () => distributed(), rs => FrameBridge.localFrame(spark, schema, rs.toSeq))
   }
+
+  /** The driver kernel of [[minhashLsh]] over one collected signature
+    * table (null ids already dropped): banding, kept buckets, candidate
+    * pairs deduplicated across bands, exact Jaccard by sorted-set merge. */
+  private final class LshKernel(ids: Array[Long], sets0: Array[Array[Long]],
+      mins: Array[Array[Long]], bands: Int, rowsPerBand: Int, maxBucketSize: Int) {
+    private val n = ids.length
+    private val sets = sets0.map { s => val c = s.clone(); java.util.Arrays.sort(c); c }
+    // dense id ranks: equal ids share a rank and rank order is id order,
+    // so a candidate pair packs into one long (rank_a << 32 | rank_b)
+    private val distinct = ids.distinct.sorted
+    private val rank = ids.map(java.util.Arrays.binarySearch(distinct, _))
+    // documents by rank (CSR), and per rank its document count and the
+    // sum of its documents' set sizes
+    private val (rankStart, rankDocs) = {
+      val start = new Array[Int](distinct.length + 1)
+      rank.foreach(r => start(r + 1) += 1)
+      for (r <- 0 until distinct.length) start(r + 1) += start(r)
+      val fill = start.clone()
+      val docs = new Array[Int](n)
+      for (d <- 0 until n) { docs(fill(rank(d))) = d; fill(rank(d)) += 1 }
+      (start, docs)
+    }
+    private val rankSetSize = Array.tabulate(distinct.length) { r =>
+      (rankStart(r) until rankStart(r + 1)).map(i => sets(rankDocs(i)).length.toLong).sum
+    }
+
+    /** Kept buckets of every band: documents grouped by their band's
+      * minima, 2..maxBucketSize documents per group. */
+    private val buckets: Array[Array[Int]] = {
+      val out = Array.newBuilder[Array[Int]]
+      for (b <- 0 until bands) {
+        val lo = b * rowsPerBand
+        val cmp = new java.util.Comparator[Integer] {
+          def compare(x: Integer, y: Integer): Int = {
+            val (mx, my) = (mins(x), mins(y))
+            var j = 0
+            var c = 0
+            while (c == 0 && j < rowsPerBand) {
+              c = java.lang.Long.compare(mx(lo + j), my(lo + j)); j += 1
+            }
+            c
+          }
+        }
+        val order = Array.tabulate[Integer](n)(i => i)
+        java.util.Arrays.sort(order, cmp)
+        var i = 0
+        while (i < n) {
+          var j = i + 1
+          while (j < n && cmp.compare(order(i), order(j)) == 0) j += 1
+          if (j - i >= 2 && j - i <= maxBucketSize)
+            out += Array.tabulate(j - i)(k => order(i + k).intValue)
+          i = j
+        }
+      }
+      out.result()
+    }
+
+    /** Banding plus every kept bucket's verification bound: a pair of
+      * ids costs one merge of each document carrying one against each
+      * document carrying the other, Σ over members S(id) · (C − c(id))
+      * per bucket (c = documents per id, S = their summed set sizes, C
+      * = Σ c over the bucket); -1 on overflow. */
+    lazy val work: Long = buckets.foldLeft(GraphAlgos.boundedProduct(bands.toLong, n.toLong)) {
+      (acc, members) =>
+        val c = members.map(d => (rankStart(rank(d) + 1) - rankStart(rank(d))).toLong).sum
+        members.foldLeft(acc) { (w, d) =>
+          val r = rank(d)
+          GraphAlgos.boundedSum(w, GraphAlgos.boundedProduct(rankSetSize(r),
+            c - (rankStart(r + 1) - rankStart(r))))
+        }
+    }
+
+    /** Verified pairs as Catalyst rows (id_a, id_b, jaccard), `toId`
+      * mapping a long id back to the id column's type. */
+    def pairs(threshold: Double, toId: Long => Any): Array[InternalRow] = {
+      val keys = Array.newBuilder[Long]
+      for (members <- buckets; i <- members.indices; j <- i + 1 until members.length) {
+        val (ra, rb) = (rank(members(i)), rank(members(j)))
+        if (ra != rb)
+          keys += (math.min(ra, rb).toLong << 32) | math.max(ra, rb).toLong
+      }
+      val sortedKeys = keys.result()
+      java.util.Arrays.sort(sortedKeys)
+      val out = Array.newBuilder[InternalRow]
+      var k = 0
+      while (k < sortedKeys.length) {
+        val key = sortedKeys(k)
+        if (k == 0 || sortedKeys(k - 1) != key) {
+          val (ra, rb) = ((key >>> 32).toInt, key.toInt)
+          for (x <- rankStart(ra) until rankStart(ra + 1);
+               y <- rankStart(rb) until rankStart(rb + 1)) {
+            val (sa, sb) = (sets(rankDocs(x)), sets(rankDocs(y)))
+            val inter = intersectionSize(sa, sb)
+            val j = java.math.BigDecimal.valueOf(
+                inter.toDouble / (sa.length + sb.length - inter).toDouble)
+              .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+            if (j >= threshold)
+              out += new GenericInternalRow(Array[Any](toId(distinct(ra)), toId(distinct(rb)), j))
+          }
+        }
+        k += 1
+      }
+      out.result()
+    }
+
+    private def intersectionSize(a: Array[Long], b: Array[Long]): Int = {
+      var (i, j, c) = (0, 0, 0)
+      while (i < a.length && j < b.length) {
+        if (a(i) < b(j)) i += 1
+        else if (a(i) > b(j)) j += 1
+        else { c += 1; i += 1; j += 1 }
+      }
+      c
+    }
+  }
+
+  /** Marks the signature table a distributed [[minhashLsh]] result
+    * reads. The table is unpersisted when [[dupClusters]] consumes the
+    * result (see [[releaseSignatures]]) or, for any other caller, once
+    * the result's analyzed plan — which every frame derived from it
+    * holds — is garbage-collected. */
+  private val SigPin = TreeNodeTag[java.lang.ref.Cleaner.Cleanable]("graft.minhashSignatures")
+  private lazy val pinCleaner = java.lang.ref.Cleaner.create()
+
+  private def pinUntilDropped(pairs: DataFrame, sigs: DataFrame): DataFrame = {
+    val plan = pairs.queryExecution.analyzed
+    plan.setTagValue(SigPin, pinCleaner.register(plan, () => sigs.unpersist(false)))
+    pairs
+  }
+
+  /** Unpersists the signature table `pairs` pins, if it is a
+    * distributed [[minhashLsh]] result. */
+  private[graft] def releaseSignatures(pairs: DataFrame): Unit =
+    pairs.queryExecution.analyzed.getTagValue(SigPin).foreach(_.clean())
 
   /** Per-document signature table (__id, __set, __n, __mins).
     *
@@ -118,14 +332,22 @@ object Dedup {
   private[graft] def sigTable(df: DataFrame, textCol: String, idCol: String,
       shingleK: Int, numHashes: Int): DataFrame = {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val coefs = (0 until numHashes).map(minhashCoef)
+    signatures(docTokens(df, textCol, idCol).repartition(parts), shingleK, numHashes)
+  }
+
+  /** (__id, __toks) of every document with text: null-text docs drop up
+    * front (the old explode→groupBy path dropped them implicitly);
+    * otherwise they co-bucket on null band keys and fan out useless
+    * candidate pairs. */
+  private def docTokens(df: DataFrame, textCol: String, idCol: String): DataFrame =
     df.select(col(idCol).as("__id"), TextOps.tokens(col(textCol)).as("__toks"))
-      // drop null-text docs up front (the old explode→groupBy path
-      // dropped them implicitly); otherwise they co-bucket on null band
-      // keys and fan out useless candidate pairs
       .filter(col("__toks").isNotNull)
-      .repartition(parts)
-      .select(col("__id"),
+
+  /** [[sigTable]]'s columns over (__id, __toks) rows, hashed where they
+    * stand. */
+  private def signatures(toks: DataFrame, shingleK: Int, numHashes: Int): DataFrame = {
+    val coefs = (0 until numHashes).map(minhashCoef)
+    toks.select(col("__id"),
         graft.functions.MinhashExpressions
           .shingleHashes(col("__toks"), shingleK).as("__hs"))
       .select(col("__id"),
@@ -187,34 +409,46 @@ object Dedup {
     * id in the component — the "keep one document per cluster" decision
     * at corpus scale. Transitive closure matters because near-dup is not
     * transitive (A~B, B~C does not imply the detector paired A,C) yet a
-    * dedup pass must keep exactly one of {A,B,C}. A pair frame within
+    * dedup pass must keep exactly one of {A,B,C}.
+    *
+    * Runs behind the endgame gate as `dup_clusters`: a pair frame within
     * the collect budget finishes in the union-find endgame shared with
     * `connected_components` ([[GraphAlgos.ccLocal]]); larger ones run
-    * GraphX connectedComponents (pointer-jumping, O(log n) rounds). The
-    * pair frame is persisted for the call: one count() materializes it
-    * for the gate, and the endgame's collect reads the cache —
-    * limit().collect() instead ran CollectLimit's incremental partition
-    * waves, re-launching the tail stage of the whole LSH pipeline
-    * several times. */
+    * GraphX connectedComponents (pointer-jumping, O(log n) rounds). Pairs
+    * already on the driver — a LocalRelation such as [[minhashLsh]]'s
+    * local result — are read straight from the plan: no job. Any other
+    * pair frame is persisted for the call, so one count() feeds the gate
+    * and the endgame's collect reads the cache. A distributed
+    * [[minhashLsh]] result's signature table is released on the way
+    * out. */
   def dupClusters(pairs: DataFrame): DataFrame = {
     val p = pairs.select(col("id_a"), col("id_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try GraphAlgos.run(dupClustersArms(p)) finally p.unpersist(false)
+    val pin = if (driverRows(p).isEmpty)
+      Some(p.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) else None
+    try GraphAlgos.run(dupClustersArms(pin.getOrElse(p)))
+    finally { pin.foreach(_.unpersist(false)); releaseSignatures(pairs) }
   }
 
-  /** [[dupClusters]]' two arms; `rows` is the pair count (one job). */
+  /** [[dupClusters]]' two arms; `rows` is the pair count — the length of
+    * driver-resident pairs, else one count() job. */
   private[graft] def dupClustersArms(pairs: DataFrame): GraphAlgos.Endgame[(Long, Long)] = {
     import org.apache.spark.graphx.{Edge, Graph => XGraph}
     val spark = pairs.sparkSession
     import spark.implicits._
     val p = pairs.select(col("id_a").cast(LongType), col("id_b").cast(LongType))
-    val n = p.count()
+    // a null id fails both arms' reads alike, so only null-free rows
+    // skip the collect
+    val resident = driverRows(p).filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+    val n = resident.fold(p.count())(_.length.toLong)
     // union-find over the CSR of ≤ 2n endpoints and 2n adjacency rows
     GraphAlgos.Endgame(spark, "dup_clusters", Seq("id", "rep"), n, () => 4L * n, "",
       () => {
-        val local = p.collect()
-        val a = local.map(_.getLong(0))
-        val b = local.map(_.getLong(1))
+        val (a, b) = resident match {
+          case Some(rs) => (rs.map(_.getLong(0)).toArray, rs.map(_.getLong(1)).toArray)
+          case None =>
+            val local = p.collect()
+            (local.map(_.getLong(0)), local.map(_.getLong(1)))
+        }
         GraphAlgos.ccLocal(
           new GraphAlgos.LocalCsr(GraphAlgos.closeVerts(Array.empty, a, b), a, b))
       },
@@ -224,6 +458,14 @@ object Dedup {
           .map { case (id, comp) => (id, comp) }.toDF("id", "rep")
       })
   }
+
+  /** The rows of `df` when its optimized plan is a LocalRelation: a
+    * frame the driver already holds, readable without a job. */
+  private def driverRows(df: DataFrame): Option[Seq[InternalRow]] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l.data)
+      case _ => None
+    }
 
   /** Exact n-gram Jaccard similarity for the given candidate pairs
     * (`pairs` must have `id_a`, `id_b` columns). Two hash equi-joins

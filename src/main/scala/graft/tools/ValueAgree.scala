@@ -195,9 +195,11 @@ object ValueAgree {
     }
 
     if (only.isEmpty || only("curation")) timed("curation") {
-      // p_curation with its duplicate clustering forced down each of
-      // dupClusters' two independent implementations; the kept-set
-      // aggregates and the (id, rep) assignments must both match
+      // p_curation with its near-duplicate detection and clustering
+      // forced down each arm of minhashLsh and dupClusters (the driver
+      // LSH kernel + union-find vs the distributed LSH plan + GraphX);
+      // the kept-set aggregates and the (id, rep) assignments must both
+      // match
       def run(forceLocal: Boolean): (Seq[(Long, Long)], (Long, Long)) = {
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         val filtered = docs
@@ -205,10 +207,11 @@ object ValueAgree {
           .filter(TextOps.tokenCount(col("text")) >= 10)
         val exact = Dedup.dedupExact(filtered, "text", "doc_id")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val pairs = Dedup.minhashLsh(exact, "text", "doc_id",
-          shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.3)
-        val arms = Dedup.dupClustersArms(
-          pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val lsh = Dedup.minhashLshArms(exact, "text", "doc_id",
+          shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.3, maxBucketSize = 200)
+        val pairs = (if (forceLocal) lsh.localFrame() else lsh.distributed())
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val arms = Dedup.dupClustersArms(pairs)
         val clusters = (if (forceLocal) arms.localFrame() else arms.distributed())
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val cl = clusters.collect().map(x => (x.getLong(0), x.getLong(1)))
@@ -220,15 +223,18 @@ object ValueAgree {
           sum(TextOps.tokenCount(col("text")).cast("long"))).collect()(0)
         val agg = (aggRow.getLong(0), aggRow.getLong(1))
         clusters.unpersist(false)
+        pairs.unpersist(false)
+        Dedup.releaseSignatures(pairs)
         exact.unpersist(false)
         (cl, agg)
       }
       val (clA, aggA) = run(forceLocal = true)
       val (clB, aggB) = run(forceLocal = false)
       record("p_curation", clA == clB && aggA == aggB,
-        "engine dual-path agreement: duplicate clustering via driver " +
-          "union-find vs GraphX pointer-jumping, full pipeline re-run " +
-          "on each; cluster sets and kept-corpus aggregates compared",
+        "engine dual-path agreement: near-dup pairs and clusters via the " +
+          "driver LSH kernel + union-find vs the distributed LSH plan + " +
+          "GraphX pointer-jumping, full pipeline re-run on each; cluster " +
+          "sets and kept-corpus aggregates compared",
         s"clusters=${clA.size}/${clB.size} aggA=$aggA aggB=$aggB")
     }
 

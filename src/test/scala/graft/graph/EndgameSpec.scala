@@ -77,7 +77,7 @@ class EndgameSpec extends SparkTestBase {
 
   /** One parameter point of a member: its arms, its tolerance, and any
     * extra check on the agreed rows. */
-  private case class Point(label: String, arms: GraphAlgos.Endgame[_ <: Product],
+  private case class Point(label: String, arms: GraphAlgos.Endgame[_],
       tol: Tol = Exact, expect: Seq[Row] => Unit = _ => ())
 
   private val members: Seq[(String, Shape => Seq[Point])] = Seq(
@@ -114,6 +114,9 @@ class EndgameSpec extends SparkTestBase {
   private val distributedOnly = Set("clustering_coefficient", "scc", "graph_stats",
     "degrees", "vertex_stats", "labels", "relationship_types", "ingest_stats",
     "get_cypher_keywords")
+
+  /** Members that are pipeline operators, not CALL procedures. */
+  private val pipelineMembers = Set("dup_clusters", "minhash_lsh")
 
   /** Rows sorted by their leading long columns (the result key). */
   private def sorted(rows: Array[Row]): Seq[Seq[Any]] = {
@@ -153,6 +156,107 @@ class EndgameSpec extends SparkTestBase {
     } }
   }
 
+  /** A minhash_lsh corpus: documents (id, text) and the LSH parameters
+    * the sweep runs it with. */
+  private case class Corpus(name: String, docs: Seq[(Option[Long], String)],
+      shingleK: Int, bands: Int, rowsPerBand: Int, maxBucketSize: Int)
+
+  private def words(prefix: String, n: Int): Seq[String] = (1 to n).map(i => s"$prefix$i")
+
+  /** Edge cases: duplicate and null ids, null/empty/whitespace-only
+    * text, documents shorter than shingleK, six copies of one text (a
+    * bucket above maxBucketSize), and near-duplicates that collide in
+    * several bands. */
+  private val edgeCorpus = {
+    val base = words("w", 14).mkString(" ")
+    val near = (words("w", 13) :+ "other").mkString(" ")
+    val copy = "the same six times over and over again"
+    Corpus("edges", Seq(
+      Some(1L) -> base, Some(2L) -> near, Some(3L) -> base,
+      Some(7L) -> near, Some(7L) -> "a wholly unrelated document about nothing much",
+      None -> base, None -> near,
+      Some(10L) -> null, Some(11L) -> "", Some(12L) -> "   ", Some(13L) -> " \t ",
+      Some(14L) -> "a b", Some(15L) -> "a b", Some(16L) -> "b a", Some(17L) -> "x") ++
+      (20L to 25L).map(i => Some(i) -> copy), shingleK = 3, bands = 8, rowsPerBand = 4,
+      maxBucketSize = 4)
+  }
+
+  /** Rounding at the threshold: 602 shared of 2,007 shingles is
+    * 0.29995…, which rounds half-up to exactly 0.3; 10 of 20 is exactly
+    * 0.5. One-row bands make both pairs candidates. */
+  private val boundaryCorpus = {
+    val shared = words("s", 604)
+    val half = words("h", 12)
+    Corpus("boundary", Seq(
+      Some(1L) -> (shared ++ words("a", 700)).mkString(" "),
+      Some(2L) -> (shared ++ words("b", 705)).mkString(" "),
+      Some(3L) -> (half ++ words("c", 5)).mkString(" "),
+      Some(4L) -> (half ++ words("d", 5)).mkString(" ")),
+      shingleK = 3, bands = 32, rowsPerBand = 1, maxBucketSize = 200)
+  }
+
+  private def corpusFrame(c: Corpus, idType: String) =
+    c.docs.map { case (id, t) => (id.map(java.lang.Long.valueOf).orNull, t) }
+      .toDF("id", "text").repartition(3).select(col("id").cast(idType).as("id"), col("text"))
+
+  private def lshArms(c: Corpus, df: org.apache.spark.sql.DataFrame, t: Double) =
+    Dedup.minhashLshArms(df, "text", "id", c.shingleK, c.bands, c.rowsPerBand, t,
+      c.maxBucketSize)
+
+  test("endgame arms agree: minhash_lsh") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val points = for (c <- Seq(edgeCorpus, boundaryCorpus); idType <- Seq("long", "int");
+                      t <- Seq(0.0, 0.3, 0.5, 1.0)) yield (c, idType, t)
+    val results = Await.result(Future.traverse(points) { case (c, idType, t) => Future {
+      val at = s"minhash_lsh ${c.name} $idType t=$t"
+      val e = lshArms(c, corpusFrame(c, idType), t)
+      GraphAlgos.clearPathDecisions(spark)
+      val viaRun = GraphAlgos.run(e)
+      val decisions = GraphAlgos.recentPathDecisions(spark)
+      val docs = c.docs.count(_._2 != null)
+      assert(decisions.exists(d => d.startsWith(
+        s"minhash_lsh: driver endgame (rows=${e.rows} vs collect budget=") &&
+        d.endsWith(s", docs=$docs)")), s"$at: $decisions")
+      val dist = e.distributed()
+      assert(viaRun.schema === dist.schema, at)
+      def exact(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+      val rows = exact(viaRun)
+      assert(rows === exact(dist), at)
+      Dedup.releaseSignatures(dist)
+      (c.name, idType, t) -> rows.map(r => (r(0).toString.toLong, r(1).toString.toLong,
+        r(2).asInstanceOf[Double]))
+    } }, scala.concurrent.duration.Duration.Inf).toMap
+    // the sweep reaches every edge it is meant to cover
+    for (idType <- Seq("long", "int")) {
+      val edges0 = results(("edges", idType, 0.0))
+      assert(edges0.count(r => r._1 == 2L && r._2 == 7L) === 2, "a duplicate id fans out")
+      // trim() strips spaces only, so the tab-only text is not blank
+      assert(edges0.exists(r => (r._1, r._2) == (11L, 12L)), "blank texts pair")
+      assert(edges0.exists(r => (r._1, r._2) == (14L, 15L)), "short documents pair")
+      assert(!edges0.exists(r => r._1 >= 20L), "an over-full bucket is dropped")
+      assert(results(("edges", idType, 1.0)).map(r => (r._1, r._2)) ===
+        Seq((1L, 3L), (11L, 12L), (14L, 15L), (2L, 7L)))
+      assert(results(("boundary", idType, 0.3)).contains((1L, 2L, 0.3)),
+        "0.29995 rounds up onto the threshold")
+      assert(results(("boundary", idType, 0.5)) === Seq((3L, 4L, 0.5)))
+    }
+  }
+
+  test("minhash_lsh: an id type with no local encoding runs distributed") {
+    val c = boundaryCorpus
+    val e = lshArms(c, corpusFrame(c, "string"), 0.5)
+    GraphAlgos.clearPathDecisions(spark)
+    val out = GraphAlgos.run(e)
+    assert(GraphAlgos.recentPathDecisions(spark).last.startsWith(
+      s"minhash_lsh: distributed path (rows=${Long.MaxValue} vs collect budget="))
+    assert(GraphAlgos.recentPathDecisions(spark).last.endsWith(
+      ", id type string has no local encoding)"))
+    assert(out.collect().map(_.toSeq) === Array(Seq("3", "4", 0.5)))
+    Dedup.releaseSignatures(out)
+  }
+
   test("run gates on rows before measuring work, then on work") {
     def decision(rows: Long, work: () => Long): (Seq[(Long, Long)], String) = {
       GraphAlgos.clearPathDecisions(spark)
@@ -175,11 +279,11 @@ class EndgameSpec extends SparkTestBase {
   }
 
   test("every registry procedure is a member or distributed-only") {
-    val names = members.map(_._1).toSet
+    val names = members.map(_._1).toSet + "minhash_lsh"
     val registry = Procedures.registry.keySet
     assert((registry -- names -- distributedOnly).isEmpty,
       "procedures with no differential coverage")
-    assert((names - "dup_clusters").subsetOf(registry))
+    assert((names -- pipelineMembers).subsetOf(registry))
     assert((names & distributedOnly).isEmpty)
   }
 

@@ -25,13 +25,19 @@ class PipelineSpec extends SparkTestBase {
     assert(groups.head.getAs[Long]("dup_count") === 2L)
   }
 
+  private def lshArms(df: org.apache.spark.sql.DataFrame, threshold: Double = 0.5) =
+    Dedup.minhashLshArms(df, "text", "doc_id", shingleK = 3, bands = 8, rowsPerBand = 4,
+      threshold, maxBucketSize = 200)
+
   test("minhash LSH finds near-dup and exact-dup pairs, not distinct docs") {
-    val pairs = Dedup.minhashLsh(docs, "text", "doc_id",
-      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1L, 4L))) // exact dup: jaccard 1.0
-    assert(pairs.contains((1L, 2L))) // near dup: one token differs
-    assert(!pairs.exists { case (a, b) => a == 3L || b == 3L })
+    val arms = lshArms(docs)
+    for (out <- Seq(arms.localFrame(), arms.distributed())) {
+      val pairs = out.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      assert(pairs.contains((1L, 4L))) // exact dup: jaccard 1.0
+      assert(pairs.contains((1L, 2L))) // near dup: one token differs
+      assert(!pairs.exists { case (a, b) => a == 3L || b == 3L })
+      Dedup.releaseSignatures(out)
+    }
   }
 
   test("docFrequency counts documents, not occurrences; redact scrubs spans") {
@@ -46,13 +52,15 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("dupClusters: transitive closure merges chained near-dup pairs") {
-    // pair graph 1-2, 1-4 (+ possibly 2-4): one cluster rep'd by 1
-    val pairs = Dedup.minhashLsh(docs, "text", "doc_id",
-      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.5)
-    val clusters = Dedup.dupClusters(pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(clusters(1L) === 1L && clusters(2L) === 1L && clusters(4L) === 1L)
-    assert(!clusters.contains(3L) && !clusters.contains(5L)) // never paired
+    // pair graph 1-2, 1-4 (+ possibly 2-4): one cluster rep'd by 1, from
+    // the pairs of either LSH arm
+    val arms = lshArms(docs)
+    for (pairs <- Seq(arms.localFrame(), arms.distributed())) {
+      val clusters = Dedup.dupClusters(pairs)
+        .as[(Long, Long)].collect().toMap
+      assert(clusters(1L) === 1L && clusters(2L) === 1L && clusters(4L) === 1L)
+      assert(!clusters.contains(3L) && !clusters.contains(5L)) // never paired
+    }
     // chain where the detector misses the far pair: closure still merges
     val chain = Seq((10L, 11L), (11L, 12L)).toDF("id_a", "id_b")
     val c2 = Dedup.dupClusters(chain).as[(Long, Long)].collect().toMap
@@ -73,6 +81,74 @@ class PipelineSpec extends SparkTestBase {
     assert(local === clusters(Dedup.dupClustersArms(pairs).distributed()))
     assert(local.toMap.apply(210L) === 200L && local.toMap.apply(303L) === 303L)
     assert(local.toMap.apply(400L) === 400L)
+  }
+
+  test("dupClusters over driver-resident pairs runs no job and equals GraphX") {
+    val rnd = new scala.util.Random(23)
+    val pairs = (Seq.fill(30)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)) ++
+      Seq((50L, 51L), (51L, 50L), (52L, 52L))).toDF("id_a", "id_b")
+    def clusters(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long)].collect().sortBy(_._1).toSeq
+    var local: Seq[(Long, Long)] = Nil
+    assert(graft.SparkJobs.count(spark) {
+      local = clusters(Dedup.dupClusters(pairs))
+    } === 0)
+    assert(local === clusters(Dedup.dupClustersArms(pairs).distributed()))
+    // int ids too: the pair projection's cast folds into the local rows
+    val ints = pairs.select($"id_a".cast("int").as("id_a"), $"id_b".cast("int").as("id_b"))
+    assert(graft.SparkJobs.count(spark)(Dedup.dupClusters(ints).collect()) === 0)
+  }
+
+  test("minhashLsh then dupClusters on a small corpus runs 2 jobs") {
+    // a parquet corpus, as a pipeline reads one
+    val dir = java.nio.file.Files.createTempDirectory("lsh-jobs").resolve("docs").toString
+    (docs.as[(Long, String)].collect() ++ (6L to 40L).map(i =>
+      (i, s"document $i shares the middle words with others ${i % 5} ${i % 7}")))
+      .toSeq.toDF("doc_id", "text").repartition(2).write.parquet(dir)
+    val corpus = spark.read.parquet(dir)
+    var out: Array[org.apache.spark.sql.Row] = null
+    val jobs = graft.SparkJobs.count(spark) {
+      out = Dedup.dupClusters(Dedup.minhashLsh(corpus, "text", "doc_id",
+        shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.3)).collect()
+    }
+    // the map-only census and the map-only signature collect
+    assert(jobs <= 2, s"$jobs jobs")
+    val viaArms = Dedup.dupClusters(lshArms(corpus, 0.3).distributed())
+    assert(out.map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq ===
+      viaArms.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq)
+  }
+
+  test("minhashLsh pins nothing past its caller, down either arm") {
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    // persisted RDDs of earlier suites may be cleaned meanwhile, so the
+    // RDD check is that nothing was added
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    for (slice <- 0 until 3; forceDistributed <- Seq(false, true)) {
+      val corpus = docs.filter($"doc_id" =!= slice.toLong + 1L)
+      val arms = lshArms(corpus)
+      val pairs = if (forceDistributed) arms.distributed() else arms.localFrame()
+      assert(Dedup.dupClusters(pairs).collect().nonEmpty)
+      assert(cache.isEmpty && (spark.sparkContext.getPersistentRDDs.keySet -- rdds).isEmpty,
+        s"slice $slice distributed=$forceDistributed")
+    }
+  }
+
+  /** Runs a distributed minhashLsh result and drops it: nothing outside
+    * this frame keeps the result. */
+  private def runAndDropDistributed(): Unit = {
+    val out = lshArms(docs).distributed()
+    assert(out.collect().nonEmpty && !spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("a dropped distributed minhashLsh result releases its signature table") {
+    spark.catalog.clearCache()
+    runAndDropDistributed()
+    val cache = spark.sharedState.cacheManager
+    var tries = 0
+    while (!cache.isEmpty && tries < 100) { System.gc(); Thread.sleep(100); tries += 1 }
+    assert(cache.isEmpty, s"still pinned after $tries collections")
+    info(s"released after $tries collections")
   }
 
   test("shingleRows matches array shingles and handles short docs") {
