@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.types.GraphId
 
@@ -12,19 +13,27 @@ import graft.types.GraphId
   */
 object Generators {
 
+  /** `df` on one partition when its closed-form size, `rows` rows of
+    * `longs` long columns (8 bytes each plus 8 of row overhead, Spark's
+    * per-row estimate), fits `spark.sql.adaptive.advisoryPartitionSizeInBytes`:
+    * such a frame is one task of work, and its range/crossJoin fan made
+    * every downstream pass pay per-task setup for it. Larger frames keep
+    * their partitions. */
+  private def fit[T](spark: SparkSession, df: Dataset[T], rows: Long, longs: Int): Dataset[T] =
+    if (rows <= spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) /
+        (8L * (longs + 1))) df.coalesce(1)
+    else df
+
   /** K_n: vertices 1..n, one directed edge i→j for every i<j
     * (reference loop at graph_generation.c:184-201). */
   def completeGraph(
       spark: SparkSession, n: Long,
       vertexLabelId: Int = 1, edgeLabelId: Int = 2): PropertyGraph = {
-    // coalesce(1): a C(n,2)-row generated frame is one task of work —
-    // without it every downstream pass re-runs a ~32-partition
-    // range/crossJoin fan whose per-task setup dwarfs the row work
-    val v = spark.range(1, n + 1).coalesce(1)
+    val v = fit(spark, spark.range(1, n + 1), n, 1)
       .select((lit(vertexLabelId.toLong * (1L << GraphId.EntryIdBits)) + col("id")).as("id"))
     val iIdx = spark.range(1, n + 1).select(col("id").as("i"))
     val jIdx = spark.range(1, n + 1).select(col("id").as("j"))
-    val e = iIdx.crossJoin(jIdx).coalesce(1).filter(col("i") < col("j"))
+    val e = fit(spark, iIdx.crossJoin(jIdx), n * (n - 1) / 2, 3).filter(col("i") < col("j"))
       // eid = position in the (i, j) enumeration, i-major. `/` is DOUBLE
       // division in Spark; the cast back to long is exact (i(i-1) is
       // even) and keeps the edge id column bigint — GraphX bridges
@@ -51,7 +60,7 @@ object Generators {
       lit(edgeLabelId.toLong * (1L << GraphId.EntryIdBits)) + entry
 
     val total = 2 * n + m
-    val v = spark.range(1, total + 1).coalesce(1).select(gid(col("id")).as("id"))
+    val v = fit(spark, spark.range(1, total + 1), total, 1).select(gid(col("id")).as("id"))
 
     // edge ids are the (s, t)-order rank, CLOSED FORM instead of the
     // former global row_number window: the three blocks' s-ranges are
@@ -60,9 +69,8 @@ object Generators {
     // i-major rank plus the block offset — bit-identical ids, but every
     // consumer of the edge frame (the whole-graph procedures re-scan it
     // per pass) no longer replays a single-partition Window over a
-    // 96-partition crossJoin fan. coalesce(1): a C(n,2)-row generated
-    // frame is one task of work; the range/crossJoin fan made every
-    // downstream pass pay ~100 scheduled tasks of fixed setup cost.
+    // 96-partition crossJoin fan ([[fit]] then makes a small one a
+    // single task).
     def kn(offset: Long, rankOffset: Long): DataFrame = {
       val i = spark.range(1, n + 1).select(col("id").as("i"))
       val j = spark.range(1, n + 1).select(col("id").as("j"))
@@ -79,9 +87,8 @@ object Generators {
     val path = spark.range(0, m + 1)
       .select((col("id") + n).as("s"), (col("id") + n + 1).as("t"),
         (lit(bellRanks) + col("id") + 1).as("__rn"))
-    val allE = kn(0, 0).unionByName(path)
-      .unionByName(kn(n + m, bellRanks + m + 1))
-      .coalesce(1)
+    val allE = fit(spark, kn(0, 0).unionByName(path)
+      .unionByName(kn(n + m, bellRanks + m + 1)), 2 * bellRanks + m + 1, 3)
       .select(eid(col("__rn")).as("id"), gid(col("s")).as("start_id"), gid(col("t")).as("end_id"))
     new PropertyGraph(s"barbell_${n}_$m",
       Seq(VertexLabel("node", vertexLabelId, v)),

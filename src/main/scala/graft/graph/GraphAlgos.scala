@@ -2,9 +2,14 @@ package graft.graph
 
 import org.apache.spark.graphx.{Edge, Graph => XGraph}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
-import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.graft.FrameBridge
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import scala.collection.immutable.ArraySeq
+import scala.reflect.runtime.universe.{TypeTag, typeOf}
 
 /** Whole-graph analytics. Each procedure with a driver endgame builds
   * one [[GraphAlgos.Endgame]]: a local arm that replays the distributed
@@ -324,7 +329,7 @@ object GraphAlgos {
     * configured width, not a bench constant; at 100 TB the session
     * width is thousands and each coalesced slice stays file-aligned. */
   private[graph] def edgesBothDirs(g: PropertyGraph): DataFrame = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val parts = spark.sessionState.conf.numShufflePartitions
     g.allEdges.select(explode(array(
         struct(col("start_id").as("src"), col("end_id").as("dst")),
@@ -393,13 +398,24 @@ object GraphAlgos {
   }
 
   private[graft] object Endgame {
-    /** A member whose local rows are tuples, encoded with the tuple
-      * encoder under `columns`. */
+    /** A member whose local rows are tuples of `Long`s and `Double`s,
+      * encoded as a bare `LocalRelation` of non-null columns under
+      * `columns`: the schema the tuple encoder gives, without its
+      * per-row serializer pass. */
     def apply[T <: Product : TypeTag](spark: SparkSession, op: String, columns: Seq[String],
         rows: Long, work: () => Long, detail: String,
-        local: () => Array[T], distributed: () => DataFrame): Endgame[T] =
+        local: () => Array[T], distributed: () => DataFrame): Endgame[T] = {
+      val types = typeOf[T].dealias.typeArgs.map {
+        case t if t =:= typeOf[Long] => LongType
+        case t if t =:= typeOf[Double] => DoubleType
+        case t => throw new IllegalArgumentException(s"$op: no local encoding for $t")
+      }
+      require(types.length == columns.length, s"$op: ${columns.length} columns for $types")
+      val schema = StructType(columns.zip(types).map { case (c, t) => StructField(c, t, false) })
       Endgame(spark, op, columns, rows, work, detail, local, distributed,
-        (rs: Array[T]) => spark.createDataset(rs.toSeq)(Encoders.product[T]).toDF(columns: _*))
+        (rs: Array[T]) => FrameBridge.localFrame(spark, schema, ArraySeq.unsafeWrapArray(
+          rs.map(r => new GenericInternalRow(r.productIterator.toArray[Any]): InternalRow))))
+    }
   }
 
   /** The one endgame gate: the local arm runs iff `rows` fits
@@ -689,7 +705,7 @@ object GraphAlgos {
 
   private[graft] def pageRankArms(g: PropertyGraph, tol: Double,
       resetProb: Double): Endgame[(Long, Double)] = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     import spark.implicits._
     val (nV, nE) = graphSizes(g)
     val rows = nV + nE
@@ -742,7 +758,7 @@ object GraphAlgos {
   def connectedComponents(g: PropertyGraph): DataFrame = run(connectedComponentsArms(g))
 
   private[graft] def connectedComponentsArms(g: PropertyGraph): Endgame[(Long, Long)] = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     import spark.implicits._
     val (nV, nE) = graphSizes(g)
     val rows = nV + 2 * nE
@@ -793,7 +809,7 @@ object GraphAlgos {
   def triangleCount(g: PropertyGraph): DataFrame = run(triangleCountArms(g))
 
   private[graft] def triangleCountArms(g: PropertyGraph): Endgame[(Long, Long)] = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val (nV, nE) = graphSizes(g)
     // the merge-intersection kernel costs Σ_{u<v edges}(deg u + deg v)
     // = Σ_v deg(v)² steps (each vertex contributes deg(v) to each of
@@ -858,7 +874,7 @@ object GraphAlgos {
   private[graph] def trianglesDistributedFrames(g: PropertyGraph)
       : (DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.storage.StorageLevel
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val parts = spark.sessionState.conf.numShufflePartitions
     val ed = g.allEdges.select(col("start_id").as("a"), col("end_id").as("b"))
       .filter(col("a") =!= col("b"))
@@ -961,7 +977,7 @@ object GraphAlgos {
   def sssp(g: PropertyGraph, landmark: Long): DataFrame = run(ssspArms(g, landmark))
 
   private[graft] def ssspArms(g: PropertyGraph, landmark: Long): Endgame[(Long, Long)] = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     import spark.implicits._
     val (nV, nE) = graphSizes(g)
     val rows = nV + nE
@@ -1040,7 +1056,7 @@ object GraphAlgos {
 
   private[graft] def labelPropagationArms(g: PropertyGraph,
       steps: Int): Endgame[(Long, Long)] = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val (nV, nE) = graphSizes(g)
     val rows = nV + 2 * nE
     Endgame(spark, "lpa", Seq("id", "community"), rows,
@@ -1051,7 +1067,7 @@ object GraphAlgos {
 
   private def lpaDistributed(g: PropertyGraph, steps: Int, nE: Long): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     // every round's vote join streams 2|E| rows through one exchange —
     // derive the loop's width from that measured bound instead of the
     // bench-tuned session constant (no-op at bench scale; at 100× the
@@ -1174,7 +1190,7 @@ object GraphAlgos {
   private[graft] def kCoreArms(g: PropertyGraph, k: Int,
       maxIter: Int): Endgame[(Long, Long)] = {
     require(k >= 1, s"kcore expects k >= 1, got $k")
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val rows = { val (v, e) = graphSizes(g); v + 2 * e }
     // peeling is O(V + E) total in the decremental kernel
     Endgame(spark, "kcore", Seq("id", "degree"), rows, () => 2L * rows, "",
@@ -1187,7 +1203,7 @@ object GraphAlgos {
 
   private def kCoreDistributed(g: PropertyGraph, k: Int, maxIter: Int,
       endRows: Long): DataFrame = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     // each peel round streams the (shrinking, ≤ 2|E|-row) residual edge
     // frame through a degree count and two semi-joins — width follows
     // the measured initial bound (no-op at bench; the §51 kcore spill
@@ -1197,7 +1213,7 @@ object GraphAlgos {
     // peel depth is data-dependent up to maxIter = 1000 rounds — deep
     // degeneracy chains need the periodic lineage barrier (see
     // lineagePin; plain pinning overflowed scc at a few hundred rounds)
-    val pin = lineagePin(g.allVertices.sparkSession)
+    val pin = lineagePin(g.spark)
     // single-scan both-directions + one-shuffle dedup (the
     // labelPropagationDet idiom; formerly two scans + a distinct with
     // its own exchange): HashPartitioning(src) is a subset of the dedup
@@ -1285,7 +1301,7 @@ object GraphAlgos {
 
   private[graft] def weightedSsspArms(g: PropertyGraph, landmark: Long,
       weightProp: String, rounds: Int): Endgame[(Long, Double)] = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val all = g.allEdges
     val enc = PropName.enc(weightProp)
     val wCol =
@@ -1400,7 +1416,7 @@ object GraphAlgos {
 
   private[graft] def hitsArms(g: PropertyGraph,
       rounds: Int): Endgame[(Long, Double, Double)] = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val (nV, nE) = graphSizes(g)
     Endgame(spark, "hits", Seq("id", "hub", "auth"), nV + nE,
       () => boundedProduct(2L * math.max(1L, rounds.toLong), nV + nE), "",
@@ -1411,7 +1427,7 @@ object GraphAlgos {
   private def hitsDistributed(g: PropertyGraph, rounds: Int, endNV: Long,
       endNE: Long): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val parts = spark.sessionState.conf.numShufflePartitions
     // pin = persist + RDD-leaf swap (the betweenness/scc idiom), here
     // for TWO reasons: (a) each half-step's plan references the previous
@@ -1581,7 +1597,7 @@ object GraphAlgos {
 
   private[graft] def jaccardArms(g: PropertyGraph, degCap: Int,
       threshold: Double): Endgame[(Long, Long, Long, Double)] = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     // every distributed plan pays ~8 jobs of wedge shuffles even when
     // the graph fits the driver. Rows = nV + nE collected plus the
     // output, which is at most Σ_{deg≤cap} C(deg, 2) ≤ nE·(cap − 1)
@@ -1602,7 +1618,7 @@ object GraphAlgos {
 
   private def jaccardDistributed(g: PropertyGraph, degCap: Int,
       threshold: Double, nV: Long, nE: Long): DataFrame = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     // single-scan both-directions + dedup through the aggregate's OWN
     // exchange: the helper's coalesce survives under an Aggregate
     // (CollapseRepartition erases it under an explicit repartition), so
@@ -1940,7 +1956,7 @@ object GraphAlgos {
 
   private[graft] def pprArms(g: PropertyGraph, source: Long, alpha: Double,
       rounds: Int): Endgame[(Long, Double)] = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val (nV, nE) = graphSizes(g)
     Endgame(spark, "ppr", Seq("id", "rank"), nV + nE,
       () => boundedProduct(math.max(1L, rounds.toLong), nV + nE), "",
@@ -1951,7 +1967,7 @@ object GraphAlgos {
   private def pprDistributed(g: PropertyGraph, source: Long, alpha: Double,
       rounds: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val parts = spark.sessionState.conf.numShufflePartitions
     val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def pin(df: DataFrame): DataFrame = {
@@ -1995,7 +2011,7 @@ object GraphAlgos {
     // single-scan both-directions + one-shuffle dedup co-partitioned
     // with the degree count (formerly two scans + distinct + a second
     // exchange into the groupBy)
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val wedges = edgesBothDirs(g)
       .filter(col("src") =!= col("dst"))
       .repartition(spark.sessionState.conf.numShufflePartitions, col("src"))
@@ -2154,7 +2170,7 @@ object GraphAlgos {
 
   private[graft] def betweennessArms(g: PropertyGraph, nSources: Int,
       maxDepth: Int): Endgame[(Long, Double)] = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val (nV, nE) = graphSizes(g)
     // size-derived default: exact only while the graph is small enough
     // that the nV² frontier bound is trivially safe
@@ -2195,7 +2211,7 @@ object GraphAlgos {
   private def betweennessDistributed(g: PropertyGraph, effSources: Int,
       nS: Long, maxDepth: Int, nV: Long, nE: Long): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     // measured size picks the regime BEFORE any plan is built: tiny
     // graphs run with AQE off and a narrow exchange width (see
     // withIterTuning — per-round scheduling dominated the barbell at
@@ -2593,7 +2609,7 @@ object GraphAlgos {
     * multi-GB vertex frame). */
   def scc(g: PropertyGraph, maxPasses: Int = 64, maxRounds: Int = 128,
       localRowBudget: Long = -1L): DataFrame = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     import spark.implicits._
     val (nV, nE) = graphSizes(g)
     val budget = if (localRowBudget >= 0L) localRowBudget else collectBudget(spark)
@@ -2825,7 +2841,7 @@ object GraphAlgos {
 
   private[graft] def randomWalksArms(g: PropertyGraph, steps: Int,
       saltPrefix: String): Endgame[(Long, Long)] = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val (nV, nE) = graphSizes(g)
     val rows = nV + 2 * nE
     // the kernel replays the identical hash choices, so results are
@@ -2843,7 +2859,7 @@ object GraphAlgos {
       saltPrefix: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.storage.StorageLevel
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val parts = spark.sessionState.conf.numShufflePartitions
     def pin(df: DataFrame): DataFrame = {
       val p = df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -2878,7 +2894,7 @@ object GraphAlgos {
   /** Per-graph statistics — analogue of age_graph_stats
     * (reference: age_global_graph.c:1659). */
   def graphStats(g: PropertyGraph): DataFrame = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.spark
     val vStats = g.vertexLabels.map { vl =>
       vl.df.agg(count(lit(1)).as("n"))
         .select(lit("vertex").as("kind"), lit(vl.name).as("label"), col("n"))

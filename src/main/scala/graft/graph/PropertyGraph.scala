@@ -85,6 +85,14 @@ final class PropertyGraph(
     df.select(cols: _*)
   }
 
+  /** The session the label frames live in, read off one frame:
+    * `allVertices.sparkSession` builds and analyzes the whole label
+    * union just to reach it. The active session for a graph with no
+    * labels. */
+  def spark: SparkSession =
+    (vertexLabels.iterator.map(_.df) ++ edgeLabels.iterator.map(_.df)).nextOption()
+      .fold(SparkSession.active)(_.sparkSession)
+
   /** All vertices with aligned schema: (id, label, props...). */
   def allVertices: DataFrame = {
     val target = unionSchema(vertexLabels.map(_.propColumns))

@@ -25,15 +25,20 @@ import graft.types.{AgMap, AgValue}
   * of raw TPC-H parquet builds the overlay graph. The third argument is
   * an agtype text map of query parameters.
   *
+  * The extensions also inject [[SinglePartitionLocal]], which runs
+  * small driver-held results as one exchange-free job.
+  *
   * Install via `spark.sql.extensions=graft.plans.GraftExtensions` or
   * `builder.withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     e.injectTableFunction((
       FunctionIdentifier("cypher"),
       new ExpressionInfo(classOf[GraftExtensions].getName, "cypher"),
       (args: Seq[Expression]) => GraftExtensions.plan(args)))
+    e.injectOptimizerRule(_ => SinglePartitionLocal)
+  }
 }
 
 object GraftExtensions {

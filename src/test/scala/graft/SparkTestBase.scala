@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs. */
+/** Shared local SparkSession for specs, with graft's session
+  * extensions installed as in production (the benchmark, Bench,
+  * Verify and OracleCheck all build their sessions with them). */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
 
@@ -19,6 +21,7 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

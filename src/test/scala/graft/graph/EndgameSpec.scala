@@ -1,7 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Encoders, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 import graft.SparkTestBase
 import graft.cypher.Procedures
@@ -154,6 +156,37 @@ class EndgameSpec extends SparkTestBase {
           s"$at: local $a vs distributed $b")
       p.expect(viaRun.collect().toSeq)
     } }
+  }
+
+  test("tuple members encode their local rows as the tuple encoder did") {
+    val s = shapes.head
+    def parity[T <: Product : TypeTag](e: GraphAlgos.Endgame[T]): String = {
+      val rows = e.local()
+      val frame = e.encode(rows)
+      val legacy = spark.createDataset(rows.toSeq)(Encoders.product[T]).toDF(e.columns: _*)
+      assert(frame.schema === legacy.schema, e.op)
+      assert(frame.schema.forall(!_.nullable), e.op)
+      assert(frame.collect().toSeq === legacy.collect().toSeq, e.op)
+      assert(frame.queryExecution.optimizedPlan.isInstanceOf[LocalRelation], e.op)
+      e.op
+    }
+    val checked = Seq(
+      parity(GraphAlgos.pageRankArms(s.g, 0.0001, 0.15)),
+      parity(GraphAlgos.connectedComponentsArms(s.g)),
+      parity(GraphAlgos.triangleCountArms(s.g)),
+      parity(GraphAlgos.ssspArms(s.g, s.real)),
+      parity(GraphAlgos.labelPropagationArms(s.g, 4)),
+      parity(GraphAlgos.weightedSsspArms(s.g, s.real, "w", 5)),
+      parity(GraphAlgos.hitsArms(s.g, 4)),
+      parity(GraphAlgos.jaccardArms(s.g, 64, 0.0)),
+      parity(GraphAlgos.pprArms(s.g, s.real, 0.15, 4)),
+      parity(GraphAlgos.kCoreArms(s.g, 2, 1000)),
+      parity(GraphAlgos.betweennessArms(s.g, 0, 64)),
+      parity(GraphAlgos.randomWalksArms(s.g, 3, "walk")),
+      parity(Dedup.dupClustersArms(
+        s.g.allEdges.select(col("start_id").as("id_a"), col("end_id").as("id_b")))))
+    // every member of the differential sweep is a tuple member
+    assert(checked.distinct.size === members.size)
   }
 
   /** A minhash_lsh corpus: documents (id, text) and the LSH parameters

@@ -26,6 +26,21 @@ class GraphToolsSpec extends SparkTestBase {
     assert(g.allEdges.count() === 15)
   }
 
+  test("generated frames take one partition only within the advisory partition size") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1024")
+    def parts(g: PropertyGraph) = (g.vertexLabel("node").df.rdd.getNumPartitions,
+      g.edgeLabel("edge").df.rdd.getNumPartitions)
+    // 16 bytes a vertex, 32 an edge
+    assert(parts(Generators.completeGraph(s, 6)) === ((1, 1)))
+    val k20 = Generators.completeGraph(s, 20)
+    assert(parts(k20)._1 === 1 && parts(k20)._2 > 1)
+    assert(k20.allEdges.count() === 190)
+    val bb = Generators.barbellGraph(s, 10, 2)
+    assert(parts(bb)._1 === 1 && parts(bb)._2 > 1)
+    assert(bb.allEdges.count() === 93)
+  }
+
   test("generated graph is queryable through Cypher") {
     val g = Generators.completeGraph(spark, 5)
     val r = Cypher.query(spark, g,
