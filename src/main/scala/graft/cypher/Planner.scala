@@ -1,10 +1,13 @@
 package graft.cypher
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FrameBridge
 import org.apache.spark.sql.types._
 
-import graft.graph.PropertyGraph
+import graft.graph.{DfUtils, PropertyGraph}
 import graft.types._
 import Ast._
 import Columns._
@@ -225,8 +228,13 @@ final class Planner(
     }.toSeq: _*)
   }
 
+  /** The one-row scope a query starts from: a LocalRelation, so what a
+    * clause computes from it alone folds on the driver, and a join with
+    * it broadcasts without a job. */
   private def unitScope: Scope =
-    Scope(spark.range(1).select(lit(1).as("@unit")), Vector.empty)
+    Scope(FrameBridge.localFrame(spark,
+      StructType(Seq(StructField("@unit", IntegerType, nullable = false))), Seq(InternalRow(1))),
+      Vector.empty)
 
   private def isUnit(s: Scope): Boolean = s.bindings.isEmpty
 
@@ -1359,19 +1367,16 @@ final class Planner(
     (scope.rebind(df, scope.bindings :+ ValueB(rid)), rid)
   }
 
-  /** distinct() that tolerates map-typed columns (Spark set operations
-    * reject maps): dedupe on canonicalized companions, keep originals. */
+  /** distinct() that keeps each group's first original values. It groups
+    * on companions (maps canonicalized, which Spark set operations
+    * reject), so the normalization Spark applies to floating-point
+    * grouping keys (-0.0 as 0.0) never reaches the values a MERGE stores
+    * — as it cannot for a one-row input, whose grouping the optimizer
+    * drops. */
   private def distinctCanon(df: DataFrame): DataFrame = {
-    val mapCols = df.schema.fields
-      .filter(f => !groupableType(f.dataType)).map(_.name).toSeq
-    if (mapCols.isEmpty) df.distinct()
-    else {
-      val withCanon = mapCols.foldLeft(df)((d, c) =>
-        d.withColumn(s"__canon#$c", groupableKey(qcol(c), d.schema(c).dataType)))
-      withCanon.dropDuplicates(
-        df.columns.filterNot(mapCols.contains).toSeq ++ mapCols.map(c => s"__canon#$c"))
-        .drop(mapCols.map(c => s"__canon#$c"): _*)
-    }
+    val canon = df.schema.fields.toSeq.map(f => (f, s"__canon#${f.name}"))
+    canon.foldLeft(df) { case (d, (f, c)) => d.withColumn(c, groupableKey(qcol(f.name), f.dataType)) }
+      .dropDuplicates(canon.map(_._2)).drop(canon.map(_._2): _*)
   }
 
   /** A groupable/joinable canonical form of `c`: maps become their
@@ -2272,16 +2277,23 @@ final class Planner(
   // Executed eagerly at plan time against the MutableGraph store — the
   // Spark analogue of the reference's CustomScan write executors
   // (reference: cypher_create.c:61-266, cypher_set.c:59-922,
-  // cypher_delete.c:70-196, cypher_merge.c:105-1501).
+  // cypher_delete.c:70-196, cypher_merge.c:105-1501), which cost the rows
+  // a clause writes. A clause's batch is collected once when the store's
+  // delta can hold it (MutableGraph.localBatch, DfUtils.withRowNumCount):
+  // a statement then costs the jobs of its own MATCH plus at most one
+  // more, and what it derives from the collected rows (numbered rows,
+  // missing MERGE keys, ON CREATE / ON MATCH updates) is a projection or
+  // filter over a LocalRelation, which the optimizer folds with no job.
 
   private def st: graft.graph.MutableGraph = store.getOrElse(
     throw new UnsupportedOperationException(
       "mutating clauses require a MutableGraph (use Cypher.execute)"))
 
-  /** Pin `df0`, append dense 1-based row numbers and count its rows — one
-    * job over the pinned partitions (graph.DfUtils.withRowNumCount). */
+  /** Append dense 1-based row numbers to `df0` and count its rows: one
+    * collect when the store's delta can hold the rows, else one job over
+    * the pinned partitions (graph.DfUtils.withRowNumCount). */
   private def withRowNumCount(df0: DataFrame, out: String): (DataFrame, Long) =
-    graft.graph.DfUtils.withRowNumCount(df0, out)
+    DfUtils.withRowNumCount(df0, out, st.batchThreshold)
 
   private def gid(labelId: Int, entry: Column): Column =
     lit(labelId.toLong * (1L << graft.types.GraphId.EntryIdBits)) + entry
@@ -2378,8 +2390,8 @@ final class Planner(
     // Deferred store writes: simple `SET v.k = expr` items (including
     // the per-key expansions of `SET v = {map}` / `SET v += map-expr`)
     // accumulate per entity variable and flush as ONE multi-property
-    // write per variable (MutableGraph.setVertexProperties) — one label
-    // join + frame pin instead of one per property, and unique
+    // write per variable (MutableGraph.setVertexProperties) — one patch
+    // per touched label instead of one per property, and unique
     // constraints validate the END-OF-STATEMENT state, matching the
     // reference: cypher_set.c applies every item to the tuple and the
     // heap update fires constraints once (the per-key eager form
@@ -2402,7 +2414,6 @@ final class Planner(
           .select(col(idCol(v)).as("id") +: ks.zipWithIndex.map {
             case (k, i) => qcol(propCol(v, k)).as(s"__v$i")
           }: _*)
-          .dropDuplicates("id")
         if (isEdge) st.setEdgeProperties(ks, updates)
         else st.setVertexProperties(ks, updates)
       }
@@ -2430,7 +2441,6 @@ final class Planner(
           case "=" | "+=" =>
             val updates = cur.df
               .select(qcol(v).getField("id").as("id"), valC.as("__newval"))
-              .dropDuplicates("id")
             if (isEdge) st.setEdgeProperty(k, updates)
             else st.setVertexProperty(k, updates)
             cur = cur.withDf(cur.df.withColumn(v,
@@ -2680,8 +2690,9 @@ final class Planner(
     }
 
     val markerIdCol = idCol(relVars.head)
-    val (probe1, _) = probe("left_outer")
-    val (missing, nMissing) = withRowNumCount(distinctCanon(probe1.filter(col(markerIdCol).isNull)
+    val (probe1, probeBindings) = probe("left_outer")
+    val probed = collectedProbe(probe1)
+    val (missing, nMissing) = withRowNumCount(distinctCanon(probed.filter(col(markerIdCol).isNull)
       .select(lit(1).as("__one") +: keyCols.map(qcol): _*)), "__rn")
     val firstRelLabel = rels.head.types.head
     val firstRelBase = st.edgeMaxEntry(firstRelLabel)
@@ -2740,9 +2751,10 @@ final class Planner(
     }
 
     // re-probe against the post-write snapshot: every row now matches
-    // (creating rows bind exactly their created instance - same keys)
+    // (creating rows bind exactly their created instance - same keys);
+    // with nothing created every row matched the first probe already
     val createdLo = gid(st.edgeLabelId(firstRelLabel), lit(firstRelBase + 1))
-    val (probe2, outBindings) = probe("inner")
+    val (probe2, outBindings) = if (nMissing > 0) probe("inner") else (probed, probeBindings)
     val out = probe2
       .withColumn("__created#m",
         if (nMissing > 0) qcol(markerIdCol) >= createdLo else lit(false))
@@ -2752,6 +2764,40 @@ final class Planner(
     scope = applyOnSetAll(scope, m.onMatch, !col("__created#m"))
     scope.withDf(scope.df.drop("__created#m"))
   }
+  /** A MERGE probe (the input rows left-joined with their matches),
+    * collected once when the store's delta can hold it: the missing keys,
+    * and the result rows when none are missing, then derive from the
+    * collected rows without another job. */
+  private def collectedProbe(probe: DataFrame): DataFrame = st.localBatch(probe).getOrElse(probe)
+
+  /** [[collectedProbe]] of `left` left-outer-joined with `right` on
+    * `cond`. When `left` is driver-held already (keys computed over the
+    * unit scope), the matches are collected through an inner join, which
+    * broadcasts `left` from the driver, and the unmatched input rows are
+    * added on the driver: a left outer join must broadcast `right`,
+    * which costs a job of its own. */
+  private def collectedProbe(left: DataFrame, right: DataFrame, cond: Column): DataFrame = {
+    val outer = left.join(right, cond, "left_outer")
+    val local = left.queryExecution.optimizedPlan match {
+      case _: LocalRelation =>
+        st.localBatch(left).flatMap { l =>
+          val (in, _) = DfUtils.withRowNumCount(l, "__in", st.batchThreshold)
+          st.localBatch(in.join(right, cond, "inner")).map { hits =>
+            val hit = DfUtils.localRows(hits.select("__in")).map(_.getLong(0)).toSet
+            val at = in.schema.fieldIndex("__in")
+            val missed = FrameBridge.localFrame(spark, in.schema,
+              DfUtils.localRows(in).filterNot(r => hit(r.getLong(at))))
+              .select(in.columns.map(qcol).toSeq ++
+                right.schema.fields.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+            FrameBridge.localFrame(spark, FrameBridge.nullable(hits.schema),
+              DfUtils.localRows(hits) ++ DfUtils.localRows(missed)).drop("__in")
+          }
+        }
+      case _ => st.localBatch(outer)
+    }
+    local.getOrElse(outer)
+  }
+
   /** Route ON CREATE / ON MATCH items to their target variables. */
   private def applyOnSetAll(scope0: Scope, items: Seq[SetItem], cond: Column): Scope = {
     var cur = scope0
@@ -2792,7 +2838,7 @@ final class Planner(
 
     // find missing key combinations and create them
     val ex1 = existing()
-    val probe = keyed.join(ex1, matchCond(ex1), "left_outer")
+    val probe = collectedProbe(keyed, ex1, matchCond(ex1))
     val (missingKeys, nMissing) = withRowNumCount(distinctCanon(probe.filter(col(idCol(v)).isNull)
       .select(keyNames.map(k => col(s"__key#$k")): _*)), "__rn")
     if (nMissing > 0) {
@@ -2805,9 +2851,10 @@ final class Planner(
     }
 
     // re-probe against the post-write snapshot; every row now matches
-    val ex2 = existing()
+    // (with nothing created, every row matched the first probe)
     val createdLo = gid(labelId, lit(st.vertexMaxEntry(label) - nMissing + 1))
-    var out = keyed.join(ex2, matchCond(ex2), "inner")
+    var out = (if (nMissing > 0) { val ex2 = existing(); keyed.join(ex2, matchCond(ex2), "inner") }
+      else probe)
       .withColumn(s"__created#$v",
         if (nMissing > 0) col(idCol(v)) >= createdLo else lit(false))
       .drop(keyNames.map(k => s"__key#$k"): _*)
@@ -2858,7 +2905,7 @@ final class Planner(
     }
 
     val ex1 = existing()
-    val probe = keyed.join(ex1, matchCond(ex1), "left_outer")
+    val probe = collectedProbe(keyed, ex1, matchCond(ex1))
     val (missing, nMissing) = withRowNumCount(distinctCanon(probe.filter(col(idCol(ev)).isNull)
       .select(col(idCol(sVar)).as("start_id") +: col(idCol(eVar)).as("end_id") +:
         keyNames.map(k => col(s"__key#$k")): _*)), "__rn")
@@ -2871,9 +2918,9 @@ final class Planner(
           keyNames.map(k => col(s"__key#$k").as(graft.graph.PropName.enc(k))): _*),
         base + nMissing)
     }
-    val ex2 = existing()
     val createdLo = gid(labelId, lit(st.edgeMaxEntry(label) - nMissing + 1))
-    val out = keyed.join(ex2, matchCond(ex2), "inner")
+    val out = (if (nMissing > 0) { val ex2 = existing(); keyed.join(ex2, matchCond(ex2), "inner") }
+      else probe)
       .withColumn(s"__created#$ev",
         if (nMissing > 0) col(idCol(ev)) >= createdLo else lit(false))
       .drop(keyNames.map(k => s"__key#$k"): _*)
@@ -2887,7 +2934,7 @@ final class Planner(
   /** Apply ON CREATE / ON MATCH SET items to the subset of rows where
     * `cond` holds. Like planSet, the items batch into ONE multi-property
     * store write per variable (setVertexProperties /
-    * setEdgeProperties) — one label join + frame pin regardless of how
+    * setEdgeProperties) — one patch per touched label regardless of how
     * many properties the clause sets, and unique constraints validate
     * the END-OF-STATEMENT state (reference: cypher_merge.c applies the
     * whole ON-SET list to the tuple before the heap update fires
@@ -2923,7 +2970,6 @@ final class Planner(
       .select(col(idCol(v)).as("id") +: keys.zipWithIndex.map {
         case (k, i) => qcol(propCol(v, k)).as(s"__v$i")
       }: _*)
-      .dropDuplicates("id")
     if (isNode) st.setVertexProperties(keys, updates)
     else st.setEdgeProperties(keys, updates)
     cur

@@ -1,10 +1,17 @@
 package graft.graph
 
+import scala.collection.immutable.ArraySeq
 import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FrameBridge
+import org.apache.spark.sql.types.LongType
 
 object DfUtils {
 
@@ -39,30 +46,92 @@ object DfUtils {
     * compute them, so the same tasks store the pinned blocks and return
     * the summaries. An eager checkpoint would spend a job of its own
     * before the summary could run. Shuffle stages under `df` still run as
-    * their own jobs when the checkpoint is planned. */
+    * their own jobs when the checkpoint is planned. The same job counts
+    * the rows, and the pinned frame's size estimate is that count times
+    * the schema's default row size ([[FrameBridge.withRowCount]]). */
   def pinAndSummarize[A: ClassTag](df: DataFrame)(
       f: Iterator[InternalRow] => A): (DataFrame, Array[A]) = {
     val pinned = df.localCheckpoint(eager = false)
-    (pinned, summarize(pinned)(f))
+    val parts = summarize(pinned) { it =>
+      var n = 0L
+      val counted = it.map { r => n += 1; r }
+      val a = f(counted)
+      while (counted.hasNext) counted.next()
+      (n, a)
+    }
+    (FrameBridge.withRowCount(pinned, parts.map(_._1).sum), parts.map(_._2))
   }
 
-  /** Append a dense 1-based row number and return it with the row count:
-    * one pin plus one job, no window and no shuffle. The input is pinned
+  /** Pin `df` in one job, with a measured size estimate
+    * ([[pinAndSummarize]]). */
+  def pin(df: DataFrame): DataFrame = pinAndSummarize(df)(_ => ())._1
+
+  /** `df` as a frame over driver-held rows (a `LocalRelation`) when its
+    * rows fit `maxBytes` at the schema's default row size; None when they
+    * do not, or when `maxBytes` ≤ 0. A frame whose optimized plan already
+    * is a `LocalRelation` is read off the plan with no job; any other is
+    * collected in one job, in which a partition ships its rows only
+    * while they fit, so the driver holds at most one budget per
+    * partition. A pinned frame whose measured row count is over budget
+    * runs no job. Rows keep their partition order. */
+  def local(df: DataFrame, maxBytes: Long): Option[DataFrame] = {
+    val maxRows = if (maxBytes <= 0) -1L else maxBytes / math.max(1, df.schema.defaultSize)
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation =>
+        if (l.data.size > maxRows) None
+        else Some(FrameBridge.localFrame(df.sparkSession, DataTypeUtils.fromAttributes(l.output), l.data))
+      case _ if maxRows < 0 => None
+      case r: LogicalRDD if r.stats.rowCount.exists(_ > maxRows) => None
+      case _ =>
+        val parts = summarize(df) { it =>
+          val b = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+          while (it.hasNext && b.size <= maxRows) b += it.next().copy()
+          if (b.size > maxRows) None else Some(b.toArray)
+        }
+        if (parts.exists(_.isEmpty) || parts.map(_.get.length.toLong).sum > maxRows) None
+        else Some(FrameBridge.localFrame(df.sparkSession, df.schema,
+          ArraySeq.unsafeWrapArray(parts.flatMap(_.get))))
+    }
+  }
+
+  /** The rows of a frame built over driver-held rows ([[local]]), or
+    * of a projection or filter of one, which the optimizer folds into a
+    * `LocalRelation` without a job. Any other frame is collected. */
+  def localRows(df: DataFrame): Seq[InternalRow] = df.queryExecution.optimizedPlan match {
+    case l: LocalRelation => l.data
+    case _ => ArraySeq.unsafeWrapArray(df.queryExecution.executedPlan.executeCollect())
+  }
+
+  /** Append a dense 1-based row number and return it with the row count.
+    * When the input fits `maxBytes` ([[local]]; the default 0 never
+    * does, for bulk loads that need no probe) its rows are numbered on
+    * the driver in collect order, which is partition order, and the
+    * result is a frame over those rows: one job, or none for an input
+    * the optimizer folds to a `LocalRelation`. A larger input is pinned
     * while its per-partition counts are collected ([[pinAndSummarize]]);
     * a row's number is its partition's offset (the sum of the counts
     * before it) plus its index within the partition (the low 33 bits of
     * `monotonically_increasing_id`, whose high bits are the partition
-    * index) plus one. The numbers are deterministic because the pinned
-    * partitions never change: every query over the returned frame, the
-    * caller's scope and the store alike, sees the same number per row.
-    * Expressions that must agree with the numbers (nondeterministic
-    * property values included) belong in `df0`, before the pin. */
-  def withRowNumCount(df0: DataFrame, out: String): (DataFrame, Long) = {
-    val (pinned, counts) = pinAndSummarize(df0)(_.size.toLong)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val mid = monotonically_increasing_id()
-    val rowNum = element_at(typedLit(offsets.init), shiftright(mid, 33).cast("int") + 1) +
-      mid.bitwiseAND(lit((1L << 33) - 1)) + 1L
-    (pinned.withColumn(out, rowNum), offsets.last)
-  }
+    * index) plus one. Either way the numbers are fixed: every query over
+    * the returned frame, the caller's scope and the store alike, sees the
+    * same number per row. Expressions that must agree with the numbers
+    * (nondeterministic property values included) belong in `df0`. */
+  def withRowNumCount(df0: DataFrame, out: String,
+      maxBytes: Long = 0L): (DataFrame, Long) =
+    local(df0, maxBytes) match {
+      case Some(l) =>
+        val schema = l.schema
+        val rows = localRows(l).zipWithIndex.map { case (r, i) =>
+          new GenericInternalRow((r.toSeq(schema) :+ (i + 1L)).toArray): InternalRow
+        }
+        (FrameBridge.localFrame(l.sparkSession, schema.add(out, LongType, nullable = false), rows),
+          rows.size.toLong)
+      case None =>
+        val (pinned, counts) = pinAndSummarize(df0)(_.size.toLong)
+        val offsets = counts.scanLeft(0L)(_ + _)
+        val mid = monotonically_increasing_id()
+        val rowNum = element_at(typedLit(offsets.init), shiftright(mid, 33).cast("int") + 1) +
+          mid.bitwiseAND(lit((1L << 33) - 1)) + 1L
+        (pinned.withColumn(out, rowNum), offsets.last)
+    }
 }

@@ -351,11 +351,13 @@ object GraphStore {
   //                              Spark schema as JSON (schema)
   //   <path>/data/<k>_<label>@<N>/   immutable parquet written by commit N
   //
-  // Readers parse the manifest with a fixed schema and each label's
-  // parquet with its recorded schema, so opening a version runs one job
-  // (the manifest read) instead of one schema-inference job per label. A
-  // manifest written before the schema column existed reads it as null,
-  // and those labels fall back to parquet schema inference.
+  // The manifest is JSON lines in one part file, read and written with
+  // the Hadoop FileSystem and Jackson: a file of a few rows costs no Spark
+  // job. Readers take every `part-*` file, so manifests Spark's JSON
+  // writer produced still load. Each label's parquet is read with its
+  // recorded schema, so opening a version runs no job at all; a manifest
+  // written before the schema field existed lacks it, and those labels
+  // fall back to parquet schema inference.
   //
   // A commit writes parquet for DIRTY labels only (MutableGraph tracks
   // them); unchanged labels' manifest rows point at the dir an earlier
@@ -373,22 +375,53 @@ object GraphStore {
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private val ManifestSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq("name", "kind", "label", "label_id", "dir", "max_entry", "schema").map {
-      case f @ ("label_id" | "max_entry") => StructField(f, LongType)
-      case f => StructField(f, StringType)
-    })
+  /** One manifest line: label `label` of kind `kind` ("v" or "e") at a
+    * version, its data directory, id sequence state and Spark schema
+    * JSON (None in manifests that predate it). */
+  private final case class ManifestEntry(name: String, kind: String, label: String,
+      labelId: Long, dir: String, maxEntry: Long, schema: Option[String])
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def readManifest(spark: SparkSession, path: String, v: Long): Seq[ManifestEntry] = {
+    val f = fs(spark, path)
+    f.listStatus(new org.apache.hadoop.fs.Path(s"$path/_log/v$v")).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName).flatMap { p =>
+        val in = f.open(p)
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.trim.nonEmpty).map { line =>
+          val n = json.readTree(line)
+          def str(k: String) = Option(n.get(k)).filterNot(_.isNull).map(_.asText)
+          ManifestEntry(str("name").orNull, str("kind").get, str("label").get,
+            n.get("label_id").asLong, str("dir").get, n.get("max_entry").asLong, str("schema"))
+        }.toVector finally in.close()
+      }
   }
 
-  private def readManifest(spark: SparkSession, path: String, v: Long) =
-    spark.read.schema(ManifestSchema).json(s"$path/_log/v$v").collect().toSeq
+  /** Write version `v`'s manifest: the part file first and `_SUCCESS`
+    * last, so [[versions]] never lists a half-written commit. Fails if
+    * the version directory exists already. */
+  private def writeManifest(spark: SparkSession, path: String, v: Long,
+      entries: Seq[ManifestEntry]): Unit = {
+    val f = fs(spark, path)
+    val dir = new org.apache.hadoop.fs.Path(s"$path/_log/v$v")
+    if (f.exists(dir))
+      throw new org.apache.hadoop.fs.FileAlreadyExistsException(s"manifest $dir already exists")
+    val out = f.create(new org.apache.hadoop.fs.Path(dir, "part-00000.json"), false)
+    try entries.foreach { e =>
+      val n = json.createObjectNode()
+        .put("name", e.name).put("kind", e.kind).put("label", e.label).put("label_id", e.labelId)
+        .put("dir", e.dir).put("max_entry", e.maxEntry)
+      e.schema.foreach(n.put("schema", _))
+      out.write((json.writeValueAsString(n) + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    } finally out.close()
+    f.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), false).close()
+  }
 
   /** A label's committed parquet, read with the manifest's recorded
     * schema (inferred for manifests that predate it). */
-  private def readLabel(spark: SparkSession, path: String, r: org.apache.spark.sql.Row) = {
-    val dir = s"$path/${r.getAs[String]("dir")}"
-    Option(r.getAs[String]("schema")) match {
+  private def readLabel(spark: SparkSession, path: String, e: ManifestEntry) = {
+    val dir = s"$path/${e.dir}"
+    e.schema match {
       case Some(js) => spark.read
         .schema(org.apache.spark.sql.types.DataType.fromJson(js)
           .asInstanceOf[org.apache.spark.sql.types.StructType])
@@ -412,14 +445,10 @@ object GraphStore {
     * new version. Only dirty labels are rewritten. */
   def commit(m: MutableGraph, path: String): Long = {
     val spark = m.spark
-    import spark.implicits._
     val prev = versions(spark, path).lastOption
     val newV = prev.map(_ + 1).getOrElse(0L)
     val prevDirs: Map[(String, String), String] = prev match {
-      case Some(v) =>
-        readManifest(spark, path, v)
-          .map(r => (r.getAs[String]("kind"), r.getAs[String]("label")) ->
-            r.getAs[String]("dir")).toMap
+      case Some(v) => readManifest(spark, path, v).map(e => (e.kind, e.label) -> e.dir).toMap
       case None => Map.empty
     }
     val g = m.snapshot
@@ -437,13 +466,12 @@ object GraphStore {
     }
     // a clean label's frame holds what its reused directory holds, so
     // the frame's schema is the directory's for dirty and clean alike
-    val rows =
-      g.vertexLabels.map(l => (m.name, "v", l.name, l.labelId,
-        place("v", l.name, l.df, dirtyV(l.name)), m.vertexMaxEntry(l.name), l.df.schema.json)) ++
-      g.edgeLabels.map(l => (m.name, "e", l.name, l.labelId,
-        place("e", l.name, l.df, dirtyE(l.name)), m.edgeMaxEntry(l.name), l.df.schema.json))
-    rows.toDF(ManifestSchema.fieldNames.toSeq: _*)
-      .coalesce(1).write.mode(SaveMode.ErrorIfExists).json(s"$path/_log/v$newV")
+    val entries =
+      g.vertexLabels.map(l => ManifestEntry(m.name, "v", l.name, l.labelId,
+        place("v", l.name, l.df, dirtyV(l.name)), m.vertexMaxEntry(l.name), Some(l.df.schema.json))) ++
+      g.edgeLabels.map(l => ManifestEntry(m.name, "e", l.name, l.labelId,
+        place("e", l.name, l.df, dirtyE(l.name)), m.edgeMaxEntry(l.name), Some(l.df.schema.json)))
+    writeManifest(spark, path, newV, entries)
     m.markClean()
     newV
   }
@@ -459,11 +487,10 @@ object GraphStore {
   def commitAndRebind(m: MutableGraph, path: String): Long = {
     val spark = m.spark
     val v = commit(m, path)
-    for (r <- readManifest(spark, path, v)) {
-      val label = r.getAs[String]("label")
-      val df = readLabel(spark, path, r)
-      if (r.getAs[String]("kind") == "v") m.rebindVertexLabel(label, df)
-      else m.rebindEdgeLabel(label, df)
+    for (e <- readManifest(spark, path, v)) {
+      val df = readLabel(spark, path, e)
+      if (e.kind == "v") m.rebindVertexLabel(e.label, df)
+      else m.rebindEdgeLabel(e.label, df)
     }
     v
   }
@@ -475,16 +502,13 @@ object GraphStore {
     require(vs.nonEmpty, s"no committed versions at $path")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"version $v not committed at $path (have ${vs.mkString(",")})")
-    val rows = readManifest(spark, path, v)
-    val name = rows.headOption.map(_.getAs[String]("name")).getOrElse("graph")
-    def side(kind: String) = rows.filter(_.getAs[String]("kind") == kind)
-      .sortBy(_.getAs[Long]("label_id"))
+    val entries = readManifest(spark, path, v)
+    val name = entries.headOption.map(_.name).getOrElse("graph")
+    def side(kind: String) = entries.filter(_.kind == kind).sortBy(_.labelId)
     new PropertyGraph(
       name,
-      side("v").map(r => VertexLabel(r.getAs[String]("label"),
-        r.getAs[Long]("label_id").toInt, readLabel(spark, path, r))),
-      side("e").map(r => EdgeLabel(r.getAs[String]("label"),
-        r.getAs[Long]("label_id").toInt, readLabel(spark, path, r))))
+      side("v").map(e => VertexLabel(e.label, e.labelId.toInt, readLabel(spark, path, e))),
+      side("e").map(e => EdgeLabel(e.label, e.labelId.toInt, readLabel(spark, path, e))))
   }
 
   /** Resume a committed version as a mutable store — id allocation
@@ -494,18 +518,17 @@ object GraphStore {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"no committed versions at $path")
     val v = version.getOrElse(vs.last)
-    val rows = readManifest(spark, path, v)
-    val name = rows.headOption.map(_.getAs[String]("name")).getOrElse("graph")
+    val entries = readManifest(spark, path, v)
+    val name = entries.headOption.map(_.name).getOrElse("graph")
     val m = new MutableGraph(name, spark)
-    for (r <- rows.sortBy(_.getAs[Long]("label_id"))) {
-      val label = r.getAs[String]("label")
-      val df = readLabel(spark, path, r)
-      if (r.getAs[String]("kind") == "v") {
-        m.registerVertexLabel(label, r.getAs[Long]("label_id").toInt)
-        m.appendVertices(label, df, r.getAs[Long]("max_entry"))
+    for (e <- entries.sortBy(_.labelId)) {
+      val df = readLabel(spark, path, e)
+      if (e.kind == "v") {
+        m.registerVertexLabel(e.label, e.labelId.toInt)
+        m.appendVertices(e.label, df, e.maxEntry)
       } else {
-        m.registerEdgeLabel(label, r.getAs[Long]("label_id").toInt)
-        m.appendEdges(label, df, r.getAs[Long]("max_entry"))
+        m.registerEdgeLabel(e.label, e.labelId.toInt)
+        m.appendEdges(e.label, df, e.maxEntry)
       }
     }
     m.markClean()

@@ -1,33 +1,50 @@
 package graft.graph
 
+import scala.collection.immutable.{ListMap, VectorMap}
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.graft.FrameBridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.types.{AgVariant, GraphId}
 
-/** Updatable property graph: label → DataFrame with copy-on-write swaps.
+/** Updatable property graph: per label, a base frame plus a bounded,
+  * driver-held delta.
   *
   * The Spark analogue of AGE's heap-table writes (reference: executors in
   * src/backend/executor/cypher_create.c / cypher_set.c / cypher_delete.c /
-  * cypher_merge.c): each mutating clause produces a NEW label frame
-  * (union / anti-join / column overwrite) and swaps it in. Materialization
-  * uses localCheckpoint to pin allocated ids and cut lineage — on a
-  * cluster this would be a Delta/Iceberg transactional write instead, with
-  * the same copy-on-write semantics.
+  * cypher_merge.c), whose cost is the rows a clause writes. A small write
+  * batch is collected once (no job when the optimizer already folded it
+  * to a LocalRelation) and applied on the driver to the delta of each
+  * label its ids hit: appended rows, hidden base ids (base edges of
+  * deleted vertices hidden by endpoint), and per-id property patches.
+  * Readers see each label through one view, rebuilt only when that
+  * label's delta changes: the base anti-joined with the hidden ids,
+  * unioned with the appended rows, left-joined with the patches. Those parts are LocalRelations joined by id, broadcast from
+  * the driver (graft.plans.DriverBroadcast), so the view's plan does not
+  * grow with the number of writes. A delta that outgrows Spark's
+  * broadcast threshold folds: its view is pinned as the label's new base.
   *
-  * Like the reference's executors, which touch only the tuples a clause
-  * changes, a write rewrites (and marks dirty for the next commit) only
-  * the labels its ids hit: ids carry their label (graphid.h:59-60), so
-  * the job that pins a write's id set also names them, and every other
-  * label keeps its frame object.
+  * A batch the driver cannot hold (over the threshold, or any batch when
+  * the threshold is ≤ 0) takes the copy-on-write arm: the label's view
+  * is rewritten (union / anti-join / column overwrite), pinned with a
+  * measured size estimate and swapped in as the new base — on a cluster
+  * a Delta/Iceberg transactional write with the same semantics.
+  *
+  * Either arm touches, and marks dirty for the next commit, only the
+  * labels a write's ids hit: ids carry their label (graphid.h:59-60), and
+  * every other label keeps its frame object.
   *
   * Id allocation mirrors the per-label sequences
   * (label_commands.c:361-366): 16-bit label id | 48-bit entry counter.
   */
 final class MutableGraph(initialName: String, val spark: SparkSession) {
+  import MutableGraph.{Delta, idSchema, noDelta}
 
   private var _name: String = initialName
   def name: String = synchronized(_name)
@@ -40,10 +57,17 @@ final class MutableGraph(initialName: String, val spark: SparkSession) {
     _name = NameValidation.requireGraphName(newName, "new graph name")
   }
 
-  private case class LabelState(labelId: Int, df: DataFrame, maxEntry: Long)
+  /** `df` is the label's view, the frame every reader sees: `base` while
+    * the delta is empty. */
+  private case class LabelState(labelId: Int, base: DataFrame, maxEntry: Long, delta: Delta,
+      df: DataFrame)
 
-  private var vLabels = scala.collection.immutable.ListMap.empty[String, LabelState]
-  private var eLabels = scala.collection.immutable.ListMap.empty[String, LabelState]
+  /** A label with no delta. */
+  private def state(labelId: Int, base: DataFrame, maxEntry: Long): LabelState =
+    LabelState(labelId, base, maxEntry, noDelta, base)
+
+  private var vLabels = ListMap.empty[String, LabelState]
+  private var eLabels = ListMap.empty[String, LabelState]
   private var nextLabelId = 1
 
   // labels whose frame changed since the last GraphStore.commit /
@@ -67,14 +91,14 @@ final class MutableGraph(initialName: String, val spark: SparkSession) {
   def registerVertexLabel(label: String, labelId: Int): Unit = synchronized {
     require(!vLabels.contains(label))
     val df = spark.createDataFrame(new java.util.ArrayList[Row](), vertexSchema)
-    vLabels += label -> LabelState(labelId, df, 0L)
+    vLabels += label -> state(labelId, df, 0L)
     nextLabelId = math.max(nextLabelId, labelId + 1)
   }
 
   def registerEdgeLabel(label: String, labelId: Int): Unit = synchronized {
     require(!eLabels.contains(label))
     val df = spark.createDataFrame(new java.util.ArrayList[Row](), edgeSchemaBase)
-    eLabels += label -> LabelState(labelId, df, 0L)
+    eLabels += label -> state(labelId, df, 0L)
     nextLabelId = math.max(nextLabelId, labelId + 1)
   }
 
@@ -82,7 +106,7 @@ final class MutableGraph(initialName: String, val spark: SparkSession) {
     if (!vLabels.contains(label)) {
       NameValidation.requireLabelName(label) // reference: create_vlabel validates
       val df = spark.createDataFrame(new java.util.ArrayList[Row](), vertexSchema)
-      vLabels += label -> LabelState(allocLabelId(), df, 0L)
+      vLabels += label -> state(allocLabelId(), df, 0L)
       dirtyV += label
     }
   }
@@ -91,7 +115,7 @@ final class MutableGraph(initialName: String, val spark: SparkSession) {
     if (!eLabels.contains(label)) {
       NameValidation.requireLabelName(label)
       val df = spark.createDataFrame(new java.util.ArrayList[Row](), edgeSchemaBase)
-      eLabels += label -> LabelState(allocLabelId(), df, 0L)
+      eLabels += label -> state(allocLabelId(), df, 0L)
       dirtyE += label
     }
   }
@@ -204,31 +228,26 @@ final class MutableGraph(initialName: String, val spark: SparkSession) {
     }
   }
 
-  private def enforceVertexConstraints(label: String, existing: Option[DataFrame],
+  /** Checks `batch` against `existing` for each of `cs` (see
+    * checkUniqueBatch). */
+  private def enforce(cs: Seq[(String, Seq[String])], existing: Option[DataFrame],
       batch: DataFrame): Unit =
-    uniqueV.getOrElse(label, Nil)
-      .foreach { case (n, ps) => checkUniqueBatch(existing, batch, ps, n) }
+    cs.foreach { case (n, ps) => checkUniqueBatch(existing, batch, ps, n) }
 
-  private def enforceEdgeConstraints(label: String, existing: Option[DataFrame],
-      batch: DataFrame): Unit =
-    uniqueE.getOrElse(label, Nil)
-      .foreach { case (n, ps) => checkUniqueBatch(existing, batch, ps, n) }
-
-  /** SET-path uniqueness: split the post-update frame into the touched
-    * rows (semi-join on the update ids) and the untouched rest
+  /** SET-path uniqueness: split each changed label's new view into the
+    * touched rows (semi-join on the update ids) and the untouched rest
     * (anti-join) and batch-probe touched-vs-rest. Untouched-vs-untouched
     * needs no check — it was valid before the statement and is
-    * unchanged. Only constraints whose tuple contains the SET key are
+    * unchanged. Only constraints whose tuple contains a set key are
     * checked (index.sql Test 3). */
-  private def enforceConstraintsOnSet(cs: Seq[(String, Seq[String])], df: DataFrame,
-      ids: DataFrame, touchedKey: String): Unit = {
-    val relevant = cs.filter(_._2.contains(touchedKey))
-    if (relevant.nonEmpty) {
-      val touched = df.join(ids, Seq("id"), "left_semi")
-      val rest = df.join(ids, Seq("id"), "left_anti")
-      relevant.foreach { case (n, ps) => checkUniqueBatch(Some(rest), touched, ps, n) }
+  private def enforceOnSet(constraints: Map[String, Seq[(String, Seq[String])]],
+      changed: Seq[(String, LabelState)], keys: Seq[String], ids: DataFrame): Unit =
+    changed.foreach { case (l, st) =>
+      val relevant = constraints.getOrElse(l, Nil).filter { case (_, ps) => ps.exists(keys.contains) }
+      if (relevant.nonEmpty)
+        enforce(relevant, Some(st.df.join(ids, Seq("id"), "left_anti")),
+          st.df.join(ids, Seq("id"), "left_semi"))
     }
-  }
 
   /** Current read snapshot (the analogue of AGE's global-graph snapshot,
     * reference: src/backend/utils/adt/age_global_graph.c:715-817). */
@@ -244,8 +263,15 @@ final class MutableGraph(initialName: String, val spark: SparkSession) {
     * widening conflicting column types (long+double → double, else
     * string — the schemaless-agtype fallback; a VariantType encoding is
     * the round-2 upgrade). */
-  private def widen(x: DataType, y: DataType): DataType = (x, y) match {
-    case _ if x == y => x
+  private def widen(x: DataType, y: DataType): DataType =
+    // a widened type is nullable throughout: values of either side cast
+    // to it, whatever nullability their containers claimed
+    if (x == y) x else FrameBridge.nullable(widened(x, y))
+
+  private def widened(x: DataType, y: DataType): DataType = (x, y) match {
+    // types that differ only in nullability (a map literal's values, an
+    // array's elements) are one type
+    case _ if DataTypeUtils.equalsIgnoreNullability(x, y) => x
     case (IntegerType, LongType) | (LongType, IntegerType) => LongType // lossless
     case (NullType, t) => t
     case (t, NullType) => t
@@ -314,186 +340,285 @@ final class MutableGraph(initialName: String, val spark: SparkSession) {
     case _ => false
   }
 
+  // ---- the delta arm ----------------------------------------------------
+
+  /** Bytes a write batch, and a label's delta, may hold on the driver:
+    * Spark's broadcast threshold, the size up to which a join ships a
+    * relation whole. Set only by tests, to force the copy-on-write arm
+    * (≤ 0) or an early fold; None reads the session's threshold. */
+  @volatile private[graft] var deltaThreshold: Option[Long] = None
+
+  private[graft] def batchThreshold: Long =
+    deltaThreshold.getOrElse(SQLConf.get.autoBroadcastJoinThreshold)
+
+  /** A write batch as a frame over driver-held rows, when it fits
+    * [[batchThreshold]]: one job, or none for a batch the optimizer
+    * folds to a LocalRelation (DfUtils.local). */
+  private[graft] def localBatch(df: DataFrame): Option[DataFrame] =
+    DfUtils.local(df, batchThreshold)
+
+  /** Folds so far: deltas that outgrew the threshold and were pinned. */
+  @volatile private[graph] var folds = 0
+
+  private def localFrame(schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    FrameBridge.localFrame(spark, schema, rows)
+
+  /** `s` under delta `d`: the view rebuilt, and folded into a new pinned
+    * base once `d` outgrows the threshold. */
+  private def withDelta(s: LabelState, d: Delta): LabelState = {
+    val next = s.copy(delta = d, df = viewOf(s.base, d))
+    if (d.bytes <= batchThreshold) next
+    else { folds += 1; state(s.labelId, DfUtils.pin(next.df), s.maxEntry) }
+  }
+
+  /** base ⊎ delta: hidden ids and edges of detached vertices anti-joined,
+    * appended rows unioned (types
+    * widened as an append widens them), patches left-joined (as a SET
+    * widens them), columns in copy-on-write order. */
+  private def viewOf(base: DataFrame, d: Delta): DataFrame =
+    if (d.isEmpty) base
+    else {
+      var v = base
+      if (d.hidden.nonEmpty)
+        v = v.join(localFrame(idSchema, d.hidden.toSeq.map(InternalRow(_))), Seq("id"), "left_anti")
+      if (d.detached.nonEmpty) {
+        val gone = localFrame(idSchema, d.detached.toSeq.map(InternalRow(_)))
+        v = v.join(gone.select(col("id").as("__del_s")), col("start_id") === col("__del_s"), "left_anti")
+          .join(gone.select(col("id").as("__del_e")), col("end_id") === col("__del_e"), "left_anti")
+      }
+      if (d.rowSchema.nonEmpty) {
+        // one partition: a handful of rows split across the cores would
+        // add as many tasks to every read and files to every commit
+        val (a, b) = alignPair(v, localFrame(d.rowSchema, d.rows).coalesce(1))
+        v = a.unionByName(b)
+      }
+      if (d.patchKeys.nonEmpty) {
+        val keyed = v.join(localFrame(d.patchSchema, d.patches.values.toSeq), Seq("id"), "left_outer")
+        v = d.patchKeys.zipWithIndex.foldLeft(keyed) { case (df, (key, i)) =>
+          // __h#i marks a patch of this key: a row can be set TO null,
+          // which the patched value alone can't tell from a join miss
+          val (hit, c) = (col(s"__h#$i"), col(s"__p#$i"))
+          val newDt = d.patchSchema(s"__p#$i").dataType
+          if (v.schema.fieldNames.contains(key)) {
+            val curDt = v.schema(key).dataType
+            val to = widen(curDt, newDt)
+            df.withColumn(key, when(hit, conv(c, newDt, to)).otherwise(conv(PropName.qcol(key), curDt, to)))
+          } else df.withColumn(key, when(hit, c))
+        }.drop(d.patchSchema.fieldNames.filterNot(_ == "id").toSeq: _*)
+      }
+      v.select(d.cols.map(PropName.qcol): _*)
+    }
+
+  /** `s`'s delta with the rows of `batch` (a local frame) appended. */
+  private def appendedDelta(s: LabelState, batch: DataFrame): Delta = {
+    val d = s.delta
+    val cols = (s.df.columns.toSeq ++ batch.columns).distinct
+    if (d.rowSchema.isEmpty)
+      d.copy(rowSchema = FrameBridge.nullable(batch.schema), rows = DfUtils.localRows(batch).toVector,
+        cols = cols)
+    else {
+      val (a, b) = alignPair(localFrame(d.rowSchema, d.rows), batch)
+      d.copy(rowSchema = FrameBridge.nullable(a.schema),
+        rows = (DfUtils.localRows(a) ++ DfUtils.localRows(b)).toVector, cols = cols)
+    }
+  }
+
+  /** `s`'s delta without the entities `ids`: appended rows are dropped,
+    * base rows hidden, patches forgotten. */
+  private def deletedDelta(s: LabelState, ids: Set[Long]): Delta = {
+    val d = s.delta
+    val (gone, kept) =
+      if (d.rows.isEmpty) (Vector.empty[InternalRow], d.rows)
+      else {
+        val at = d.rowSchema.fieldIndex("id")
+        d.rows.partition(r => ids(r.getLong(at)))
+      }
+    val appended = gone.map(_.getLong(d.rowSchema.fieldIndex("id"))).toSet
+    d.copy(rows = kept, hidden = d.hidden ++ (ids -- appended), patches = d.patches -- ids,
+      cols = s.df.columns.toSeq)
+  }
+
+  /** Edge label `s`'s delta without the edges incident to the deleted
+    * vertices `vids`: appended edges are dropped, base edges hidden by
+    * their endpoints, which a probe reads without computing edge ids. */
+  private def detachedDelta(s: LabelState, vids: Set[Long]): Delta = {
+    val d = s.delta
+    val (gone, kept) =
+      if (d.rows.isEmpty) (Vector.empty[InternalRow], d.rows)
+      else {
+        val (st, en) = (d.rowSchema.fieldIndex("start_id"), d.rowSchema.fieldIndex("end_id"))
+        d.rows.partition(r => vids(r.getLong(st)) || vids(r.getLong(en)))
+      }
+    val at = if (gone.isEmpty) 0 else d.rowSchema.fieldIndex("id")
+    d.copy(rows = kept, detached = d.detached ++ vids, patches = d.patches -- gone.map(_.getLong(at)),
+      cols = s.df.columns.toSeq)
+  }
+
+  /** `s`'s delta with the updates `upd` patched in: (id, one value column
+    * per key of `keys`, encoded names), a local frame. A key's patch
+    * values share one type, widened like a column; the first row of an
+    * id wins within `upd`, later statements override earlier ones key by
+    * key. */
+  private def patchedDelta(s: LabelState, keys: Seq[String], upd: DataFrame): Delta = {
+    val d = s.delta
+    val all = d.patchKeys ++ keys.filterNot(d.patchKeys.contains)
+    def oldType(j: Int) = d.patchSchema(s"__p#$j").dataType
+    def newType(j: Int) = upd.schema(j + 1).dataType
+    val types = all.map { k =>
+      (Option(d.patchKeys.indexOf(k)).filter(_ >= 0).map(oldType) ++
+        Option(keys.indexOf(k)).filter(_ >= 0).map(newType)).reduce(widen)
+    }
+    // both sides re-typed to `types` by projections the optimizer folds
+    // on the driver (a Project over a LocalRelation runs no job)
+    def slots(index: String => Int, hit: Int => Column, value: Int => Column, from: Int => DataType) =
+      all.indices.flatMap { i =>
+        index(all(i)) match {
+          case -1 => Seq(lit(false).as(s"__h#$i"), lit(null).cast(types(i)).as(s"__p#$i"))
+          case j => Seq(hit(j).as(s"__h#$i"), conv(value(j), from(j), types(i)).as(s"__p#$i"))
+        }
+      }
+    val old = localFrame(d.patchSchema, d.patches.values.toSeq).select(col("id") +:
+      slots(d.patchKeys.indexOf, j => col(s"__h#$j"), j => col(s"__p#$j"), oldType): _*)
+    val fresh = upd.select(col(upd.columns.head).as("id") +:
+      slots(keys.indexOf, _ => lit(true), j => col(upd.columns(j + 1)), newType): _*)
+    val schema = FrameBridge.nullable(fresh.schema)
+    var patches = VectorMap.from(DfUtils.localRows(old).map(r => r.getLong(0) -> r))
+    val seen = scala.collection.mutable.HashSet.empty[Long]
+    for (r <- DfUtils.localRows(fresh) if seen.add(r.getLong(0))) {
+      val id = r.getLong(0)
+      patches = patches.updated(id, patches.get(id).fold(r) { o =>
+        new GenericInternalRow((id +: all.indices.flatMap { i =>
+          val src = if (r.getBoolean(2 * i + 1)) r else o
+          Seq(src.getBoolean(2 * i + 1), src.get(2 * i + 2, types(i)))
+        }).toArray[Any])
+      })
+    }
+    d.copy(patchSchema = schema, patchKeys = all.toVector, patches = patches,
+      cols = s.df.columns.toSeq ++ keys.filterNot(s.df.columns.contains))
+  }
+
+  /** A local batch's rows with a non-null id in column 0, grouped by the
+    * label their id carries. */
+  private def byLabel(batch: DataFrame): Map[Int, Seq[InternalRow]] =
+    DfUtils.localRows(batch).filterNot(_.isNullAt(0)).groupBy(r => GraphId.labelId(r.getLong(0)))
+
+  private def idsByLabel(batch: DataFrame): Map[Int, Set[Long]] =
+    byLabel(batch).map { case (l, rs) => l -> rs.map(_.getLong(0)).toSet }
+
+  // ---- writes -------------------------------------------------------------
+
   /** Append vertex rows (id + prop columns) to a label. Rows must already
     * carry allocated ids. */
   def appendVertices(label: String, rows: DataFrame, newMaxEntry: Long): Unit = synchronized {
     createVertexLabel(label)
-    val s = vLabels(label)
-    // transactional uniqueness: a duplicate WITHIN the batch and a
-    // conflict against existing rows both fail before the swap
-    // (index.sql Tests 1-2), but via an O(batch) probe — the existing
-    // label is scanned once, never re-aggregated (see checkUniqueBatch)
-    val merged =
-      if (isPlaceholder(s.df)) {
-        enforceVertexConstraints(label, existing = None, batch = rows)
-        rows
-      } else {
-        val (oldP, newP) = alignPair(s.df, rows)
-        enforceVertexConstraints(label, existing = Some(oldP), batch = newP)
-        oldP.unionByName(newP)
-      }
-    vLabels += label -> s.copy(df = merged, maxEntry = math.max(s.maxEntry, newMaxEntry))
+    vLabels += label -> appended(vLabels(label), rows, newMaxEntry, uniqueV.getOrElse(label, Nil))
     dirtyV += label
   }
 
   def appendEdges(label: String, rows: DataFrame, newMaxEntry: Long): Unit = synchronized {
     createEdgeLabel(label)
-    val s = eLabels(label)
-    val merged =
-      if (isPlaceholder(s.df)) {
-        enforceEdgeConstraints(label, existing = None, batch = rows)
-        rows
-      } else {
-        val (oldP, newP) = alignPair(s.df, rows)
-        enforceEdgeConstraints(label, existing = Some(oldP), batch = newP)
-        oldP.unionByName(newP)
-      }
-    eLabels += label -> s.copy(df = merged, maxEntry = math.max(s.maxEntry, newMaxEntry))
+    eLabels += label -> appended(eLabels(label), rows, newMaxEntry, uniqueE.getOrElse(label, Nil))
     dirtyE += label
+  }
+
+  /** `s` with `rows` appended. Transactional uniqueness: a duplicate
+    * WITHIN the batch and a conflict against existing rows both fail
+    * before the swap (index.sql Tests 1-2), via an O(batch) probe — the
+    * existing label is scanned once, never re-aggregated (see
+    * checkUniqueBatch). */
+  private def appended(s: LabelState, rows: DataFrame, newMaxEntry: Long,
+      cs: Seq[(String, Seq[String])]): LabelState = {
+    val maxEntry = math.max(s.maxEntry, newMaxEntry)
+    if (isPlaceholder(s.base) && s.delta.isEmpty) {
+      enforce(cs, existing = None, batch = rows)
+      state(s.labelId, rows, maxEntry)
+    } else localBatch(rows) match {
+      case Some(batch) =>
+        if (cs.nonEmpty) {
+          val (oldP, newP) = alignPair(s.df, batch)
+          enforce(cs, Some(oldP), newP)
+        }
+        withDelta(s.copy(maxEntry = maxEntry), appendedDelta(s, batch))
+      case None =>
+        val (oldP, newP) = alignPair(s.df, rows)
+        enforce(cs, Some(oldP), newP)
+        state(s.labelId, oldP.unionByName(newP), maxEntry)
+    }
   }
 
   /** Overwrite a property column for the given (id, value) updates on
     * whichever labels the ids belong to (label recoverable from the id —
-    * graphid.h:59-60). `updates`: (id, __newval). */
-  def setVertexProperty(key: String, updates: DataFrame): Unit = synchronized {
-    val changed = applyProp(vLabels, key, updates)
-    // SET can violate a unique constraint whose tuple includes the key
-    // (index.sql Test 3) — check every touched frame BEFORE any swap so
-    // the statement fails atomically; touched-vs-rest batch probe, not
-    // a full-label re-aggregation
-    val ids = updates.select(col("id")).distinct()
-    changed.foreach { case (l, st) =>
-      enforceConstraintsOnSet(uniqueV.getOrElse(l, Nil), st.df, ids, key)
-    }
-    changed.foreach { case (l, st) =>
-      vLabels += l -> st; dirtyV += l
-    }
-  }
+    * graphid.h:59-60). `updates`: (id, value). */
+  def setVertexProperty(key: String, updates: DataFrame): Unit =
+    setVertexProperties(Seq(key), updates)
 
-  /** Overwrite SEVERAL property columns in one pass: a single left join
-    * and a single frame pin per touched label regardless of how many
-    * properties change. The streaming-upsert path (GraphIngest) updates
-    * every non-key property of a micro-batch at once — through the
-    * per-key [[setVertexProperty]] that costs one label
-    * materialization PER PROPERTY; here it is one total.
-    * `updates`: (id, <one column per raw property name in keys>). */
+  def setEdgeProperty(key: String, updates: DataFrame): Unit =
+    setEdgeProperties(Seq(key), updates)
+
+  /** Overwrite SEVERAL property columns in one pass: one patch (or one
+    * left join and pin) per touched label however many properties
+    * change. A SET can violate a unique constraint whose tuple includes
+    * a key (index.sql Test 3): every touched label is checked BEFORE any
+    * swap, so the statement fails atomically. `updates`: (id, <one
+    * column per raw property name in keys>); an id updated twice keeps
+    * one of its rows. */
   def setVertexProperties(keys: Seq[String], updates: DataFrame): Unit = synchronized {
-    val changed = applyProps(vLabels, keys, updates)
-    val ids = updates.select(col("id")).distinct()
-    changed.foreach { case (l, st) =>
-      val relevant = uniqueV.getOrElse(l, Nil)
-        .filter { case (_, ps) => ps.exists(keys.contains) }
-      if (relevant.nonEmpty) {
-        val touched = st.df.join(ids, Seq("id"), "left_semi")
-        val rest = st.df.join(ids, Seq("id"), "left_anti")
-        relevant.foreach { case (n, ps) => checkUniqueBatch(Some(rest), touched, ps, n) }
-      }
-    }
+    val (changed, ids) = setProps(vLabels, keys, updates)
+    enforceOnSet(uniqueV, changed, keys, ids)
     changed.foreach { case (l, st) => vLabels += l -> st; dirtyV += l }
   }
 
   /** Edge twin of [[setVertexProperties]]. */
   def setEdgeProperties(keys: Seq[String], updates: DataFrame): Unit = synchronized {
-    val changed = applyProps(eLabels, keys, updates)
-    val ids = updates.select(col("id")).distinct()
-    changed.foreach { case (l, st) =>
-      val relevant = uniqueE.getOrElse(l, Nil)
-        .filter { case (_, ps) => ps.exists(keys.contains) }
-      if (relevant.nonEmpty) {
-        val touched = st.df.join(ids, Seq("id"), "left_semi")
-        val rest = st.df.join(ids, Seq("id"), "left_anti")
-        relevant.foreach { case (n, ps) => checkUniqueBatch(Some(rest), touched, ps, n) }
-      }
-    }
+    val (changed, ids) = setProps(eLabels, keys, updates)
+    enforceOnSet(uniqueE, changed, keys, ids)
     changed.foreach { case (l, st) => eLabels += l -> st; dirtyE += l }
   }
 
-  private def applyProps(
-      labels: scala.collection.immutable.ListMap[String, LabelState],
-      keys0: Seq[String], updates0: DataFrame): Seq[(String, LabelState)] = {
+  /** The changed labels and the updated ids. */
+  private def setProps(labels: ListMap[String, LabelState], keys0: Seq[String],
+      updates0: DataFrame): (Seq[(String, LabelState)], DataFrame) = {
     // positional rename to synthetic names: value columns must arrive in
     // `keys0` order after `id`, but their NAMES are never resolved —
     // property keys may contain dots/backticks that col() would
-    // misparse (the same reason the single-key path uses "__newval")
-    require(updates0.columns.head == "id" && updates0.columns.length == keys0.length + 1,
-      s"applyProps: updates must be (id, <${keys0.size} value cols>), got ${updates0.columns.toSeq}")
-    val nv = keys0.indices.map(i => s"__nv#$i")
-    val (updates, hitIds) = pinWithLabels(updates0.toDF("id" +: nv: _*))
-    labels.toSeq.flatMap { case (l, s) =>
-      val lo = GraphId.make(s.labelId, 0)
-      val hi = GraphId.make(s.labelId, GraphId.EntryIdMax)
-      if (!hitIds(s.labelId)) None
-      else {
-        val u = updates.filter(col("id").between(lo, hi))
-          .withColumn("__hit", lit(true))
-        var df = s.df.join(u, Seq("id"), "left_outer")
-        for ((k0, i) <- keys0.zipWithIndex) {
-          val key = PropName.enc(k0)
-          val c = col(nv(i))
-          val newDt = u.schema(nv(i)).dataType
-          df =
-            if (s.df.schema.fieldNames.contains(key)) {
-              val curDt = s.df.schema(key).dataType
-              val to = widen(curDt, newDt)
-              df.withColumn(key,
-                when(col("__hit"), conv(c, newDt, to))
-                  .otherwise(conv(PropName.qcol(key), curDt, to)))
-            } else df.withColumn(key, when(col("__hit"), c))
+    // misparse, and a key named "id" must not collide
+    require(updates0.columns.length == keys0.length + 1,
+      s"setProps: updates must be (id, <${keys0.size} value cols>), got ${updates0.columns.toSeq}")
+    val keys = keys0.map(PropName.enc) // reserved names escape at frame level
+    val nv = keys.indices.map(i => s"__nv#$i")
+    val renamed = updates0.toDF("id" +: nv: _*)
+    localBatch(renamed) match {
+      case Some(batch) =>
+        val hit = byLabel(batch)
+        val changed = labels.toSeq.collect { case (l, s) if hit.contains(s.labelId) =>
+          l -> withDelta(s, patchedDelta(s, keys, localFrame(batch.schema, hit(s.labelId))))
         }
-        df = df.drop("__hit" +: nv: _*)
-        Some(l -> s.copy(df = df.localCheckpoint(true)))
-      }
-    }
-  }
-
-  def setEdgeProperty(key: String, updates: DataFrame): Unit = synchronized {
-    val changed = applyProp(eLabels, key, updates)
-    val ids = updates.select(col("id")).distinct()
-    changed.foreach { case (l, st) =>
-      enforceConstraintsOnSet(uniqueE.getOrElse(l, Nil), st.df, ids, key)
-    }
-    changed.foreach { case (l, st) =>
-      eLabels += l -> st; dirtyE += l
-    }
-  }
-
-  private def applyProp(
-      labels: scala.collection.immutable.ListMap[String, LabelState],
-      key0: String, updates0: DataFrame): Seq[(String, LabelState)] = {
-    val key = PropName.enc(key0) // reserved names escape at frame level
-    val (updates, hitIds) = pinWithLabels(updates0)
-    labels.toSeq.flatMap { case (l, s) =>
-      // label-id pruning: only touch frames whose id range is hit
-      val lo = GraphId.make(s.labelId, 0)
-      val hi = GraphId.make(s.labelId, GraphId.EntryIdMax)
-      // __hit marks membership in the update set: a row can be updated
-      // TO null (SET n.k = null / SET n += {k: null} remove the key,
-      // reference: cypher_set.out "+= {role:NULL}" drops role), which a
-      // bare null-check after the left join can't tell from a join miss
-      val u = updates.filter(col("id").between(lo, hi))
-        .select(col("id"), col("__newval"), lit(true).as("__hit"))
-      if (!hitIds(s.labelId)) None
-      else {
-        val joined = s.df.join(u, Seq("id"), "left_outer")
-        val newDf =
-          if (s.df.schema.fieldNames.contains(key)) {
-            // the new value's type may conflict with the column: widen
-            // both sides like an append would (variant on scalar mixes)
-            val curDt = s.df.schema(key).dataType
-            val newDt = u.schema("__newval").dataType
-            val to = widen(curDt, newDt)
-            joined.withColumn(key,
-              when(col("__hit"), conv(col("__newval"), newDt, to))
-                .otherwise(conv(PropName.qcol(key), curDt, to)))
-              .drop("__newval", "__hit")
-          } else joined.withColumnRenamed("__newval", key).drop("__hit")
-        // pin the touched frame: without this every SET layers another
-        // join onto the label's lineage and planning cost grows
-        // superlinearly over a mutation session (the mutation-path twin
-        // of round 4's pinned iterative frontiers). Store-backed graphs
-        // swap these pins for durable parquet via commitAndRebind.
-        Some(l -> s.copy(df = newDf.localCheckpoint(true)))
-      }
+        (changed, batch.select(col("id")))
+      case None =>
+        val (updates, hitIds) = pinWithLabels(renamed.dropDuplicates("id"))
+        val changed = labels.toSeq.collect { case (l, s) if hitIds(s.labelId) =>
+          val lo = GraphId.make(s.labelId, 0)
+          val hi = GraphId.make(s.labelId, GraphId.EntryIdMax)
+          val u = updates.filter(col("id").between(lo, hi)).withColumn("__hit", lit(true))
+          var df = s.df.join(u, Seq("id"), "left_outer")
+          for ((key, i) <- keys.zipWithIndex) {
+            val c = col(nv(i))
+            val newDt = u.schema(nv(i)).dataType
+            df =
+              if (s.df.schema.fieldNames.contains(key)) {
+                val curDt = s.df.schema(key).dataType
+                val to = widen(curDt, newDt)
+                df.withColumn(key,
+                  when(col("__hit"), conv(c, newDt, to))
+                    .otherwise(conv(PropName.qcol(key), curDt, to)))
+              } else df.withColumn(key, when(col("__hit"), c))
+          }
+          // pin the rewritten label: without it every SET layers another
+          // join onto its lineage and planning cost grows superlinearly
+          // over a mutation session
+          l -> state(s.labelId, DfUtils.pin(df.drop("__hit" +: nv: _*)), s.maxEntry)
+        }
+        (changed, updates.select(col("id")))
     }
   }
 
@@ -506,94 +631,122 @@ final class MutableGraph(initialName: String, val spark: SparkSession) {
     removeProp(eLabels, key, ids).foreach { case (l, st) => eLabels += l -> st; dirtyE += l }
   }
 
-  /** The rewritten frames of the labels `ids` hit that carry the key. */
-  private def removeProp(
-      labels: scala.collection.immutable.ListMap[String, LabelState],
-      key0: String, ids: DataFrame): Seq[(String, LabelState)] = {
+  /** The changed states of the labels `ids` hit that carry the key. */
+  private def removeProp(labels: ListMap[String, LabelState], key0: String,
+      ids: DataFrame): Seq[(String, LabelState)] = {
     val key = PropName.enc(key0)
     val carrying = labels.toSeq.filter(_._2.df.schema.fieldNames.contains(key))
     if (carrying.isEmpty) return Nil
-    val (idDf, hit) = pinWithLabels(ids.select(col("id")))
-    carrying.collect { case (l, s) if hit(s.labelId) =>
-      val newDf = s.df.join(idDf.select(col("id"), lit(true).as("__rm")), Seq("id"), "left_outer")
-        .withColumn(key, when(col("__rm"), lit(null).cast(s.df.schema(key).dataType)).otherwise(PropName.qcol(key)))
-        .drop("__rm")
-      l -> s.copy(df = newDf.localCheckpoint(true)) // see applyProp
+    localBatch(ids.select(col("id"))) match {
+      case Some(batch) =>
+        val hit = byLabel(batch)
+        carrying.collect { case (l, s) if hit.contains(s.labelId) =>
+          val nulls = localFrame(batch.schema, hit(s.labelId)).select(col("id"), lit(null).as("__nv#0"))
+          l -> withDelta(s, patchedDelta(s, Seq(key), nulls))
+        }
+      case None =>
+        val (idDf, hit) = pinWithLabels(ids.select(col("id")))
+        carrying.collect { case (l, s) if hit(s.labelId) =>
+          val newDf = s.df.join(idDf.select(col("id"), lit(true).as("__rm")), Seq("id"), "left_outer")
+            .withColumn(key, when(col("__rm"), lit(null).cast(s.df.schema(key).dataType))
+              .otherwise(PropName.qcol(key)))
+            .drop("__rm")
+          l -> state(s.labelId, DfUtils.pin(newDf), s.maxEntry) // see setProps
+        }
     }
   }
 
   /** Delete vertices by id. Unless detach, error if any incident edge
     * remains (reference: cypher_delete.c:70-196 semantics). Only the
     * vertex labels the ids hit and the edge labels holding an incident
-    * edge are rewritten. */
+    * edge change. */
   def deleteVertices(ids: DataFrame, detach: Boolean): Unit = synchronized {
-    val (idDf, hitV) = pinWithLabels(ids.select(col("id")))
-    val incident = incidentEdgeLabels(idDf)
-    if (detach) {
+    val batch = localBatch(ids.select(col("id")))
+    val (idDf, hitV) = batch match {
+      case Some(b) => (b, idsByLabel(b))
+      case None =>
+        val (pinned, hit) = pinWithLabels(ids.select(col("id")))
+        (pinned, hit.map(_ -> Set.empty[Long]).toMap)
+    }
+    val incident = MutableGraph.statsPerKey(incidentEdges(idDf)).keySet
+    if (!detach && incident.nonEmpty)
+      throw new IllegalStateException(
+        "Cannot delete a vertex that still has edges; use DETACH DELETE")
+    if (batch.isDefined) {
+      val vids = hitV.values.flatten.toSet
+      eLabels.toSeq.foreach { case (l, s) =>
+        if (incident(s.labelId)) { eLabels += l -> withDelta(s, detachedDelta(s, vids)); dirtyE += l }
+      }
+      vLabels.toSeq.foreach { case (l, s) =>
+        hitV.get(s.labelId).foreach { vs => vLabels += l -> withDelta(s, deletedDelta(s, vs)); dirtyV += l }
+      }
+    } else {
       eLabels.toSeq.foreach { case (l, s) =>
         if (incident(s.labelId)) {
           val newDf = s.df
             .join(idDf.select(col("id").as("__del_s")), col("start_id") === col("__del_s"), "left_anti")
             .join(idDf.select(col("id").as("__del_e")), col("end_id") === col("__del_e"), "left_anti")
-          eLabels += l -> s.copy(df = newDf.localCheckpoint(true)) // see applyProp
+          eLabels += l -> state(s.labelId, DfUtils.pin(newDf), s.maxEntry) // see setProps
           dirtyE += l
         }
       }
-    } else if (incident.nonEmpty)
-      throw new IllegalStateException(
-        "Cannot delete a vertex that still has edges; use DETACH DELETE")
-    antiJoinHit(vLabels, idDf, hitV).foreach { case (l, st) => vLabels += l -> st; dirtyV += l }
+      antiJoinHit(vLabels, idDf, hitV.keySet).foreach { case (l, st) => vLabels += l -> st; dirtyV += l }
+    }
   }
 
   def deleteEdges(ids: DataFrame): Unit = synchronized {
-    val (idDf, hit) = pinWithLabels(ids.select(col("id")))
-    antiJoinHit(eLabels, idDf, hit).foreach { case (l, st) => eLabels += l -> st; dirtyE += l }
+    localBatch(ids.select(col("id"))) match {
+      case Some(batch) =>
+        val hit = idsByLabel(batch)
+        eLabels.toSeq.foreach { case (l, s) =>
+          hit.get(s.labelId).foreach { es => eLabels += l -> withDelta(s, deletedDelta(s, es)); dirtyE += l }
+        }
+      case None =>
+        val (idDf, hit) = pinWithLabels(ids.select(col("id")))
+        antiJoinHit(eLabels, idDf, hit).foreach { case (l, st) => eLabels += l -> st; dirtyE += l }
+    }
   }
 
-  /** Pin a write's id-keyed input (update rows or a delete's ids) and
-    * name the labels its ids hit, in one job that adds no shuffle (ids
-    * carry their label — graphid.h:59-60); the label rewrites then read
-    * the pinned rows instead of recomputing the statement's plan. No
-    * distinct(): a delete's anti-joins ignore duplicate ids. */
+  /** Pin a copy-on-write input (update rows or a delete's ids) and name
+    * the labels its ids hit, in one job that adds no shuffle (ids carry
+    * their label — graphid.h:59-60); the label rewrites then read the
+    * pinned rows, sized by their measured count, instead of recomputing
+    * the statement's plan. No distinct(): a delete's anti-joins ignore
+    * duplicate ids. */
   private def pinWithLabels(df: DataFrame): (DataFrame, Set[Int]) = {
     val (pinned, parts) = DfUtils.pinAndSummarize(
       df.select(MutableGraph.labelOf(col("id")).as("__lid"), col("*")))(MutableGraph.partitionStats)
-    val stats = MutableGraph.mergeStats(parts)
-    // a pinned frame carries no size estimate, so the joins against it
-    // would shuffle the label; Spark's broadcast threshold decides on the
-    // measured row count instead
-    val out = pinned.drop("__lid")
-    val bytes = stats.values.map(_._1).sum * out.schema.defaultSize
-    (if (bytes <= SQLConf.get.autoBroadcastJoinThreshold) broadcast(out) else out, stats.keySet)
+    (pinned.drop("__lid"), MutableGraph.mergeStats(parts).keySet)
   }
 
-  /** Label ids of the edge labels holding an edge incident to `idDf`'s
-    * vertices: one probe over the union of the edge frames, as one equi
-    * semi-join of each edge's two endpoints (exploded to rows) against the
-    * ids — an OR of the two endpoint conditions would plan a nested-loop
-    * join. Only the endpoint columns are read, so the scan skips whatever
-    * computes a label's edge ids. */
-  private def incidentEdgeLabels(idDf: DataFrame): Set[Int] =
+  /** (label id `__lid`, endpoint `__end`) of every edge incident to
+    * `idDf`'s vertices: one probe over the union of the edge views, as
+    * one equi semi-join of each edge's two endpoints (exploded to rows)
+    * against the ids — an OR of the two endpoint conditions would plan a
+    * nested-loop join. Only the endpoint columns are read, so the scan
+    * skips whatever computes a label's edge ids. */
+  private def incidentEdges(idDf: DataFrame): DataFrame =
     eLabels.values.map { s =>
-      s.df.select(lit(s.labelId).as("__lid"),
-        explode(array(col("start_id"), col("end_id"))).as("__end"))
-    }.reduceOption(_ unionByName _).fold(Set.empty[Int]) { ends =>
-      val touching = ends
-        .join(idDf.select(col("id").as("__del")), col("__end") === col("__del"), "left_semi")
-      lastIncidentProbePlan = touching.queryExecution.executedPlan.toString
-      MutableGraph.statsPerKey(touching).keySet
+      s.df.select(lit(s.labelId).as("__lid"), explode(array(col("start_id"), col("end_id"))).as("__end"))
+    }.reduceOption(_ unionByName _).fold(
+      localFrame(StructType(Seq(StructField("__lid", IntegerType), StructField("__end", LongType))), Nil)) {
+      ends =>
+        val touching = ends
+          .join(idDf.select(col("id").as("__del")), col("__end") === col("__del"), "left_semi")
+        lastIncidentProbePlan = touching.queryExecution.executedPlan.toString
+        touching
     }
 
   /** Test/diagnostic hook: physical plan of the most recent incident-edge
     * probe of a vertex delete. */
   @volatile private[graph] var lastIncidentProbePlan: String = ""
 
-  /** The rewritten frames of the labels `hit`, without `idDf`'s ids. */
-  private def antiJoinHit(
-      labels: scala.collection.immutable.ListMap[String, LabelState], idDf: DataFrame,
+  /** The rewritten, pinned frames of the labels `hit`, without `idDf`'s
+    * ids. */
+  private def antiJoinHit(labels: ListMap[String, LabelState], idDf: DataFrame,
       hit: Set[Int]): Seq[(String, LabelState)] =
     labels.toSeq.collect { case (l, s) if hit(s.labelId) =>
-      l -> s.copy(df = s.df.join(idDf, Seq("id"), "left_anti").localCheckpoint(true))
+      l -> state(s.labelId, DfUtils.pin(s.df.join(idDf, Seq("id"), "left_anti")), s.maxEntry)
     }
 
   /** Drop a label and all its data (reference: drop_label,
@@ -616,24 +769,50 @@ final class MutableGraph(initialName: String, val spark: SparkSession) {
     dirtyE -= label
   }
 
-  /** Pin current frames (cut lineage after a batch of mutations). */
+  /** Pin every label's view as its base (cut lineage after a batch of
+    * mutations; folds every delta). */
   def checkpoint(): Unit = synchronized {
-    vLabels.toSeq.foreach { case (l, s) => vLabels += l -> s.copy(df = s.df.localCheckpoint(true)) }
-    eLabels.toSeq.foreach { case (l, s) => eLabels += l -> s.copy(df = s.df.localCheckpoint(true)) }
+    vLabels = vLabels.map { case (l, s) => l -> state(s.labelId, DfUtils.pin(s.df), s.maxEntry) }
+    eLabels = eLabels.map { case (l, s) => l -> state(s.labelId, DfUtils.pin(s.df), s.maxEntry) }
   }
 
   /** Swap a label's frame for an equivalent one (GraphStore rebinds
     * committed labels to their durable parquet so lineage roots at the
-    * store, not at executor-memory checkpoint blocks). Does not mark the
-    * label dirty — the content is unchanged by contract. */
+    * store, not at executor-memory checkpoint blocks). Clears the delta,
+    * which the frame holds; does not mark the label dirty — the content
+    * is unchanged by contract. */
   private[graph] def rebindVertexLabel(label: String, df: DataFrame): Unit =
-    synchronized { vLabels += label -> vLabels(label).copy(df = df) }
+    synchronized { vLabels += label -> state(vLabels(label).labelId, df, vLabels(label).maxEntry) }
 
   private[graph] def rebindEdgeLabel(label: String, df: DataFrame): Unit =
-    synchronized { eLabels += label -> eLabels(label).copy(df = df) }
+    synchronized { eLabels += label -> state(eLabels(label).labelId, df, eLabels(label).maxEntry) }
 }
 
 object MutableGraph {
+  /** A label's writes held on the driver since its base frame: appended
+    * rows under their own schema, hidden base ids, deleted vertices whose
+    * base edges are hidden (`detached`, edge labels only), and property
+    * patches — per id, for each patched key `patchKeys(i)` (an encoded
+    * name), a hit flag `__h#i` and a value `__p#i`. `cols` is the view's column order:
+    * the order the copy-on-write arm would have left. The schemas outlive
+    * their rows: a column an append or a SET widened stays widened after
+    * those rows are deleted, as it does under copy-on-write. */
+  private final case class Delta(
+      rowSchema: StructType, rows: Vector[InternalRow], hidden: Set[Long], detached: Set[Long],
+      patchSchema: StructType, patchKeys: Vector[String], patches: VectorMap[Long, InternalRow],
+      cols: Seq[String]) {
+    def isEmpty: Boolean =
+      rowSchema.isEmpty && hidden.isEmpty && detached.isEmpty && patchKeys.isEmpty
+    /** Size at the schemas' default row sizes. */
+    def bytes: Long = rows.size.toLong * rowSchema.defaultSize +
+      (hidden.size + detached.size) * 8L + patches.size.toLong * patchSchema.defaultSize
+  }
+
+  private val idSchema = StructType(Seq(StructField("id", LongType, nullable = false)))
+  private val noDelta =
+    Delta(new StructType(), Vector.empty, Set.empty, Set.empty, idSchema, Vector.empty,
+      VectorMap.empty, Nil)
+
   /** Validated user-facing creation (reference: create_graph validates
     * the name before creating the schema, graph_commands.c:84; names
     * longer than 63 chars truncate first like PG identifiers). The bare

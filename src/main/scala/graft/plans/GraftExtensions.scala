@@ -26,7 +26,9 @@ import graft.types.{AgMap, AgValue}
   * an agtype text map of query parameters.
   *
   * The extensions also inject [[SinglePartitionLocal]], which runs
-  * small driver-held results as one exchange-free job.
+  * small driver-held results as one exchange-free job, and
+  * [[DriverBroadcast]], which broadcasts driver-held relations without
+  * a job.
   *
   * Install via `spark.sql.extensions=graft.plans.GraftExtensions` or
   * `builder.withExtensions(new GraftExtensions)`.
@@ -38,6 +40,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[GraftExtensions].getName, "cypher"),
       (args: Seq[Expression]) => GraftExtensions.plan(args)))
     e.injectOptimizerRule(_ => SinglePartitionLocal)
+    e.injectQueryStagePrepRule(_ => DriverBroadcast)
   }
 }
 

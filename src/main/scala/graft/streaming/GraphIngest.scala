@@ -42,8 +42,9 @@ final case class IngestBatchMetrics(
   *   3. new entries get ids partition-parallel (DfUtils.withRowNumCount —
   *      per-partition offsets plus in-partition indexes, no window);
   *   4. keys that already exist get property overwrites through
-  *      MutableGraph.setVertexProperties (one copy-on-write column swap
-  *      for the whole batch).
+  *      MutableGraph.setVertexProperties (one patch of the label's
+  *      driver-held delta, or one copy-on-write column swap for a batch
+  *      the driver cannot hold).
   *
   * Property columns are stored under [[PropName]]-encoded names, the
   * same frame-level convention as the Cypher CREATE path — so a batch

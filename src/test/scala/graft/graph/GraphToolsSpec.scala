@@ -391,4 +391,26 @@ class GraphToolsSpec extends SparkTestBase {
     val v = g.allVertices.select("id")
     assert(v.count() === v.distinct().count())
   }
+
+  test("TpchGraph caches per session: a graph another root session built is not handed to this one") {
+    val sfDir = "/root/testdata/sf0.001"
+    val other = {
+      val base = spark
+      org.apache.spark.sql.SparkSession.clearActiveSession()
+      org.apache.spark.sql.SparkSession.clearDefaultSession()
+      val s = org.apache.spark.sql.SparkSession.builder().master("local[4]")
+        .config("spark.sql.shuffle.partitions", "4").config("spark.ui.enabled", "false")
+        .getOrCreate()
+      org.apache.spark.sql.SparkSession.setDefaultSession(base)
+      org.apache.spark.sql.SparkSession.setActiveSession(base)
+      s
+    }
+    assert(other ne spark)
+    TpchGraph.invalidate()
+    val foreign = TpchGraph(other, sfDir)
+    val g = TpchGraph.storeBacked(spark, sfDir)
+    assert(TpchGraph(spark, sfDir) ne foreign)
+    GraphStore.analyzeBucketed(spark, g.name)
+    assert(g.vertexLabel("Customer").df.sparkSession eq spark)
+  }
 }

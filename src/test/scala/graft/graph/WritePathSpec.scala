@@ -2,15 +2,15 @@ package graft.graph
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.{SparkJobs, SparkTestBase}
 import graft.cypher.Cypher
 
-/** The copy-on-write write path: row numbering, label-local rewrites,
-  * manifests that carry label schemas, and the number of Spark jobs each
-  * write spends. */
+/** The write path: row numbering, label-local writes through the delta
+  * and copy-on-write arms, manifests that carry label schemas, and the
+  * number of Spark jobs each write spends. */
 class WritePathSpec extends SparkTestBase {
 
   private def rowsOf(df: DataFrame): Seq[String] =
@@ -34,6 +34,25 @@ class WritePathSpec extends SparkTestBase {
     val some = numbered.filter(col("id") >= 30).select("id", "rn").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(some === first.collect { case (i, (_, rn)) if i >= 30 => i -> rn })
+  }
+
+  test("withRowNumCount within a budget numbers collected rows in partition order, on the driver") {
+    val in = spark.range(0, 40, 1, 8).toDF().filter(col("id") < 10 || col("id") >= 30)
+      .withColumn("r", rand())
+    val (numbered, n) = DfUtils.withRowNumCount(in, "rn", 1L << 20)
+    assert(n === 20L)
+    assert(numbered.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    // partition order is id order here: the pinned arm's numbers
+    val rows = numbered.select("id", "r", "rn").collect()
+    assert(rows.map(r => r.getLong(0) -> r.getLong(2)).toSeq.sortBy(_._1) ===
+      (0L until 10L).map(i => i -> (i + 1)) ++ (30L until 40L).map(i => i -> (i - 19)))
+    assert(numbered.select("r").collect().toSeq === rows.map(r => Row(r.getDouble(1))).toSeq)
+    // over budget: the pinned arm
+    val (pinned, m) = DfUtils.withRowNumCount(in, "rn", 64L)
+    assert(m === 20L)
+    assert(pinned.queryExecution.logical.collectFirst {
+      case _: org.apache.spark.sql.execution.LogicalRDD => true }.nonEmpty)
   }
 
   test("withRowNumCount on an empty input counts zero") {
@@ -189,6 +208,46 @@ class WritePathSpec extends SparkTestBase {
 
   private def jobs(f: => Unit): Int = SparkJobs.count(spark)(f)
 
+  private def isPinned(df: DataFrame): Boolean =
+    df.queryExecution.logical.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+
+  private def holdsLocalRows(df: DataFrame): Boolean =
+    df.queryExecution.logical.collectFirst {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true }.nonEmpty
+
+  test("a batch over the delta threshold takes the copy-on-write arm and pins its label") {
+    val m = ring("wp_cow")
+    m.checkpoint()
+    Cypher.execute(spark, m, "MATCH (a:A {i: 1}) SET a.k = 1")
+    assert(holdsLocalRows(m.snapshot.vertexLabel("A").df), "a one-row SET goes to the delta")
+    // six rows of (id, value) pass a 64-byte threshold
+    m.deltaThreshold = Some(64L)
+    Cypher.execute(spark, m, "MATCH (a:A) SET a.k = a.i * 10")
+    val a = m.snapshot.vertexLabel("A").df
+    assert(isPinned(a), a.queryExecution.logical.toString)
+    assert(Cypher.query(spark, m.snapshot, "MATCH (a:A) RETURN a.i, a.k").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap === (1L to 6L).map(i => i -> i * 10).toMap)
+    // a delta that outgrows the threshold folds into a pinned base
+    m.deltaThreshold = Some(40L) // three 16-byte rows
+    val folds = m.folds
+    for (i <- 1 to 6) Cypher.execute(spark, m, s"CREATE (:Lone {i: ${i + 1}})")
+    assert(m.folds > folds)
+    assert(Cypher.query(spark, m.snapshot, "MATCH (l:Lone) RETURN count(*)").collect().head.getLong(0) === 7L)
+  }
+
+  test("copy-on-write rewrites keep a measured size estimate: twelve SET/REMOVE statements stay below 2^63") {
+    val m = ring("wp_stats")
+    m.deltaThreshold = Some(0L) // every write through the copy-on-write arm
+    for (i <- 1 to 6) {
+      Cypher.execute(spark, m, s"MATCH (b:B) WHERE b.i <= 3 SET b.k = $i")
+      Cypher.execute(spark, m, "MATCH (b:B) WHERE b.i <= 3 REMOVE b.k")
+    }
+    val b = m.snapshot.vertexLabel("B").df
+    assert(isPinned(b))
+    val size = b.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size < BigInt(Long.MaxValue), s"B's estimate grew to $size")
+  }
+
   test("job budget of the write path: CREATE, MERGE create arm, DETACH DELETE, commit, loadVersion") {
     val dir = Files.createTempDirectory("graft-wp-budget").toString
     val m = new MutableGraph("wp_budget", spark)
@@ -202,16 +261,28 @@ class WritePathSpec extends SparkTestBase {
     val create = jobs(run(
       "MATCH (n:Nation {name: 'N3'}) CREATE (c:Customer {name: 'new', acctbal: 1.5})-[:FROM_NATION]->(n)"))
     val mergeCreate = jobs(run("MERGE (c:Customer {name: 'fresh'}) ON CREATE SET c.acctbal = 2.5"))
+    val mergeMatch = jobs(run("MERGE (c:Customer {name: 'N2-1'}) ON MATCH SET c.acctbal = 3.5"))
+    val mergeData = jobs(run("MATCH (c:Customer)-[:FROM_NATION]->(n:Nation) WHERE c.name = 'N4-1' " +
+      "WITH DISTINCT n.name AS nn MERGE (t:Tag {name: nn, round: 1})"))
+    val set = jobs(run("MATCH (c:Customer {name: 'N2-2'}) SET c.vip = true"))
+    val remove = jobs(run("MATCH (c:Customer {name: 'N2-2'}) REMOVE c.vip"))
+    val read = jobs(run("MATCH (c:Customer {name: 'N2-2'}) RETURN c.acctbal, c.vip"))
     val detach = jobs(run("MATCH (c:Customer {name: 'new'}) DETACH DELETE c"))
     val commit = jobs(GraphStore.commit(m, dir))
     val load = jobs(GraphStore.loadVersion(spark, dir).vertexLabels.size)
-    info(s"jobs: create=$create merge_create=$mergeCreate detach=$detach commit=$commit load=$load")
+    info(s"jobs: create=$create merge_create=$mergeCreate merge_match=$mergeMatch " +
+      s"merge_datadriven=$mergeData set=$set remove=$remove read=$read detach=$detach " +
+      s"commit=$commit load=$load")
     // the counts this write path reaches; one more eager job fails here
-    assert(create <= 2, "CREATE node + edge: one numbering job each")
-    assert(mergeCreate <= 7)
-    assert(detach <= 7)
-    assert(commit <= 4, "manifest read, two dirty labels, manifest write")
-    assert(load <= 1, "the manifest read; label schemas come from the manifest")
+    assert(create <= 1, "CREATE node + edge: the MATCH's collect; the edge numbers its rows on the driver")
+    assert(mergeCreate <= 3, "probe, distinct missing keys, ON CREATE updates")
+    assert(mergeMatch <= 1, "the probe, which broadcasts its driver-held input")
+    assert(mergeData <= 5)
+    assert(set <= 1 && remove <= 1, "the MATCH's collect")
+    assert(read <= 1, "the delta broadcasts from the driver")
+    assert(detach <= 2, "the MATCH's collect and the incident-edge probe")
+    assert(commit <= 3, "three dirty labels (Customer, FROM_NATION, Tag); the manifest is read and written without a job")
+    assert(load === 0, "the manifest read runs no job; label schemas come from the manifest")
     assert(!m.lastIncidentProbePlan.contains("NestedLoopJoin"))
   }
 }
