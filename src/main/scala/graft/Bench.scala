@@ -58,8 +58,8 @@ object Bench {
     spark.range(1000).selectExpr("sum(id)").count()
     spark.read.parquet(s"$sfDir/region.parquet").count()
     // headline per-query latency: exclude pagerank/components/sssp
-    // (excluded while they ran as GraphX jobs, whose O(iterations) jobs
-    // and GC churn perturbed neighboring measurements; they now finish
+    // (excluded while their distributed arms' O(iterations) jobs and GC
+    // churn perturbed neighboring measurements; they now finish
     // as driver endgames at these scales, and stay out so the timed set
     // matches earlier artifacts) and the mutation pipeline (scratch-
     // graph writes are constant-time driver overhead, not a data-scaled

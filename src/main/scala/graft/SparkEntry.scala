@@ -956,8 +956,8 @@ object SparkEntry {
         """MATCH p = shortestpath((c:Customer)-[:FROM_NATION|IN_REGION*..3]->(r:Region))
           |RETURN length(p) AS hops, count(*) AS n ORDER BY hops""".stripMargin)),
 
-    // BFS hop distances from one landmark over the whole graph (GraphX
-    // Pregel ShortestPaths): region AMERICA is gid 2^48 + 1, its nations
+    // BFS hop distances from one landmark over the whole graph: region
+    // AMERICA is gid 2^48 + 1, its nations
     // are 1 hop away, their customers/suppliers 2 — along edge direction
     "cy_call_sssp" -> ((s, dir) =>
       Cypher.query(s, TpchGraph.storeBacked(s, dir),
@@ -980,7 +980,7 @@ object SparkEntry {
         """CALL graph_stats() YIELD kind, label, n WHERE kind = 'vertex'
           |RETURN label, n ORDER BY label""".stripMargin)),
 
-    // triangle counting (GraphX canonical-edge triangleCount) graded on
+    // triangle counting (canonical-edge triangleCount) graded on
     // a graph with a closed-form answer: barbell(50,10) has two K50
     // bells -> 2 * C(50,3) = 39200 triangles, C(49,2) = 1176 per bell
     // vertex, and the 10 bridge vertices sit in none

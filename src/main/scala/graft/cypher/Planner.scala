@@ -1113,7 +1113,7 @@ final class Planner(
     def applyFilters(start: Scope): Scope = {
       var merged = start
       for ((v, (k, e)) <- residuals) {
-        val c = exprc.compile(Prop(Var(v), k), merged) === exprc.compile(e, merged)
+        val c = exprc.compile(BinOp("=", Prop(Var(v), k), e), merged)
         merged = merged.withDf(merged.df.filter(c))
       }
       // WHERE: split into conjuncts; EXISTS-pattern conjuncts become

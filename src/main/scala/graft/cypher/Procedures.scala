@@ -32,8 +32,8 @@ object Procedures {
   val registry: Map[String, Proc] = Map(
     // analytics: each procedure with a driver endgame goes through
     // GraphAlgos.run — the local arm while the graph fits the collect
-    // and work budgets, the distributed arm above them (GraphX for
-    // pagerank, components and sssp; DataFrame rounds for the rest).
+    // and work budgets, the distributed arm (DataFrame rounds) above
+    // them.
     // clustering_coefficient and the statistics are distributed only;
     // scc gates its own Tarjan finish on the residual of its passes
     "pagerank" -> ((s, g, args) =>

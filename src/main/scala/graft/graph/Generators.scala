@@ -36,8 +36,8 @@ object Generators {
     val e = fit(spark, iIdx.crossJoin(jIdx), n * (n - 1) / 2, 3).filter(col("i") < col("j"))
       // eid = position in the (i, j) enumeration, i-major. `/` is DOUBLE
       // division in Spark; the cast back to long is exact (i(i-1) is
-      // even) and keeps the edge id column bigint — GraphX bridges
-      // (toGraphX.getLong) crash on a double-typed id
+      // even) and keeps the edge id column bigint like every other
+      // generated graph's
       .withColumn("eid",
         ((col("i") - 1) * n - (col("i") * (col("i") - 1)) / 2 +
           (col("j") - col("i"))).cast("long"))

@@ -1,7 +1,5 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph => XGraph}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -14,10 +12,10 @@ import scala.reflect.runtime.universe.{TypeTag, typeOf}
 /** Whole-graph analytics. Each procedure with a driver endgame builds
   * one [[GraphAlgos.Endgame]]: a local arm that replays the distributed
   * arithmetic in tight array loops over the snapshot collected once
-  * (see [[GraphAlgos.collected]]), and a distributed arm — DataFrame
-  * rounds, or GraphX for `pageRank`, `connectedComponents` and `sssp`
-  * (the property graph's long ids are GraphX VertexIds directly, so no
-  * re-keying shuffle). [[GraphAlgos.run]] is the one gate between them.
+  * (see [[GraphAlgos.collected]]), and a distributed arm of DataFrame
+  * rounds — `scc`, `connectedComponents`, `sssp`, `weightedSssp` and
+  * `Dedup.dupClusters` share the one [[GraphAlgos.minRelax]] kernel.
+  * [[GraphAlgos.run]] is the one gate between them.
   * `clusteringCoefficient` and the statistics are distributed only;
   * `scc` gates its Tarjan finish on the residual of its own passes.
   */
@@ -227,26 +225,24 @@ object GraphAlgos {
       live.foreach(deleteCheckpointFile(spark, _))
       live.clear()
     }
-    /** Test hook: files currently tracked as live. */
+    /** Files currently tracked as live. */
     private[graph] def liveFiles: Seq[String] = live.toSeq
   }
 
   /** Storage level for scale-pressured pins, derived from the frame's
     * MEASURED row bound the way exchange width already is: deserialized
-    * MEMORY_AND_DISK below the floor (zero per-read cost — every bench-
+    * MEMORY_AND_DISK below 50M rows (zero per-read cost — every bench-
     * scale pin), serialized above it. At 100× the deserialized unroll
     * of the big pinned frames saturated the storage pool — §51's
     * transient "Block rdd_N does not exist" recomputes in hits and the
     * thresholded jaccard's 16 g wedge persist — and serialized blocks
     * of packed long/double rows are ~3-5× smaller, trading
     * deserialization CPU that is noise against those runs' shuffle
-    * work. Floor conf-overridable for deployment bisection. */
-  private[graph] def pinLevelFor(spark: SparkSession, rows: Double,
+    * work. */
+  private[graph] def pinLevelFor(rows: Double,
       bytesPerRow: Long = 40L): org.apache.spark.storage.StorageLevel = {
     import org.apache.spark.storage.StorageLevel
-    val floor = spark.conf.getOption("spark.graft.pin.serializedRowFloor")
-      .map(_.toLong).getOrElse(50000000L)
-    if (rows < floor) StorageLevel.MEMORY_AND_DISK
+    if (rows < 50000000L) StorageLevel.MEMORY_AND_DISK
     else {
       // serialized blocks still COMPETE with execution memory in the
       // unified pool: when the frame's estimated bytes would take more
@@ -267,17 +263,17 @@ object GraphAlgos {
     * (de)serialization overflows the stack after a few hundred rounds.
     * Every `every`-th call therefore hard-truncates through a reliable
     * checkpoint — the standard periodic barrier of iterative Spark
-    * algorithms (GraphX's Pregel ships the same knob). Returns
+    * algorithms — whose files `scope` tracks for [[detach]]. Returns
     * (leaf, unpersist-handle); checkpointed rounds hand back the
     * checkpointed frame for both. */
-  private def lineagePin(spark: SparkSession, every: Int = 16)
+  private def lineagePin(spark: SparkSession, scope: CheckpointScope, every: Int = 16)
       : DataFrame => (DataFrame, DataFrame) = {
     var n = 0
     df => {
       n += 1
       if (n % every == 0) {
         ensureCheckpointDir(spark)
-        val c = df.checkpoint()
+        val c = scope.track(df.checkpoint())
         (c, c)
       } else {
         val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -285,6 +281,12 @@ object GraphAlgos {
       }
     }
   }
+
+  /** `result` freed of `scope`'s checkpoint files, if any: an eager
+    * localCheckpoint materializes it, then the files are deleted. */
+  private def detach(scope: CheckpointScope, result: DataFrame): DataFrame =
+    if (scope.liveFiles.isEmpty) result
+    else { val out = result.localCheckpoint(true); scope.releaseAll(); out }
 
   /** Driver-CPU budget of [[run]]'s gate: the local arm runs only while
     * its kernel's step bound stays under this many elementary steps
@@ -584,9 +586,8 @@ object GraphAlgos {
     }
 
   /** Vertices ∪ edge endpoints (sorted, deduped) — the vertex closure
-    * GraphX's `Graph(vs, es)` builds by materializing dangling
-    * endpoints with the default attribute, for endgames replaying
-    * GraphX-backed operators. */
+    * the whole-graph procedures run on: a dangling endpoint is a
+    * vertex too. */
   private[graft] def closeVerts(vA: Array[Long], srcs: Array[Long],
       dsts: Array[Long]): Array[Long] = {
     val all = new Array[Long](vA.length + srcs.length + dsts.length)
@@ -609,12 +610,63 @@ object GraphAlgos {
     new LocalCsr(closeVerts(vA, srcs, dsts), srcs, dsts)
   }
 
-  def toGraphX(g: PropertyGraph): XGraph[Long, Long] = {
-    val vs: RDD[(Long, Long)] = g.allVertices.select("id")
-      .rdd.map(r => (r.getLong(0), r.getLong(0)))
-    val es: RDD[Edge[Long]] = g.allEdges.select("id", "start_id", "end_id")
-      .rdd.map(r => Edge(r.getLong(1), r.getLong(2), r.getLong(0)))
-    XGraph(vs, es)
+  /** [[closeVerts]] as a frame: vertex ids ∪ edge endpoints, distinct. */
+  private def closedVerts(g: PropertyGraph): DataFrame = g.allVertices.select(col("id"))
+    .unionAll(g.allEdges.select(explode(array(col("start_id"), col("end_id"))).as("id"))).distinct()
+
+  /** The min-relaxation kernel over labels `(id, m)`, one row per id,
+    * and edges `(src, dst, w)`: each round sets m(src) ← min(m(src),
+    * m(dst) + w), a src with no label gaining one only when `grow`. It
+    * joins just the labels the last round changed (an unchanged m(dst)
+    * + w reached src before), `bc` hinting that side, and takes one min
+    * over labels ∪ candidates. Its pinned job counts the changed labels:
+    * the loop stops at an exact fixpoint (doubles too) or after `cap`
+    * rounds (negative: none). Returns the labels, the rounds run, and
+    * whether the last round changed nothing. */
+  private def minRelax(labels: DataFrame, edges: DataFrame, cap: Int, grow: Boolean,
+      pin: DataFrame => (DataFrame, DataFrame),
+      bc: DataFrame => DataFrame): (DataFrame, Int, Boolean) = {
+    val none = lit(null).cast(labels.schema("m").dataType)
+    var (lab, frontier) = (labels, labels)
+    var handle = Option.empty[DataFrame]
+    var changed = -1L
+    var rounds = 0
+    while (changed != 0L && rounds != cap) {
+      val cand = edges.join(bc(frontier.select(col("id").as("__u"), col("m").as("__mu"))),
+          col("dst") === col("__u"))
+        .select(col("src").as("id"), (col("__mu") + col("w")).as("m"), none.as("__old"))
+      val relaxed = lab.select(col("id"), col("m"), col("m").as("__old"))
+        .unionAll(cand)
+        .groupBy("id").agg(min("m").as("m"), max("__old").as("__old"))
+      val (next, h) = pin((if (grow) relaxed else relaxed.filter(col("__old").isNotNull))
+        .select(col("id"), col("m"), (col("__old").isNull || col("m") < col("__old")).as("__c")))
+      changed = countTrue(next, "__c")
+      handle.foreach(_.unpersist(false))
+      handle = Some(h)
+      lab = next.select(col("id"), col("m"))
+      frontier = next.filter(col("__c")).select(col("id"), col("m"))
+      rounds += 1
+    }
+    (lab, rounds, changed == 0L)
+  }
+
+  /** Rows of `df` true in column `c`, in one job with no shuffle. */
+  private def countTrue(df: DataFrame, c: String): Long =
+    DfUtils.summarize(df.select(col(c)))(_.count(_.getBoolean(0)).toLong).sum
+
+  /** [[minRelax]] as a whole distributed arm, its labels renamed `out`:
+    * tuned for `rows`, a bound on the labels, its edges cached and its
+    * result [[detach]]ed. */
+  private[graft] def minRelaxed(spark: SparkSession, rows: Long, labels: DataFrame,
+      edges: DataFrame, out: String, cap: Int = -1): DataFrame = withIterTuning(spark, rows) {
+    val scope = new CheckpointScope(spark)
+    // partitioned on the join key once: a round shuffles only its frontier
+    val es = edges.repartition(col("dst"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try detach(scope, minRelax(labels, es, cap, grow = true, lineagePin(spark, scope),
+      df => if (rows < SmallGraphRows) broadcast(df) else df)._1
+      .select(col("id"), col("m").as(out)))
+    finally es.unpersist(false)
   }
 
   /** Upper bound on [[pageRankLocal]]'s edge passes for `n` vertices,
@@ -634,16 +686,16 @@ object GraphAlgos {
       math.min(1e15, math.max(0.0, math.ceil(r))).toLong + 2L
     }
 
-  /** Driver-local PageRank — exact replay of GraphX
-    * `PageRank.runUntilConvergence` over the closed vertex set `verts`
-    * (sorted, see [[closeVerts]]): vertex state (pr, delta) starts at
-    * the library's first vertex-program step, edge weight is
+  /** Driver-local PageRank with GraphX's `runUntilConvergence`
+    * semantics (which perfbench's oracle replays) over the closed vertex
+    * set `verts` (sorted, see [[closeVerts]]): state (pr, delta) starts
+    * at [[pageRankStart]], edge weight is
     * 1/outDegree over the raw directed list (multi-edges and self-loops
     * count), and each round only vertices that received a message in
     * the previous round send, and only while delta > tol. A recipient
     * adds (1 − resetProb) × its message sum. Ranks are finally rescaled
     * to sum to the vertex count (SPARK-18847). Message sums accumulate
-    * in edge order instead of GraphX's partition order, ~1e-15
+    * in edge order, [[pageRankDistributed]]'s in partition order, ~1e-15
     * relative. */
   private[graph] def pageRankLocal(verts: Array[Long], srcs: Array[Long],
       dsts: Array[Long], tol: Double, resetProb: Double): Array[(Long, Double)] = {
@@ -659,9 +711,7 @@ object GraphAlgos {
       i += 1
     }
     val w = Array.tabulate(n)(v => if (od(v) > 0) 1.0 / od(v) else 0.0)
-    // the library's initial message resetProb / (1 − resetProb) through
-    // its vertex program, from (0, 0)
-    val pr0 = 0.0 + (1.0 - resetProb) * (resetProb / (1.0 - resetProb))
+    val pr0 = pageRankStart(resetProb)
     val pr = Array.fill(n)(pr0)
     val delta = Array.fill(n)(pr0)
     var active = Array.fill(n)(true)
@@ -699,7 +749,7 @@ object GraphAlgos {
     * every edge endpoint, ranks summing to the vertex count. A
     * driver-sized graph runs the exact [[pageRankLocal]] replay, its
     * work bounded by rows × [[pageRankRoundBound]]; above the budgets
-    * (or with no round bound) GraphX's `pageRank` runs. */
+    * (or with no round bound) [[pageRankDistributed]] runs. */
   def pageRank(g: PropertyGraph, tol: Double = 0.0001,
       resetProb: Double = 0.15): DataFrame = run(pageRankArms(g, tol, resetProb))
 
@@ -717,15 +767,52 @@ object GraphAlgos {
       () => collected(g) match {
         case (vA, s, d) => pageRankLocal(closeVerts(vA, s, d), s, d, tol, resetProb)
       },
-      () => toGraphX(g).pageRank(tol, resetProb).vertices
-        .map { case (id, rank) => (id, rank) }.toDF("id", "rank"))
+      () => pageRankDistributed(g, tol, resetProb, rows))
   }
 
-  /** Driver-local union-find CC — exact replay of the GraphX result:
-    * component = min member id, edges undirected, and (like GraphX's
-    * `Graph(vs, es)`, which materializes edge endpoints absent from
-    * the vertex RDD with the default attribute) dangling endpoints
-    * become vertices too. `verts` must be sorted ascending with the
+  /** Both pagerank arms' first pr and delta: one vertex-program step from (0, 0). */
+  private def pageRankStart(resetProb: Double): Double =
+    (1.0 - resetProb) * (resetProb / (1.0 - resetProb))
+
+  /** [[pageRankLocal]]'s arithmetic as DataFrame rounds over
+    * [[closedVerts]]; `send` marks last round's recipients with delta >
+    * tol (every vertex before the first). Each round's pinned job
+    * counts the next round's senders; the loop stops when there are none. */
+  private def pageRankDistributed(g: PropertyGraph, tol: Double, resetProb: Double,
+      rows: Long): DataFrame = withIterTuning(g.spark, rows) {
+    val spark = g.spark
+    def bc(df: DataFrame): DataFrame = if (rows < SmallGraphRows) broadcast(df) else df
+    val scope = new CheckpointScope(spark)
+    val pin = lineagePin(spark, scope)
+    val raw = g.allEdges.select(col("start_id").as("src"), col("end_id").as("dst"))
+    val es = raw.join(raw.groupBy("src").agg((lit(1.0) / count(lit(1))).as("__w")), "src")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pr0 = pageRankStart(resetProb)
+    var st = closedVerts(g).select(col("id"), lit(pr0).as("pr"), lit(pr0).as("delta"),
+      lit(pr0 > tol).as("send"))
+    var handle = Option.empty[DataFrame]
+    var senders = -1L
+    while (senders != 0L) {
+      val msg = es.join(bc(st.filter(col("send"))
+          .select(col("id").as("src"), col("delta").as("__d"))), "src")
+        .groupBy(col("dst").as("id")).agg(sum(col("__d") * col("__w")).as("__m"))
+      val np = col("pr") + lit(1.0 - resetProb) * col("__m")
+      val (next, h) = pin(st.join(bc(msg), Seq("id"), "left").select(col("id"),
+        coalesce(np, col("pr")).as("pr"), coalesce(np - col("pr"), col("delta")).as("delta"),
+        (col("__m").isNotNull && np - col("pr") > tol).as("send")))
+      senders = countTrue(next, "send")
+      handle.foreach(_.unpersist(false))
+      handle = Some(h)
+      st = next
+    }
+    val scale = st.agg(coalesce(count(lit(1)) / sum("pr"), lit(0.0))).head().getDouble(0)
+    try detach(scope, st.select(col("id"), (col("pr") * lit(scale)).as("rank")))
+    finally es.unpersist(false)
+  }
+
+  /** Driver-local union-find CC: component = min member id, edges
+    * undirected, and dangling endpoints become vertices too (the
+    * [[closeVerts]] closure). `verts` must be sorted ascending with the
     * dangling endpoints already unioned in; union-by-smaller-index
     * keeps rep = min id because dense index order IS id order. */
   private[graft] def ccLocal(csr: LocalCsr): Array[(Long, Long)] = {
@@ -752,27 +839,25 @@ object GraphAlgos {
   }
 
   /** Connected components → (id, component) where component = min id.
-    * Union-find is near-linear integer work, and GraphX CC's
-    * multi-round Pregel is pure scheduling cost on a driver-sized
+    * Union-find is near-linear integer work, and the distributed arm's
+    * [[minRelax]] rounds are pure scheduling cost on a driver-sized
     * graph, so the endgame takes every graph that fits. */
   def connectedComponents(g: PropertyGraph): DataFrame = run(connectedComponentsArms(g))
 
   private[graft] def connectedComponentsArms(g: PropertyGraph): Endgame[(Long, Long)] = {
     val spark = g.spark
-    import spark.implicits._
     val (nV, nE) = graphSizes(g)
     val rows = nV + 2 * nE
     Endgame(spark, "connected_components", Seq("id", "component"), rows,
       () => 2L * rows, "",
       () => ccLocal(closedCsr(g)),
-      () => toGraphX(g).connectedComponents().vertices
-        .map { case (id, comp) => (id, comp) }.toDF("id", "component"))
+      () => minRelaxed(spark, rows, closedVerts(g).select(col("id"), col("id").as("m")),
+        edgesBothDirs(g).withColumn("w", lit(0L)), "component"))
   }
 
-  /** Driver-local per-vertex triangle count — exact replay of the
-    * GraphX result over the undirected SIMPLE view (GraphX's
-    * TriangleCount canonicalizes and drops self-edges — the same view
-    * [[LocalCsr]] builds). Each triangle u<v<w is found once via a
+  /** Driver-local per-vertex triangle count over the undirected SIMPLE
+    * view (canonicalized, self-edges dropped — the view [[LocalCsr]]
+    * builds). Each triangle u<v<w is found once via a
     * sorted-adjacency merge-intersection on its (u,v) edge, counting
     * only common neighbors w > v, and credited to all three corners. */
   private[graph] def trianglesLocal(csr: LocalCsr): Array[(Long, Long)] = {
@@ -815,7 +900,7 @@ object GraphAlgos {
     // = Σ_v deg(v)² steps (each vertex contributes deg(v) to each of
     // its deg(v) edges — NOT /2) at ~30-50M steps/s, a quarter of the
     // flat-array kernels' rate (measured: sf0.1 tpch just under 2e8
-    // steps ran 10.2 s local vs 8.5 s on GraphX), so it reports
+    // steps ran 10.2 s local vs 8.5 s distributed), so it reports
     // 4·Σ deg². The raw-edge degree census upper-bounds the simple
     // view's (dedup only removes edges) and is one job, run only after
     // the rows fit.
@@ -834,7 +919,7 @@ object GraphAlgos {
   }
 
   /** Distributed per-vertex triangle count: the degree-ordered
-    * wedge-close plan. GraphX's TriangleCount materializes a hash set
+    * wedge-close plan. A library TriangleCount materializes a hash set
     * of every vertex's full neighborhood inside each executor — on
     * dense hubs that is a memory bomb, measured: it OOM-kills the JVM
     * on the 10× sf0.1 tpch graph (1.86M vertices / 13.7M edges,
@@ -851,8 +936,8 @@ object GraphAlgos {
     *   4. close each wedge against the canonical edge set (equi-join
     *      on the (lo, hi) pair);
     *   5. credit all three corners, count per vertex, left-join onto
-    *      the vertex closure (dangling endpoints included, like
-    *      GraphX's Graph.apply) with 0 for triangle-free vertices. */
+    *      the vertex closure (dangling endpoints included) with 0 for
+    *      triangle-free vertices. */
   private[graph] def trianglesDistributed(g: PropertyGraph): DataFrame = {
     val (res, e1, o) = trianglesDistributedFrames(g)
     // eager localCheckpoint materializes the result ONCE (reading the
@@ -928,11 +1013,10 @@ object GraphAlgos {
     (res, e1, o)
   }
 
-  /** Driver-local hop distances to `landmark` — exact replay of GraphX
-    * `ShortestPaths` for one landmark: one BFS from the landmark over
-    * IN-edges (a vertex's distance is one more than its out-neighbor's)
-    * on the closed vertex set `verts`. Empty when the landmark is
-    * absent. */
+  /** Driver-local hop distances to `landmark`: one BFS from the
+    * landmark over IN-edges (a vertex's distance is one more than its
+    * out-neighbor's) on the closed vertex set `verts`. Empty when the
+    * landmark is absent. */
   private[graph] def ssspLocal(verts: Array[Long], srcs: Array[Long],
       dsts: Array[Long], landmark: Long): Array[(Long, Long)] = {
     val idx = new LongIndex(verts)
@@ -971,24 +1055,23 @@ object GraphAlgos {
   /** Single-source shortest-path hop distances along edge direction →
     * (id, dist) for every vertex that can reach `landmark` (the BFS the
     * reference runs per shortestpath activation, age_vle.c:2983). A
-    * driver-sized graph runs the one-BFS [[ssspLocal]] replay; above
-    * the collect budget GraphX `ShortestPaths` runs it as whole-graph
-    * Pregel — O(diameter) rounds, no driver loop. */
+    * driver-sized graph runs the one-BFS [[ssspLocal]]; above the
+    * collect budget [[minRelax]] runs it from the landmark, one round
+    * per hop. */
   def sssp(g: PropertyGraph, landmark: Long): DataFrame = run(ssspArms(g, landmark))
 
   private[graft] def ssspArms(g: PropertyGraph, landmark: Long): Endgame[(Long, Long)] = {
     val spark = g.spark
-    import spark.implicits._
     val (nV, nE) = graphSizes(g)
     val rows = nV + nE
     Endgame(spark, "sssp", Seq("id", "dist"), rows, () => 2L * rows, "",
       () => collected(g) match {
         case (vA, s, d) => ssspLocal(closeVerts(vA, s, d), s, d, landmark)
       },
-      () => org.apache.spark.graphx.lib.ShortestPaths.run(toGraphX(g), Seq(landmark))
-        .vertices
-        .flatMap { case (id, spMap) => spMap.get(landmark).map(d => (id, d.toLong)) }
-        .toDF("id", "dist"))
+      () => minRelaxed(spark, rows,
+        closedVerts(g).filter(col("id") === landmark).select(col("id"), lit(0L).as("m")),
+        g.allEdges.select(col("start_id").as("src"), col("end_id").as("dst"), lit(1L).as("w")),
+        "dist"))
   }
 
   /** Driver-local synchronous LPA — exact integer replay of
@@ -1040,7 +1123,7 @@ object GraphAlgos {
     * set), ties broken by the smallest community id; isolated vertices
     * keep their own id. The total tie-break makes results reproducible
     * across runs and partitionings — the property the oracle-graded
-    * query relies on, and the reason this (not GraphX's variant) backs
+    * query relies on, and the reason this (not a random tie-break) backs
     * `CALL label_propagation(...)`.
     *
     * Scale shape: the undirected edge set is built once and persisted;
@@ -1213,7 +1296,8 @@ object GraphAlgos {
     // peel depth is data-dependent up to maxIter = 1000 rounds — deep
     // degeneracy chains need the periodic lineage barrier (see
     // lineagePin; plain pinning overflowed scc at a few hundred rounds)
-    val pin = lineagePin(g.spark)
+    val scope = new CheckpointScope(spark)
+    val pin = lineagePin(spark, scope)
     // single-scan both-directions + one-shuffle dedup (the
     // labelPropagationDet idiom; formerly two scans + a distinct with
     // its own exchange): HashPartitioning(src) is a subset of the dedup
@@ -1243,8 +1327,8 @@ object GraphAlgos {
     // the last pinned frame stays cached behind the result (LRU-evicted
     // once consumers finish) — unpersisting first would force a full
     // lineage recompute through every dropped round
-    und.groupBy("src").agg(count(lit(1)).as("degree"))
-      .select(col("src").as("id"), col("degree"))
+    detach(scope, und.groupBy("src").agg(count(lit(1)).as("degree"))
+      .select(col("src").as("id"), col("degree")))
     } // withScaledWidth
   }
 
@@ -1288,13 +1372,13 @@ object GraphAlgos {
     * once `rounds` ≥ the hop length of the longest shortest path.
     * Deterministic: every candidate distance is one previous min plus
     * one weight (no accumulation-order ambiguity), so a fixed-round SQL
-    * replay is bit-equal — unlike GraphX's hop-based [[sssp]], this
-    * dials in arbitrary per-edge costs.
+    * replay is bit-equal — unlike the hop-based [[sssp]], this dials
+    * in arbitrary per-edge costs.
     *
-    * Scale shape: the weighted edge frame builds once and persists;
-    * each round joins the (sparse) frontier against it — shuffle keys
-    * are vertex ids, the min-combine is map-side, and rounds are pinned
-    * like [[labelPropagationDet]]. A driver-sized graph relaxes in
+    * Scale shape: [[minRelax]] over the reversed weighted edge frame,
+    * which builds once and persists; each round joins the reached
+    * labels against it — shuffle keys are vertex ids and the
+    * min-combine is map-side. A driver-sized graph relaxes in
     * [[wssspLocal]] instead. */
   def weightedSssp(g: PropertyGraph, landmark: Long, weightProp: String,
       rounds: Int = 10): DataFrame = run(weightedSsspArms(g, landmark, weightProp, rounds))
@@ -1302,6 +1386,7 @@ object GraphAlgos {
   private[graft] def weightedSsspArms(g: PropertyGraph, landmark: Long,
       weightProp: String, rounds: Int): Endgame[(Long, Double)] = {
     val spark = g.spark
+    import spark.implicits._
     val all = g.allEdges
     val enc = PropName.enc(weightProp)
     val wCol =
@@ -1320,32 +1405,10 @@ object GraphAlgos {
         wssspLocal(rows.map(_.getLong(0)), rows.map(_.getLong(1)),
           rows.map(_.getDouble(2)), landmark, rounds)
       },
-      () => weightedSsspDistributed(all, wCol, landmark, rounds))
-  }
-
-  private def weightedSsspDistributed(all: DataFrame, wCol: org.apache.spark.sql.Column,
-      landmark: Long, rounds: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = all.sparkSession
-    import spark.implicits._
-    val e = all.select(col("start_id").as("src"), col("end_id").as("dst"),
-        wCol.as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = Seq((landmark, 0.0)).toDF("id", "dist")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var distH = dist
-    for (_ <- 1 to math.max(0, rounds)) {
-      val relax = e.join(dist.select(col("id").as("__sid"), col("dist")),
-          col("src") === col("__sid"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      val next = dist.union(relax).groupBy("id").agg(min("dist").as("dist"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      next.count()
-      distH.unpersist(false)
-      dist = next; distH = next
-    }
-    e.unpersist(false)
-    dist
+      // edges reversed; a fixpoint before `rounds` yields the same rows
+      () => minRelaxed(spark, 2 * nE + 1, Seq((landmark, 0.0)).toDF("id", "m"),
+        all.select(col("end_id").as("src"), col("start_id").as("dst"), wCol.as("w")),
+        "dist", math.max(0, rounds)))
   }
 
   /** Driver-local HITS power iteration — replays [[hits]]'s fixed
@@ -1442,7 +1505,7 @@ object GraphAlgos {
     // measured-size storage level: the two edge-frame pins dominate the
     // pool — at 100× their deserialized blocks were evicted and lineage-
     // recomputed mid-run (§51's transient block misses)
-    val level = pinLevelFor(spark, (endNV + 2 * endNE).toDouble)
+    val level = pinLevelFor((endNV + 2 * endNE).toDouble)
     val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def pin(df: DataFrame): DataFrame = {
       val p = df.persist(level)
@@ -1806,7 +1869,7 @@ object GraphAlgos {
     // the trianglesDistributed leak class). Persist level follows the
     // measured wedge census: the deserialized wedge frame is what
     // saturated the 8 g storage pool at 100× (§51).
-    val level = pinLevelFor(spark, wedgeRows)
+    val level = pinLevelFor(wedgeRows)
     // width follows the measured wedge census (§41/§50 discipline): the
     // rank window, prefix self-join, and verify stream all exchange
     // wedge-bounded volume — 32-wide at 100× put ~3M-row sorts under
@@ -2000,7 +2063,7 @@ object GraphAlgos {
 
   /** Global clustering coefficient = 3·triangles / wedges over the
     * undirected simple graph — one row (n_triangles, n_wedges,
-    * coefficient). Triangles ride the GraphX canonical-edge counter
+    * coefficient). Triangles ride the canonical-edge [[triangleCount]]
     * (sum of per-vertex counts / 3); wedges are Σ C(d, 2) over
     * distinct-neighbor degrees — one map-side-combined degree count
     * off the same deduped edge frame. Deterministic closed-form
@@ -2622,48 +2685,22 @@ object GraphAlgos {
     withIterTuning(spark, nE) {
     // periodic lineage barrier: plain pinning overflowed task
     // (de)serialization after a few hundred propagation rounds
-    val pinner = lineagePin(spark)
-    def hardPin(df: DataFrame): DataFrame = pinner(df)._1
+    val scope = new CheckpointScope(spark)
+    val pinner = lineagePin(spark, scope)
     def pinN(df: DataFrame): (DataFrame, Long) = {
-      val p = hardPin(df)
+      val p = pinner(df)._1
       (p, p.count())
     }
-    def pin(df: DataFrame): DataFrame = pinN(df)._1
-    // persist + materialize + lineage-truncate in ONE action that also
-    // returns the fixpoint signature (the old shape ran a count job AND
-    // a sum job per round — at ~1400 total jobs, scheduling was the
-    // whole wall time on small graphs)
-    def pinSig(df: DataFrame): (DataFrame, BigDecimal) = {
-      val p = hardPin(df)
-      val c = p.agg(sum(col("m").cast("decimal(38,0)"))).collect()(0)
-        .getDecimal(0)
-      (p, if (c == null) BigDecimal(0) else BigDecimal(c))
-    }
-    // min-id propagation to fixpoint: labels flow AGAINST `edges`
-    // direction (l(v) ← min l(u) over v→u edges ≡ min id reachable
-    // forward); convergence checked by an exact decimal sum (monotone
-    // non-increasing; equal sums ⇒ fixpoint). Also reports whether the
-    // fixpoint was reached — refinement is sound only then.
+    // min-id propagation against `edges` (l(v) ← min l(u) over v→u ≡ min
+    // id reachable forward), reporting whether it reached the fixpoint:
+    // refinement is sound only then
     var statPropRounds = 0
     var statEndgame = false
     def propagate(vertsDf: DataFrame, edgesDf: DataFrame): (DataFrame, Boolean) = {
-      var (lab, curSig) = pinSig(vertsDf.select(col("id"), col("id").as("m")))
-      var sig = BigDecimal(-1)
-      var rounds = 0
-      while (curSig != sig && rounds < maxRounds) {
-        sig = curSig
-        val pulled = edgesDf.join(
-            bc(lab.select(col("id").as("__u"), col("m").as("__mu"))),
-            col("dst") === col("__u"))
-          .groupBy(col("src").as("id")).agg(min(col("__mu")).as("__pm"))
-        val (lab2, sig2) = pinSig(lab.join(bc(pulled), Seq("id"), "left")
-          .select(col("id"), least(col("m"), coalesce(col("__pm"), col("m"))).as("m")))
-        lab = lab2
-        curSig = sig2
-        rounds += 1
-      }
+      val (lab, rounds, fixed) = minRelax(vertsDf.select(col("id"), col("id").as("m")),
+        edgesDf.withColumn("w", lit(0L)), math.max(0, maxRounds), grow = false, pinner, bc)
       statPropRounds += rounds
-      (lab, curSig == sig)
+      (lab, fixed)
     }
     def localFinish(vs: DataFrame, es: DataFrame): DataFrame = {
       // primitive collects; the defensive endpoint closure (an edge
@@ -2738,9 +2775,9 @@ object GraphAlgos {
           val (fwd, fConv) = propagate(remV, remE)
           val (bwd, bConv) = propagate(remV,
             remE.select(col("dst").as("src"), col("src").as("dst")))
-          val labs = pin(fwd
+          val labs = pinN(fwd
             .join(bc(bwd.select(col("id"), col("m").as("__mb"))), Seq("id"))
-            .select(col("id"), col("m").as("__mf"), col("__mb")))
+            .select(col("id"), col("m").as("__mf"), col("__mb")))._1
           val certified = labs.filter(col("__mf") === col("__mb"))
             .select(col("id"), col("__mf").as("scc"))
           out :+= certified
@@ -2784,7 +2821,7 @@ object GraphAlgos {
     }
     lastSccStats = SccStats(pass, statPropRounds, statEndgame)
     if (out.isEmpty) Seq.empty[(Long, Long)].toDF("id", "scc")
-    else out.reduce(_ unionByName _)
+    else detach(scope, out.reduce(_ unionByName _))
     } // withIterTuning
   }
 

@@ -414,13 +414,13 @@ object Dedup {
     * Runs behind the endgame gate as `dup_clusters`: a pair frame within
     * the collect budget finishes in the union-find endgame shared with
     * `connected_components` ([[GraphAlgos.ccLocal]]); larger ones run
-    * GraphX connectedComponents (pointer-jumping, O(log n) rounds). Pairs
-    * already on the driver — a LocalRelation such as [[minhashLsh]]'s
-    * local result — are read straight from the plan: no job. Any other
-    * pair frame is persisted for the call, so one count() feeds the gate
-    * and the endgame's collect reads the cache. A distributed
-    * [[minhashLsh]] result's signature table is released on the way
-    * out. */
+    * min-label rounds ([[GraphAlgos.minRelaxed]]) over the pairs in both
+    * directions. Pairs already on the driver — a LocalRelation such as
+    * [[minhashLsh]]'s local result — are read straight from the plan:
+    * no job. Any other pair frame is persisted for the call, so one
+    * count() feeds the gate and the endgame's collect reads the cache. A
+    * distributed [[minhashLsh]] result's signature table is released on
+    * the way out. */
   def dupClusters(pairs: DataFrame): DataFrame = {
     val p = pairs.select(col("id_a"), col("id_b"))
     val pin = if (driverRows(p).isEmpty)
@@ -432,9 +432,7 @@ object Dedup {
   /** [[dupClusters]]' two arms; `rows` is the pair count — the length of
     * driver-resident pairs, else one count() job. */
   private[graft] def dupClustersArms(pairs: DataFrame): GraphAlgos.Endgame[(Long, Long)] = {
-    import org.apache.spark.graphx.{Edge, Graph => XGraph}
     val spark = pairs.sparkSession
-    import spark.implicits._
     val p = pairs.select(col("id_a").cast(LongType), col("id_b").cast(LongType))
     // a null id fails both arms' reads alike, so only null-free rows
     // skip the collect
@@ -453,9 +451,12 @@ object Dedup {
           new GraphAlgos.LocalCsr(GraphAlgos.closeVerts(Array.empty, a, b), a, b))
       },
       () => {
-        val es = p.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 0L))
-        XGraph.fromEdges(es, 0L).connectedComponents().vertices
-          .map { case (id, comp) => (id, comp) }.toDF("id", "rep")
+        // a null id fails here as it fails the local arm's read
+        def id(c: String) = coalesce(col(c), raise_error(lit(s"dup_clusters: null $c")))
+        val es = p.select(id("id_a").as("src"), id("id_b").as("dst"))
+          .unionAll(p.select(id("id_b").as("src"), id("id_a").as("dst")))
+        GraphAlgos.minRelaxed(spark, 2 * n, es.select(col("src").as("id")).distinct()
+          .select(col("id"), col("id").as("m")), es.withColumn("w", lit(0L)), "rep")
       })
   }
 

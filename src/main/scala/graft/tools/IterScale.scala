@@ -197,9 +197,9 @@ object IterScale {
       "triangles" -> (() =>
         GraphAlgos.triangleCountArms(TpchGraph(spark, sfDir)).distributed()),
       "triangles_auto" -> (() => GraphAlgos.triangleCount(TpchGraph(spark, sfDir))),
-      // GraphX at-scale paths (Pregel with combiners — message
-      // volume is degree-bounded, unlike TriangleCount's neighborhood
-      // sets): timed here so an OOM-class regression at 10× surfaces
+      // the min-relaxation and pagerank rounds (message volume is
+      // degree-bounded): timed here so an OOM-class regression at 10×
+      // surfaces
       "pagerank" -> (() =>
         GraphAlgos.pageRankArms(TpchGraph(spark, sfDir), 0.0001, 0.15).distributed()),
       "pagerank_auto" -> (() => GraphAlgos.pageRank(TpchGraph(spark, sfDir))),

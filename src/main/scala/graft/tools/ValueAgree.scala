@@ -27,7 +27,7 @@ import graft.pipeline.{Dedup, TextOps}
   *    cost (the full plan itself is the §41 output-volume wall).
   *  - curation: the end-to-end pipeline run twice with the duplicate
   *    clustering forced down each of its two independent
-  *    implementations (driver union-find vs GraphX pointer-jumping);
+  *    implementations (driver union-find vs distributed min-label rounds);
   *    kept-set aggregates AND the (id, rep) cluster sets must match.
   *
   * Emits one JSON object to <outPath>: name -> {pass, protocol,
@@ -197,7 +197,8 @@ object ValueAgree {
     if (only.isEmpty || only("curation")) timed("curation") {
       // p_curation with its near-duplicate detection and clustering
       // forced down each arm of minhashLsh and dupClusters (the driver
-      // LSH kernel + union-find vs the distributed LSH plan + GraphX);
+      // LSH kernel + union-find vs the distributed LSH plan + min-label
+      // rounds);
       // the kept-set aggregates and the (id, rep) assignments must both
       // match
       def run(forceLocal: Boolean): (Seq[(Long, Long)], (Long, Long)) = {
@@ -233,7 +234,7 @@ object ValueAgree {
       record("p_curation", clA == clB && aggA == aggB,
         "engine dual-path agreement: near-dup pairs and clusters via the " +
           "driver LSH kernel + union-find vs the distributed LSH plan + " +
-          "GraphX pointer-jumping, full pipeline re-run on each; cluster " +
+          "min-label rounds, full pipeline re-run on each; cluster " +
           "sets and kept-corpus aggregates compared",
         s"clusters=${clA.size}/${clB.size} aggA=$aggA aggB=$aggB")
     }

@@ -334,6 +334,22 @@ class MutationSpec extends SparkTestBase {
         "ORDER BY ny")) === Seq(Seq(10L, true), Seq(20L, false)))
   }
 
+  test("a computed property-map value matches a variant-typed property like its literal") {
+    val g = freshGraph()
+    // a double, a long and a string value make A.k variant-typed
+    Cypher.execute(spark, g, "CREATE (:A {k: 2.0, v: 1})")
+    Cypher.execute(spark, g, "CREATE (:A {k: 1, v: 2})")
+    Cypher.execute(spark, g, "CREATE (:A {k: 'x', v: 3})")
+    def matched(k: String) = rows(Cypher.execute(spark, g,
+      s"MATCH (n:A {k: $k}) RETURN n.v AS v ORDER BY v"))
+    assert(matched("2.0") === Seq(Seq(1L)))
+    assert(matched("1.0 + 1.0") === matched("2.0"))
+    assert(matched("0 + 1") === matched("1"))
+    Cypher.execute(spark, g, "MATCH (n:A {k: 1.0 + 1.0}) REMOVE n.v")
+    assert(rows(Cypher.execute(spark, g, "MATCH (n:A) RETURN n.v AS v ORDER BY v")) ===
+      Seq(Seq(2L), Seq(3L), Seq(null)))
+  }
+
   test("runtime-map key probe is cardinality-capped") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

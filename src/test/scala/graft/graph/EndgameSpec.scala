@@ -326,4 +326,49 @@ class EndgameSpec extends SparkTestBase {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     assert(longs(GraphAlgos.scc(g)) === longs(GraphAlgos.scc(g, localRowBudget = 0L)))
   }
+
+  /** A 40-vertex chain whose tail runs on through five dangling ids,
+    * closed into a triangle at its head: every min fixpoint on it takes
+    * more than 32 rounds, so a distributed arm crosses the lineage
+    * barrier (a reliable checkpoint every 16 pins) twice. */
+  private lazy val chain = graph("chain", (1L to 40L).map(v), 2,
+    (1L to 44L).map(i => (v(i), v(i + 1))) :+ ((v(3), v(1))), None)
+
+  test("distributed arms past the lineage barrier agree on a 40-vertex chain and " +
+      "leave no checkpoint files") {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("endgame-ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    def files = java.nio.file.Files.walk(dir).iterator().asScala.map(_.toString).toSet
+    val before = files
+    val pairs = chain.allEdges.select(col("start_id").as("id_a"), col("end_id").as("id_b"))
+    // kcore peels the chain's tail one vertex a round and keeps the head
+    val agreed = (for (e <- Seq[GraphAlgos.Endgame[_]](
+        GraphAlgos.connectedComponentsArms(chain), GraphAlgos.ssspArms(chain, v(45)),
+        GraphAlgos.weightedSsspArms(chain, v(1), "w", 40), Dedup.dupClustersArms(pairs),
+        GraphAlgos.kCoreArms(chain, 2, 1000)))
+      yield {
+        val out = e.distributed()
+        assert(files === before, e.op)
+        val rows = sorted(e.localFrame().collect())
+        assert(rows === sorted(out.collect()), e.op)
+        e.op -> rows
+      }).toMap
+    // the fixpoints are as deep as the chain
+    assert(agreed("connected_components").map(_(1)).toSet === Set(v(1)))
+    assert(agreed("dup_clusters").length === 45)
+    assert(agreed("sssp").map(_(1).asInstanceOf[Long]).max === 44L)
+    assert(agreed("wsssp").map(_(1).asInstanceOf[Double]).max === 40.0)
+    assert(agreed("kcore") === Seq(Seq(v(1), 2L), Seq(v(2), 2L), Seq(v(3), 2L)))
+  }
+
+  test("scc: distributed passes equal Tarjan on a 40-vertex ring") {
+    val ring = graph("ring", (1L to 40L).map(v), 2,
+      (1L to 40L).map(i => (v(i), v(i % 40 + 1))), None)
+    def longs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    val distributed = longs(GraphAlgos.scc(ring, localRowBudget = 0L))
+    assert(distributed.map(_._2).toSet === Set(v(1)))
+    assert(distributed === longs(GraphAlgos.scc(ring)))
+  }
 }

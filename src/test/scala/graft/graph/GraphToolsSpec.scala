@@ -76,7 +76,7 @@ class GraphToolsSpec extends SparkTestBase {
     assert(sub.allEdges.count() === 3)
   }
 
-  test("GraphX pagerank favors high in-degree vertices") {
+  test("pagerank favors high in-degree vertices") {
     // star: everyone points at vertex 1
     val gstore = new MutableGraph("star", spark)
     Cypher.execute(spark, gstore, "CREATE (:Hub {k: 0})")

@@ -67,9 +67,9 @@ class PipelineSpec extends SparkTestBase {
     assert(c2 === Map(10L -> 10L, 11L -> 10L, 12L -> 10L))
   }
 
-  test("dupClusters: the driver union-find equals the GraphX path") {
+  test("dupClusters: the driver union-find equals the distributed path") {
     // random pairs over 60 ids plus chains, duplicate pairs, reversed
-    // pairs and a self-pair; the distributed arm runs GraphX
+    // pairs and a self-pair; the distributed arm runs min-label rounds
     val rnd = new scala.util.Random(17)
     val random = Seq.fill(40)((rnd.nextInt(60).toLong + 100, rnd.nextInt(60).toLong + 100))
     val chains = (200L until 210L).map(i => (i, i + 1)) ++ Seq((305L, 304L), (304L, 303L))
@@ -83,7 +83,7 @@ class PipelineSpec extends SparkTestBase {
     assert(local.toMap.apply(400L) === 400L)
   }
 
-  test("dupClusters over driver-resident pairs runs no job and equals GraphX") {
+  test("dupClusters over driver-resident pairs runs no job and equals the distributed path") {
     val rnd = new scala.util.Random(23)
     val pairs = (Seq.fill(30)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)) ++
       Seq((50L, 51L), (51L, 50L), (52L, 52L))).toDF("id_a", "id_b")
@@ -97,6 +97,16 @@ class PipelineSpec extends SparkTestBase {
     // int ids too: the pair projection's cast folds into the local rows
     val ints = pairs.select($"id_a".cast("int").as("id_a"), $"id_b".cast("int").as("id_b"))
     assert(graft.SparkJobs.count(spark)(Dedup.dupClusters(ints).collect()) === 0)
+  }
+
+  test("dupClusters: a null id fails both arms") {
+    val pairs = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null), (3L, 4L))
+      .toDF("id_a", "id_b")
+    for (p <- Seq(pairs, pairs.repartition(2))) {
+      val arms = Dedup.dupClustersArms(p)
+      intercept[Exception](arms.local())
+      intercept[Exception](arms.distributed().collect())
+    }
   }
 
   test("minhashLsh then dupClusters on a small corpus runs 2 jobs") {
