@@ -83,7 +83,9 @@ class PipelineSpec extends SparkTestBase {
     assert(local.toMap.apply(400L) === 400L)
   }
 
-  test("dupClusters over driver-resident pairs runs no job and equals the distributed path") {
+  // "GraphX" names the distributed arm this compares against; that arm now
+  // runs DataFrame min-label rounds in GraphX's place
+  test("dupClusters over driver-resident pairs runs no job and equals GraphX") {
     val rnd = new scala.util.Random(23)
     val pairs = (Seq.fill(30)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)) ++
       Seq((50L, 51L), (51L, 50L), (52L, 52L))).toDF("id_a", "id_b")
