@@ -10,15 +10,12 @@ import graft.types.{AgFloat, AgInt, AgString, AgValue}
   * cypher_gram.y:436-514; transform cypher_clause.c:1268).
   * Each procedure returns a DataFrame whose columns are YIELD-able.
   *
-  * Session-sharing note: the iterative analytics procedures (scc,
-  * betweenness, wsssp, lpa, ppr, hits, kcore, walks) tune
-  * session-scoped runtime conf (AQE off, derived shuffle width) for
-  * the duration of a SMALL-graph run and restore it on exit.
-  * Concurrent graft algorithm calls on one session serialize safely
-  * (per-session monitor), but UNRELATED queries submitted on the same
-  * session from other threads during such a call plan under the tuned
-  * values — run foreign concurrent workloads on their own session
-  * (`spark.newSession()` shares the catalog, isolates runtime conf).
+  * Session-sharing note: the distributed arms of the analytics
+  * procedures run in a private clone of the caller's session, which
+  * carries their tuning (AQE off and a derived shuffle width on small
+  * graphs, a raised width on big ones). The caller's runtime conf is
+  * never written, so concurrent procedure calls and unrelated queries
+  * on the same session plan under the session's own settings.
   */
 object Procedures {
   type Proc = (SparkSession, PropertyGraph, Seq[AgValue]) => DataFrame

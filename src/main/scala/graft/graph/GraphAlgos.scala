@@ -1,10 +1,13 @@
 package graft.graph
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FrameBridge
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import scala.collection.immutable.ArraySeq
 import scala.reflect.runtime.universe.{TypeTag, typeOf}
@@ -24,7 +27,8 @@ object GraphAlgos {
   /** Rows below which an iterative algorithm's wall time is per-round
     * scheduling, not data: measured on the graded barbell betweenness,
     * AQE materializes every exchange of every round as its own job
-    * (362 jobs for a 110-vertex graph ≈ 54 s of pure orchestration). */
+    * (362 jobs for a 110-vertex graph ≈ 54 s of pure orchestration).
+    * [[isolated]] turns AQE off below it. */
   private val SmallGraphRows = 200000L
 
   /** [[betweenness]] auto mode: run EXACT (every vertex a source) only
@@ -35,127 +39,51 @@ object GraphAlgos {
   private[graph] val AutoExactSourceVerts = 1024L
   private[graph] val AutoSampleSources = 64
 
-  /** Run `body` with iterative-friendly settings when the working set
-    * is SMALL: AQE off (per-stage re-planning of lineage-pinned tiny
-    * frames costs far more than it saves) and exchange width derived
-    * once from the measured row count instead of per-stage-per-round.
-    * Above the threshold the session settings are untouched — at real
-    * scale AQE's skew/coalesce decisions inside each round are wanted.
-    * Settings are restored on exit; runtime conf is session-scoped, so
-    * FOREIGN queries running concurrently on the SAME session during an
-    * algorithm call would see the tuned values — the documented
-    * single-tenant constraint (the graded procedures are
-    * driver-sequential). Graft's OWN algorithm calls are safe to issue
-    * concurrently: a per-session monitor serializes the tuned scopes,
-    * so two overlapping calls can never interleave their save/restore
-    * pairs and clobber each other's baseline conf.
-    */
-  // Weak keys: lock entries must die with their session — a strong-keyed
-  // map would keep every stopped SparkSession reachable for the JVM
-  // lifetime in hosts that churn short-lived sessions. The synchronized
-  // wrapper makes computeIfAbsent atomic (Collections.SynchronizedMap
-  // overrides the Map default methods under its mutex).
-  private val iterTuneLocks: java.util.Map[SparkSession, Object] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, Object]())
-  private def withIterTuning[T](spark: SparkSession, rows: Long)(body: => T): T = {
-    if (rows >= SmallGraphRows) body
-    else iterTuneLocks.computeIfAbsent(spark, _ => new Object).synchronized {
-      val conf = spark.conf
-      val aqe0 = conf.get("spark.sql.adaptive.enabled", "true")
-      val sp0 = conf.get("spark.sql.shuffle.partitions", "200")
-      val parts = math.max(1L, rows / 25000L)
-      try {
-        conf.set("spark.sql.adaptive.enabled", "false")
-        conf.set("spark.sql.shuffle.partitions", parts.toString)
-        body
-      } finally {
-        conf.set("spark.sql.adaptive.enabled", aqe0)
-        conf.set("spark.sql.shuffle.partitions", sp0)
-      }
-    }
-  }
-
   /** Rows one shuffle partition should carry through the iterative
     * loops' sorts/aggregates — the same ~2M-row target the triangle
     * wedge plan derives its width from (§41). */
   private[graph] val ScaledWidthRowsPerPart = 2000000L
 
-  /** Exchange width for a measured row bound — the shared formula of
-    * [[withScaledWidth]] / [[withWidthControl]], exposed for operators
-    * that must width one exchange EXPLICITLY because their result is
-    * returned lazily (a conf-scoped width would be restored before the
-    * caller's action plans the exchange). Honors the same
-    * deployment-tuning knob. */
-  private[graph] def scaledWidthOf(spark: SparkSession, boundRows: Double): Long = {
-    val target = spark.conf.getOption("spark.graft.scaledWidth.rowsPerPart")
-      .map(_.toLong).getOrElse(ScaledWidthRowsPerPart)
-    math.min(2048L, (boundRows / target).toLong + 1L)
+  /** Exchange width for a measured row bound: ~[[ScaledWidthRowsPerPart]]
+    * rows per partition, cap 2048. §41's triangle lesson generalized: a
+    * loop whose dominant intermediate frame is super-linear in its input
+    * must derive its shuffle width from the MEASURED row bound instead of
+    * inheriting a bench-tuned session constant — at 100× a 32-wide
+    * exchange puts multi-GB partitions through every sort and OOMs the
+    * executor. `boundRows` is a Double so callers can pass nS·E-style
+    * products without Long overflow. */
+  private[graph] def scaledWidthOf(boundRows: Double): Long =
+    math.min(2048L, (boundRows / ScaledWidthRowsPerPart).toLong + 1L)
+
+  /** Runs a distributed arm in a clone of `spark` that carries the arm's
+    * tuning. Below [[SmallGraphRows]] `rows` AQE is off (per-stage
+    * re-planning of pinned tiny frames costs far more than it saves) and
+    * the exchange width is derived once from `rows`. Above it AQE stays
+    * as the session set it — at real scale its skew/coalesce decisions
+    * inside each round are wanted — and the width rises to
+    * [[scaledWidthOf]] `widthRows` where that exceeds the session's
+    * (never at bench scale). The caller's conf is never written, so
+    * foreign queries on its session and concurrent algorithm calls plan
+    * under their own settings, and no lock is needed. `arm`'s result
+    * comes back as a frame of `spark`; decision lines stay keyed on
+    * `spark` as long as arms record them there. */
+  private def isolated(spark: SparkSession, rows: Long, widthRows: Double = 0.0)(
+      arm: SparkSession => DataFrame): DataFrame = {
+    val s = FrameBridge.cloneSession(spark)
+    if (rows < SmallGraphRows) {
+      s.conf.set("spark.sql.adaptive.enabled", "false")
+      s.conf.set("spark.sql.shuffle.partitions", math.max(1L, rows / 25000L))
+    } else if (scaledWidthOf(widthRows) > s.sessionState.conf.numShufflePartitions)
+      s.conf.set("spark.sql.shuffle.partitions", scaledWidthOf(widthRows))
+    FrameBridge.rebind(spark, arm(s))
   }
 
-  /** Conf-scoped width RAISE for the big-graph regime — the dual of
-    * [[withIterTuning]]'s small-graph narrowing, and §41's triangle
-    * lesson generalized: a loop whose dominant intermediate frame is
-    * super-linear in its input must derive its initial shuffle width
-    * from the MEASURED row bound (~[[ScaledWidthRowsPerPart]] rows per
-    * partition, cap 2048) instead of inheriting a bench-tuned session
-    * constant — at 100× a 32-wide exchange puts multi-GB partitions
-    * through every sort and OOMs the executor. AQE is left exactly as
-    * the session set it, so rounds whose real volume is far below the
-    * bound coalesce back down and pay no scheduling tax. No-op when
-    * the derived width does not exceed the session width (every
-    * bench-scale run). Serialized under the same per-session monitor
-    * as withIterTuning, so nesting inside it is reentrant and
-    * concurrent algorithm calls can't interleave save/restore pairs.
-    * `boundRows` is a Double so callers can pass nS·E-style products
-    * without Long overflow. */
-  private[graph] def withScaledWidth[T](spark: SparkSession, boundRows: Double)(
-      body: => T): T = {
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val width = scaledWidthOf(spark, boundRows)
-    if (width <= parts) body
-    else iterTuneLocks.computeIfAbsent(spark, _ => new Object).synchronized {
-      val conf = spark.conf
-      val sp0 = conf.get("spark.sql.shuffle.partitions", "200")
-      try {
-        conf.set("spark.sql.shuffle.partitions", width.toString)
-        body
-      } finally conf.set("spark.sql.shuffle.partitions", sp0)
-    }
-  }
-
-  /** Per-round width control for level-synchronous loops whose frame
-    * sizes swing orders of magnitude between rounds (betweenness's
-    * frontier): locks the per-session monitor, saves the session
-    * width, and hands `body` a setter that derives the width for the
-    * NEXT round's exchanges from that round's measured input bound
-    * (~[[ScaledWidthRowsPerPart]] rows/partition, floor = session
-    * width, cap 2048). Each round's plan reads the conf at its own
-    * planning time, so the width tracks the measured frontier instead
-    * of either a bench constant (the §41 cliff) or a loop-global
-    * worst-case bound (pays thousands of needless tasks in the narrow
-    * rounds). Restores the session width on exit; reentrant under
-    * [[withIterTuning]]'s monitor. */
-  private def withWidthControl[T](spark: SparkSession,
-      rowsPerPart: Long = ScaledWidthRowsPerPart)(
-      body: (Double => Unit) => T): T =
-    iterTuneLocks.computeIfAbsent(spark, _ => new Object).synchronized {
-      val conf = spark.conf
-      val sp0 = conf.get("spark.sql.shuffle.partitions", "200")
-      val floor = spark.sessionState.conf.numShufflePartitions.toLong
-      // session override for scale probing / deployment tuning: the
-      // right target is execution-memory-per-concurrent-task over row
-      // width, which a probe can bisect without recompiling
-      val target = conf.getOption("spark.graft.scaledWidth.rowsPerPart")
-        .map(_.toLong).getOrElse(rowsPerPart)
-      def set(boundRows: Double): Unit = {
-        val w = math.min(2048L, math.max(floor,
-          (boundRows / target).toLong + 1))
-        conf.set("spark.sql.shuffle.partitions", w.toString)
-      }
-      try body(set)
-      finally conf.set("spark.sql.shuffle.partitions", sp0)
-    }
+  /** [[isolated]] for an arm over `g`, which it reads rebound to the clone. */
+  private def isolated(g: PropertyGraph, rows: Long, widthRows: Double)(
+      arm: PropertyGraph => DataFrame): DataFrame =
+    isolated(g.spark, rows, widthRows)(s => arm(new PropertyGraph(g.name,
+      g.vertexLabels.map(l => l.copy(df = FrameBridge.rebind(s, l.df))),
+      g.edgeLabels.map(l => l.copy(df = FrameBridge.rebind(s, l.df))))))
 
   /** Reliable checkpoints need storage EVERY executor can read back.
     * In local mode a driver temp dir (cleaned on JVM exit) is that; on
@@ -182,21 +110,6 @@ object GraphAlgos {
     }
   }
 
-  /** Reliable-checkpoint file of an (eagerly) checkpointed frame: the
-    * Dataset.checkpoint result's analyzed plan is a LogicalRDD wrapping
-    * the checkpointed internal RDD, whose checkpoint dir is the file
-    * set to delete when the frame is provably dead. Spark's own cleanup
-    * (spark.cleaner.referenceTracking.cleanCheckpoints) applies only
-    * lazily at RDD GC, defaults OFF, and must be set before context
-    * start — a long-lived session calling checkpoint-pinning algorithms
-    * repeatedly would accumulate every call's files (~10 GB per
-    * betweenness call at 100×/S=8) until shutdown (r11 ADVICE). */
-  private def checkpointFileOf(df: DataFrame): Option[String] =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getCheckpointFile
-      case _ => None
-    }
-
   private def deleteCheckpointFile(spark: SparkSession, path: String): Unit =
     try {
       val p = new org.apache.hadoop.fs.Path(path)
@@ -205,28 +118,79 @@ object GraphAlgos {
       // undeletable file degrades to the pre-cleanup behavior (session-
       // lifetime footprint), never to a wrong answer
 
-  /** Per-call ledger of live reliable-checkpoint files: algorithms pin
-    * through it, release frames the moment their last reader is done
-    * (betweenness's backward sweep reads each BFS level exactly once),
-    * and releaseAll() after the result is materialized — so a call's
-    * peak disk is its live working set, not its cumulative pin history,
-    * and the session never leaks checkpoint files across calls. */
-  private final class CheckpointScope(spark: SparkSession) {
-    private val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    def track(df: DataFrame): DataFrame = {
-      checkpointFileOf(df).foreach(live += _)
-      df
+  /** Rows of `rdd`, or with `flag` ≥ 0 its rows true in that boolean
+    * column, in one job with no shuffle. */
+  private def countRows(rdd: RDD[InternalRow], flag: Int): Long =
+    rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
+      var n = 0L
+      while (it.hasNext) { val r = it.next(); if (flag < 0 || r.getBoolean(flag)) n += 1 }
+      n
+    }).sum
+
+  /** Per-call ledger of a distributed arm's pins. [[pin]] computes a
+    * frame once into a persisted RDD behind a `LogicalRDD` leaf
+    * ([[FrameBridge.leaf]]) and counts it in the same job; [[release]]
+    * drops a pin the moment its last reader is done (betweenness's
+    * backward sweep reads each BFS level exactly once); [[finish]]
+    * materializes the arm's result, then drops every pin left. So a
+    * call's peak footprint is its live working set, and nothing but the
+    * result outlives the call: no cached block, no CacheManager entry,
+    * no checkpoint file.
+    *
+    * The leaf keeps the LOGICAL plan O(1) per round, but the RDD lineage
+    * still nests one level per pin, and a few hundred levels overflowed
+    * task (de)serialization; so every 16th pin also writes a
+    * reliable checkpoint — the standard periodic barrier of iterative
+    * Spark algorithms, and their fault-recovery point — from the cached
+    * blocks, without recomputing the lineage. Reliable-checkpoint files
+    * are deleted with their pin: Spark's own cleanup
+    * (spark.cleaner.referenceTracking.cleanCheckpoints) applies only at
+    * RDD GC, defaults OFF, and must be set before context start — a
+    * long-lived session would accumulate every call's files (~10 GB per
+    * betweenness call at 100×/S=8) until shutdown (r11 ADVICE). */
+  private final class Pins(spark: SparkSession) {
+    private val live = scala.collection.mutable.LinkedHashSet.empty[RDD[InternalRow]]
+    private var n = 0
+
+    /** `df` pinned, and its rows — or its rows true in the boolean column
+      * `flag` — counted in the pin's own job. `partitioned` marks a frame
+      * hash-partitioned on purpose ([[FrameBridge.leaf]]); `filesOnly`
+      * pins write a reliable checkpoint and drop their blocks once it is
+      * written. */
+    def pin(df: DataFrame, flag: String = "",
+        level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
+        partitioned: Boolean = false, filesOnly: Boolean = false): (DataFrame, Long) = {
+      n += 1
+      val rdd = df.queryExecution.toRdd.map(_.copy()).persist(level)
+      if (filesOnly || n % 16 == 0) { ensureCheckpointDir(spark); rdd.checkpoint() }
+      live += rdd
+      val rows = countRows(rdd, if (flag.isEmpty) -1 else df.schema.fieldIndex(flag))
+      if (filesOnly) rdd.unpersist(false)
+      (FrameBridge.leaf(df, rdd, partitioned), rows)
     }
-    def release(df: DataFrame): Unit =
-      checkpointFileOf(df).foreach { f =>
-        if (live.remove(f)) deleteCheckpointFile(spark, f)
-      }
-    def releaseAll(): Unit = {
-      live.foreach(deleteCheckpointFile(spark, _))
-      live.clear()
+
+    /** Drops the pin behind `leaf`, a frame [[pin]] returned. */
+    def release(leaf: DataFrame): Unit = leaf.queryExecution.analyzed match {
+      case r: LogicalRDD if live.remove(r.rdd) => drop(r.rdd)
+      case _ => ()
     }
-    /** Files currently tracked as live. */
-    private[graph] def liveFiles: Seq[String] = live.toSeq
+
+    /** Drops every pin. */
+    def releaseAll(): Unit = { live.foreach(drop); live.clear() }
+
+    /** `result` computed once into a locally checkpointed leaf, which
+      * reads no pin, and then every pin dropped. */
+    def finish(result: DataFrame): DataFrame = {
+      val rdd = result.queryExecution.toRdd.map(_.copy()).localCheckpoint()
+      countRows(rdd, -1)
+      releaseAll()
+      FrameBridge.leaf(result, rdd)
+    }
+
+    private def drop(rdd: RDD[InternalRow]): Unit = {
+      rdd.unpersist(false)
+      rdd.getCheckpointFile.foreach(deleteCheckpointFile(spark, _))
+    }
   }
 
   /** Storage level for scale-pressured pins, derived from the frame's
@@ -239,9 +203,7 @@ object GraphAlgos {
     * of packed long/double rows are ~3-5× smaller, trading
     * deserialization CPU that is noise against those runs' shuffle
     * work. */
-  private[graph] def pinLevelFor(rows: Double,
-      bytesPerRow: Long = 40L): org.apache.spark.storage.StorageLevel = {
-    import org.apache.spark.storage.StorageLevel
+  private[graph] def pinLevelFor(rows: Double, bytesPerRow: Long = 40L): StorageLevel = {
     if (rows < 50000000L) StorageLevel.MEMORY_AND_DISK
     else {
       // serialized blocks still COMPETE with execution memory in the
@@ -256,37 +218,6 @@ object GraphAlgos {
       else StorageLevel.MEMORY_AND_DISK_SER
     }
   }
-
-  /** Stateful pin factory for long driver-round loops: persist +
-    * RDD-leaf swap keeps the LOGICAL plan O(1) per round, but the
-    * physical RDD lineage still nests one level per pin and task
-    * (de)serialization overflows the stack after a few hundred rounds.
-    * Every `every`-th call therefore hard-truncates through a reliable
-    * checkpoint — the standard periodic barrier of iterative Spark
-    * algorithms — whose files `scope` tracks for [[detach]]. Returns
-    * (leaf, unpersist-handle); checkpointed rounds hand back the
-    * checkpointed frame for both. */
-  private def lineagePin(spark: SparkSession, scope: CheckpointScope, every: Int = 16)
-      : DataFrame => (DataFrame, DataFrame) = {
-    var n = 0
-    df => {
-      n += 1
-      if (n % every == 0) {
-        ensureCheckpointDir(spark)
-        val c = scope.track(df.checkpoint())
-        (c, c)
-      } else {
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (spark.createDataFrame(p.rdd, p.schema), p)
-      }
-    }
-  }
-
-  /** `result` freed of `scope`'s checkpoint files, if any: an eager
-    * localCheckpoint materializes it, then the files are deleted. */
-  private def detach(scope: CheckpointScope, result: DataFrame): DataFrame =
-    if (scope.liveFiles.isEmpty) result
-    else { val out = result.localCheckpoint(true); scope.releaseAll(); out }
 
   /** Driver-CPU budget of [[run]]'s gate: the local arm runs only while
     * its kernel's step bound stays under this many elementary steps
@@ -619,16 +550,15 @@ object GraphAlgos {
     * m(dst) + w), a src with no label gaining one only when `grow`. It
     * joins just the labels the last round changed (an unchanged m(dst)
     * + w reached src before), `bc` hinting that side, and takes one min
-    * over labels ∪ candidates. Its pinned job counts the changed labels:
+    * over labels ∪ candidates. Its pin's job counts the changed labels:
     * the loop stops at an exact fixpoint (doubles too) or after `cap`
     * rounds (negative: none). Returns the labels, the rounds run, and
     * whether the last round changed nothing. */
   private def minRelax(labels: DataFrame, edges: DataFrame, cap: Int, grow: Boolean,
-      pin: DataFrame => (DataFrame, DataFrame),
-      bc: DataFrame => DataFrame): (DataFrame, Int, Boolean) = {
+      pins: Pins, bc: DataFrame => DataFrame): (DataFrame, Int, Boolean) = {
     val none = lit(null).cast(labels.schema("m").dataType)
     var (lab, frontier) = (labels, labels)
-    var handle = Option.empty[DataFrame]
+    var last = Option.empty[DataFrame]
     var changed = -1L
     var rounds = 0
     while (changed != 0L && rounds != cap) {
@@ -638,11 +568,12 @@ object GraphAlgos {
       val relaxed = lab.select(col("id"), col("m"), col("m").as("__old"))
         .unionAll(cand)
         .groupBy("id").agg(min("m").as("m"), max("__old").as("__old"))
-      val (next, h) = pin((if (grow) relaxed else relaxed.filter(col("__old").isNotNull))
-        .select(col("id"), col("m"), (col("__old").isNull || col("m") < col("__old")).as("__c")))
-      changed = countTrue(next, "__c")
-      handle.foreach(_.unpersist(false))
-      handle = Some(h)
+      val (next, c) = pins.pin((if (grow) relaxed else relaxed.filter(col("__old").isNotNull))
+        .select(col("id"), col("m"), (col("__old").isNull || col("m") < col("__old")).as("__c")),
+        "__c")
+      changed = c
+      last.foreach(pins.release)
+      last = Some(next)
       lab = next.select(col("id"), col("m"))
       frontier = next.filter(col("__c")).select(col("id"), col("m"))
       rounds += 1
@@ -650,23 +581,19 @@ object GraphAlgos {
     (lab, rounds, changed == 0L)
   }
 
-  /** Rows of `df` true in column `c`, in one job with no shuffle. */
-  private def countTrue(df: DataFrame, c: String): Long =
-    DfUtils.summarize(df.select(col(c)))(_.count(_.getBoolean(0)).toLong).sum
-
-  /** [[minRelax]] as a whole distributed arm, its labels renamed `out`:
-    * tuned for `rows`, a bound on the labels, its edges cached and its
-    * result [[detach]]ed. */
+  /** [[minRelax]] as a whole distributed arm, its labels renamed `out`,
+    * [[isolated]] for `rows`, a bound on the labels. The edges are
+    * partitioned on the join key once, so a round shuffles only its
+    * frontier, and the seed labels are pinned once, not computed again
+    * for each of the first round's two readers. */
   private[graft] def minRelaxed(spark: SparkSession, rows: Long, labels: DataFrame,
-      edges: DataFrame, out: String, cap: Int = -1): DataFrame = withIterTuning(spark, rows) {
-    val scope = new CheckpointScope(spark)
-    // partitioned on the join key once: a round shuffles only its frontier
-    val es = edges.repartition(col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try detach(scope, minRelax(labels, es, cap, grow = true, lineagePin(spark, scope),
+      edges: DataFrame, out: String, cap: Int = -1): DataFrame = isolated(spark, rows) { s =>
+    val pins = new Pins(s)
+    val es = pins.pin(FrameBridge.rebind(s, edges)
+      .repartition(s.sessionState.conf.numShufflePartitions, col("dst")), partitioned = true)._1
+    pins.finish(minRelax(pins.pin(FrameBridge.rebind(s, labels))._1, es, cap, grow = true, pins,
       df => if (rows < SmallGraphRows) broadcast(df) else df)._1
       .select(col("id"), col("m").as(out)))
-    finally es.unpersist(false)
   }
 
   /** Upper bound on [[pageRankLocal]]'s edge passes for `n` vertices,
@@ -776,38 +703,33 @@ object GraphAlgos {
 
   /** [[pageRankLocal]]'s arithmetic as DataFrame rounds over
     * [[closedVerts]]; `send` marks last round's recipients with delta >
-    * tol (every vertex before the first). Each round's pinned job
-    * counts the next round's senders; the loop stops when there are none. */
-  private def pageRankDistributed(g: PropertyGraph, tol: Double, resetProb: Double,
-      rows: Long): DataFrame = withIterTuning(g.spark, rows) {
-    val spark = g.spark
+    * tol (every vertex before the first). Each round's pin counts the
+    * next round's senders; the loop stops when there are none. */
+  private def pageRankDistributed(g0: PropertyGraph, tol: Double, resetProb: Double,
+      rows: Long): DataFrame = isolated(g0, rows, 0.0) { g =>
     def bc(df: DataFrame): DataFrame = if (rows < SmallGraphRows) broadcast(df) else df
-    val scope = new CheckpointScope(spark)
-    val pin = lineagePin(spark, scope)
+    val pins = new Pins(g.spark)
     val raw = g.allEdges.select(col("start_id").as("src"), col("end_id").as("dst"))
-    val es = raw.join(raw.groupBy("src").agg((lit(1.0) / count(lit(1))).as("__w")), "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val es = pins.pin(raw.join(raw.groupBy("src").agg((lit(1.0) / count(lit(1))).as("__w")),
+      "src"))._1
     val pr0 = pageRankStart(resetProb)
-    var st = closedVerts(g).select(col("id"), lit(pr0).as("pr"), lit(pr0).as("delta"),
-      lit(pr0 > tol).as("send"))
-    var handle = Option.empty[DataFrame]
+    var st = pins.pin(closedVerts(g).select(col("id"), lit(pr0).as("pr"), lit(pr0).as("delta"),
+      lit(pr0 > tol).as("send")))._1
     var senders = -1L
     while (senders != 0L) {
       val msg = es.join(bc(st.filter(col("send"))
           .select(col("id").as("src"), col("delta").as("__d"))), "src")
         .groupBy(col("dst").as("id")).agg(sum(col("__d") * col("__w")).as("__m"))
       val np = col("pr") + lit(1.0 - resetProb) * col("__m")
-      val (next, h) = pin(st.join(bc(msg), Seq("id"), "left").select(col("id"),
+      val (next, n) = pins.pin(st.join(bc(msg), Seq("id"), "left").select(col("id"),
         coalesce(np, col("pr")).as("pr"), coalesce(np - col("pr"), col("delta")).as("delta"),
-        (col("__m").isNotNull && np - col("pr") > tol).as("send")))
-      senders = countTrue(next, "send")
-      handle.foreach(_.unpersist(false))
-      handle = Some(h)
+        (col("__m").isNotNull && np - col("pr") > tol).as("send")), "send")
+      senders = n
+      pins.release(st)
       st = next
     }
     val scale = st.agg(coalesce(count(lit(1)) / sum("pr"), lit(0.0))).head().getDouble(0)
-    try detach(scope, st.select(col("id"), (col("pr") * lit(scale)).as("rank")))
-    finally es.unpersist(false)
+    pins.finish(st.select(col("id"), (col("pr") * lit(scale)).as("rank")))
   }
 
   /** Driver-local union-find CC: component = min member id, edges
@@ -1126,14 +1048,13 @@ object GraphAlgos {
     * query relies on, and the reason this (not a random tie-break) backs
     * `CALL label_propagation(...)`.
     *
-    * Scale shape: the undirected edge set is built once and persisted;
+    * Scale shape: the undirected edge set is built and pinned once;
     * each round is ONE shuffle keyed on the neighbor id with map-side-
     * combined (vertex, community) counts, and the argmax is a plain
     * aggregate over a (count, -community) struct — no window, no sort.
-    * Per-round frames are pinned (persist + RDD-leaf swap) so the plan
-    * stays O(1) in rounds instead of nesting the whole lineage — same
-    * idiom as traversal/Bfs. A driver-sized graph votes in [[lpaLocal]]
-    * instead. */
+    * Per-round frames are pinned ([[Pins]]) so the plan stays O(1) in
+    * rounds instead of nesting the whole lineage. A driver-sized graph
+    * votes in [[lpaLocal]] instead. */
   def labelPropagationDet(g: PropertyGraph, steps: Int = 5): DataFrame =
     run(labelPropagationArms(g, steps))
 
@@ -1145,21 +1066,20 @@ object GraphAlgos {
     Endgame(spark, "lpa", Seq("id", "community"), rows,
       () => boundedProduct(math.max(1L, steps.toLong), rows), "",
       () => collected(g) match { case (vA, s, d) => lpaLocal(new LocalCsr(vA, s, d), steps) },
-      () => lpaDistributed(g, steps, nE))
+      () => lpaDistributed(g, steps, rows, nE))
   }
 
-  private def lpaDistributed(g: PropertyGraph, steps: Int, nE: Long): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = g.spark
-    // every round's vote join streams 2|E| rows through one exchange —
-    // derive the loop's width from that measured bound instead of the
-    // bench-tuned session constant (no-op at bench scale; at 100× the
-    // 32-wide rounds put multi-GB partitions through each sort and pay
-    // disk every round — the §51 lpa/kcore spill attribution)
-    withScaledWidth(spark, 2.0 * nE) {
-    val parts = spark.sessionState.conf.numShufflePartitions
+  // every round's vote join streams 2|E| rows through one exchange —
+  // derive the loop's width from that measured bound instead of the
+  // bench-tuned session constant (no-op at bench scale; at 100× the
+  // 32-wide rounds put multi-GB partitions through each sort and pay
+  // disk every round — the §51 lpa/kcore spill attribution)
+  private def lpaDistributed(g0: PropertyGraph, steps: Int, rows: Long, nE: Long): DataFrame =
+      isolated(g0, rows, 2.0 * nE) { g =>
+    val parts = g.spark.sessionState.conf.numShufflePartitions
+    val pins = new Pins(g.spark)
     // the edge frame is the BIG side: hash-partition it by the probe key
-    // ONCE and persist — InMemoryRelation keeps the partitioning, so the
+    // ONCE and pin it — the leaf keeps the partitioning, so the
     // per-round neighbor join is co-partitioned (labels leave each round
     // partitioned by id from their own join) and the 2|E| rows never
     // re-shuffle. The per-round exchanges carry only map-side-combined
@@ -1168,43 +1088,25 @@ object GraphAlgos {
     // every duplicate of a (src, dst) pair is partition-local, and
     // HashPartitioning(dst) is a subset of the dedup keys, so the
     // dropDuplicates aggregate runs in place without its own exchange
-    val und = edgesBothDirs(g)
+    val und = pins.pin(edgesBothDirs(g)
       .filter(col("src") =!= col("dst")) // simple-graph view: no self-votes
       .repartition(parts, col("dst"))
-      .dropDuplicates("src", "dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = g.allVertices.select(col("id"), col("id").as("community"))
-      .repartition(parts, col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labelsH = labels
-    var round = 0
+      .dropDuplicates("src", "dst"), partitioned = true)._1
+    var labels = pins.pin(g.allVertices.select(col("id"), col("id").as("community"))
+      .repartition(parts, col("id")))._1
     for (_ <- 1 to math.max(0, steps)) {
-      round += 1
       val neigh = labels.select(col("id").as("__nid"), col("community").as("__nc"))
       val best = und.join(neigh, col("dst") === col("__nid"))
         .groupBy(col("src"), col("__nc")).agg(count(lit(1)).as("__c"))
         .groupBy(col("src"))
         .agg(max(struct(col("__c"), (-col("__nc")).as("__neg"))).as("__m"))
         .select(col("src"), (-col("__m.__neg")).as("__newc"))
-      val next0 = labels.join(best, labels("id") === best("src"), "left")
-        .select(labels("id"),
-          coalesce(col("__newc"), col("community")).as("community"))
-      // persist keeps lineage (and with it the id-partitioning Catalyst
-      // needs to skip the next round's label-side exchange); plan size
-      // grows linearly in rounds, so long runs pin to an RDD leaf every
-      // 8th round — the Bfs idiom — trading one extra exchange for a
-      // bounded plan string
-      val nextH = next0.persist(StorageLevel.MEMORY_AND_DISK)
-      val next =
-        if (round % 8 == 0) spark.createDataFrame(nextH.rdd, nextH.schema)
-        else nextH
-      next.count() // materialize before dropping the previous round
-      labelsH.unpersist(false)
-      labels = next; labelsH = nextH
+      val next = pins.pin(labels.join(best, labels("id") === best("src"), "left")
+        .select(labels("id"), coalesce(col("__newc"), col("community")).as("community")))._1
+      pins.release(labels)
+      labels = next
     }
-    und.unpersist(false)
-    labels
-    } // withScaledWidth
+    pins.finish(labels)
   }
 
   /** Driver-local synchronous peel — exact replay of [[kCore]]'s
@@ -1262,9 +1164,8 @@ object GraphAlgos {
     *
     * Scale shape: each round is one map-side-combined degree count and
     * two id-keyed semi-joins over the shrinking edge frame; rounds are
-    * pinned (persist + RDD-leaf swap) so plan size stays O(1) in
-    * rounds, and the edge-count convergence check reads the frame just
-    * persisted. Peel rounds are data-dependent but bounded by the
+    * pinned ([[Pins]]) so plan size stays O(1) in rounds, and each pin's
+    * job also counts the residual edges for the convergence check. Peel rounds are data-dependent but bounded by the
     * longest degeneracy chain (maxIter caps pathological graphs).
     * A driver-sized graph peels in [[kcoreLocal]] instead. */
   def kCore(g: PropertyGraph, k: Int, maxIter: Int = 1000): DataFrame =
@@ -1284,52 +1185,41 @@ object GraphAlgos {
       () => kCoreDistributed(g, k, maxIter, rows))
   }
 
-  private def kCoreDistributed(g: PropertyGraph, k: Int, maxIter: Int,
-      endRows: Long): DataFrame = {
-    val spark = g.spark
-    // each peel round streams the (shrinking, ≤ 2|E|-row) residual edge
-    // frame through a degree count and two semi-joins — width follows
-    // the measured initial bound (no-op at bench; the §51 kcore spill
-    // attribution at 100×). AQE coalesces late rounds back down as the
-    // residual shrinks.
-    withScaledWidth(spark, endRows.toDouble) {
-    // peel depth is data-dependent up to maxIter = 1000 rounds — deep
-    // degeneracy chains need the periodic lineage barrier (see
-    // lineagePin; plain pinning overflowed scc at a few hundred rounds)
-    val scope = new CheckpointScope(spark)
-    val pin = lineagePin(spark, scope)
+  // each peel round streams the (shrinking, ≤ 2|E|-row) residual edge
+  // frame through a degree count and two semi-joins — width follows the
+  // measured initial bound (no-op at bench; the §51 kcore spill
+  // attribution at 100×). AQE coalesces late rounds back down as the
+  // residual shrinks. Peel depth is data-dependent up to maxIter = 1000
+  // rounds, so deep degeneracy chains cross the pins' periodic lineage
+  // barrier.
+  private def kCoreDistributed(g0: PropertyGraph, k: Int, maxIter: Int,
+      endRows: Long): DataFrame = isolated(g0, endRows, endRows.toDouble) { g =>
+    val pins = new Pins(g.spark)
     // single-scan both-directions + one-shuffle dedup (the
-    // labelPropagationDet idiom; formerly two scans + a distinct with
-    // its own exchange): HashPartitioning(src) is a subset of the dedup
-    // keys, and the per-round degree counts below group on src off this
-    // pinned partitioning
-    var (und, undH) = pin(edgesBothDirs(g)
+    // labelPropagationDet idiom): HashPartitioning(src) is a subset of
+    // the dedup keys, and the per-round degree counts below group on src
+    // off this pinned partitioning
+    var (und, edgeCount) = pins.pin(edgesBothDirs(g)
       .filter(col("src") =!= col("dst"))
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("src"))
+      .repartition(g.spark.sessionState.conf.numShufflePartitions, col("src"))
       .dropDuplicates("src", "dst"))
-    var edgeCount = und.count()
     var it = 0
     var converged = edgeCount == 0L
     while (!converged && it < maxIter) {
       val keep = und.groupBy("src").agg(count(lit(1)).as("degree"))
         .filter(col("degree") >= k).select(col("src"))
-      val (next, nextH) = pin(und
+      val (next, nextCount) = pins.pin(und
         .join(keep, Seq("src"), "left_semi")
         .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst")))
-      val nextCount = next.count()
-      undH.unpersist(false)
-      und = next; undH = nextH
+      pins.release(und)
+      und = next
       converged = nextCount == edgeCount || nextCount == 0L
       edgeCount = nextCount
       it += 1
     }
-    // the last pinned frame stays cached behind the result (LRU-evicted
-    // once consumers finish) — unpersisting first would force a full
-    // lineage recompute through every dropped round
-    detach(scope, und.groupBy("src").agg(count(lit(1)).as("degree"))
+    pins.finish(und.groupBy("src").agg(count(lit(1)).as("degree"))
       .select(col("src").as("id"), col("degree")))
-    } // withScaledWidth
   }
 
   /** Driver-local synchronous Bellman-Ford — exact replay of
@@ -1376,7 +1266,7 @@ object GraphAlgos {
     * in arbitrary per-edge costs.
     *
     * Scale shape: [[minRelax]] over the reversed weighted edge frame,
-    * which builds once and persists; each round joins the reached
+    * which is built and pinned once; each round joins the reached
     * labels against it — shuffle keys are vertex ids and the
     * min-combine is map-side. A driver-sized graph relaxes in
     * [[wssspLocal]] instead. */
@@ -1472,8 +1362,8 @@ object GraphAlgos {
     * persists; each half-step is ONE map-side-combined sum keyed on a
     * vertex id, a 1-row total (broadcast scalar — never a driver
     * collect), and a left join back to the vertex frame; rounds are
-    * pinned (persist + count + unpersist-previous) like
-    * [[labelPropagationDet]], so plan depth stays O(1) per round. A
+    * pinned ([[Pins]]) like [[labelPropagationDet]], so plan depth
+    * stays O(1) per round. A
     * driver-sized graph iterates in [[hitsLocal]] instead. */
   def hits(g: PropertyGraph, rounds: Int = 4): DataFrame = run(hitsArms(g, rounds))
 
@@ -1487,51 +1377,36 @@ object GraphAlgos {
       () => hitsDistributed(g, rounds, nV, nE))
   }
 
-  private def hitsDistributed(g: PropertyGraph, rounds: Int, endNV: Long,
-      endNE: Long): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = g.spark
-    val parts = spark.sessionState.conf.numShufflePartitions
-    // pin = persist + RDD-leaf swap (the betweenness/scc idiom), here
-    // for TWO reasons: (a) each half-step's plan references the previous
-    // score frame TWICE (join + normalizer total), so without a hard
-    // leaf the logical plan — and analyzer memory — grows ~4^rounds;
-    // (b) the base frames over a store-backed graph carry bucketed-scan
-    // partitioning claims that, cached and re-joined under AQE, can pair
-    // a (label-count × bucket)-partition cached RDD against a
-    // shuffle-partition side without an exchange ("Can't zip RDDs with
-    // unequal numbers of partitions") — an RDD leaf reports
-    // UnknownPartitioning, so every join plans its own exchange
+  private def hitsDistributed(g0: PropertyGraph, rounds: Int, endNV: Long,
+      endNE: Long): DataFrame = isolated(g0, endNV + endNE, 0.0) { g =>
+    val parts = g.spark.sessionState.conf.numShufflePartitions
+    // each half-step's plan references the previous score frame TWICE
+    // (join + normalizer total), so without a pinned leaf the logical
+    // plan — and analyzer memory — would grow ~4^rounds.
     // measured-size storage level: the two edge-frame pins dominate the
     // pool — at 100× their deserialized blocks were evicted and lineage-
     // recomputed mid-run (§51's transient block misses)
     val level = pinLevelFor((endNV + 2 * endNE).toDouble)
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      val p = df.persist(level)
-      p.count()
-      pinned += p
-      spark.createDataFrame(p.rdd, p.schema)
-    }
-    // the frames are cached ONCE per probe direction; per-round
+    val pins = new Pins(g.spark)
+    def pin(df: DataFrame, partitioned: Boolean = false): DataFrame =
+      pins.pin(df, level = level, partitioned = partitioned)._1
+    // the frames are pinned ONCE per probe direction; per-round
     // exchanges then carry only map-side-combined (vertex, sum) pairs
-    // plus a cache-local re-shuffle of the edge frame
-    val verts = pin(g.allVertices.select(col("id"))
-      .repartition(parts, col("id")))
+    val verts = pin(g.allVertices.select(col("id")).repartition(parts, col("id")), true)
     val e0 = g.allEdges.select(col("start_id").as("src"), col("end_id").as("dst"))
-    val eBySrc = pin(e0.repartition(parts, col("src")))
-    val eByDst = pin(e0.repartition(parts, col("dst")))
+    val eBySrc = pin(e0.repartition(parts, col("src")), true)
+    val eByDst = pin(e0.repartition(parts, col("dst")), true)
     def normalized(raw0: DataFrame, key: String, out: String): DataFrame = {
-      // the raw sums feed BOTH the normalizer total and the join — cache
-      // them so each half-step computes the aggregation once (the
-      // broadcast materializes the cache, the join reads it)
-      val raw = raw0.persist(level)
-      pinned += raw
+      // the raw sums feed BOTH the normalizer total and the join — pin
+      // them so each half-step computes the aggregation once
+      val raw = pin(raw0)
       val tot = raw.agg(sum(col("__s")).as("__t"))
-      verts.join(raw, col("id") === col(key), "left")
+      val scores = pin(verts.join(raw, col("id") === col(key), "left")
         .crossJoin(broadcast(tot))
         .select(col("id"),
-          coalesce(col("__s") / nullif(col("__t"), lit(0.0)), lit(0.0)).as(out))
+          coalesce(col("__s") / nullif(col("__t"), lit(0.0)), lit(0.0)).as(out)))
+      pins.release(raw)
+      scores
     }
     var hub = verts.select(col("id"), lit(1.0).as("hub"))
     var auth = verts.select(col("id"), lit(0.0).as("auth"))
@@ -1539,18 +1414,19 @@ object GraphAlgos {
       val authRaw = eBySrc.join(hub.select(col("id").as("__h"), col("hub")),
           col("src") === col("__h"))
         .groupBy(col("dst")).agg(sum(col("hub")).as("__s"))
-      auth = pin(normalized(authRaw, "dst", "auth"))
+      val nextAuth = normalized(authRaw, "dst", "auth")
+      pins.release(auth)
+      auth = nextAuth
       val hubRaw = eByDst.join(auth.select(col("id").as("__a"), col("auth")),
           col("dst") === col("__a"))
         .groupBy(col("src")).agg(sum(col("auth")).as("__s"))
-      hub = pin(normalized(hubRaw, "src", "hub"))
+      val nextHub = normalized(hubRaw, "src", "hub")
+      pins.release(hub)
+      hub = nextHub
     }
-    val out = hub.join(auth.select(col("id").as("__id"), col("auth")),
+    pins.finish(hub.join(auth.select(col("id").as("__id"), col("auth")),
         col("id") === col("__id"))
-      .select(col("id"), col("hub"), col("auth"))
-      .localCheckpoint(true)
-    pinned.foreach(_.unpersist(false))
-    out
+      .select(col("id"), col("hub"), col("auth")))
   }
 
   /** Wedge-pair volume floor under which the THRESHOLDED path runs the
@@ -1718,7 +1594,7 @@ object GraphAlgos {
     val parts0 = spark.sessionState.conf.numShufflePartitions
     val pairVolUpper = nE.toDouble * math.max(0, degCap - 1)
     val needCensus = threshold > 0.0 ||
-      scaledWidthOf(spark, pairVolUpper) > parts0
+      scaledWidthOf(pairVolUpper) > parts0
     // the census is a pure function of the immutable graph snapshot and
     // the cap, so it is computed ONCE per (graph, degCap): at bench
     // scale the sf0.1 upper bound (~86M pairs) exceeds the session-width
@@ -1763,10 +1639,9 @@ object GraphAlgos {
           (shiftleft(col("x.ldeg"), 31) + col("y.ldeg")).as("__dd"))
         else stream0.select(col("x.leaf").as("id_a"), col("y.leaf").as("id_b"),
           col("x.ldeg").as("__da"), col("y.ldeg").as("__db"))
-      // the frame is returned LAZILY, so a conf-scoped width (the
-      // withScaledWidth idiom) would be restored before the caller's
-      // action plans the exchange — width the pair aggregate's exchange
-      // EXPLICITLY from the measured census instead. The repartition IS
+      // the frame is returned LAZILY and planned under the caller's
+      // conf, so width the pair aggregate's exchange EXPLICITLY from
+      // the measured census. The repartition IS
       // the aggregate's exchange (identical key set, so the aggregate's
       // required distribution is already satisfied and no second
       // shuffle appears); partial aggregation moves above the exchange,
@@ -1774,7 +1649,7 @@ object GraphAlgos {
       // rows live in different mid-partitions and map-side combine
       // merged almost nothing anyway. No-op at bench scale (width ≤
       // session partitions).
-      val width = scaledWidthOf(spark, pairVol)
+      val width = scaledWidthOf(pairVol)
       val keyed = if (width > spark.sessionState.conf.numShufflePartitions)
         stream.repartition(width.toInt, col("id_a"), col("id_b"))
       else stream
@@ -1810,7 +1685,7 @@ object GraphAlgos {
       if (needCensus)
         s"jaccard: full wedge plan (degCap=$degCap, wedge pairs=" +
           s"${pairVol.toLong}, aggregate width=" +
-          s"${math.max(scaledWidthOf(spark, pairVol), parts0.toLong)}, " +
+          s"${math.max(scaledWidthOf(pairVol), parts0.toLong)}, " +
           s"degrees ${if (degPack) "packed" else "two-column"})"
       else
         s"jaccard: full wedge plan (degCap=$degCap, census skipped: " +
@@ -1856,27 +1731,25 @@ object GraphAlgos {
   private def jaccardThresholded(mids0: DataFrame, t: Double,
       wedgeRows: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = mids0.sparkSession
     // NO per-vertex arrays anywhere: a collect_list neighbor index is
     // a hub trap — at 10× a hub leaf's array reaches ~10⁶ elements and
     // the object-hash aggregate falls back to sort-based spilling of
     // multi-MB rows (measured: 231 s vs the full plan's 28.6 at 10×,
     // with only 2.2k result pairs — pure index-build cost). Everything
-    // here is flat equi-joins over the wedge frame, PERSISTED where
+    // here is flat equi-joins over the wedge frame, PINNED where
     // multiple consumers would recompute the und+degree build and
-    // unpersisted before return (the hits() idiom — a read-path
-    // localCheckpoint would pin its blocks for the session lifetime,
-    // the trianglesDistributed leak class). Persist level follows the
-    // measured wedge census: the deserialized wedge frame is what
-    // saturated the 8 g storage pool at 100× (§51).
+    // released before return. Pin level follows the measured wedge
+    // census: the deserialized wedge frame is what saturated the 8 g
+    // storage pool at 100× (§51).
     val level = pinLevelFor(wedgeRows)
     // width follows the measured wedge census (§41/§50 discipline): the
     // rank window, prefix self-join, and verify stream all exchange
     // wedge-bounded volume — 32-wide at 100× put ~3M-row sorts under
     // each of 32 concurrent tasks and starved the unified pool even
     // with the pins off-heap. No-op at bench scale.
-    withScaledWidth(spark, wedgeRows) {
-    val mids = mids0.persist(level)
+    isolated(mids0.sparkSession, wedgeRows.toLong, wedgeRows) { s =>
+    val pins = new Pins(s)
+    val mids = pins.pin(FrameBridge.rebind(s, mids0), level = level)._1
     // per-leaf capped-set size sa as a flat map-side-combined aggregate
     // (an unordered count().over(partitionBy(leaf)) buffers each leaf's
     // whole group — a hub leaf's ~10⁶-row group under 32 concurrent
@@ -1892,11 +1765,10 @@ object GraphAlgos {
     // minimum shared neighbor of any qualifying pair sits inside both
     // prefixes); rn/sa/ldeg ride along for the positional and length
     // filters below
-    val pref = ranked
+    val pref = pins.pin(ranked
       .filter(col("__rn") <=
         col("__sa") - ceil(lit(t) * col("ldeg") - lit(PruneEps)) + 1)
-      .select(col("mid"), col("leaf"), col("ldeg"), col("__sa"), col("__rn"))
-      .persist(level)
+      .select(col("mid"), col("leaf"), col("ldeg"), col("__sa"), col("__rn")), level = level)._1
     // candidate pairs = prefix collisions surviving the PPJoin length
     // and positional bounds. J ≥ t ⟺ common ≥ ⌈t·(da+db)/(1+t)⌉
     // =: minOv; common ≤ min(sa) kills degree-mismatched pairs, and at
@@ -1906,14 +1778,13 @@ object GraphAlgos {
     // collision's bound dominates, so no qualifying pair is lost.
     val minOv =
       ceil(lit(t) * (col("x.ldeg") + col("y.ldeg")) / (1 + t) - lit(PruneEps))
-    val cands = pref.as("x").join(pref.as("y"), col("x.mid") === col("y.mid"))
+    val cands = pins.pin(pref.as("x").join(pref.as("y"), col("x.mid") === col("y.mid"))
       .filter(col("x.leaf") < col("y.leaf"))
       .filter(least(col("x.__sa"), col("y.__sa")) >= minOv)
       .filter(lit(1) + least(col("x.__sa") - col("x.__rn"),
         col("y.__sa") - col("y.__rn")) >= minOv)
       .select(col("x.leaf").as("id_a"), col("y.leaf").as("id_b"))
-      .distinct()
-      .persist(level)
+      .distinct(), level = level)._1
     // verification touches only wedge rows of leaves that appear in
     // some candidate — semi-join the wedge frame down BEFORE the
     // self-join, so the verify stream is quadratic in candidate-leaf
@@ -1945,13 +1816,9 @@ object GraphAlgos {
           .as("jaccard"))
       .filter(col("jaccard") >= t)
     // result is candidate-bounded (the operator's whole point) — one
-    // eager materialization, then release the wedge-frame blocks
-    val out = res.localCheckpoint(true)
-    cands.unpersist(false)
-    pref.unpersist(false)
-    mids.unpersist(false)
-    out
-    } // withScaledWidth
+    // materialization, then the wedge-frame pins are released
+    pins.finish(res)
+    }
   }
 
   /** Driver-local PPR push iteration — replays
@@ -2012,7 +1879,7 @@ object GraphAlgos {
     *
     * Scale shape: out-degrees join once onto the cached edge frame;
     * each round is ONE map-side-combined sum keyed on dst plus a
-    * vertex-frame left join; rounds are pinned RDD leaves. A
+    * vertex-frame left join; rounds are pinned ([[Pins]]). A
     * driver-sized graph pushes in [[pprLocal]] instead. */
   def personalizedPageRank(g: PropertyGraph, source: Long, alpha: Double = 0.15,
       rounds: Int = 4): DataFrame = run(pprArms(g, source, alpha, rounds))
@@ -2024,41 +1891,33 @@ object GraphAlgos {
     Endgame(spark, "ppr", Seq("id", "rank"), nV + nE,
       () => boundedProduct(math.max(1L, rounds.toLong), nV + nE), "",
       () => collected(g) match { case (vA, s, d) => pprLocal(vA, s, d, source, alpha, rounds) },
-      () => pprDistributed(g, source, alpha, rounds))
+      () => pprDistributed(g, source, alpha, rounds, nV + nE))
   }
 
-  private def pprDistributed(g: PropertyGraph, source: Long, alpha: Double,
-      rounds: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = g.spark
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      pinned += p
-      spark.createDataFrame(p.rdd, p.schema)
-    }
-    val verts = pin(g.allVertices.select(col("id")).repartition(parts, col("id")))
+  private def pprDistributed(g0: PropertyGraph, source: Long, alpha: Double,
+      rounds: Int, rows: Long): DataFrame = isolated(g0, rows, 0.0) { g =>
+    val parts = g.spark.sessionState.conf.numShufflePartitions
+    val pins = new Pins(g.spark)
+    val verts = pins.pin(g.allVertices.select(col("id")).repartition(parts, col("id")))._1
     val e0 = g.allEdges.select(col("start_id").as("src"), col("end_id").as("dst"))
     val outdeg = e0.groupBy(col("src")).agg(count(lit(1)).as("od"))
     // weighted edge frame: each edge carries 1/outdeg(src)
-    val ew = pin(e0.join(outdeg, Seq("src"))
+    val ew = pins.pin(e0.join(outdeg, Seq("src"))
       .select(col("src"), col("dst"), (lit(1.0) / col("od")).as("w"))
-      .repartition(parts, col("src")))
+      .repartition(parts, col("src")))._1
     val base = when(col("id") === source, lit(alpha)).otherwise(lit(0.0))
     var pr = verts.select(col("id"), base.as("rank"))
     for (_ <- 1 to math.max(1, rounds)) {
       val pushed = ew.join(pr.select(col("id").as("__s"), col("rank")),
           col("src") === col("__s"))
         .groupBy(col("dst")).agg(sum(col("rank") * col("w")).as("__in"))
-      pr = pin(verts.join(pushed, col("id") === col("dst"), "left")
+      val next = pins.pin(verts.join(pushed, col("id") === col("dst"), "left")
         .select(col("id"),
-          (base + lit(1.0 - alpha) * coalesce(col("__in"), lit(0.0))).as("rank")))
+          (base + lit(1.0 - alpha) * coalesce(col("__in"), lit(0.0))).as("rank")))._1
+      pins.release(pr)
+      pr = next
     }
-    val out = pr.localCheckpoint(true)
-    pinned.foreach(_.unpersist(false))
-    out
+    pins.finish(pr)
   }
 
   /** Global clustering coefficient = 3·triangles / wedges over the
@@ -2271,15 +2130,14 @@ object GraphAlgos {
       () => betweennessDistributed(g, effSources, nS, maxDepth, nV, nE))
   }
 
-  private def betweennessDistributed(g: PropertyGraph, effSources: Int,
+  private def betweennessDistributed(g0: PropertyGraph, effSources: Int,
       nS: Long, maxDepth: Int, nV: Long, nE: Long): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = g.spark
+    val spark = g0.spark
     // measured size picks the regime BEFORE any plan is built: tiny
     // graphs run with AQE off and a narrow exchange width (see
-    // withIterTuning — per-round scheduling dominated the barbell at
-    // 54 s), big graphs keep the session's settings
-    // in the small regime AQE is off (withIterTuning), so the runtime
+    // isolated — per-round scheduling dominated the barbell at 54 s),
+    // big graphs keep the session's settings.
+    // In the small regime AQE is off, so the runtime
     // can't discover broadcastability — hint it statically. The gate is
     // per-frame-size: the undirected edge frame scales with nE; the
     // frontier frames (visited/succ/contrib) scale with nS·nV and get
@@ -2302,56 +2160,54 @@ object GraphAlgos {
     // task-count overhead while width 32 was already cliff-free there.
     // 16M keeps bench and 10× at (or near) the session width and
     // engages only where the cliff lives (≥10⁹-row rounds).
-    withIterTuning(spark, nE) {
-    withWidthControl(spark, rowsPerPart = 16000000L) { setWidth =>
+    isolated(g0, nE, 0.0) { g =>
+    val clone = g.spark
     val avgDeg = math.max(1.0, 2.0 * nE / math.max(1L, nV))
-    // pin = persist → count (one lineage compute, into cache) →
-    // RELIABLE checkpoint (written FROM the cache — the naked
-    // checkpoint() recomputes the whole lineage a second time) →
-    // unpersist. Persist alone kept every level's OWN round's shuffle
-    // dependency alive through the whole call — cumulative S·2E
-    // expansion rows ≈ 130 GB of shuffle at 100×/S=8, measured
-    // disk-full — and localCheckpoint pins its blocks in the storage
-    // pool, which the 32 concurrent unrolls could no longer vacate
-    // (measured OOM at 10× in the 8 GB heap, deserialized AND
+    // the width for the NEXT round's exchanges, from that round's
+    // measured input bound (~16M rows/partition, floor = the clone's
+    // starting width, cap 2048): each round's plan reads the clone's
+    // conf at its own planning time, so the width tracks the measured
+    // frontier instead of either a bench constant (the §41 cliff) or a
+    // loop-global worst-case bound (thousands of needless tasks in the
+    // narrow rounds)
+    val floor = clone.sessionState.conf.numShufflePartitions.toLong
+    def setWidth(boundRows: Double): Unit = clone.conf.set("spark.sql.shuffle.partitions",
+      math.min(2048L, math.max(floor, (boundRows / 16000000L).toLong + 1)))
+    // every pin writes a RELIABLE checkpoint from its just-counted
+    // blocks and drops the blocks. Persist alone kept every level's OWN
+    // round's shuffle dependency alive through the whole call —
+    // cumulative S·2E expansion rows ≈ 130 GB of shuffle at 100×/S=8,
+    // measured disk-full — and localCheckpoint pins its blocks in the
+    // storage pool, which the 32 concurrent unrolls could no longer
+    // vacate (measured OOM at 10× in the 8 GB heap, deserialized AND
     // serialized levels). The reliable-checkpoint files live in
     // ensureCheckpointDir's location (shared FS on a cluster), and the
     // truncation lets the ContextCleaner delete each round's shuffle
-    // files while the loop still runs. The scope deletes each file the
-    // moment its frame is dead — each BFS level is read exactly once
-    // by the backward sweep, each round's delta frame once by the next
-    // round, and the bc contribution folds into a V-bounded running
+    // files while the loop still runs. Each file is deleted the moment
+    // its frame is dead — each BFS level is read exactly once by the
+    // backward sweep, each round's delta frame once by the next round,
+    // and the bc contribution folds into a V-bounded running
     // accumulator — so peak live checkpoint disk is the forward pass's
     // Σ level rows (S·V) and DECLINES through the backward sweep,
     // instead of 2·S·V held to the end plus a session-lifetime leak
     // after it (r11 verdict #2 + ADVICE).
-    ensureCheckpointDir(spark)
-    // TWO scopes: `outer` owns the batch-invariant frames (und, verts,
+    // TWO ledgers: `outer` owns the batch-invariant frames (und, verts,
     // the cross-batch bc accumulator); each source batch below gets its
-    // own scope so its levels/deltas are provably gone before the next
-    // batch starts
-    val outer = new CheckpointScope(spark)
-    def pinNWith(sc: CheckpointScope)(df: DataFrame): (DataFrame, Long) = {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      val n = p.count()
-      val c = sc.track(p.checkpoint())
-      p.unpersist(false)
-      (c, n)
-    }
-    def pinWith(sc: CheckpointScope)(df: DataFrame): DataFrame =
-      pinNWith(sc)(df)._1
+    // own so its levels/deltas are provably gone before the next batch
+    // starts
+    val outer = new Pins(clone)
     // one shuffle: hash-partition on the expansion probe key, then the
     // dedup aggregate is partition-local (HashPartitioning(src) is a
     // subset of the dedup keys) — the labelPropagationDet idiom. Width
     // derives from the 2E build size; the expansion joins then inherit
     // this cached partitioning's width on their und side.
     setWidth(2.0 * nE)
-    val edgeParts = spark.sessionState.conf.numShufflePartitions
-    val und = pinWith(outer)(edgesBothDirs(g)
+    val edgeParts = clone.sessionState.conf.numShufflePartitions
+    val und = outer.pin(edgesBothDirs(g)
       .filter(col("src") =!= col("dst"))
       .repartition(edgeParts, col("src"))
-      .dropDuplicates("src", "dst"))
-    val verts = pinWith(outer)(g.allVertices.select(col("id")))
+      .dropDuplicates("src", "dst"), filesOnly = true)._1
+    val verts = outer.pin(g.allVertices.select(col("id")), filesOnly = true)._1
     // sampled sources: seeded portable-hash top-k over vertex ids (the
     // p_weighted_sample discipline) — deterministic and SQL-replayable
     // like the old smallest-id pick, but uniform over the id space
@@ -2380,14 +2236,14 @@ object GraphAlgos {
     // local-dir capacity raises spark.graft.betweenness.batchRows (or
     // runs batches as independent parallel jobs — they share only the
     // read-only und/verts pins).
-    val batchRows = spark.conf
+    val batchRows = clone.conf
       .getOption("spark.graft.betweenness.batchRows")
       .map(_.toLong).getOrElse(150000000L)
     val batchSize = math.max(1L, batchRows / math.max(1L, nV))
     val sourceBatches: Seq[DataFrame] =
       if (effSources <= 0 || batchSize >= nS) Seq(srcs)
       else {
-        import spark.implicits._
+        import clone.implicits._
         val ids = srcs.select(col("id")).collect().map(_.getLong(0)).toSeq
         ids.grouped(batchSize.toInt).map(_.toDF("id")).toSeq
       }
@@ -2399,9 +2255,9 @@ object GraphAlgos {
     var batchAcc: Option[DataFrame] = None
 
     for (srcBatch <- sourceBatches) {
-    val scope = new CheckpointScope(spark)
-    def pinN(df: DataFrame): (DataFrame, Long) = pinNWith(scope)(df)
-    def pin(df: DataFrame): DataFrame = pinWith(scope)(df)
+    val scope = new Pins(clone)
+    def pinN(df: DataFrame): (DataFrame, Long) = scope.pin(df, filesOnly = true)
+    def pin(df: DataFrame): DataFrame = pinN(df)._1
     // frontier-scaled frames hold ≤ bS·nV rows for THIS batch — gate
     // their broadcast on that product (division avoids overflow)
     val bS = math.min(nS, batchSize)
@@ -2494,8 +2350,8 @@ object GraphAlgos {
     // next batch starts: peak disk across batches is one batch's
     // live set plus the V-bounded accumulator
     bcAcc.foreach { b =>
-      val folded = pinWith(outer)(batchAcc.fold(b)(_ unionByName b)
-        .groupBy(col("v")).agg(sum(col("delta")).as("delta")))
+      val folded = outer.pin(batchAcc.fold(b)(_ unionByName b)
+        .groupBy(col("v")).agg(sum(col("delta")).as("delta")), filesOnly = true)._1
       batchAcc.foreach(outer.release)
       batchAcc = Some(folded)
     }
@@ -2510,17 +2366,14 @@ object GraphAlgos {
         .select(col("id"),
           (coalesce(col("delta"), lit(0.0)) * scale).as("centrality"))
     }
-    // V-bounded result: one eager materialization (the hits() idiom),
-    // then every remaining checkpoint file — und, verts, the cross-
-    // batch accumulator — is deleted NOW rather than at session end
-    // (r11 ADVICE: cleanCheckpoints defaults off and can't be enabled
-    // post-start, so without this a long-lived session accumulates
-    // ~10 GB per call at 100×/S=8)
-    val out = acc.localCheckpoint(true)
-    outer.releaseAll()
-    out
-    } // withWidthControl
-    } // withIterTuning
+    // V-bounded result: one materialization, then every remaining
+    // checkpoint file — und, verts, the cross-batch accumulator — is
+    // deleted NOW rather than at session end (r11 ADVICE:
+    // cleanCheckpoints defaults off and can't be enabled post-start, so
+    // without this a long-lived session accumulates ~10 GB per call at
+    // 100×/S=8)
+    outer.finish(acc)
+    }
   }
 
   /** Iterative (explicit-stack) Tarjan over a collected residual graph:
@@ -2670,11 +2523,11 @@ object GraphAlgos {
     * hint is gated on the VERTEX count (labels, certified sets and
     * survivor sets are vertex-sized — an edge-count gate could admit a
     * multi-GB vertex frame). */
-  def scc(g: PropertyGraph, maxPasses: Int = 64, maxRounds: Int = 128,
+  def scc(g0: PropertyGraph, maxPasses: Int = 64, maxRounds: Int = 128,
       localRowBudget: Long = -1L): DataFrame = {
-    val spark = g.spark
+    val spark = g0.spark
     import spark.implicits._
-    val (nV, nE) = graphSizes(g)
+    val (nV, nE) = graphSizes(g0)
     val budget = if (localRowBudget >= 0L) localRowBudget else collectBudget(spark)
     // static broadcast hints for the small/no-AQE regime (see
     // betweenness), gated on the VERTEX count: every hinted frame is
@@ -2682,15 +2535,11 @@ object GraphAlgos {
     // frames on dense-edge-light graphs)
     def bc(df: DataFrame): DataFrame =
       if (nV < SmallGraphRows) broadcast(df) else df
-    withIterTuning(spark, nE) {
-    // periodic lineage barrier: plain pinning overflowed task
-    // (de)serialization after a few hundred propagation rounds
-    val scope = new CheckpointScope(spark)
-    val pinner = lineagePin(spark, scope)
-    def pinN(df: DataFrame): (DataFrame, Long) = {
-      val p = pinner(df)._1
-      (p, p.count())
-    }
+    isolated(g0, nE, 0.0) { g =>
+    // one ledger for every pass: propagation rounds cross its periodic
+    // lineage barrier, and `out` reads the trim and certified pins
+    // until the result is materialized
+    val pins = new Pins(g.spark)
     // min-id propagation against `edges` (l(v) ← min l(u) over v→u ≡ min
     // id reachable forward), reporting whether it reached the fixpoint:
     // refinement is sound only then
@@ -2698,7 +2547,7 @@ object GraphAlgos {
     var statEndgame = false
     def propagate(vertsDf: DataFrame, edgesDf: DataFrame): (DataFrame, Boolean) = {
       val (lab, rounds, fixed) = minRelax(vertsDf.select(col("id"), col("id").as("m")),
-        edgesDf.withColumn("w", lit(0L)), math.max(0, maxRounds), grow = false, pinner, bc)
+        edgesDf.withColumn("w", lit(0L)), math.max(0, maxRounds), grow = false, pins, bc)
       statPropRounds += rounds
       (lab, fixed)
     }
@@ -2711,8 +2560,8 @@ object GraphAlgos {
       val (srcs, dsts) = collectPairs(es.select(col("src"), col("dst")))
       sccTarjan(verts, srcs, dsts).toSeq.toDF("id", "scc")
     }
-    var (remV, remaining) = pinN(g.allVertices.select(col("id")))
-    var (remE, remECount) = pinN(
+    var (remV, remaining) = pins.pin(g.allVertices.select(col("id")))
+    var (remE, remECount) = pins.pin(
       g.allEdges.select(col("start_id").as("src"), col("end_id").as("dst"))
         .filter(col("src") =!= col("dst")).distinct())
     var out = Vector.empty[DataFrame]
@@ -2742,7 +2591,7 @@ object GraphAlgos {
       while (trimming && trimRounds < 4 && remaining > 0) {
         val hasOut = remE.select(col("src").as("id")).distinct()
         val hasIn = remE.select(col("dst").as("id")).distinct()
-        val (keep, keepN) = pinN(remV
+        val (keep, keepN) = pins.pin(remV
           .join(bc(hasOut), Seq("id"), "left_semi")
           .join(bc(hasIn), Seq("id"), "left_semi"))
         if (keepN == remaining) trimming = false
@@ -2752,7 +2601,7 @@ object GraphAlgos {
             .select(col("id"), col("id").as("scc"))
           remV = keep
           remaining = keepN
-          val (e2, e2n) = pinN(remE
+          val (e2, e2n) = pins.pin(remE
             .join(bc(keep.select(col("id").as("src"))), Seq("src"), "left_semi")
             .join(bc(keep.select(col("id").as("dst"))), Seq("dst"), "left_semi")
             .select(col("src"), col("dst")))
@@ -2775,14 +2624,14 @@ object GraphAlgos {
           val (fwd, fConv) = propagate(remV, remE)
           val (bwd, bConv) = propagate(remV,
             remE.select(col("dst").as("src"), col("src").as("dst")))
-          val labs = pinN(fwd
+          val labs = pins.pin(fwd
             .join(bc(bwd.select(col("id"), col("m").as("__mb"))), Seq("id"))
             .select(col("id"), col("m").as("__mf"), col("__mb")))._1
           val certified = labs.filter(col("__mf") === col("__mb"))
             .select(col("id"), col("__mf").as("scc"))
           out :+= certified
           val (remV2, remaining2) =
-            pinN(remV.join(bc(certified), Seq("id"), "left_anti"))
+            pins.pin(remV.join(bc(certified), Seq("id"), "left_anti"))
           remV = remV2
           remaining = remaining2
           val (e2, e2n) =
@@ -2794,7 +2643,7 @@ object GraphAlgos {
             // edges with endpoints outside remV (NPE in sccTarjan's
             // index lookup) — exclude them: F ≠ B on the (shared-label)
             // src keeps exactly the edges between UNcertified vertices.
-            if (fConv && bConv) pinN(remE
+            if (fConv && bConv) pins.pin(remE
               .join(bc(labs.select(col("id").as("src"),
                 col("__mf").as("__fs"), col("__mb").as("__bs"))), Seq("src"))
               .join(bc(labs.select(col("id").as("dst"),
@@ -2802,7 +2651,7 @@ object GraphAlgos {
               .filter(col("__fs") === col("__fd") && col("__bs") === col("__bd") &&
                 col("__fs") =!= col("__bs"))
               .select(col("src"), col("dst")))
-            else pinN(remE
+            else pins.pin(remE
               .join(bc(remV.select(col("id").as("src"))), Seq("src"), "left_semi")
               .join(bc(remV.select(col("id").as("dst"))), Seq("dst"), "left_semi")
               .select(col("src"), col("dst")))
@@ -2821,8 +2670,8 @@ object GraphAlgos {
     }
     lastSccStats = SccStats(pass, statPropRounds, statEndgame)
     if (out.isEmpty) Seq.empty[(Long, Long)].toDF("id", "scc")
-    else detach(scope, out.reduce(_ unionByName _))
-    } // withIterTuning
+    else pins.finish(out.reduce(_ unionByName _))
+    }
   }
 
   /** Driver-local walk replay — exact: the same
@@ -2866,7 +2715,7 @@ object GraphAlgos {
     * walk's start vertex and its position after `steps` hops.
     *
     * Scale shape: the indexed neighbor frame (v, idx, to, deg) builds
-    * with one shuffle and persists partitioned by v; each step is ONE
+    * with one shuffle and is pinned partitioned by v; each step is ONE
     * equi-join of the (start, v) state against it — the state never
     * grows past one row per surviving walker, join keys are vertex
     * ids, and steps are lineage-pinned. At cluster scale this is the
@@ -2889,20 +2738,15 @@ object GraphAlgos {
       // vertex-joins its neighbor index — a walk may step onto a dangling
       // endpoint, so the CSR is built over the closed set
       () => walksLocal(closedCsr(g), collected(g)._1, steps, saltPrefix),
-      () => randomWalksDistributed(g, steps, saltPrefix))
+      () => randomWalksDistributed(g, steps, saltPrefix, rows))
   }
 
-  private def randomWalksDistributed(g: PropertyGraph, steps: Int,
-      saltPrefix: String): DataFrame = {
+  private def randomWalksDistributed(g0: PropertyGraph, steps: Int,
+      saltPrefix: String, rows: Long): DataFrame = isolated(g0, rows, 0.0) { g =>
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
-    val spark = g.spark
-    val parts = spark.sessionState.conf.numShufflePartitions
-    def pin(df: DataFrame): DataFrame = {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      spark.createDataFrame(p.rdd, p.schema)
-    }
+    val parts = g.spark.sessionState.conf.numShufflePartitions
+    val pins = new Pins(g.spark)
+    def pin(df: DataFrame): DataFrame = pins.pin(df)._1
     val und = edgesBothDirs(g)
       .filter(col("src") =!= col("dst"))
       .repartition(parts, col("src"))
@@ -2920,12 +2764,14 @@ object GraphAlgos {
     for (t <- 1 to math.max(0, steps)) {
       val choice = graft.pipeline.TextOps.portableHash64(
         concat_ws(":", lit(saltPrefix), col("walker"), lit(t), col("v"))) % col("deg")
-      state = pin(state.join(degs, Seq("v"))
+      val next = pin(state.join(degs, Seq("v"))
         .withColumn("idx", choice)
         .join(nbr, Seq("v", "idx"))
         .select(col("walker"), col("to").as("v")))
+      pins.release(state)
+      state = next
     }
-    state.select(col("walker"), col("v").as("dest"))
+    pins.finish(state.select(col("walker"), col("v").as("dest")))
   }
 
   /** Per-graph statistics — analogue of age_graph_stats

@@ -60,12 +60,6 @@ object IterScale {
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // bisect the scaled-width target without recompiling (the conf the
-    // width-control scopes read; see GraphAlgos.withWidthControl)
-    sys.env.get("GRAFT_ROWS_PER_PART").foreach { v =>
-      spark.conf.set("spark.graft.scaledWidth.rowsPerPart", v)
-      println(s"[iterscale] scaledWidth.rowsPerPart=$v")
-    }
 
     def t(name: String): DataFrame = spark.read.parquet(s"$sfDir/$name.parquet")
 

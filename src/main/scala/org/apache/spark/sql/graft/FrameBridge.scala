@@ -3,11 +3,14 @@ package org.apache.spark.sql.graft
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSet, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Statistics}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
+  PartitioningCollection, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** DataFrames over rows the driver already holds. `Dataset.ofRows` is
@@ -21,6 +24,59 @@ object FrameBridge {
   def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** A clone of `spark`: its own SQL conf over the shared context,
+    * catalog and cache, so settings made on the clone stay there. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `df`'s analyzed plan as a frame of `spark`, which then plans and
+    * runs it under its own conf. */
+  def rebind(spark: SparkSession, df: DataFrame): DataFrame =
+    if (df.sparkSession eq spark) df
+    else classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], df.queryExecution.analyzed)
+
+  /** A `LogicalRDD` frame over `rdd`, which must hold the rows of `df`'s
+    * executed plan, partition for partition (the shape
+    * `Dataset.checkpoint` builds). The leaf keeps a static plan's hash
+    * partitioning and ordering, which let the next join or aggregate on
+    * those keys skip its exchange and sort, where the claim holds for
+    * `rdd` (a bucketed scan's claim over another partition count does
+    * not). An adaptive plan's leaf claims nothing, as a frame built by
+    * `createDataFrame` does not, so the next round's exchanges stay
+    * AQE's to coalesce, broadcast and split for skew — unless
+    * `partitioned`: a frame hash-partitioned on purpose and joined on
+    * that key every round keeps the final plan's claim (measured at
+    * sf0.1: forced-distributed kcore took 16-17 s with its edge frame's
+    * claim kept, 9 s without; lpa 15-16 s without its edge frame's
+    * claim, 12 s at the parent, whose cached frame kept it). Call it
+    * after the plan ran, so an adaptive plan reports its final shape.
+    * The leaf's attributes are fresh, and it carries no size estimate. */
+  def leaf(df: DataFrame, rdd: RDD[InternalRow], partitioned: Boolean = false): DataFrame = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec if partitioned => a.executedPlan
+      case p => p
+    }
+    val output = df.queryExecution.analyzed.output
+    val known = AttributeSet(output)
+    val fresh = output.map(_.newInstance())
+    val renamed = AttributeMap(output.zip(fresh))
+    def rename[T <: Expression](e: T): T =
+      e.transform { case a: Attribute => renamed.getOrElse(a, a) }.asInstanceOf[T]
+    def first(p: Partitioning): Partitioning = p match {
+      case c: PartitioningCollection => first(c.partitionings.head)
+      case p => p
+    }
+    val partitioning = first(plan.outputPartitioning) match {
+      case h: HashPartitioning if h.numPartitions == rdd.getNumPartitions &&
+        h.references.subsetOf(known) => rename(h)
+      case SinglePartition if rdd.getNumPartitions == 1 => SinglePartition
+      case _ => UnknownPartitioning(0)
+    }
+    val ordering = plan.outputOrdering.takeWhile(_.references.subsetOf(known)).map(rename(_))
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(spark, LogicalRDD(fresh, rdd, partitioning, ordering)(spark))
+  }
 
   /** `dt` with every field, element and value nullable, nested ones
     * included: the type values gathered from several frames may all

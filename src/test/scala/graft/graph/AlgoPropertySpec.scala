@@ -90,38 +90,39 @@ class AlgoPropertySpec extends SparkTestBase {
 
   test("jaccardSimilarity: census-derived aggregate width keeps ONE " +
       "exchange and the same answer") {
-    // the lazily-returned full plan widths its pair aggregate via an
-    // explicit repartition on the grouping keys (a conf-scoped width
-    // would be restored before the caller's action plans the exchange);
-    // the repartition must BE the aggregate's exchange — a second
-    // session-width shuffle above it would reintroduce the §61 spill
+    // the lazily-returned full plan widths its pair aggregate from the
+    // measured pair volume — an explicit repartition on the grouping
+    // keys where scaledWidthOf exceeds the session width — and that
+    // exchange must BE the aggregate's: a second session-width shuffle
+    // above it would reintroduce the §61 spill
     val g = randomGraph(40, 120, seed = 7, parts = 3)
-    val plain = GraphAlgos.jaccardArms(g, 64, 0.0).distributed()
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        math.rint(r.getDouble(3) * 1e9))).sortBy(x => (x._1, x._2)).toSeq
-    spark.conf.set("spark.graft.scaledWidth.rowsPerPart", "1")
-    try {
-      val wide = GraphAlgos.jaccardArms(g, 64, 0.0).distributed()
-      val got = wide.collect().map(r => (r.getLong(0), r.getLong(1),
-        r.getLong(2), math.rint(r.getDouble(3) * 1e9)))
-        .sortBy(x => (x._1, x._2)).toSeq
-      assert(got === plain)
-      // inspect AFTER execution so the adaptive plan is final; the AQE
-      // toString appends an "== Initial Plan ==" section — cut it off
-      // or every exchange is counted twice
-      val planStr = wide.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      val pairExchanges = planStr.linesIterator
-        .filter(_.contains("hashpartitioning(id_a")).toSeq
-      assert(pairExchanges.length === 1,
-        s"pair-keyed exchanges: ${pairExchanges.length} (the explicit " +
-          "repartition must satisfy the aggregate's distribution, not " +
-          s"stack under a session-width shuffle)\n$planStr")
-      val width = "hashpartitioning\\(id_a[^,]*, id_b[^,]*, (\\d+)\\)".r
-        .findFirstMatchIn(pairExchanges.head).map(_.group(1).toInt)
-      assert(width.exists(_ > 100),
-        s"expected a census-widened exchange, got $width\n$planStr")
-    } finally spark.conf.unset("spark.graft.scaledWidth.rowsPerPart")
+    val out = GraphAlgos.jaccardArms(g, 64, 0.0).distributed()
+    val got = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      math.rint(r.getDouble(3) * 1e9))).sortBy(x => (x._1, x._2)).toSeq
+    assert(got === GraphAlgos.jaccardArms(g, 64, 0.0).local()
+      .map(r => (r._1, r._2, r._3, math.rint(r._4 * 1e9))).sortBy(x => (x._1, x._2)).toSeq)
+    // inspect AFTER execution so the adaptive plan is final; the AQE
+    // toString appends an "== Initial Plan ==" section — cut it off
+    // or every exchange is counted twice
+    val planStr = out.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    val pairExchanges = planStr.linesIterator
+      .filter(_.contains("hashpartitioning(id_a")).toSeq
+    assert(pairExchanges.length === 1,
+      s"pair-keyed exchanges: ${pairExchanges.length} (the explicit " +
+        "repartition must satisfy the aggregate's distribution, not " +
+        s"stack under a session-width shuffle)\n$planStr")
+    val width = "hashpartitioning\\(id_a[^,]*, id_b[^,]*, (\\d+)\\)".r
+      .findFirstMatchIn(pairExchanges.head).map(_.group(1).toLong)
+    // the pair volume the census measures: Σ C(deg, 2) over the
+    // distinct neighbors of every mid
+    val und = g.allEdges.select("start_id", "end_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).filter(e => e._1 != e._2)
+      .flatMap(e => Seq(e, e.swap)).distinct
+    val pairVol = und.groupBy(_._1).values
+      .map(ns => { val d = ns.length.toDouble; d * (d - 1) / 2 }).sum
+    assert(width === Some(math.max(GraphAlgos.scaledWidthOf(pairVol),
+      spark.sessionState.conf.numShufflePartitions.toLong)), planStr)
   }
 
   test("jaccardSimilarity: wedges never route through a mid above the cap") {
@@ -302,34 +303,14 @@ class AlgoPropertySpec extends SparkTestBase {
       .collect()(0).getDouble(0) >= 0.0)
   }
 
-  test("withScaledWidth derives the exchange width from the measured " +
-      "row bound and restores the session width") {
+  test("scaledWidthOf derives the exchange width from the measured row bound") {
     // §41 discipline for the iterative frontier loops: a super-linear
     // intermediate must size its own exchanges. 10^10 bound rows at
     // ~2M rows/partition → 5001 capped at 2048; a bench-scale bound
-    // must be a no-op; the session width must come back either way.
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    GraphAlgos.withScaledWidth(spark, 1e10) {
-      assert(spark.conf.get("spark.sql.shuffle.partitions") === "2048")
-    }
-    assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
-    GraphAlgos.withScaledWidth(spark, 1e9) {
-      assert(spark.conf.get("spark.sql.shuffle.partitions") === "501")
-    }
-    GraphAlgos.withScaledWidth(spark, 1000.0) {
-      assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
-    }
-    assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
-    // the deployment-tuning knob: a session override of the
-    // rows-per-partition target changes the derived width without a
-    // recompile (probe-time bisection; PLANS §50/§51)
-    spark.conf.set("spark.graft.scaledWidth.rowsPerPart", "1000000")
-    try {
-      GraphAlgos.withScaledWidth(spark, 1e9) {
-        assert(spark.conf.get("spark.sql.shuffle.partitions") === "1001")
-      }
-      assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
-    } finally spark.conf.unset("spark.graft.scaledWidth.rowsPerPart")
+    // stays at one partition, under every session width.
+    assert(GraphAlgos.scaledWidthOf(1e10) === 2048L)
+    assert(GraphAlgos.scaledWidthOf(1e9) === 501L)
+    assert(GraphAlgos.scaledWidthOf(1000.0) === 1L)
   }
 
   test("betweenness: sampled estimator is exact when the sample is everything") {
@@ -560,29 +541,33 @@ class AlgoPropertySpec extends SparkTestBase {
     e1.unpersist(false); o.unpersist(false); planDf.unpersist(false)
   }
 
-  test("concurrent algorithm calls on one session serialize and stay correct") {
-    // withIterTuning mutates session conf for small-graph runs; the
-    // per-session monitor must serialize concurrent procedure calls so
-    // neither observes the other's tuned values mid-flight, and the
-    // conf must be restored afterwards (r9 verdict watch item)
+  test("concurrent distributed calls on one session leave its conf alone and stay correct") {
+    // each distributed arm tunes AQE and exchange width on a clone of the
+    // session: a reader of the caller's session, here a third thread,
+    // must only ever see the session's own values while lpa, kcore and
+    // connected_components (AQE off at this size) run at once
     val g1 = randomGraph(80, 200, seed = 101, parts = 3)
     val g2 = randomGraph(80, 200, seed = 102, parts = 3)
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    def lpa = GraphAlgos.labelPropagationArms(g1, 3).distributed()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    def kcore = GraphAlgos.kCoreArms(g2, 3, 1000).distributed()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val seq1 = lpa
-    val seq2 = kcore
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    def lpa = sorted(GraphAlgos.labelPropagationArms(g1, 3).distributed())
+    def kcore = sorted(GraphAlgos.kCoreArms(g2, 3, 1000).distributed())
+    def cc = sorted(GraphAlgos.connectedComponentsArms(g1).distributed())
+    val expected = Seq(lpa, kcore, cc)
+    def settings = (spark.conf.get("spark.sql.adaptive.enabled"),
+      spark.conf.get("spark.sql.shuffle.partitions"))
+    val own = settings
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val f1 = Future(lpa)
-    val f2 = Future(kcore)
-    assert(Await.result(f1, 5.minutes) === seq1)
-    assert(Await.result(f2, 5.minutes) === seq2)
-    assert(spark.conf.get("spark.sql.shuffle.partitions") === before,
-      "tuned conf leaked past the procedure calls")
+    val calls = Future.sequence(Seq(Future(lpa), Future(kcore), Future(cc)))
+    val seen = Future {
+      val s = scala.collection.mutable.Set(settings)
+      while (!calls.isCompleted) s += settings
+      s.toSet
+    }
+    assert(Await.result(calls, 5.minutes) === expected)
+    assert(Await.result(seen, 1.minute) === Set(own))
   }
 
   test("endgames collect a snapshot once: later procedures launch no Spark job") {

@@ -362,6 +362,69 @@ class EndgameSpec extends SparkTestBase {
     assert(agreed("kcore") === Seq(Seq(v(1), 2L), Seq(v(2), 2L), Seq(v(3), 2L)))
   }
 
+  test("forced-distributed kcore peels the chain in at most 2 jobs a round") {
+    val e = GraphAlgos.kCoreArms(chain, 2, 1000)
+    var rows = Array.empty[Row]
+    val jobs = graft.SparkJobs.count(spark) { rows = e.distributed().collect() }
+    assert(sorted(rows) === sorted(e.localFrame().collect()))
+    // one vertex of the 45-vertex closure peels a round, down to the
+    // 3-vertex head, and one more round finds the fixpoint
+    val rounds = 45 - 3 + 1
+    assert(jobs <= 2 * rounds, s"$jobs jobs for $rounds peel rounds")
+    info(s"$jobs jobs for $rounds peel rounds")
+  }
+
+  test("forced-distributed calls leave no cached frame or persisted RDD behind") {
+    val s = shapes.head
+    val g = s.g
+    val pairs = g.allEdges.select(col("start_id").as("id_a"), col("end_id").as("id_b"))
+    val arms: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "connected_components" -> (() => GraphAlgos.connectedComponentsArms(g).distributed()),
+      "sssp" -> (() => GraphAlgos.ssspArms(g, s.real).distributed()),
+      "wsssp" -> (() => GraphAlgos.weightedSsspArms(g, s.real, "w", 5).distributed()),
+      "pagerank" -> (() => GraphAlgos.pageRankArms(g, 0.0001, 0.15).distributed()),
+      "hits" -> (() => GraphAlgos.hitsArms(g, 4).distributed()),
+      "ppr" -> (() => GraphAlgos.pprArms(g, s.real, 0.15, 4).distributed()),
+      "lpa" -> (() => GraphAlgos.labelPropagationArms(g, 4).distributed()),
+      "kcore" -> (() => GraphAlgos.kCoreArms(g, 2, 1000).distributed()),
+      "random_walks" -> (() => GraphAlgos.randomWalksArms(g, 3, "walk").distributed()),
+      "betweenness" -> (() => GraphAlgos.betweennessArms(g, 16, 64).distributed()),
+      "jaccard" -> (() => GraphAlgos.jaccardArms(g, 64, 0.0).distributed()),
+      "scc" -> (() => GraphAlgos.scc(g, localRowBudget = 0L)),
+      "dup_clusters" -> (() => Dedup.dupClustersArms(pairs).distributed()))
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    // persisted RDDs of earlier suites may be cleaned meanwhile, so the
+    // RDD check is that nothing was added; a dropped result's own RDD
+    // leaves the weakly held registry once it is collected
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def added = spark.sparkContext.getPersistentRDDs.keySet -- rdds
+    for ((name, call) <- arms) {
+      for (_ <- 1 to 3) assert(call().collect().nonEmpty, name)
+      assert(cache.isEmpty, s"$name cached a frame")
+      var tries = 0
+      while (added.nonEmpty && tries < 50) { System.gc(); Thread.sleep(100); tries += 1 }
+      assert(added.isEmpty, s"$name left ${added.size} persisted RDDs")
+    }
+  }
+
+  test("forced-distributed hits and ppr agree with their local arms on a store-backed graph") {
+    // bucketed scans claim a hash partitioning over their bucket count;
+    // a pinned leaf must not carry that claim over its own partitions
+    val s = shapes.head
+    GraphStore.saveBucketed(new PropertyGraph("endgame_store", s.g.vertexLabels,
+      s.g.edgeLabels), spark, buckets = 5)
+    val g = GraphStore.loadBucketed(spark, "endgame_store")
+    for ((e, tol) <- Seq[(GraphAlgos.Endgame[_], Double)](
+        GraphAlgos.hitsArms(g, 4) -> 1e-9, GraphAlgos.pprArms(g, s.real, 0.15, 4) -> 1e-9)) {
+      val (l, d) = (sorted(e.localFrame().collect()), sorted(e.distributed().collect()))
+      assert(l.length === d.length && l.nonEmpty, e.op)
+      for ((a, b) <- l.zip(d))
+        assert(a.zip(b).forall { case (x, y) => same(x, y, Abs(tol)) },
+          s"${e.op}: local $a vs distributed $b")
+    }
+  }
+
   test("scc: distributed passes equal Tarjan on a 40-vertex ring") {
     val ring = graph("ring", (1L to 40L).map(v), 2,
       (1L to 40L).map(i => (v(i), v(i % 40 + 1))), None)
