@@ -1236,26 +1236,26 @@ object SparkEntry {
     // is answered from the OTHER half of the engine: Cypher graph
     // analytics over the ingested pair graph.
     "q_dedup_graph" -> ((s, dir) => {
-      val pairs = Dedup.minhashLsh(t(s, dir, "documents"), "text", "doc_id",
-        shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // no distinct: mergeVertexBatch dedups on the merge key itself,
-        // so the pre-shuffle here was one redundant exchange of the
-        // pair-endpoint frame
-        val ids = pairs.select(col("id_a").as("doc_id"))
-          .unionByName(pairs.select(col("id_b").as("doc_id")))
-        val g = new graft.graph.MutableGraph("dedupg", s)
-        graft.streaming.GraphIngest.mergeVertexBatch(g, "Doc", "doc_id", ids)
-        graft.streaming.GraphIngest.mergeEdgeBatch(g, "NEAR_DUP",
-          ("Doc", "doc_id"), ("Doc", "doc_id"),
-          pairs.select("id_a", "id_b"), "id_a", "id_b")
-        Cypher.execute(s, g,
-          """CALL connected_components() YIELD id, component
-            |WITH component, count(*) AS sz
-            |RETURN count(*) AS n_components, max(sz) AS largest,
-            |       sum(sz) AS n_docs""".stripMargin)
-      } finally pairs.unpersist(false)
+      // pinned: both ingest batches read the pairs; the result holds the
+      // pin until it is dropped
+      val pins = new graft.graph.Pins(s)
+      val pairs = pins.pin(Dedup.minhashLsh(t(s, dir, "documents"), "text", "doc_id",
+        shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.3))._1
+      // no distinct: mergeVertexBatch dedups on the merge key itself,
+      // so the pre-shuffle here was one redundant exchange of the
+      // pair-endpoint frame
+      val ids = pairs.select(col("id_a").as("doc_id"))
+        .unionByName(pairs.select(col("id_b").as("doc_id")))
+      val g = new graft.graph.MutableGraph("dedupg", s)
+      graft.streaming.GraphIngest.mergeVertexBatch(g, "Doc", "doc_id", ids)
+      graft.streaming.GraphIngest.mergeEdgeBatch(g, "NEAR_DUP",
+        ("Doc", "doc_id"), ("Doc", "doc_id"),
+        pairs.select("id_a", "id_b"), "id_a", "id_b")
+      pins.handOff(Cypher.execute(s, g,
+        """CALL connected_components() YIELD id, component
+          |WITH component, count(*) AS sz
+          |RETURN count(*) AS n_components, max(sz) AS largest,
+          |       sum(sz) AS n_docs""".stripMargin))
     }),
 
     "p_simhash" -> ((s, dir) =>
@@ -1278,19 +1278,19 @@ object SparkEntry {
       val filtered = t(s, dir, "documents")
         .filter(TextOps.langId(col("text")) === "en")
         .filter(TextOps.tokenCount(col("text")) >= 10)
-      // persisted: the filtered+deduped corpus feeds the LSH pipeline,
-      // the final anti-join AND the survivor stats — without the cache
-      // each consumer re-runs the scan + language/length filters + the
-      // md5 dedup shuffle
-      val exact = Dedup.dedupExact(filtered, "text", "doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // pinned: the filtered+deduped corpus feeds the LSH pipeline, the
+      // final anti-join AND the survivor stats — without the pin each
+      // consumer re-runs the scan + language/length filters + the md5
+      // dedup shuffle; the result holds the pin until it is dropped
+      val pins = new graft.graph.Pins(s)
+      val exact = pins.pin(Dedup.dedupExact(filtered, "text", "doc_id"))._1
       val pairs = Dedup.minhashLsh(exact, "text", "doc_id",
         shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.3)
       val dropIds = Dedup.dupClusters(pairs)
         .filter(col("id") =!= col("rep")).select(col("id").as("doc_id"))
       val kept = exact.join(dropIds, Seq("doc_id"), "left_anti")
-      kept.agg(count(lit(1)).as("n_kept"),
-        sum(TextOps.tokenCount(col("text")).cast(LongType)).as("total_tokens"))
+      pins.handOff(kept.agg(count(lit(1)).as("n_kept"),
+        sum(TextOps.tokenCount(col("text")).cast(LongType)).as("total_tokens")))
     }),
 
     // scalar projection of the decoded features: the driver's compare

@@ -48,9 +48,10 @@ final class Planner(
       // spill/shuffle sizes) — the Spark analogue of EXPLAIN ANALYZE's
       // per-node actual rows/time.
       import spark.implicits._
-      // procedure gates (driver endgame vs distributed) fire while the
-      // inner query PLANS — clear the journal first so the decision
-      // lines below belong to exactly this query
+      // procedure gates (driver endgame vs distributed) and edge-scan
+      // predicate pushes are journaled while the inner query PLANS —
+      // clear the journal first so the decision lines below belong to
+      // exactly this query
       graft.graph.GraphAlgos.clearPathDecisions(spark)
       val df = plan(inner)
       val base =
@@ -63,7 +64,8 @@ final class Planner(
         }
       // surface which regime each CALL procedure took and the measured
       // gate values — at bench scale an endgame's LocalTableScan says
-      // nothing about the distributed plan that WOULD run at scale
+      // nothing about the distributed plan that WOULD run at scale — and
+      // which predicates reached an edge scan
       val decisions = graft.graph.GraphAlgos.recentPathDecisions(spark)
       val decLines =
         if (decisions.isEmpty) Seq.empty[String]
@@ -526,18 +528,15 @@ final class Planner(
   private def vleIterative(
       base: DataFrame, v: String, seed: Option[DataFrame],
       wantInterior: Boolean = false): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // pin = persist + replace the logical plan with the materialized-RDD
-    // leaf. Without the leaf swap each level's plan nests the whole
-    // previous lineage, so the union's plan (and every explain/event-log
-    // string of it) grows superlinearly with depth — a depth-11 expansion
-    // OOMed the driver building the plan string. With it every frontier
-    // is O(1) plan nodes; the cost is one codegen boundary per level,
-    // which the per-level shuffle already imposes anyway.
-    def pin(df: DataFrame): DataFrame = {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      p.sparkSession.createDataFrame(p.rdd, p.schema)
-    }
+    // each level is pinned (graft.graph.Pins): the next level's join
+    // reads a materialized-RDD leaf, not the whole previous lineage, so
+    // every frontier is O(1) plan nodes — without the leaf the union's
+    // plan (and every explain/event-log string of it) grows
+    // superlinearly with depth, and a depth-11 expansion OOMed the
+    // driver building the plan string. The pin counts the level in its
+    // own job; the paths read the levels lazily and hold their pins
+    // until the paths are dropped.
+    val pins = new graft.graph.Pins(spark)
     val e = base.select(col("id").as("__eid"), col("start_id").as("__s"),
       col("end_id").as("__t"))
     val first = seed match {
@@ -547,28 +546,26 @@ final class Planner(
     }
     def withInt(cols: Seq[Column], ic: => Column): Seq[Column] =
       if (wantInterior) cols :+ ic.as(nintCol(v)) else cols
-    var frontier = pin(first.select(withInt(Seq(
+    var (frontier, n) = pins.pin(first.select(withInt(Seq(
       array(col("__eid")).as(idsCol(v)), lit(1L).as(hopsCol(v)),
       col("__s").as(startCol(v)), col("__t").as(endCol(v))),
       array().cast("array<long>")): _*))
     var acc = Vector(frontier)
-    var n = frontier.count()
     var k = 1
     while (n > 0 && k < 1000) { // pathological-explosion hard stop
       // the previous endpoint becomes an interior node of the extension
-      val next = pin(frontier.join(e, col(endCol(v)) === col("__s") &&
+      val (next, m) = pins.pin(frontier.join(e, col(endCol(v)) === col("__s") &&
           !array_contains(col(idsCol(v)), col("__eid")))
         .select(withInt(Seq(
           concat(col(idsCol(v)), array(col("__eid"))).as(idsCol(v)),
           (col(hopsCol(v)) + 1).as(hopsCol(v)),
           col(startCol(v)), col("__t").as(endCol(v))),
           concat(col(nintCol(v)), array(col(endCol(v))))): _*))
-      n = next.count()
-      if (n > 0) acc :+= next
-      frontier = next
+      if (m > 0) acc :+= next else pins.release(next)
+      frontier = next; n = m
       k += 1
     }
-    acc.reduce(_ unionByName _)
+    pins.handOff(acc.reduce(_ unionByName _))
   }
 
   /** Edge frame for variable-length traversal with the pattern's
@@ -606,8 +603,8 @@ final class Planner(
             val c = exprc.compile(substVar(pr, x, ev),
               Scope(df, Vector(EdgeB(ev, decoded))))
             val f = df.filter(if (keepTrue) c else c <=> lit(false))
-            Planner.notePush(
-              s"$x: $pr ${if (keepTrue) "IS TRUE" else "IS FALSE"}")
+            graft.graph.GraphAlgos.recordPath(spark,
+              s"edge push: $x: $pr ${if (keepTrue) "IS TRUE" else "IS FALSE"}")
             edgePredApplied.add(t)
             f
           } catch { case _: Exception => edgePredSkipped.add(t); df }
@@ -1087,7 +1084,7 @@ final class Planner(
     fullyPushedConjuncts.forEach { (conj, t) =>
       if (edgePredApplied.contains(t) && !edgePredSkipped.contains(t)) {
         elidedConjuncts.add(conj)
-        Planner.notePush(s"post-join re-apply elided: $conj")
+        graft.graph.GraphAlgos.recordPath(spark, s"edge push: post-join re-apply elided: $conj")
       }
     }
     var (pdf, pbind) = (plans.head.df, plans.head.bindings)
@@ -2996,22 +2993,6 @@ final class Planner(
   * sql/age_query.sql:49-54).
   */
 object Planner {
-  /** Diagnostic trail of edge-scan predicate pushes actually APPLIED by
-    * the most recent traversal plans (spec/EXPLAIN hook, not API) —
-    * lets a test distinguish a partially-pushed mixed body from an
-    * unpushed one without depending on eagerly-materialized VLE plan
-    * strings. Bounded, thread-confined to the planning thread. */
-  private val edgePushTrail = new ThreadLocal[
-      scala.collection.mutable.ArrayBuffer[String]] {
-    override def initialValue() =
-      scala.collection.mutable.ArrayBuffer.empty[String]
-  }
-  private[cypher] def notePush(line: String): Unit = {
-    val b = edgePushTrail.get; b += line; if (b.length > 64) b.remove(0)
-  }
-  private[graft] def clearEdgePushes(): Unit = edgePushTrail.get.clear()
-  private[graft] def recentEdgePushes(): Seq[String] = edgePushTrail.get.toSeq
-
   /** Hard cap on the distinct-key probe behind `SET n = <runtime map>`.
     * Each key becomes a typed property column, so key cardinality IS
     * schema width — a pathological map (e.g. user-id-keyed) must fail

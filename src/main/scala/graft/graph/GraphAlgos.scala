@@ -1,10 +1,8 @@
 package graft.graph
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FrameBridge
 import org.apache.spark.storage.StorageLevel
@@ -85,114 +83,6 @@ object GraphAlgos {
       g.vertexLabels.map(l => l.copy(df = FrameBridge.rebind(s, l.df))),
       g.edgeLabels.map(l => l.copy(df = FrameBridge.rebind(s, l.df))))))
 
-  /** Reliable checkpoints need storage EVERY executor can read back.
-    * In local mode a driver temp dir (cleaned on JVM exit) is that; on
-    * a cluster an executor-local /tmp is NOT — there the default
-    * derives from the warehouse dir, which sits on the shared
-    * filesystem (HDFS/S3) in any real deployment. A caller with a
-    * better location just sets the dir up front. */
-  private def ensureCheckpointDir(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    if (sc.getCheckpointDir.isEmpty) {
-      if (sc.isLocal) {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-ckpt")
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          try {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(tmp).iterator().asScala.toSeq
-              .reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-          } catch { case _: Exception => () }))
-        sc.setCheckpointDir(tmp.toString)
-      } else {
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        sc.setCheckpointDir(s"$wh/_graft_checkpoints")
-      }
-    }
-  }
-
-  private def deleteCheckpointFile(spark: SparkSession, path: String): Unit =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    } catch { case _: java.io.IOException => () } // best-effort: an
-      // undeletable file degrades to the pre-cleanup behavior (session-
-      // lifetime footprint), never to a wrong answer
-
-  /** Rows of `rdd`, or with `flag` ≥ 0 its rows true in that boolean
-    * column, in one job with no shuffle. */
-  private def countRows(rdd: RDD[InternalRow], flag: Int): Long =
-    rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
-      var n = 0L
-      while (it.hasNext) { val r = it.next(); if (flag < 0 || r.getBoolean(flag)) n += 1 }
-      n
-    }).sum
-
-  /** Per-call ledger of a distributed arm's pins. [[pin]] computes a
-    * frame once into a persisted RDD behind a `LogicalRDD` leaf
-    * ([[FrameBridge.leaf]]) and counts it in the same job; [[release]]
-    * drops a pin the moment its last reader is done (betweenness's
-    * backward sweep reads each BFS level exactly once); [[finish]]
-    * materializes the arm's result, then drops every pin left. So a
-    * call's peak footprint is its live working set, and nothing but the
-    * result outlives the call: no cached block, no CacheManager entry,
-    * no checkpoint file.
-    *
-    * The leaf keeps the LOGICAL plan O(1) per round, but the RDD lineage
-    * still nests one level per pin, and a few hundred levels overflowed
-    * task (de)serialization; so every 16th pin also writes a
-    * reliable checkpoint — the standard periodic barrier of iterative
-    * Spark algorithms, and their fault-recovery point — from the cached
-    * blocks, without recomputing the lineage. Reliable-checkpoint files
-    * are deleted with their pin: Spark's own cleanup
-    * (spark.cleaner.referenceTracking.cleanCheckpoints) applies only at
-    * RDD GC, defaults OFF, and must be set before context start — a
-    * long-lived session would accumulate every call's files (~10 GB per
-    * betweenness call at 100×/S=8) until shutdown (r11 ADVICE). */
-  private final class Pins(spark: SparkSession) {
-    private val live = scala.collection.mutable.LinkedHashSet.empty[RDD[InternalRow]]
-    private var n = 0
-
-    /** `df` pinned, and its rows — or its rows true in the boolean column
-      * `flag` — counted in the pin's own job. `partitioned` marks a frame
-      * hash-partitioned on purpose ([[FrameBridge.leaf]]); `filesOnly`
-      * pins write a reliable checkpoint and drop their blocks once it is
-      * written. */
-    def pin(df: DataFrame, flag: String = "",
-        level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-        partitioned: Boolean = false, filesOnly: Boolean = false): (DataFrame, Long) = {
-      n += 1
-      val rdd = df.queryExecution.toRdd.map(_.copy()).persist(level)
-      if (filesOnly || n % 16 == 0) { ensureCheckpointDir(spark); rdd.checkpoint() }
-      live += rdd
-      val rows = countRows(rdd, if (flag.isEmpty) -1 else df.schema.fieldIndex(flag))
-      if (filesOnly) rdd.unpersist(false)
-      (FrameBridge.leaf(df, rdd, partitioned), rows)
-    }
-
-    /** Drops the pin behind `leaf`, a frame [[pin]] returned. */
-    def release(leaf: DataFrame): Unit = leaf.queryExecution.analyzed match {
-      case r: LogicalRDD if live.remove(r.rdd) => drop(r.rdd)
-      case _ => ()
-    }
-
-    /** Drops every pin. */
-    def releaseAll(): Unit = { live.foreach(drop); live.clear() }
-
-    /** `result` computed once into a locally checkpointed leaf, which
-      * reads no pin, and then every pin dropped. */
-    def finish(result: DataFrame): DataFrame = {
-      val rdd = result.queryExecution.toRdd.map(_.copy()).localCheckpoint()
-      countRows(rdd, -1)
-      releaseAll()
-      FrameBridge.leaf(result, rdd)
-    }
-
-    private def drop(rdd: RDD[InternalRow]): Unit = {
-      rdd.unpersist(false)
-      rdd.getCheckpointFile.foreach(deleteCheckpointFile(spark, _))
-    }
-  }
-
   /** Storage level for scale-pressured pins, derived from the frame's
     * MEASURED row bound the way exchange width already is: deserialized
     * MEMORY_AND_DISK below 50M rows (zero per-read cost — every bench-
@@ -272,8 +162,10 @@ object GraphAlgos {
   }
 
   /** Path-decision journal for EXPLAIN: every algorithm gate records
-    * the path it took and the MEASURED gate values (ring-bounded;
-    * cleared by the Cypher EXPLAIN entry before planning). Motivation:
+    * the path it took and the MEASURED gate values, and the Cypher
+    * planner each edge-scan predicate push it applied (`edge push:`
+    * lines; ring-bounded; cleared by the Cypher EXPLAIN entry before
+    * planning). Motivation:
     * at bench scale most procedures finish in a driver endgame whose
     * LocalTableScan plan says nothing about the distributed plan that
     * WOULD run at scale — a user profiling a slow 10× call needs the
@@ -295,7 +187,7 @@ object GraphAlgos {
     pathDecisions.get.remove(spark)
   private[graft] def recentPathDecisions(spark: SparkSession): Seq[String] =
     Option(pathDecisions.get.get(spark)).map(_.toSeq).getOrElse(Nil)
-  private def recordPath(spark: SparkSession, line: String): Unit = {
+  private[graft] def recordPath(spark: SparkSession, line: String): Unit = {
     val buf = pathDecisions.get.computeIfAbsent(spark,
       _ => scala.collection.mutable.ArrayBuffer.empty[String])
     buf += line; if (buf.length > 64) buf.remove(0)
@@ -861,58 +753,43 @@ object GraphAlgos {
     *      the vertex closure (dangling endpoints included) with 0 for
     *      triangle-free vertices. */
   private[graph] def trianglesDistributed(g: PropertyGraph): DataFrame = {
-    val (res, e1, o) = trianglesDistributedFrames(g)
-    // eager localCheckpoint materializes the result ONCE (reading the
-    // e1/o caches) and detaches its lineage, so BOTH intermediates AND
-    // the result pin can be dropped before returning — the hits()
-    // cleanup idiom. A bare persist here leaked a vertex-sized
-    // MEMORY_AND_DISK frame per at-scale call for the session
-    // lifetime; checkpoint blocks are GC-reclaimed with the RDD.
-    val out = res.localCheckpoint(true)
-    res.unpersist(false)
-    e1.unpersist(false)
-    o.unpersist(false)
-    out
+    val pins = new Pins(g.spark)
+    pins.finish(trianglesDistributedPlan(g, pins))
   }
 
-  /** The lazy plan plus its two pinned intermediates — split out so
-    * specs can assert the physical shape (no nested-loop join, no
+  /** The lazy plan over its two intermediates, pinned in `pins` — split
+    * out so specs can assert the physical shape (no nested-loop join, no
     * cartesian) before materialization. */
-  private[graph] def trianglesDistributedFrames(g: PropertyGraph)
-      : (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
+  private[graph] def trianglesDistributedPlan(g: PropertyGraph, pins: Pins): DataFrame = {
     val spark = g.spark
     val parts = spark.sessionState.conf.numShufflePartitions
     val ed = g.allEdges.select(col("start_id").as("a"), col("end_id").as("b"))
       .filter(col("a") =!= col("b"))
-    val e1 = ed.select(least(col("a"), col("b")).as("lo"),
+    val (e1, nE1) = pins.pin(ed.select(least(col("a"), col("b")).as("lo"),
         greatest(col("a"), col("b")).as("hi"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // the wedge pipeline's width is derived from MEASURED edge count,
     // not inherited from the session: the wedge frame amplifies each
     // edge by its low end's out-degree, so a small session width
     // (bench pins 32) puts multi-GB partitions through the sorts —
     // measured: 136M edges at width 32 OOMs an 8 GB driver, while
-    // ~2M edges/partition completes in the same heap. The count also
-    // materializes e1's cache before triple reuse.
-    val nE1 = e1.count()
+    // ~2M edges/partition completes in the same heap. The pin counts
+    // e1 in the job that computes it.
     val width = math.min(2048L, math.max(parts.toLong, nE1 / 2000000L + 1)).toInt
     val deg = e1.select(col("lo").as("v")).unionAll(e1.select(col("hi").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
     val withD = e1
       .join(deg.select(col("v").as("lo"), col("d").as("dlo")), Seq("lo"))
       .join(deg.select(col("v").as("hi"), col("d").as("dhi")), Seq("hi"))
-    val o = withD.select(
+    val o = pins.pin(withD.select(
         when(col("dlo") < col("dhi") ||
             (col("dlo") === col("dhi") && col("lo") < col("hi")),
           struct(col("lo").as("x"), col("hi").as("y")))
           .otherwise(struct(col("hi").as("x"), col("lo").as("y"))).as("e"))
       .select(col("e.x").as("x"), col("e.y").as("y"))
-      .repartition(width, col("x"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // both join inputs share the HashPartitioning(x) of the cached
-    // frame, so the wedge self-join adds sorts but no exchange
+      .repartition(width, col("x")), partitioned = true)._1
+    // both join inputs share the HashPartitioning(x) the pinned leaf
+    // keeps, so the wedge self-join adds sorts but no exchange
     val w = o.select(col("x"), col("y").as("p"))
       .join(o.select(col("x"), col("y").as("q")), Seq("x"))
       .filter(col("p") < col("q"))
@@ -929,10 +806,8 @@ object GraphAlgos {
       .unionAll(ed.select(col("a").as("id")))
       .unionAll(ed.select(col("b").as("id")))
       .distinct()
-    val res = verts.join(cnt, Seq("id"), "left")
+    verts.join(cnt, Seq("id"), "left")
       .select(col("id"), coalesce(col("triangles"), lit(0L)).as("triangles"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (res, e1, o)
   }
 
   /** Driver-local hop distances to `landmark`: one BFS from the

@@ -4,12 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FrameBridge
 import org.apache.spark.sql.types._
 
-import graft.graph.GraphAlgos
+import graft.graph.{GraphAlgos, Pins}
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -174,10 +173,12 @@ object Dedup {
         maxBucketSize)
     }
     def distributed(): DataFrame = {
-      val sigs = sigTable(df, textCol, idCol, shingleK, numHashes)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pinUntilDropped(verifyPairs(bucketPairs(bandedRows(sigs, bands, rowsPerBand),
-        maxBucketSize), sigs, sigs, threshold), sigs)
+      // the pairs hold the signature table until they are dropped, or
+      // until dupClusters has consumed them
+      val pins = new Pins(spark)
+      val sigs = pins.pin(sigTable(df, textCol, idCol, shingleK, numHashes))._1
+      pins.handOff(verifyPairs(bucketPairs(bandedRows(sigs, bands, rowsPerBand),
+        maxBucketSize), sigs, sigs, threshold))
     }
     GraphAlgos.Endgame[InternalRow](spark, "minhash_lsh", schema.fieldNames.toSeq, rows,
       () => kernel.work, detail, () => kernel.pairs(threshold, toId.get),
@@ -300,25 +301,6 @@ object Dedup {
     }
   }
 
-  /** Marks the signature table a distributed [[minhashLsh]] result
-    * reads. The table is unpersisted when [[dupClusters]] consumes the
-    * result (see [[releaseSignatures]]) or, for any other caller, once
-    * the result's analyzed plan — which every frame derived from it
-    * holds — is garbage-collected. */
-  private val SigPin = TreeNodeTag[java.lang.ref.Cleaner.Cleanable]("graft.minhashSignatures")
-  private lazy val pinCleaner = java.lang.ref.Cleaner.create()
-
-  private def pinUntilDropped(pairs: DataFrame, sigs: DataFrame): DataFrame = {
-    val plan = pairs.queryExecution.analyzed
-    plan.setTagValue(SigPin, pinCleaner.register(plan, () => sigs.unpersist(false)))
-    pairs
-  }
-
-  /** Unpersists the signature table `pairs` pins, if it is a
-    * distributed [[minhashLsh]] result. */
-  private[graft] def releaseSignatures(pairs: DataFrame): Unit =
-    pairs.queryExecution.analyzed.getTagValue(SigPin).foreach(_.clean())
-
   /** Per-document signature table (__id, __set, __n, __mins).
     *
     * ZERO-shuffle signature build: fused native kernels compute each
@@ -417,16 +399,14 @@ object Dedup {
     * min-label rounds ([[GraphAlgos.minRelaxed]]) over the pairs in both
     * directions. Pairs already on the driver — a LocalRelation such as
     * [[minhashLsh]]'s local result — are read straight from the plan:
-    * no job. Any other pair frame is persisted for the call, so one
-    * count() feeds the gate and the endgame's collect reads the cache. A
-    * distributed [[minhashLsh]] result's signature table is released on
-    * the way out. */
+    * no job. Any other pair frame is pinned for the call, so the gate's
+    * count() and the endgame's collect read the pin. A distributed
+    * [[minhashLsh]] result's signature table is released on the way out. */
   def dupClusters(pairs: DataFrame): DataFrame = {
     val p = pairs.select(col("id_a"), col("id_b"))
-    val pin = if (driverRows(p).isEmpty)
-      Some(p.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) else None
-    try GraphAlgos.run(dupClustersArms(pin.getOrElse(p)))
-    finally { pin.foreach(_.unpersist(false)); releaseSignatures(pairs) }
+    val pins = new Pins(pairs.sparkSession)
+    try GraphAlgos.run(dupClustersArms(if (driverRows(p).isEmpty) pins.pin(p)._1 else p))
+    finally { pins.releaseAll(); Pins.releaseResult(pairs) }
   }
 
   /** [[dupClusters]]' two arms; `rows` is the pair count — the length of

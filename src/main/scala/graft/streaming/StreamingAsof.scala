@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.graph.Pins
 import graft.pipeline.TimeSeries
 
 /** Online backward as-of enrichment: a stream of "left" rows (e.g.
@@ -49,13 +49,12 @@ final class StreamingAsof(
 
   private val stateCols = (keys ++ Seq(tsCol, tieCol) ++ payloadCols).distinct
 
-  @volatile private var state: Option[DataFrame] = None
-  // the persisted frame behind the RDD-leaf `state` wrapper — cached
-  // blocks belong to THIS Dataset, so it is the unpersist handle
-  private var persisted: Option[DataFrame] = None
+  // the state pinned (an RDD leaf, so plan depth stays O(1) in
+  // batches) in its own ledger, which the next batch's output takes
+  @volatile private var state: Option[(Pins, DataFrame)] = None
 
   /** Latest-right-per-key state snapshot (empty before any batch). */
-  def stateSnapshot: Option[DataFrame] = state
+  def stateSnapshot: Option[DataFrame] = state.map(_._2)
 
   /** Enrich one micro-batch of left rows against the rights seen so
     * far (previous batches' state + this batch's rights), then absorb
@@ -64,7 +63,7 @@ final class StreamingAsof(
     * [[TimeSeries.asofJoinBackward]]). */
   def processBatch(left: DataFrame, right: DataFrame): DataFrame = {
     val r = right.select(stateCols.map(col): _*)
-    val visible = state.fold(r)(st => st.unionByName(r))
+    val visible = state.fold(r)(_._2.unionByName(r))
     val out = TimeSeries.asofJoinBackward(
       left, visible, keys, tsCol, tsCol, payloadCols, tieCol)
     // state compaction: per-key latest by (ts, tie) — ONE map-side-
@@ -79,17 +78,12 @@ final class StreamingAsof(
       .agg(max(packed).as("__top"))
       .select(keys.map(col) ++
         stateCols.filterNot(keys.contains).map(c => col(s"__top.$c").as(c)): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    nextState.count()
-    // pin to an RDD leaf so plan depth stays O(1) in batches, then
-    // release the previous state's cache
-    persisted.foreach(_.unpersist(false))
-    persisted = Some(nextState)
-    state = Some(spark.createDataFrame(nextState.rdd, nextState.schema))
-    out
+    val pins = new Pins(spark)
+    val previous = state
+    state = Some(pins -> pins.pin(nextState)._1)
+    // `out` reads the previous state lazily, so it holds that pin
+    previous.fold(out)(_._1.handOff(out))
   }
 
-  def reset(): Unit = {
-    persisted.foreach(_.unpersist(false)); persisted = None; state = None
-  }
+  def reset(): Unit = { state.foreach(_._1.releaseAll()); state = None }
 }

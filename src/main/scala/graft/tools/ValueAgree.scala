@@ -225,7 +225,7 @@ object ValueAgree {
         val agg = (aggRow.getLong(0), aggRow.getLong(1))
         clusters.unpersist(false)
         pairs.unpersist(false)
-        Dedup.releaseSignatures(pairs)
+        graft.graph.Pins.releaseResult(pairs)
         exact.unpersist(false)
         (cl, agg)
       }

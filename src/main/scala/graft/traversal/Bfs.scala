@@ -2,18 +2,21 @@ package graft.traversal
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graft.FrameBridge
+
+import graft.graph.Pins
 
 /** Distributed BFS shortest paths over an edge frame — the Spark
   * re-expression of the reference's in-backend BFS
   * (reference: sp_run_bfs, src/backend/utils/adt/age_vle.c:2983; frontier
   * queue :2823-2846; allshortestpaths DAG walk :3225-3266).
   *
-  * Driver-side loop, executor-side work: each iteration is one join +
-  * anti-join; the frontier and visited set are hash-partitioned on the
-  * source id so every expansion is a co-partitioned shuffle. Early-stops
-  * on empty frontier. Paths are edge-id arrays (edge-isomorphic by
-  * construction since BFS never revisits a vertex per source).
+  * Driver-side loop, executor-side work: each iteration joins the
+  * frontier to the edges on its current vertex, then anti-joins the
+  * visited set on (source, vertex); both frames are pinned per level.
+  * Early-stops on empty frontier. Paths are edge-id arrays
+  * (edge-isomorphic by construction since BFS never revisits a vertex
+  * per source).
   */
 object Bfs {
 
@@ -167,104 +170,82 @@ object Bfs {
       if (maxPaths != DefaultMaxPaths) maxPaths
       else spark.conf.getOption("spark.graft.traversal.maxPaths")
         .map(_.toLong).getOrElse(maxPaths)
-    // pin = persist + swap the logical plan for the materialized-RDD
-    // leaf. Iterative joins otherwise nest the full lineage per level
-    // and the plan (and its explain/event-log string) grows
-    // superlinearly with depth — see Planner.vleIterative. The persist
-    // HANDLE is kept alongside so levels can still be unpersisted.
-    def pin(df: DataFrame): (DataFrame, DataFrame) = {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      (p.sparkSession.createDataFrame(p.rdd, p.schema), p)
+    // every frame the loop reuses is pinned (graft.graph.Pins): the next
+    // level reads a materialized-RDD leaf, not the whole lineage, so the
+    // plan stays O(1) per level, and each pin counts its rows in its own
+    // job. The edge and target pins carry their row counts as size
+    // estimates, so a small side still broadcasts.
+    val pins = new Pins(spark)
+    def pinSized(df: DataFrame): (DataFrame, Long) = {
+      val (leaf, rows) = pins.pin(df)
+      (FrameBridge.withRowCount(leaf, rows), rows)
     }
-    val e = edges.select(col("id").as("__eid"), col("start_id"), col("end_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val tgt = targets.select(col("id").as("__t")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (e, _) = pinSized(edges.select(col("id").as("__eid"), col("start_id"), col("end_id")))
+    val (tgt, nTgt) = pinSized(targets.select(col("id").as("__t")).distinct())
+    // __hit marks a row whose vertex is a target, so a frontier's pin
+    // counts its hits in the job that computes it
+    def flagged(df: DataFrame): DataFrame =
+      df.join(tgt.select(col("__t"), lit(true).as("__hit")), col("__cur") === col("__t"), "left")
+        .select(df.columns.map(col) :+ coalesce(col("__hit"), lit(false)).as("__hit"): _*)
 
-    var (frontier, frontierH) = pin(
+    val (start, nSrc, selfHits) = pins.pinCounts(flagged(
       sources.select(col("id").as("__src") +: col("id").as("__cur") +:
         array().cast("array<long>").as("__eids") +:
-        (if (withNodes) Seq(array(col("id")).as("__nids")) else Nil): _*).distinct())
-    var (visited, visitedH) = pin(frontier.select("__src", "__cur"))
-    var results: DataFrame = null
-    // (src, dst) pairs already resolved (for all=false early pruning)
-    var resolved: DataFrame = null
+        (if (withNodes) Seq(array(col("id")).as("__nids")) else Nil): _*).distinct()), "__hit")
+    var frontier = start
+    var visited = start.select("__src", "__cur")
     // early exit for all=false: once every (source, target) pair has a
     // result there is nothing left to find — stop instead of expanding
     // the frontier to exhaustion/maxDepth (a selective target set on a
     // big graph otherwise wastes every level after the last answer).
     // (src, src) pairs can never resolve (the source starts visited), so
     // they're excluded from the expectation.
-    val expectedPairs: Long = if (all) Long.MaxValue else {
-      val nSrc = frontier.count()
-      val nTgt = tgt.count()
-      val selfPairs = frontier.select("__src")
-        .join(tgt, col("__src") === col("__t")).count()
-      nSrc * nTgt - selfPairs
-    }
-    var resolvedCount = 0L
+    val expectedPairs = if (all) Long.MaxValue else nSrc * nTgt - selfHits
+    // each level's hits are read lazily from its pinned frontier, which
+    // the result then holds; a level without hits is released
+    var hits = Vector.empty[DataFrame]
+    var found = 0L
+    var frontierHits = 0L // the start frontier's flags count only selfHits
 
     var depth = 0
     var done = false
     while (!done && depth < maxDepth) {
       depth += 1
-      var expanded0 = frontier
+      val step = frontier
         .join(e, col("__cur") === col("start_id"))
         .select(col("__src") +: col("end_id").as("__cur") +:
           concat(col("__eids"), array(col("__eid"))).as("__eids") +:
           (if (withNodes) Seq(concat(col("__nids"), array(col("end_id"))).as("__nids"))
            else Nil): _*)
-        // never revisit a vertex per source (BFS level sets)
+        // never revisit a vertex per source (BFS level sets); a pair
+        // resolved at an earlier level is visited, so it never hits again
         .join(visited, Seq("__src", "__cur"), "left_anti")
-      if (!all)
-        expanded0 = expanded0.dropDuplicates("__src", "__cur")
-      val (expanded, expandedH) = pin(expanded0)
-
-      var hits = expanded.join(tgt, col("__cur") === col("__t")).drop("__t")
-        .withColumn("__hops", lit(depth))
-      if (!all && resolved != null)
-        hits = hits.join(resolved, Seq("__src", "__cur"), "left_anti")
-      val (hitsMat, _) = pin(hits)
-      val nHits = hitsMat.count()
+      val (expanded, n, nHits) = pins.pinCounts(
+        flagged(if (all) step else step.dropDuplicates("__src", "__cur")), "__hit")
       if (nHits > 0) {
-        results = if (results == null) hitsMat else results.unionByName(hitsMat)
-        if (all) {
-          val total = results.count()
-          require(total <= pathCap,
-            s"allshortestpaths exceeded $pathCap materialized paths")
-        } else {
-          resolvedCount += nHits
-          val newResolved = hitsMat.select("__src", "__cur")
-          resolved = if (resolved == null) newResolved
-            else {
-              val (r, _) = pin(resolved.unionByName(newResolved))
-              r
-            }
-        }
+        hits :+= expanded.filter(col("__hit")).withColumn("__hops", lit(depth))
+        found += nHits
+        if (all && found > pathCap) pins.releaseAll()
+        require(!all || found <= pathCap,
+          s"allshortestpaths exceeded $pathCap materialized paths")
       }
-
-      if (!all && resolvedCount >= expectedPairs) {
-        // every (source, target) pair answered — stop before paying for
-        // another level of expansion
-        expandedH.unpersist(false)
-        frontierH.unpersist(false)
-        visitedH.unpersist(false)
-        done = true
-      } else {
-        val (newVisited, newVisitedH) = pin(
-          visited.unionByName(expanded.select("__src", "__cur")).distinct())
-        val frontierEmpty = expanded.limit(1).count() == 0
-        frontierH.unpersist(false)
-        visitedH.unpersist(false)
-        frontier = expanded; frontierH = expandedH
-        visited = newVisited; visitedH = newVisitedH
-        if (frontierEmpty) done = true
+      // stop on an empty frontier, or once every (source, target) pair
+      // is answered — before paying for another level of expansion
+      done = n == 0 || found >= expectedPairs
+      if (!done) {
+        val next = pins.pin(
+          visited.unionByName(expanded.select("__src", "__cur")).distinct())._1
+        pins.release(visited)
+        visited = next
       }
+      if (frontierHits == 0) pins.release(frontier)
+      frontier = expanded; frontierHits = nHits
     }
     lastDepthExecuted = depth
-    e.unpersist(false)
+    Seq(e, tgt, visited).foreach(pins.release)
+    if (frontierHits == 0) pins.release(frontier)
     val out =
-      if (results == null) {
+      if (hits.isEmpty) {
         import org.apache.spark.sql.types._
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
           StructType(Seq(
@@ -273,9 +254,9 @@ object Bfs {
             StructField("__eids", ArrayType(LongType)),
             StructField("__hops", IntegerType)) ++
             (if (withNodes) Seq(StructField("__nids", ArrayType(LongType))) else Nil)))
-      } else results
-    out.select(col("__src").as("src_id") +: col("__cur").as("dst_id") +:
+      } else hits.reduce(_ unionByName _)
+    pins.handOff(out.select(col("__src").as("src_id") +: col("__cur").as("dst_id") +:
       col("__eids").as("edge_ids") +: col("__hops").cast("long").as("hops") +:
-      (if (withNodes) Seq(col("__nids").as("node_ids")) else Nil): _*)
+      (if (withNodes) Seq(col("__nids").as("node_ids")) else Nil): _*))
   }
 }

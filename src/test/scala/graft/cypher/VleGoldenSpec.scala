@@ -1,7 +1,7 @@
 package graft.cypher
 
 import graft.SparkTestBase
-import graft.graph.MutableGraph
+import graft.graph.{GraphAlgos, MutableGraph}
 
 /** The reference's VLE regression graph with its exact golden path
   * counts (reference: regress/sql/cypher_vle.sql:32-121 and
@@ -33,6 +33,10 @@ class VleGoldenSpec extends SparkTestBase {
 
   def count(q: String): Long =
     Cypher.execute(spark, g, q).collect()(0).getLong(0)
+
+  /** The edge-push lines the planner journaled since the last clear. */
+  private def pushes(): Seq[String] =
+    GraphAlgos.recentPathDecisions(spark).filter(_.startsWith("edge push: "))
 
   test("unbounded directed begin->end finds 400 paths (cypher_vle.sql:78-82)") {
     assert(count("MATCH (u:begin)-[*]->(v:end) RETURN count(*) AS n") === 400L)
@@ -220,12 +224,12 @@ class VleGoldenSpec extends SparkTestBase {
     // all(p AND q) with q referencing the source var: p pushes alone
     // (an edge failing p fails the conjunction — row-reduction only),
     // q stays in the post-join re-application of the full body
-    Planner.clearEdgePushes()
+    GraphAlgos.clearPathDecisions(spark)
     val mixed = count(
       "MATCH (u:begin)-[r*]->(v:end) " +
         "WHERE all(x IN r WHERE x.number <= 2 AND id(u) > -900000000) " +
         "RETURN count(*) AS n")
-    val mixedPushes = Planner.recentEdgePushes()
+    val mixedPushes = pushes()
     assert(mixedPushes.exists(_.contains("number")),
       s"expected the pushable conjunct at the edge scan, saw: $mixedPushes")
     assert(!mixedPushes.exists(_.contains("Var(u)")),
@@ -235,23 +239,32 @@ class VleGoldenSpec extends SparkTestBase {
       "MATCH (u:begin)-[r*]->(v:end) WHERE all(x IN r WHERE x.number <= 2) " +
         "RETURN count(*) AS n"))
     // a fully-unpushable body applies nothing at the scan
-    Planner.clearEdgePushes()
+    GraphAlgos.clearPathDecisions(spark)
     count("MATCH (u:begin)-[r*]->(v:end) " +
       "WHERE all(x IN r WHERE x.number <= 2 OR id(u) < -900000000) " +
       "RETURN count(*) AS n")
-    assert(Planner.recentEdgePushes().isEmpty)
+    assert(pushes().isEmpty)
     // none(p OR q) with q scope-bound: p IS FALSE pushes alone (a
     // surviving path needs the whole disjunction false on every edge)
-    Planner.clearEdgePushes()
+    GraphAlgos.clearPathDecisions(spark)
     val noneMixed = count(
       "MATCH (u:begin)-[r*]->(v:end) " +
         "WHERE none(x IN r WHERE x.name <> 'main edge' OR id(u) < -900000000) " +
         "RETURN count(*) AS n")
-    assert(Planner.recentEdgePushes().exists(_.contains("name")))
+    assert(pushes().exists(_.contains("name")))
     assert(noneMixed === count(
       "MATCH (u:begin)-[r*]->(v:end) WHERE none(x IN r WHERE x.name <> 'main edge') " +
         "RETURN count(*) AS n"))
     assert(noneMixed === 1L)
+  }
+
+  test("EXPLAIN lists the edge-scan pushes with the path decisions") {
+    val lines = Cypher.execute(spark, g,
+      "EXPLAIN MATCH (u:begin)-[r*]->(v:end) WHERE all(x IN r WHERE x.number <= 2) " +
+        "RETURN count(*) AS n").collect().map(_.getString(0))
+    assert(lines.exists(_.contains("== Procedure Path Decisions ==")), lines.mkString("\n"))
+    assert(lines.exists(l => l.startsWith("- edge push: ") && l.contains("number")),
+      lines.mkString("\n"))
   }
 
   test("a WHOLLY-pushed all()/none() body elides the post-join re-apply; " +
@@ -260,30 +273,30 @@ class VleGoldenSpec extends SparkTestBase {
     // re-application (edge-entity materialization of the whole path
     // frame) is skipped — value equality with the blocked form is
     // pinned by the pushdown tests above
-    Planner.clearEdgePushes()
+    GraphAlgos.clearPathDecisions(spark)
     val full = count(
       "MATCH (u:begin)-[r*]->(v:end) WHERE all(x IN r WHERE x.number <= 2) " +
         "RETURN count(*) AS n")
-    assert(Planner.recentEdgePushes().exists(_.contains("elided")),
-      s"expected the elide note, saw: ${Planner.recentEdgePushes()}")
+    assert(pushes().exists(_.contains("elided")),
+      s"expected the elide note, saw: ${pushes()}")
     assert(full === count(
       "MATCH (u:begin)-[r*]->(v:end) " +
         "WHERE all(x IN r WHERE x.number <= 2 OR id(u) < -900000000) " +
         "RETURN count(*) AS n"))
     // mixed body: only the pushable subset reaches the scan, so the
     // full body MUST still re-apply post-join
-    Planner.clearEdgePushes()
+    GraphAlgos.clearPathDecisions(spark)
     count("MATCH (u:begin)-[r*]->(v:end) " +
       "WHERE all(x IN r WHERE x.number <= 2 AND id(u) > -900000000) " +
       "RETURN count(*) AS n")
-    assert(!Planner.recentEdgePushes().exists(_.contains("elided")))
+    assert(!pushes().exists(_.contains("elided")))
     // shortestpath never applies edge predicates at the scan
     // (pre-filtering would change which path is shortest), so nothing
     // elides and the post-filter still runs
-    Planner.clearEdgePushes()
+    GraphAlgos.clearPathDecisions(spark)
     count("MATCH p = shortestpath((u:begin)-[r*..5]->(v:end)) " +
       "WHERE all(x IN r WHERE x.number <= 2) RETURN count(*) AS n")
-    assert(!Planner.recentEdgePushes().exists(_.contains("elided")))
+    assert(!pushes().exists(_.contains("elided")))
   }
 
   test("strict predicates follow the scan-eval contract: quals may raise " +

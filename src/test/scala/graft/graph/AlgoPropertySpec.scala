@@ -534,11 +534,11 @@ class AlgoPropertySpec extends SparkTestBase {
     assert(tri.length === 5 && tri.forall(_._2 === 6L))
     // the distributed plan must be pure shuffles — the GraphX
     // implementation it replaced OOM'd on dense hubs at 10x
-    val (planDf, e1, o) = GraphAlgos.trianglesDistributedFrames(g)
-    val plan = planDf.queryExecution.executedPlan.toString
+    val pins = new Pins(spark)
+    val plan = GraphAlgos.trianglesDistributedPlan(g, pins).queryExecution.executedPlan.toString
+    pins.releaseAll()
     assert(!plan.contains("BroadcastNestedLoopJoin") &&
       !plan.contains("CartesianProduct"), plan.take(2000))
-    e1.unpersist(false); o.unpersist(false); planDf.unpersist(false)
   }
 
   test("concurrent distributed calls on one session leave its conf alone and stay correct") {

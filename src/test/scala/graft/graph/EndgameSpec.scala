@@ -257,7 +257,7 @@ class EndgameSpec extends SparkTestBase {
         df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
       val rows = exact(viaRun)
       assert(rows === exact(dist), at)
-      Dedup.releaseSignatures(dist)
+      Pins.releaseResult(dist)
       (c.name, idType, t) -> rows.map(r => (r(0).toString.toLong, r(1).toString.toLong,
         r(2).asInstanceOf[Double]))
     } }, scala.concurrent.duration.Duration.Inf).toMap
@@ -287,7 +287,7 @@ class EndgameSpec extends SparkTestBase {
     assert(GraphAlgos.recentPathDecisions(spark).last.endsWith(
       ", id type string has no local encoding)"))
     assert(out.collect().map(_.toSeq) === Array(Seq("3", "4", 0.5)))
-    Dedup.releaseSignatures(out)
+    Pins.releaseResult(out)
   }
 
   test("run gates on rows before measuring work, then on work") {
@@ -391,6 +391,7 @@ class EndgameSpec extends SparkTestBase {
       "betweenness" -> (() => GraphAlgos.betweennessArms(g, 16, 64).distributed()),
       "jaccard" -> (() => GraphAlgos.jaccardArms(g, 64, 0.0).distributed()),
       "scc" -> (() => GraphAlgos.scc(g, localRowBudget = 0L)),
+      "triangles" -> (() => GraphAlgos.triangleCountArms(g).distributed()),
       "dup_clusters" -> (() => Dedup.dupClustersArms(pairs).distributed()))
     val cache = spark.sharedState.cacheManager
     spark.catalog.clearCache()

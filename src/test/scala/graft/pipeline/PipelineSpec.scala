@@ -36,7 +36,7 @@ class PipelineSpec extends SparkTestBase {
       assert(pairs.contains((1L, 4L))) // exact dup: jaccard 1.0
       assert(pairs.contains((1L, 2L))) // near dup: one token differs
       assert(!pairs.exists { case (a, b) => a == 3L || b == 3L })
-      Dedup.releaseSignatures(out)
+      graft.graph.Pins.releaseResult(out)
     }
   }
 
@@ -147,19 +147,20 @@ class PipelineSpec extends SparkTestBase {
   }
 
   /** Runs a distributed minhashLsh result and drops it: nothing outside
-    * this frame keeps the result. */
-  private def runAndDropDistributed(): Unit = {
+    * this frame keeps the result, which holds its signature table's pin
+    * while it lives. */
+  private def runAndDropDistributed(added: => Set[Int]): Unit = {
     val out = lshArms(docs).distributed()
-    assert(out.collect().nonEmpty && !spark.sharedState.cacheManager.isEmpty)
+    assert(out.collect().nonEmpty && added.nonEmpty)
   }
 
   test("a dropped distributed minhashLsh result releases its signature table") {
-    spark.catalog.clearCache()
-    runAndDropDistributed()
-    val cache = spark.sharedState.cacheManager
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- rdds
+    runAndDropDistributed(added)
     var tries = 0
-    while (!cache.isEmpty && tries < 100) { System.gc(); Thread.sleep(100); tries += 1 }
-    assert(cache.isEmpty, s"still pinned after $tries collections")
+    while (added.nonEmpty && tries < 100) { System.gc(); Thread.sleep(100); tries += 1 }
+    assert(added.isEmpty, s"still pinned after $tries collections")
     info(s"released after $tries collections")
   }
 

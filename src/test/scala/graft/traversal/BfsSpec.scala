@@ -20,6 +20,37 @@ class BfsSpec extends SparkTestBase {
 
   private def ids(xs: Long*): DataFrame = xs.toDF("id")
 
+  test("frontier shortestPath and unbounded VLE calls leave no cached frame, " +
+      "persisted RDD or checkpoint file behind") {
+    import scala.jdk.CollectionConverters._
+    val g = graft.graph.Generators.barbellGraph(spark, 5, 10)
+    val dir = java.nio.file.Files.createTempDirectory("bfs-ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    def files = java.nio.file.Files.walk(dir).iterator().asScala.map(_.toString).toSet
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val before = files
+    // persisted RDDs of earlier suites may be cleaned meanwhile, so the
+    // RDD check is that nothing was added
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def added = spark.sparkContext.getPersistentRDDs.keySet -- rdds
+    // *..12 is deeper than the bounded enumerator takes, so the frontier
+    // loop runs, with more than 16 pins (one checkpoint)
+    for (q <- Seq(
+        "MATCH p = shortestPath((a:node)-[:edge*..12]->(b:node)) RETURN count(*) AS n",
+        "MATCH (a:node)-[:edge*]->(b:node) RETURN count(*) AS n")) {
+      for (_ <- 1 to 3)
+        assert(graft.cypher.Cypher.query(spark, g, q).collect().head.getLong(0) > 0, q)
+      assert(cache.isEmpty, s"$q cached a frame")
+    }
+    var tries = 0
+    while ((added.nonEmpty || files != before) && tries < 50) {
+      System.gc(); Thread.sleep(100); tries += 1
+    }
+    assert(added.isEmpty, s"${added.size} persisted RDDs left")
+    assert(files === before, "checkpoint files left")
+  }
+
   test("early exit: a near target stops the frontier loop at its depth") {
     val e = chain(40)
     val r = Bfs.shortestPaths(e, ids(0L), ids(1L), maxDepth = 40, all = false)
