@@ -2,7 +2,6 @@ package graft.cypher
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FrameBridge
 import org.apache.spark.sql.types._
@@ -2775,8 +2774,8 @@ final class Planner(
     * which costs a job of its own. */
   private def collectedProbe(left: DataFrame, right: DataFrame, cond: Column): DataFrame = {
     val outer = left.join(right, cond, "left_outer")
-    val local = left.queryExecution.optimizedPlan match {
-      case _: LocalRelation =>
+    val local =
+      if (DfUtils.driverHeld(left).isDefined)
         st.localBatch(left).flatMap { l =>
           val (in, _) = DfUtils.withRowNumCount(l, "__in", st.batchThreshold)
           st.localBatch(in.join(right, cond, "inner")).map { hits =>
@@ -2790,8 +2789,7 @@ final class Planner(
               DfUtils.localRows(hits) ++ DfUtils.localRows(missed)).drop("__in")
           }
         }
-      case _ => st.localBatch(outer)
-    }
+      else st.localBatch(outer)
     local.getOrElse(outer)
   }
 

@@ -66,41 +66,51 @@ object DfUtils {
     * ([[pinAndSummarize]]). */
   def pin(df: DataFrame): DataFrame = pinAndSummarize(df)(_ => ())._1
 
+  /** The relation the driver already holds for `df`: its optimized plan
+    * when that is a `LocalRelation`, read with no job. Besides frames
+    * built over driver rows, that covers a small projection, filter,
+    * aggregate, sort or limit of one, which the optimizer evaluates on
+    * the driver (graft.plans.SinglePartitionLocal). None for any other
+    * frame. */
+  def driverHeld(df: DataFrame): Option[LocalRelation] = df.queryExecution.optimizedPlan match {
+    case l: LocalRelation => Some(l)
+    case _ => None
+  }
+
   /** `df` as a frame over driver-held rows (a `LocalRelation`) when its
     * rows fit `maxBytes` at the schema's default row size; None when they
-    * do not, or when `maxBytes` ≤ 0. A frame whose optimized plan already
-    * is a `LocalRelation` is read off the plan with no job; any other is
-    * collected in one job, in which a partition ships its rows only
-    * while they fit, so the driver holds at most one budget per
-    * partition. A pinned frame whose measured row count is over budget
-    * runs no job. Rows keep their partition order. */
+    * do not, or when `maxBytes` ≤ 0. A [[driverHeld]] frame is read off
+    * the plan with no job; any other is collected in one job, in which a
+    * partition ships its rows only while they fit, so the driver holds at
+    * most one budget per partition. A pinned frame whose measured row
+    * count is over budget runs no job. Rows keep their partition order. */
   def local(df: DataFrame, maxBytes: Long): Option[DataFrame] = {
     val maxRows = if (maxBytes <= 0) -1L else maxBytes / math.max(1, df.schema.defaultSize)
-    df.queryExecution.optimizedPlan match {
-      case l: LocalRelation =>
+    driverHeld(df) match {
+      case Some(l) =>
         if (l.data.size > maxRows) None
         else Some(FrameBridge.localFrame(df.sparkSession, DataTypeUtils.fromAttributes(l.output), l.data))
-      case _ if maxRows < 0 => None
-      case r: LogicalRDD if r.stats.rowCount.exists(_ > maxRows) => None
-      case _ =>
-        val parts = summarize(df) { it =>
-          val b = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-          while (it.hasNext && b.size <= maxRows) b += it.next().copy()
-          if (b.size > maxRows) None else Some(b.toArray)
-        }
-        if (parts.exists(_.isEmpty) || parts.map(_.get.length.toLong).sum > maxRows) None
-        else Some(FrameBridge.localFrame(df.sparkSession, df.schema,
-          ArraySeq.unsafeWrapArray(parts.flatMap(_.get))))
+      case None if maxRows < 0 => None
+      case None => df.queryExecution.optimizedPlan match {
+        case r: LogicalRDD if r.stats.rowCount.exists(_ > maxRows) => None
+        case _ =>
+          val parts = summarize(df) { it =>
+            val b = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+            while (it.hasNext && b.size <= maxRows) b += it.next().copy()
+            if (b.size > maxRows) None else Some(b.toArray)
+          }
+          if (parts.exists(_.isEmpty) || parts.map(_.get.length.toLong).sum > maxRows) None
+          else Some(FrameBridge.localFrame(df.sparkSession, df.schema,
+            ArraySeq.unsafeWrapArray(parts.flatMap(_.get))))
+      }
     }
   }
 
-  /** The rows of a frame built over driver-held rows ([[local]]), or
-    * of a projection or filter of one, which the optimizer folds into a
-    * `LocalRelation` without a job. Any other frame is collected. */
-  def localRows(df: DataFrame): Seq[InternalRow] = df.queryExecution.optimizedPlan match {
-    case l: LocalRelation => l.data
-    case _ => ArraySeq.unsafeWrapArray(df.queryExecution.executedPlan.executeCollect())
-  }
+  /** The rows of `df`: a [[driverHeld]] frame's with no job, any other
+    * frame's collected. */
+  def localRows(df: DataFrame): Seq[InternalRow] =
+    driverHeld(df).fold[Seq[InternalRow]](
+      ArraySeq.unsafeWrapArray(df.queryExecution.executedPlan.executeCollect()))(_.data)
 
   /** Append a dense 1-based row number and return it with the row count.
     * When the input fits `maxBytes` ([[local]]; the default 0 never

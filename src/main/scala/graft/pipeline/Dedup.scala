@@ -3,12 +3,11 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FrameBridge
 import org.apache.spark.sql.types._
 
-import graft.graph.{GraphAlgos, Pins}
+import graft.graph.{DfUtils, GraphAlgos, Pins}
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -398,26 +397,32 @@ object Dedup {
     * `connected_components` ([[GraphAlgos.ccLocal]]); larger ones run
     * min-label rounds ([[GraphAlgos.minRelaxed]]) over the pairs in both
     * directions. Pairs already on the driver — a LocalRelation such as
-    * [[minhashLsh]]'s local result — are read straight from the plan:
-    * no job. Any other pair frame is pinned for the call, so the gate's
-    * count() and the endgame's collect read the pin. A distributed
+    * [[minhashLsh]]'s local result ([[DfUtils.driverHeld]]) — are read
+    * straight from the plan: no job. Any other pair frame is pinned for
+    * the call, and the pin's job counts the pairs for the gate, so the
+    * endgame's collect is the only other read of the pin. A distributed
     * [[minhashLsh]] result's signature table is released on the way out. */
   def dupClusters(pairs: DataFrame): DataFrame = {
     val p = pairs.select(col("id_a"), col("id_b"))
     val pins = new Pins(pairs.sparkSession)
-    try GraphAlgos.run(dupClustersArms(if (driverRows(p).isEmpty) pins.pin(p)._1 else p))
+    try GraphAlgos.run(
+      if (DfUtils.driverHeld(p).isDefined) dupClustersArms(p)
+      else { val (pinned, n) = pins.pin(p); dupClustersArms(pinned, Some(n)) })
     finally { pins.releaseAll(); Pins.releaseResult(pairs) }
   }
 
   /** [[dupClusters]]' two arms; `rows` is the pair count — the length of
-    * driver-resident pairs, else one count() job. */
-  private[graft] def dupClustersArms(pairs: DataFrame): GraphAlgos.Endgame[(Long, Long)] = {
+    * driver-resident pairs, else `count` when the caller measured it,
+    * else one count() job. */
+  private[graft] def dupClustersArms(pairs: DataFrame,
+      count: Option[Long] = None): GraphAlgos.Endgame[(Long, Long)] = {
     val spark = pairs.sparkSession
     val p = pairs.select(col("id_a").cast(LongType), col("id_b").cast(LongType))
     // a null id fails both arms' reads alike, so only null-free rows
     // skip the collect
-    val resident = driverRows(p).filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
-    val n = resident.fold(p.count())(_.length.toLong)
+    val resident = DfUtils.driverHeld(p).map(_.data)
+      .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+    val n = resident.fold(count.getOrElse(p.count()))(_.length.toLong)
     // union-find over the CSR of ≤ 2n endpoints and 2n adjacency rows
     GraphAlgos.Endgame(spark, "dup_clusters", Seq("id", "rep"), n, () => 4L * n, "",
       () => {
@@ -439,14 +444,6 @@ object Dedup {
           .select(col("id"), col("id").as("m")), es.withColumn("w", lit(0L)), "rep")
       })
   }
-
-  /** The rows of `df` when its optimized plan is a LocalRelation: a
-    * frame the driver already holds, readable without a job. */
-  private def driverRows(df: DataFrame): Option[Seq[InternalRow]] =
-    df.queryExecution.optimizedPlan match {
-      case l: LocalRelation => Some(l.data)
-      case _ => None
-    }
 
   /** Exact n-gram Jaccard similarity for the given candidate pairs
     * (`pairs` must have `id_a`, `id_b` columns). Two hash equi-joins

@@ -25,8 +25,11 @@ import graft.types.{AgMap, AgValue}
   * of raw TPC-H parquet builds the overlay graph. The third argument is
   * an agtype text map of query parameters.
   *
-  * The extensions also inject [[SinglePartitionLocal]], which runs
-  * small driver-held results as one exchange-free job, and
+  * The extensions also inject [[SinglePartitionLocal]], which
+  * evaluates a small driver-held result's projections, filters,
+  * aggregates, sorts, limits and offsets on the driver (a CALL's
+  * `WITH … count(*) … ORDER BY … LIMIT` tail then collects with no Spark
+  * job) and runs a window over one as a single exchange-free job, and
   * [[DriverBroadcast]], which broadcasts driver-held relations without
   * a job.
   *

@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSet, Expression}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Statistics}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
   PartitioningCollection, SinglePartition, UnknownPartitioning}
@@ -82,6 +83,11 @@ object FrameBridge {
     * included: the type values gathered from several frames may all
     * take, whatever nullability each frame's expressions claimed. */
   def nullable[T <: DataType](dt: T): T = dt.asNullable.asInstanceOf[T]
+
+  /** `e` with its floats normalized as the physical planner normalizes
+    * grouping keys: -0.0 as 0.0 and every NaN as one NaN, nested ones
+    * included. */
+  def normalizedKey(e: Expression): Expression = NormalizeFloatingNumbers.normalize(e)
 
   /** `pinned` (a checkpointed frame, whose plan is a `LogicalRDD`) with
     * the size estimate of `rows` rows of its schema's default size. A

@@ -275,9 +275,10 @@ class WritePathSpec extends SparkTestBase {
       s"commit=$commit load=$load")
     // the counts this write path reaches; one more eager job fails here
     assert(create <= 1, "CREATE node + edge: the MATCH's collect; the edge numbers its rows on the driver")
-    assert(mergeCreate <= 3, "probe, distinct missing keys, ON CREATE updates")
+    assert(mergeCreate <= 2, "the probe and the ON CREATE updates; the DISTINCT of the missing keys " +
+      "is driver-held and evaluated on the driver")
     assert(mergeMatch <= 1, "the probe, which broadcasts its driver-held input")
-    assert(mergeData <= 5)
+    assert(mergeData <= 4)
     assert(set <= 1 && remove <= 1, "the MATCH's collect")
     assert(read <= 1, "the delta broadcasts from the driver")
     assert(detach <= 2, "the MATCH's collect and the incident-edge probe")

@@ -101,6 +101,18 @@ class PipelineSpec extends SparkTestBase {
     assert(graft.SparkJobs.count(spark)(Dedup.dupClusters(ints).collect()) === 0)
   }
 
+  test("dupClusters over pairs the driver does not hold counts them in the pin's job") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b").repartition(2)
+    var out: Seq[(Long, Long)] = Nil
+    val jobs = graft.SparkJobs.count(spark) {
+      out = Dedup.dupClusters(pairs).as[(Long, Long)].collect().sorted.toSeq
+    }
+    assert(out === Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L)))
+    // the repartition's shuffle stage, the pin, the endgame's collect;
+    // a count() over the pin (an aggregate stage and its result) is gone
+    assert(jobs === 3)
+  }
+
   test("dupClusters: a null id fails both arms") {
     val pairs = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null), (3L, 4L))
       .toDF("id_a", "id_b")

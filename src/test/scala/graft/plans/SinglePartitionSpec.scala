@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Repartition}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Repartition}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -15,8 +15,9 @@ import graft.pipeline.Dedup
 
 /** [[SinglePartitionLocal]] under the shared session, which installs
   * [[GraftExtensions]]: small driver-held relations feeding an
-  * aggregate, a global sort or a window plan as one exchange-free job,
-  * and everything else keeps its plan. */
+  * aggregate, a global sort or a limit are evaluated on the driver and
+  * collect with no job; a window plans as one exchange-free job; and
+  * everything else keeps its plan. */
 class SinglePartitionSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -26,6 +27,9 @@ class SinglePartitionSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   private def pinned(df: DataFrame): Seq[LogicalPlan] =
     df.queryExecution.optimizedPlan.collect { case r: Repartition => r }
 
+  private def folded(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
   /** The executed plan's exchanges, AQE stages included (after collect). */
   private def exchanges(df: DataFrame): Seq[SparkPlan] = {
     df.collect()
@@ -34,34 +38,71 @@ class SinglePartitionSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def jobs(df: DataFrame): Int = SparkJobs.count(spark)(df.collect())
 
-  test("an aggregate, a global sort and a window over a small relation run as one job") {
+  test("an aggregate and a global sort over a small relation fold to driver rows") {
     val shapes = Seq(
       "aggregate" -> small.filter($"x" > 3.0).groupBy($"k").agg(count(lit(1)), sum($"x")),
       "global aggregate" -> small.select($"x").agg(max($"x")),
       "sort" -> small.select($"id", ($"x" * 2).as("y")).orderBy($"y".desc),
-      "window" -> small.withColumn("r", row_number().over(Window.partitionBy($"k")
-        .orderBy($"id"))),
-      "aggregate + sort" -> small.groupBy($"k").count().orderBy($"k"))
+      "aggregate + sort" -> small.groupBy($"k").count().orderBy($"k"),
+      "sort + limit" -> small.orderBy($"x".desc).limit(5))
     for ((name, df) <- shapes) {
-      val p = pinned(df)
-      assert(p.size === 1, name)
-      assert(p.head === Repartition(1, shuffle = false, p.head.children.head), name)
-      assert(p.head.children.head.isInstanceOf[LocalRelation], name)
-      assert(exchanges(df).isEmpty, s"$name: ${df.queryExecution.executedPlan}")
-      assert(jobs(df) === 1, name)
+      assert(folded(df), s"$name: ${df.queryExecution.optimizedPlan}")
+      assert(jobs(df) === 0, name)
     }
+    assert(small.groupBy($"k").count().orderBy($"k").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSeq === (0L to 6L).map(k => k -> (1L to 200L).count(_ % 7 == k).toLong))
+  }
+
+  test("a window over a small relation runs as one exchange-free job") {
+    val df = small.withColumn("r", row_number().over(Window.partitionBy($"k").orderBy($"id")))
+    val p = pinned(df)
+    assert(p.size === 1)
+    assert(p.head === Repartition(1, shuffle = false, p.head.children.head))
+    assert(p.head.children.head.isInstanceOf[LocalRelation])
+    assert(exchanges(df).isEmpty, df.queryExecution.executedPlan.toString)
+    assert(jobs(df) === 1)
+  }
+
+  test("nondeterministic, distinct and failing aggregates keep the one-partition pin") {
+    // the optimizer folds a nondeterministic Project or Filter over a
+    // LocalRelation itself, so the rule sees one only above a fold
+    val nondeterministic = SinglePartitionLocal(
+      small.filter(rand(3) > 0.5).groupBy($"k").count().queryExecution.analyzed)
+    assert(nondeterministic.isInstanceOf[Aggregate])
+    assert(nondeterministic.collect { case r: Repartition => r }.size === 1)
+    val kept = Seq(
+      "distinct" -> small.groupBy($"k").agg(countDistinct($"x")),
+      "ANSI overflow" -> Seq(Long.MaxValue, Long.MaxValue).toDF("l").agg(sum($"l")))
+    for ((name, df) <- kept) {
+      assert(!folded(df), name)
+      assert(pinned(df).size === 1, name)
+    }
+    val overflow = kept.last._2
+    overflow.explain("extended")
+    val e = intercept[Exception](overflow.collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("ARITHMETIC_OVERFLOW")), e.toString)
+  }
+
+  test("streaming relations are not folded") {
+    val streaming = small.groupBy($"k").count().orderBy($"k").queryExecution.analyzed
+      .transform { case l: LocalRelation => l.copy(isStreaming = true) }
+    assert(SinglePartitionLocal(streaming) eq streaming)
   }
 
   test("the rule is idempotent") {
     val plan = small.groupBy($"k").count().orderBy($"k").queryExecution.optimizedPlan
     assert(SinglePartitionLocal(plan) eq plan)
+    val window = small.withColumn("r", row_number().over(Window.partitionBy($"k").orderBy($"id")))
+      .queryExecution.optimizedPlan
+    assert(SinglePartitionLocal(window) eq window)
     val analyzed = small.groupBy($"k").count().queryExecution.analyzed
     val once = SinglePartitionLocal(analyzed)
     assert(!(once eq analyzed))
     assert(SinglePartitionLocal(once) eq once)
   }
 
-  test("plain collects, limits, joins and empty relations are left alone") {
+  test("plain collects, limits, joins and empty relations are not pinned") {
     val big = spark.range(0, 2000000L).toDF("id")
     val untouched = Seq(
       "projection" -> small.select($"id", $"x" + 1),
@@ -73,18 +114,20 @@ class SinglePartitionSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     for ((name, df) <- untouched) assert(pinned(df).isEmpty, name)
     assert(jobs(small.select($"id", $"x" + 1)) === 0)
     assert(jobs(small.limit(5)) === 0)
-    assert(jobs(small.orderBy($"x".desc).limit(5)) === 1)
   }
 
-  test("a relation above the advisory partition size keeps its partitions") {
+  test("a relation above the advisory partition size is neither folded nor pinned") {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1024")
     def rel(n: Long) = s.createDataFrame((1L to n).map(i => (i, i % 3))).toDF("a", "b")
-      .groupBy("b").count()
+    def agg(n: Long) = rel(n).groupBy("b").count()
+    def win(n: Long) = rel(n).withColumn("r", row_number().over(Window.partitionBy($"b").orderBy($"a")))
     // 24 bytes a row: 40 rows fit 1,024 bytes, 100 do not
-    assert(pinned(rel(40)).size === 1)
-    assert(pinned(rel(100)).isEmpty)
-    assert(rel(100).collect().map(_.getLong(1)).sum === 100L)
+    assert(folded(agg(40)))
+    assert(pinned(win(40)).size === 1)
+    assert(!folded(agg(100)) && pinned(agg(100)).isEmpty)
+    assert(pinned(win(100)).isEmpty)
+    assert(agg(100).collect().map(_.getLong(1)).sum === 100L)
   }
 
   /** The graph_analytics benchmark's CALL shapes over the sf0.001 graph. */
@@ -94,7 +137,7 @@ class SinglePartitionSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     Cypher.query(spark, tpch, s"MATCH (v:$label) RETURN id(v) AS id ORDER BY id LIMIT 1")
       .collect().head.getLong(0)
 
-  test("each CALL shape of the analytics benchmark runs one job at collect") {
+  test("each CALL shape of the analytics benchmark folds to driver rows and runs no job") {
     val (region, customer) = (firstId("Region"), firstId("Customer"))
     val shapes = Seq(
       "pagerank" -> ("CALL pagerank() YIELD id, rank " +
@@ -120,7 +163,8 @@ class SinglePartitionSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         "RETURN label_id, count(*) AS n ORDER BY label_id"))
     for ((name, q) <- shapes) {
       val df = Cypher.query(spark, tpch, q)
-      assert(jobs(df) === 1, s"$name: ${df.queryExecution.executedPlan}")
+      assert(folded(df), s"$name: ${df.queryExecution.optimizedPlan}")
+      assert(jobs(df) === 0, s"$name: ${df.queryExecution.executedPlan}")
     }
     assert(jobs(Cypher.query(spark, tpch, "CALL pagerank() YIELD id, rank RETURN id, rank")) === 0)
   }
