@@ -38,7 +38,7 @@ class SinglePartitionSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def jobs(df: DataFrame): Int = SparkJobs.count(spark)(df.collect())
 
-  test("an aggregate and a global sort over a small relation fold to driver rows") {
+  test("small aggregates and sorts fold to driver rows") {
     val shapes = Seq(
       "aggregate" -> small.filter($"x" > 3.0).groupBy($"k").agg(count(lit(1)), sum($"x")),
       "global aggregate" -> small.select($"x").agg(max($"x")),
@@ -102,7 +102,7 @@ class SinglePartitionSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(SinglePartitionLocal(once) eq once)
   }
 
-  test("plain collects, limits, joins and empty relations are not pinned") {
+  test("plain collects, limits, joins and empty relations are left alone") {
     val big = spark.range(0, 2000000L).toDF("id")
     val untouched = Seq(
       "projection" -> small.select($"id", $"x" + 1),
@@ -116,7 +116,7 @@ class SinglePartitionSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(jobs(small.limit(5)) === 0)
   }
 
-  test("a relation above the advisory partition size is neither folded nor pinned") {
+  test("a relation above the advisory partition size keeps its partitions") {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1024")
     def rel(n: Long) = s.createDataFrame((1L to n).map(i => (i, i % 3))).toDF("a", "b")
@@ -137,7 +137,7 @@ class SinglePartitionSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     Cypher.query(spark, tpch, s"MATCH (v:$label) RETURN id(v) AS id ORDER BY id LIMIT 1")
       .collect().head.getLong(0)
 
-  test("each CALL shape of the analytics benchmark folds to driver rows and runs no job") {
+  test("each benchmark CALL shape folds to driver rows and runs no job") {
     val (region, customer) = (firstId("Region"), firstId("Customer"))
     val shapes = Seq(
       "pagerank" -> ("CALL pagerank() YIELD id, rank " +
