@@ -112,8 +112,7 @@ final class ExprCompiler(params: Map[String, AgValue]) {
       scope.get(v) match {
         case Some(ValueB(n)) => col(n)
         // unmatched OPTIONAL entities are NULL values, not null structs
-        case Some(b: NodeB) => when(col(idCol(b.name)).isNotNull, nodeStruct(b))
-        case Some(b: EdgeB) => when(col(idCol(b.name)).isNotNull, edgeStruct(b))
+        case Some(b @ (_: NodeB | _: EdgeB)) => when(col(idCol(b.name)).isNotNull, entityStruct(b))
         case Some(VleB(n)) => col(idsCol(n))
         case Some(PathB(n, _)) => col(idsCol(n))
         case None => throw new IllegalArgumentException(s"unbound variable $v")
@@ -1184,26 +1183,20 @@ final class ExprCompiler(params: Map[String, AgValue]) {
     array(widened: _*)
   }
 
-  def nodeStruct(b: NodeB): Column = {
+  /** A bound vertex or edge as its entity struct: id, label, the edge's
+    * endpoints and the properties. */
+  def entityStruct(b: Binding): Column = {
+    val (v, props, ends) = b match {
+      case NodeB(v, ps) => (v, ps, Nil)
+      case EdgeB(v, ps) =>
+        (v, ps, Seq(col(startCol(v)).as("start_id"), col(endCol(v)).as("end_id")))
+      case other => throw new IllegalArgumentException(s"not an entity binding: $other")
+    }
     val propsStruct =
-      if (b.props.isEmpty) struct(lit(true).as("__empty"))
-      else struct(b.props.map(p => col(propCol(b.name, p)).as(p)): _*)
-    struct(
-      col(idCol(b.name)).as("id"),
-      col(labelCol(b.name)).as("label"),
-      propsStruct.as("properties"))
-  }
-
-  def edgeStruct(b: EdgeB): Column = {
-    val propsStruct =
-      if (b.props.isEmpty) struct(lit(true).as("__empty"))
-      else struct(b.props.map(p => col(propCol(b.name, p)).as(p)): _*)
-    struct(
-      col(idCol(b.name)).as("id"),
-      col(labelCol(b.name)).as("label"),
-      col(startCol(b.name)).as("start_id"),
-      col(endCol(b.name)).as("end_id"),
-      propsStruct.as("properties"))
+      if (props.isEmpty) struct(lit(true).as("__empty"))
+      else struct(props.map(p => col(propCol(v, p)).as(p)): _*)
+    struct((Seq(col(idCol(v)).as("id"), col(labelCol(v)).as("label")) ++ ends :+
+      propsStruct.as("properties")): _*)
   }
 
   import Columns._
@@ -1328,8 +1321,7 @@ final class ExprCompiler(params: Map[String, AgValue]) {
       case "labels" => array(entityField(labelCol, "label"))
       case "properties" => args.head match {
         case Var(v) if !lambdas.contains(v) => scope.get(v) match {
-          case Some(b: NodeB) => nodeStruct(b).getField("properties")
-          case Some(b: EdgeB) => edgeStruct(b).getField("properties")
+          case Some(b @ (_: NodeB | _: EdgeB)) => entityStruct(b).getField("properties")
           case _ => propsOf(a(0), scope)
         }
         case _ => propsOf(a(0), scope)

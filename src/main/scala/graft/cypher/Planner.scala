@@ -269,19 +269,41 @@ final class Planner(
     case _ => false
   }
 
+  /** `base`, a vertex or edge frame, renamed to variable `v`'s columns,
+    * and the property names of `v`'s binding. */
+  private def entityFrame(base: DataFrame, v: String, isEdge: Boolean): (DataFrame, Seq[String]) = {
+    val ends = if (isEdge) Seq("start_id" -> startCol(v), "end_id" -> endCol(v)) else Nil
+    val fixed = Seq("id" -> idCol(v), "label" -> labelCol(v)) ++ ends
+    val raw = base.columns.toSeq.filterNot(c => fixed.exists(_._1 == c))
+    val props = raw.map(graft.graph.PropName.dec)
+    (base.select(fixed.map { case (c, to) => col(c).as(to) } ++
+      raw.zip(props).map { case (c, k) => graft.graph.PropName.qcol(c).as(propCol(v, k)) }: _*),
+      props)
+  }
+
+  /** Bind `v` to the vertex, or edge, whose id is `id`: one join of the
+    * vertex (edge) frame, of the caller's join type. A typed path's id
+    * array holds only edges of `relTypes`, so the edge frame keeps those
+    * labels: the other labels' scans fold away and the aligned schema
+    * stays. */
+  private def joinEntity(df: DataFrame, id: Column, v: String, isEdge: Boolean,
+      relTypes: Set[String], joinType: String): (DataFrame, Binding) = {
+    val base =
+      if (!isEdge) graph.allVertices
+      else if (relTypes.isEmpty) graph.allEdges
+      else graph.allEdges.filter(col("label").isin(relTypes.toSeq: _*))
+    val (ents, props) = entityFrame(base, v, isEdge)
+    (df.join(ents, id === col(idCol(v)), joinType),
+      if (isEdge) EdgeB(v, props) else NodeB(v, props))
+  }
+
   /** Scan a vertex label set as var-namespaced columns, pushing literal
     * property constraints into the scan (reference: property constraint
     * quals, cypher_clause.c:5573-5600). Returns (df, binding, residual
     * non-literal prop constraints).
     */
   private def scanNode(n: NodePattern, v: String): (DataFrame, NodeB, Seq[(String, Expr)]) = {
-    val base = graph.verticesOf(n.labels)
-    val rawProps = base.schema.fieldNames.toSeq.filterNot(c => c == "id" || c == "label")
-    val props = rawProps.map(graft.graph.PropName.dec)
-    val renamed = base.select(
-      col("id").as(idCol(v)) +: col("label").as(labelCol(v)) +:
-        rawProps.map(p => graft.graph.PropName.qcol(p)
-          .as(propCol(v, graft.graph.PropName.dec(p)))): _*)
+    val (renamed, props) = entityFrame(graph.verticesOf(n.labels), v, isEdge = false)
     val (litCons, residual) = n.props.map(_.entries).getOrElse(Nil)
       .partition { case (_, e) => literalOnly(e) }
     val filtered = litCons.foldLeft(renamed) { case (df, (k, e)) =>
@@ -383,9 +405,6 @@ final class Planner(
   private def scanEdge(r: RelPattern, v: String,
       pathPreds: Seq[(String, Expr, Boolean)] = Nil): (DataFrame, EdgeB, Seq[(String, Expr)]) = {
     val base = graph.edgesOf(r.types)
-    val rawProps = base.schema.fieldNames.toSeq
-      .filterNot(c => Set("id", "label", "start_id", "end_id")(c))
-    val props = rawProps.map(graft.graph.PropName.dec)
     val oriented = r.direction match {
       case DirOut | DirIn => base // roles assigned at join time
       case DirBoth =>
@@ -393,17 +412,15 @@ final class Planner(
         // join qual is an OR of the two orientations, which a self-loop
         // edge satisfies once, not twice (regress cypher_vle.out golden
         // counts — 7092 undirected paths, not 2^selfloops more)
-        val revCols = Seq(col("id"), col("end_id").as("start_id"),
-          col("start_id").as("end_id"), col("label")) ++
-          rawProps.map(graft.graph.PropName.qcol)
+        val revCols = base.columns.toSeq.map {
+          case "start_id" => col("end_id").as("start_id")
+          case "end_id" => col("start_id").as("end_id")
+          case c => graft.graph.PropName.qcol(c)
+        }
         base.unionByName(
           base.filter(col("start_id") =!= col("end_id")).select(revCols: _*))
     }
-    val renamed = oriented.select(
-      col("id").as(idCol(v)) +: col("label").as(labelCol(v)) +:
-        col("start_id").as(startCol(v)) +: col("end_id").as(endCol(v)) +:
-        rawProps.map(p => graft.graph.PropName.qcol(p)
-          .as(propCol(v, graft.graph.PropName.dec(p)))): _*)
+    val (renamed, props) = entityFrame(oriented, v, isEdge = true)
     val (litCons, residual) = r.props.map(_.entries).getOrElse(Nil)
       .partition { case (_, e) => literalOnly(e) }
     val filtered = litCons.foldLeft(renamed) { case (df, (k, e)) =>
@@ -591,12 +608,7 @@ final class Planner(
       if (pushed.isEmpty) filtered
       else {
         val ev = fresh()
-        val decoded = props.map(graft.graph.PropName.dec)
-        val renamed = filtered.select(
-          col("id").as(idCol(ev)) +: col("label").as(labelCol(ev)) +:
-            col("start_id").as(startCol(ev)) +: col("end_id").as(endCol(ev)) +:
-            props.map(p => graft.graph.PropName.qcol(p)
-              .as(propCol(ev, graft.graph.PropName.dec(p)))): _*)
+        val (renamed, decoded) = entityFrame(filtered, ev, isEdge = true)
         val out = pushed.foldLeft(renamed) { case (df, t @ (x, pr, keepTrue)) =>
           try {
             val c = exprc.compile(substVar(pr, x, ev),
@@ -1144,19 +1156,7 @@ final class Planner(
             // path set (see the push site's argument), so the re-apply
             // would only re-materialize edge entities to re-check it
             ()
-          case other =>
-            val (s2, rw1, _) = materializeSubqueries(merged, Seq(other))
-            val (s3, rw2) = materializeEndpointFns(s2, rw1)
-            val (s4, rw3) = materializePathFns(s3, rw2)
-            val filteredDf = s4.df.filter(exprc.compile(rw3.head, s4))
-            val keepNames = merged.bindings.map(_.name).toSet
-            // drop by binding NAME but never a column a kept binding
-            // owns: the size(nodes(p)) fast-path registers the kept
-            // path's own p@nids as a temp ValueB, which must survive
-            val keepCols = merged.bindings.flatMap(b => s4.colsOf(b)).toSet
-            val dropCols = s4.bindings.filterNot(b => keepNames(b.name))
-              .flatMap(b => s4.colsOf(b)).filterNot(keepCols)
-            merged = merged.withDf(filteredDf.drop(dropCols: _*))
+          case other => merged = filterBy(merged, other)
         }
       }
       merged
@@ -1481,21 +1481,34 @@ final class Planner(
     (scope.rebind(joined, scope.bindings :+ ValueB(cnt)), cnt)
   }
 
+  /** The accessor step of one projection or filter: EXISTS{}/COUNT{}
+    * subqueries, startNode()/endNode() and nodes()/relationships() inside
+    * `exprs` become columns of the returned scope, which the returned
+    * expressions read. */
+  private def materializeAccessors(scope: Scope, exprs: Seq[Expr]): (Scope, Seq[Expr]) = {
+    val (s1, e1) = materializeSubqueries(scope, exprs)
+    val (s2, e2) = materializeEndpointFns(s1, e1)
+    materializePathFns(s2, e2)
+  }
+
+  /** `scope`'s rows where `w` holds, without the columns its accessors
+    * added. */
+  private def filterBy(scope: Scope, w: Expr): Scope = {
+    val (s, Seq(c)) = materializeAccessors(scope, Seq(w))
+    scope.withDf(s.df.filter(exprc.compile(c, s)).select(scope.df.columns.toSeq.map(qcol): _*))
+  }
+
   /** Replace EXISTS{}/COUNT{} nodes inside `exprs` with Var references to
-    * computed columns. Returns the widened scope, rewritten expressions,
-    * and the temp column names (caller drops them after use). */
-  private def materializeSubqueries(
-      scope0: Scope, exprs: Seq[Expr]): (Scope, Seq[Expr], Seq[String]) = {
+    * computed columns. */
+  private def materializeSubqueries(scope0: Scope, exprs: Seq[Expr]): (Scope, Seq[Expr]) = {
     var subs = Vector.empty[Expr]
     exprs.foreach(e => Ast.transformExpr(e) {
       case s @ (_: ExistsSubquery | _: CountSubquery | _: ExistsPattern) =>
         subs :+= s; Some(s)
       case _ => None
     })
-    if (subs.isEmpty) return (scope0, exprs, Nil)
     var scope = scope0
     var mapping = Map.empty[Expr, Expr]
-    var temps = Vector.empty[String]
     for (s <- subs.distinct) {
       val (s2, v) = s match {
         case ExistsSubquery(cs) => subqueryFlag(scope, cs)
@@ -1506,91 +1519,94 @@ final class Planner(
           subqueryFlag(scope, Seq(MatchClause(Seq(pat), optional = false, None)))
         case _ => throw new IllegalStateException("unreachable")
       }
-      scope = s2; mapping += (s -> Var(v)); temps :+= v
+      scope = s2; mapping += (s -> Var(v))
     }
-    (scope, exprs.map(e => Ast.transformExpr(e)(mapping.get)), temps)
+    (scope, exprs.map(e => Ast.transformExpr(e)(mapping.get)))
   }
 
   /** startNode(e)/endNode(e) need the vertex row, not just the endpoint
-    * id — materialize each as a joined NodeB binding and substitute a
-    * Var reference (reference: age_start_node/age_end_node,
-    * agtype.c; the label is recoverable from the id but the properties
-    * need the vertex scan). */
-  private def materializeEndpointFns(
-      scope0: Scope, exprs: Seq[Expr]): (Scope, Seq[Expr]) = {
+    * id — bind each through the id join and substitute a Var reference
+    * (reference: age_start_node/age_end_node, agtype.c; the label is
+    * recoverable from the id but the properties need the vertex scan). */
+  private def materializeEndpointFns(scope0: Scope, exprs: Seq[Expr]): (Scope, Seq[Expr]) = {
     var scope = scope0
     var mapping = Map.empty[Expr, Expr]
-    // id(startNode(e)) is the endpoint column itself and
-    // label(startNode(e)) is recoverable from the id's top 16 bits
-    // (GET_LABEL_ID, reference: graphid.h:59-60) — neither needs the
-    // vertex join the general materializer below adds. Whole-subtree
-    // precedence keeps the inner call away from that pass.
+    def endpoint(fn: String, ev: String): Option[String] = scope0.get(ev) match {
+      case Some(_: EdgeB) if fn == "startnode" => Some(startCol(ev))
+      case Some(_: EdgeB) if fn == "endnode" => Some(endCol(ev))
+      case _ => None
+    }
     exprs.foreach(e => Ast.transformExpr(e) {
-      case fn @ FuncCall(outer0, Seq(FuncCall(name, Seq(Var(ev)), _)), _)
-          if (outer0 == "label" || outer0 == "id") &&
-            (name == "startnode" || name == "endnode") && !mapping.contains(fn) &&
-            scope.get(ev).exists(_.isInstanceOf[EdgeB]) =>
-        val endpoint = if (name == "startnode") startCol(ev) else endCol(ev)
+      // id(startNode(e)) is the endpoint column itself and
+      // label(startNode(e)) is recoverable from the id's top 16 bits
+      // (GET_LABEL_ID, reference: graphid.h:59-60) — neither needs the
+      // vertex join. Whole-subtree precedence keeps the inner call away
+      // from the join case below.
+      case fn @ FuncCall(outer @ ("label" | "id"), Seq(FuncCall(name, Seq(Var(ev)), _)), _)
+          if endpoint(name, ev).isDefined && !mapping.contains(fn) =>
+        val c = col(endpoint(name, ev).get)
         val tmp = fresh()
-        val c =
-          if (outer0 == "id") col(endpoint)
+        val v =
+          if (outer == "id") c
           else {
             // mirror GraphId.labelId: unsigned shift + 16-bit mask so
             // label ids >= 0x8000 (sign bit of the packed gid) resolve
-            val lid = shiftrightunsigned(col(endpoint), GraphId.EntryIdBits)
+            val lid = shiftrightunsigned(c, GraphId.EntryIdBits)
               .bitwiseAND(lit(0xffffL)).cast(IntegerType)
             graph.vertexLabels.foldLeft(lit(null).cast(StringType): Column) {
               (acc, vl) => when(lid === vl.labelId, lit(vl.name)).otherwise(acc)
             }
           }
-        scope = scope.rebind(scope.df.withColumn(tmp, c), scope.bindings :+ ValueB(tmp))
+        scope = scope.rebind(scope.df.withColumn(tmp, v), scope.bindings :+ ValueB(tmp))
         mapping += (fn -> Var(tmp))
         Some(fn)
-      case _ => None
-    })
-    val reduced = exprs.map(e => Ast.transformExpr(e)(mapping.get))
-    reduced.foreach(e => Ast.transformExpr(e) {
       case fn @ FuncCall(name, Seq(Var(ev)), _)
-          if (name == "startnode" || name == "endnode") && !mapping.contains(fn) =>
-        scope.get(ev) match {
-          case Some(EdgeB(_, _)) =>
-            val nv = fresh()
-            val endpoint = if (name == "startnode") startCol(ev) else endCol(ev)
-            val base = graph.allVertices
-            val props = base.schema.fieldNames.toSeq
-              .filterNot(c => c == "id" || c == "label")
-            val ndf = base.select(
-              col("id").as(idCol(nv)) +: col("label").as(labelCol(nv)) +:
-                props.map(p => col(p).as(propCol(nv, p))): _*)
-            scope = scope.rebind(
-              scope.df.join(ndf, col(endpoint) === col(idCol(nv)), "left_outer"),
-              scope.bindings :+ NodeB(nv, props))
-            mapping += (fn -> Var(nv))
-          case _ => ()
-        }
+          if endpoint(name, ev).isDefined && !mapping.contains(fn) =>
+        val (df, b) = joinEntity(scope.df, col(endpoint(name, ev).get), fresh(),
+          isEdge = false, Set.empty, "left_outer")
+        scope = scope.rebind(df, scope.bindings :+ b)
+        mapping += (fn -> Var(b.name))
         Some(fn)
       case _ => None
     })
-    if (mapping.isEmpty) (scope0, exprs)
-    else (scope, exprs.map(e => Ast.transformExpr(e)(mapping.get)))
+    (scope, exprs.map(e => Ast.transformExpr(e)(mapping.get)))
   }
 
-  /** nodes(p) / relationships(p) in projection position: materialize the
-    * full entity array (not just ids) — posexplode the path's id array,
-    * join the vertex/edge frame, and reassemble in path order. */
-  private def materializePathFns(
-      scope0: Scope, exprs0: Seq[Expr]): (Scope, Seq[Expr]) = {
+  import Planner.IdArray
+
+  /** The id array `fn`(`pv`) reads. VLE and shortestpath bindings carry
+    * edge ids only, so nodes() needs a named path. */
+  private def pathIds(scope: Scope, fn: String, pv: String): Option[IdArray] =
+    (fn, scope.get(pv)) match {
+      case ("nodes", Some(_: PathB)) => Some(IdArray(nidsCol(pv), isEdge = false, Set.empty))
+      case ("relationships", Some(PathB(_, t))) => Some(IdArray(idsCol(pv), isEdge = true, t))
+      case ("relationships", Some(_: VleB)) => Some(IdArray(idsCol(pv), isEdge = true, Set.empty))
+      case _ => None
+    }
+
+  /** nodes(p) / relationships(p) in projection or filter position
+    * materialize the full entity arrays in path order — every request of
+    * `exprs`, over any number of path bindings, in ONE pass (reference:
+    * one path builder, _agtype_build_path, agtype.c:2081).
+    *
+    * The outer frame — often a BFS/VLE enumeration whose lineage would
+    * re-run per consumer — is read once: the requested id arrays zip into
+    * one posexplode, each slot binds its entity through the id join, and
+    * one aggregate per row assembles every array. The group key is the
+    * whole row's content (withRid), so every original column rides
+    * through as first() of a per-group constant, and a group is m
+    * identical rows × the longest array's slots: m = rows / max(longest,
+    * 1) restores the duplicates, and array_distinct collapses their
+    * copies of each (pos, entity) slot. */
+  private def materializePathFns(scope0: Scope, exprs0: Seq[Expr]): (Scope, Seq[Expr]) = {
     var scope = scope0
-    var mapping = Map.empty[Expr, Expr]
     // a bare var-length relationship binding IS the traversed edge list
     // (reference: the VLE variable binds [edge, ...] — cypher_vle.out
     // `-[e*]->` returns edge arrays), but the frame carries only its id
-    // array; in HOF list position rewrite `r` to relationships(r) so the
-    // entity materialization below applies (all(x IN r ...),
-    // [x IN r | ...], reduce over r)
-    def isVleVar(n: String): Boolean = scope.get(n).exists(_.isInstanceOf[VleB])
-    def relsOf(n: String): Expr =
-      FuncCall("relationships", Seq(Var(n)), distinct = false)
+    // array; in HOF list position rewrite `r` to relationships(r)
+    // (all(x IN r ...), [x IN r | ...], reduce over r)
+    def isVleVar(n: String): Boolean = scope0.get(n).exists(_.isInstanceOf[VleB])
+    def relsOf(n: String): Expr = FuncCall("relationships", Seq(Var(n)), distinct = false)
     def bareVle(e: Expr): Expr = Ast.transformExpr(e) {
       case PredicateFn(k, x, Var(r), w) if isVleVar(r) =>
         Some(PredicateFn(k, x, relsOf(r), bareVle(w)))
@@ -1601,238 +1617,60 @@ final class Planner(
       case _ => None
     }
     val exprs = exprs0.map(bareVle)
-    // size(nodes(p)) / size(relationships(p)) only need the id-array
-    // length already in the frame — skip the entity materialization
-    // (which re-joins the vertex/edge frames) entirely. Registered
-    // FIRST: transformExpr replaces whole subtrees top-down, so the
-    // wrapped nodes()/relationships() call never reaches the
-    // materializing case below.
+    var mapping = Map.empty[Expr, Expr]
+    val wanted = scala.collection.mutable.LinkedHashMap.empty[Expr, IdArray]
     exprs.foreach(e => Ast.transformExpr(e) {
-      case fn @ FuncCall(sz, Seq(FuncCall(pf, Seq(Var(pv)), _)), _)
-          if (sz == "size" || sz == "length") &&
-            (pf == "nodes" || pf == "relationships") && !mapping.contains(fn) &&
-            scope.get(pv).exists(b => b.isInstanceOf[PathB] ||
-              (b.isInstanceOf[VleB] && pf == "relationships")) =>
-        val idcol = if (pf == "nodes") nidsCol(pv) else idsCol(pv)
-        if (!scope.bindings.exists(_.name == idcol))
-          scope = scope.rebind(scope.df, scope.bindings :+ ValueB(idcol))
-        mapping += (fn -> FuncCall("size", Seq(Var(idcol)), distinct = false))
+      // size(nodes(p)) / size(relationships(p)) only need the id array's
+      // length, already in the frame. Whole-subtree precedence keeps the
+      // inner call away from the materializing case below.
+      case fn @ FuncCall("size" | "length", Seq(FuncCall(pf, Seq(Var(pv)), _)), _)
+          if pathIds(scope0, pf, pv).isDefined =>
+        val ids = pathIds(scope0, pf, pv).get.ids
+        if (!scope.has(ids)) scope = scope.rebind(scope.df, scope.bindings :+ ValueB(ids))
+        mapping += (fn -> FuncCall("size", Seq(Var(ids)), distinct = false))
+        Some(fn)
+      case fn @ FuncCall(pf, Seq(Var(pv)), _) if pathIds(scope0, pf, pv).isDefined =>
+        wanted(fn) = pathIds(scope0, pf, pv).get
         Some(fn)
       case _ => None
     })
-    val sized = exprs.map(e => Ast.transformExpr(e)(mapping.get))
-    // FUSED materialization when BOTH nodes(p) and relationships(p) of
-    // the same PathB are requested (the cy_sp_path_nodes shape): both id
-    // arrays zip through ONE posexplode and both entity arrays assemble
-    // in ONE aggregate. SINGLE-PASS (r14 verdict #4): the outer frame —
-    // often an expensive BFS/VLE enumeration whose lineage re-runs per
-    // consumer — is consumed exactly ONCE. Every original column rides
-    // through the explode and returns via first() of a per-key-constant
-    // (the group key is the canonicalized content of the WHOLE row, so
-    // all rows in a group are identical), and duplicate-row multiplicity
-    // is restored by explode(sequence(1, m)) with m = group rows /
-    // slots-per-row — exact because a group is m identical rows × len
-    // slots. Array semantics are identical to the join-back shape:
-    // arrays_zip pads the shorter (edge) array with nulls,
-    // posexplode_outer keeps null-binding rows as one padded slot, the
-    // vertex/edge joins go left so a padded slot never drops its row,
-    // collect_list skips the null slots, and array_distinct collapses
-    // the m duplicate copies of each (pos, entity) slot — a zero-length
-    // path still yields ([v], []).
-    locally {
-      val wanted = scala.collection.mutable.LinkedHashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[Expr]]
-      sized.foreach(e => Ast.transformExpr(e) {
-        case fn @ FuncCall(name, Seq(Var(pv)), _)
-            if (name == "nodes" || name == "relationships") &&
-              !mapping.contains(fn) &&
-              scope.get(pv).exists(_.isInstanceOf[PathB]) =>
-          wanted.getOrElseUpdate(pv,
-            scala.collection.mutable.ArrayBuffer.empty) += fn
-          Some(fn)
-        case _ => None
-      })
-      for ((pv, fns) <- wanted
-           if fns.exists { case FuncCall(n, _, _) => n == "nodes" } &&
-             fns.exists { case FuncCall(n, _, _) => n == "relationships" }) {
-        val (outer, rid) = withRid(scope, None)
-        val nidsC = col(nidsCol(pv))
-        val eidsC = col(idsCol(pv))
-        def elemOf(isNodes: Boolean): Column = {
-          val base = if (isNodes) graph.allVertices else graph.allEdges
-          val fixed =
-            if (isNodes) Seq("id", "label")
-            else Seq("id", "label", "start_id", "end_id")
-          val props = base.schema.fieldNames.toSeq.filterNot(fixed.contains)
-          val propsStruct =
-            if (props.isEmpty) struct(lit(true).as("__empty"))
-            else struct(props.map(p => graft.graph.PropName.qcol(p).as(p)): _*)
-          if (isNodes) struct(col("id"), col("label"), propsStruct.as("properties"))
-          else struct(col("id"), col("label"), col("start_id"), col("end_id"),
-            propsStruct.as("properties"))
-        }
-        val origCols = outer.df.columns.filterNot(_ == rid).toSeq
-        val zipC = fresh(); val posC = fresh(); val slotC = fresh()
-        val nidC = fresh(); val eidC = fresh()
-        val exploded = outer.df
-          .withColumn(zipC, arrays_zip(nidsC, eidsC))
-          .select(col(rid) +: origCols.map(c => graft.graph.PropName.qcol(c)) :+
-            posexplode_outer(col(zipC)).as(Seq(posC, slotC)): _*)
-          .withColumn(nidC, col(slotC).getField(nidsCol(pv)))
-          .withColumn(eidC, col(slotC).getField(idsCol(pv)))
-          .drop(slotC)
-        val vidC = fresh(); val veC = fresh()
-        val eEidC = fresh(); val eeC = fresh()
-        // edge-label pruning: a fully-typed pattern's id array can only
-        // reference edges of those labels, so the entity join's build
-        // side filters to them — the per-branch label literal constant-
-        // folds and the other labels' scans disappear from the plan,
-        // while the filter keeps the ALIGNED schema (the entity struct
-        // shape is unchanged). Vertices can't prune (interior labels
-        // are not static).
-        val relT = scope.get(pv)
-          .collect { case PathB(_, t) => t }.getOrElse(Set.empty)
-        val edgeFrame =
-          if (relT.isEmpty) graph.allEdges
-          else graph.allEdges.filter(col("label").isin(relT.toSeq: _*))
-        val enriched = exploded
-          .join(graph.allVertices.select(col("id").as(vidC),
-            elemOf(true).as(veC)), col(nidC) === col(vidC), "left")
-          .join(edgeFrame.select(col("id").as(eEidC),
-            elemOf(false).as(eeC)), col(eidC) === col(eEidC), "left")
-        val tmpN = fresh()
-        val tmpR = fresh()
-        val cntC = fresh()
-        val aggCols = origCols.map(c =>
-          first(graft.graph.PropName.qcol(c)).as(c)) ++ Seq(
-          count(lit(1)).as(cntC),
-          transform(sort_array(array_distinct(collect_list(
-            when(col(veC).isNotNull, struct(col(posC), col(veC).as("e")))))),
-            x => x.getField("e")).as(tmpN),
-          transform(sort_array(array_distinct(collect_list(
-            when(col(eeC).isNotNull, struct(col(posC), col(eeC).as("e")))))),
-            x => x.getField("e")).as(tmpR))
-        val perPath = enriched.groupBy(col(rid))
-          .agg(aggCols.head, aggCols.tail: _*)
-        val arrTN = perPath.schema(tmpN).dataType
-        val arrTR = perPath.schema(tmpR).dataType
-        // slots per original row: the zip is node-array-sized (nodes =
-        // edges + 1), and a null binding still explodes to ONE padded
-        // slot
-        val lenC = greatest(coalesce(size(nidsC), lit(0)), lit(1))
-        val dupC = fresh()
-        // same 3VL as before: a null binding stays null, a matched
-        // zero-length traversal coalesces to []
-        val joined = perPath
-          .withColumn(dupC,
-            explode(sequence(lit(1L), (col(cntC) / lenC).cast("long"))))
-          .drop(rid, cntC, dupC)
-          .withColumn(tmpN,
-            when(nidsC.isNull, lit(null).cast(arrTN))
-              .otherwise(coalesce(col(tmpN), array().cast(arrTN))))
-          .withColumn(tmpR,
-            when(eidsC.isNull, lit(null).cast(arrTR))
-              .otherwise(coalesce(col(tmpR), array().cast(arrTR))))
-        scope = scope.rebind(joined,
-          scope.bindings :+ ValueB(tmpN) :+ ValueB(tmpR))
-        fns.foreach {
-          case fn @ FuncCall("nodes", _, _) => mapping += (fn -> Var(tmpN))
-          case fn @ FuncCall("relationships", _, _) => mapping += (fn -> Var(tmpR))
-          case _ => ()
-        }
+    if (wanted.nonEmpty) {
+      val reqs = wanted.values.toVector
+      val (outer, rid) = withRid(scope, None)
+      val orig = outer.df.columns.toSeq.filterNot(_ == rid)
+      // arrays_zip is null when any input is, so each array coalesces to
+      // []: a null OPTIONAL path must not blank a matched path's array
+      val arrs = reqs.map(_ => fresh())
+      val posC = fresh(); val slotC = fresh()
+      val zipped = outer.df.select(col("*") +: reqs.zip(arrs).map { case (r, a) =>
+        coalesce(col(r.ids), array().cast(ArrayType(LongType))).as(a) }: _*)
+      var df = zipped.select(col(rid) +: orig.map(qcol) :+
+        posexplode_outer(arrays_zip(arrs.map(col): _*)).as(Seq(posC, slotC)): _*)
+      val slots = reqs.zip(arrs).map { case (r, a) =>
+        val (joined, b) = joinEntity(df, col(slotC).getField(a), fresh(), r.isEdge, r.relTypes, "left")
+        df = joined
+        when(col(idCol(b.name)).isNotNull, struct(col(posC), exprc.entityStruct(b).as("e")))
       }
+      val cnt = fresh()
+      val outs = reqs.map(_ => fresh())
+      val perRow = df.groupBy(col(rid)).agg(count(lit(1)).as(cnt),
+        orig.map(c => first(qcol(c)).as(c)) ++ slots.zip(outs).map { case (s, o) =>
+          transform(sort_array(array_distinct(collect_list(s))), x => x.getField("e")).as(o)
+        }: _*)
+      val longest = greatest(lit(1) +: reqs.map(r => size(col(r.ids))): _*)
+      // each array's nullness is its source's own: a null path gives
+      // null, a matched zero-length one [] (all(x IN null WHERE …) is
+      // null under 3VL and the row drops — reference regress
+      // predicate_functions.out)
+      val restored = perRow
+        .withColumn(cnt, explode(sequence(lit(1L), (col(cnt) / longest).cast(LongType))))
+        .drop(rid, cnt)
+        .withColumns(reqs.zip(outs).map { case (r, o) => o -> when(col(r.ids).isNotNull, col(o)) }.toMap)
+      scope = scope.rebind(restored, scope.bindings ++ outs.map(ValueB(_)))
+      mapping ++= wanted.keys.zip(outs.map(Var(_)))
     }
-    sized.foreach(e => Ast.transformExpr(e) {
-      case fn @ FuncCall(name, Seq(Var(pv)), _)
-          if (name == "nodes" || name == "relationships") && !mapping.contains(fn) &&
-            scope.get(pv).exists(b => b.isInstanceOf[PathB] ||
-              (b.isInstanceOf[VleB] && name == "relationships")) =>
-        val isNodes = name == "nodes"
-        // SINGLE-PASS materializer (r14 verdict #4): the former shape
-        // consumed the outer frame twice (explode side + assemble-join
-        // side) and the upstream lineage — a BFS/VLE enumeration — re-ran
-        // per consumer (persist measured 1.8× slower: eager wide-struct
-        // materialization; a repartition(rid) boundary never deduped —
-        // column pruning specializes each exchange copy). Here every
-        // original column rides through the explode and returns via
-        // first() of a per-key-constant (the group key is the
-        // canonicalized content of the WHOLE row), duplicate-row
-        // multiplicity is restored by explode(sequence(1, m)) with
-        // m = group rows / slots-per-row, and array_distinct collapses
-        // the m duplicate copies of each (pos, entity) slot.
-        val (outer, rid) = withRid(scope, None)
-        val idsC = if (isNodes) col(nidsCol(pv)) else col(idsCol(pv))
-        // edge-label pruning for relationships() of a fully-typed path
-        // (see the fused branch): schema-preserving label filter whose
-        // per-branch literal constant-folds the other labels' scans away
-        val base =
-          if (isNodes) graph.allVertices
-          else scope.get(pv) match {
-            case Some(PathB(_, t)) if t.nonEmpty =>
-              graph.allEdges.filter(col("label").isin(t.toSeq: _*))
-            case _ => graph.allEdges
-          }
-        val fixed =
-          if (isNodes) Seq("id", "label") else Seq("id", "label", "start_id", "end_id")
-        val props = base.schema.fieldNames.toSeq.filterNot(fixed.contains)
-        val propsStruct =
-          if (props.isEmpty) struct(lit(true).as("__empty"))
-          else struct(props.map(p => graft.graph.PropName.qcol(p).as(p)): _*)
-        val elem =
-          if (isNodes) struct(col("id"), col("label"), propsStruct.as("properties"))
-          else struct(col("id"), col("label"), col("start_id"), col("end_id"),
-            propsStruct.as("properties"))
-        val origCols = outer.df.columns.filterNot(_ == rid).toSeq
-        val posC = fresh(); val uidC = fresh()
-        // posexplode_outer: a null OR empty id array keeps its row as one
-        // padded slot, so every original row survives into the aggregate
-        val exploded = outer.df
-          .select(col(rid) +: origCols.map(c => graft.graph.PropName.qcol(c)) :+
-            posexplode_outer(idsC).as(Seq(posC, uidC)): _*)
-        val bidC = fresh(); val beC = fresh()
-        val enriched = exploded.join(
-          base.select(col("id").as(bidC), elem.as(beC)),
-          col(uidC) === col(bidC), "left")
-        val tmp = fresh()
-        val cntC = fresh()
-        val aggCols = origCols.map(c =>
-          first(graft.graph.PropName.qcol(c)).as(c)) ++ Seq(
-          count(lit(1)).as(cntC),
-          transform(sort_array(array_distinct(collect_list(
-            when(col(beC).isNotNull, struct(col(posC), col(beC).as("e")))))),
-            x => x.getField("e")).as(tmp))
-        val perPath = enriched.groupBy(col(rid))
-          .agg(aggCols.head, aggCols.tail: _*)
-        val arrT = perPath.schema(tmp).dataType
-        // slots per original row: a null or empty array still explodes
-        // to ONE padded slot
-        val lenC = greatest(coalesce(size(idsC), lit(0)), lit(1))
-        val dupC = fresh()
-        // nullness is semantic, not an artifact of the left join: after
-        // OPTIONAL MATCH leaves the binding null, nodes()/relationships()
-        // must be null too (all(x IN null WHERE …) is null under 3VL and
-        // the row drops — reference regress predicate_functions.out);
-        // only a MATCHED zero-length traversal coalesces to []
-        val joined = perPath
-          .withColumn(dupC,
-            explode(sequence(lit(1L), (col(cntC) / lenC).cast("long"))))
-          .drop(rid, cntC, dupC)
-          .withColumn(tmp,
-            when(idsC.isNull, lit(null).cast(arrT))
-              .otherwise(coalesce(col(tmp), array().cast(arrT))))
-        scope = scope.rebind(joined, scope.bindings :+ ValueB(tmp))
-        mapping += (fn -> Var(tmp))
-        Some(fn)
-      case _ => None
-    })
-    if (mapping.isEmpty) (scope0, exprs)
-    else (scope, exprs.map(e => Ast.transformExpr(e)(mapping.get)))
+    (scope, exprs.map(e => Ast.transformExpr(e)(mapping.get)))
   }
-
-  private def dropTemps(scope: Scope, temps: Seq[String]): Scope =
-    if (temps.isEmpty) scope
-    else scope.rebind(scope.df.drop(temps: _*),
-      scope.bindings.filterNot(b => temps.contains(b.name)))
 
   /** CALL { subquery }: lateral per-row execution. A trailing RETURN adds
     * its columns to the outer scope (rows multiply / drop like an inner
@@ -1984,7 +1822,7 @@ final class Planner(
 
   private def planUnwind(scope: Scope, listE: Expr, alias: String): Scope = {
     // UNWIND nodes(p) / relationships(p) rebinds the alias as a full
-    // entity: explode the id array and join the vertex/edge frame
+    // entity: explode the id array and bind each id through the id join
     // (paths carry ids; the entity row needs the scan)
     listE match {
       // a bare var-length relationship binding unwinds as its edge
@@ -1993,33 +1831,16 @@ final class Planner(
       case Var(pv) if scope.get(pv).exists(_.isInstanceOf[VleB]) =>
         return planUnwind(scope,
           FuncCall("relationships", Seq(Var(pv)), distinct = false), alias)
-      // VLE/shortestpath bindings carry edge ids only (no nidsCol), so
-      // nodes() is restricted to named paths — same split as
-      // materializePathFns
       case FuncCall("nodes", Seq(Var(pv)), _)
           if scope.get(pv).exists(_.isInstanceOf[VleB]) =>
         throw new IllegalArgumentException(
           s"nodes($pv): expects a named path (p = (...)), not a variable-length relationship binding")
-      case FuncCall(fn @ ("nodes" | "relationships"), Seq(Var(pv)), _)
-          if scope.get(pv).exists(b => b.isInstanceOf[PathB] ||
-            (b.isInstanceOf[VleB] && fn == "relationships")) =>
-        val isNodes = fn == "nodes"
-        val idsC =
-          if (isNodes) col(nidsCol(pv))
-          else col(idsCol(pv))
-        val exploded = scope.df.withColumn("__uw", explode(idsC))
-        val base = if (isNodes) graph.allVertices else graph.allEdges
-        val fixed = if (isNodes) Seq("id", "label") else Seq("id", "label", "start_id", "end_id")
-        val props = base.schema.fieldNames.toSeq.filterNot(fixed.contains)
-        val renames: Seq[Column] =
-          Seq(col("id").as(idCol(alias)), col("label").as(labelCol(alias))) ++
-            (if (isNodes) Nil
-             else Seq(col("start_id").as(startCol(alias)), col("end_id").as(endCol(alias)))) ++
-            props.map(p => col(p).as(propCol(alias, p)))
-        val joined = exploded.join(base.select(renames: _*),
-          col("__uw") === col(idCol(alias))).drop("__uw")
-        val binding = if (isNodes) NodeB(alias, props) else EdgeB(alias, props)
-        return scope.rebind(joined, scope.bindings :+ binding)
+      case FuncCall(fn, Seq(Var(pv)), _) if pathIds(scope, fn, pv).isDefined =>
+        val arr = pathIds(scope, fn, pv).get
+        val uw = fresh()
+        val (df, b) = joinEntity(scope.df.withColumn(uw, explode(col(arr.ids))), col(uw), alias,
+          arr.isEdge, arr.relTypes, "inner")
+        return scope.rebind(df.drop(uw), scope.bindings :+ b)
       case _ => ()
     }
     val listC0 = exprc.compile(listE, scope)
@@ -2059,13 +1880,8 @@ final class Planner(
     val starItems =
       if (star) scope.bindings.map(b => ReturnItem(Var(b.name), None))
       else Vector.empty
-    // EXISTS{}/COUNT{} in projection items → precomputed columns;
-    // startNode()/endNode() → joined vertex bindings; nodes(p)/
-    // relationships(p) → materialized entity arrays
-    val (scopeQ, rewrittenExprs, _) = materializeSubqueries(scope, items0.map(_.expr))
-    val (scopeE, rewritten2) = materializeEndpointFns(scopeQ, rewrittenExprs)
-    val (scope1, rewritten3) = materializePathFns(scopeE, rewritten2)
-    val items0q = items0.zip(rewritten3).map { case (it, e) => it.copy(expr = e) }
+    val (scope1, rewritten) = materializeAccessors(scope, items0.map(_.expr))
+    val items0q = items0.zip(rewritten).map { case (it, e) => it.copy(expr = e) }
     val items = starItems ++ items0q
     require(items.nonEmpty, "empty projection")
 
@@ -2170,19 +1986,7 @@ final class Planner(
     // against the projected frame, and endpoint/path accessors (incl.
     // HOFs over a passed-through VLE binding) materialize like any other
     // filter position
-    where.foreach { w =>
-      val (s2, rw, _) = materializeSubqueries(out, Seq(w))
-      val (s3, rw2) = materializeEndpointFns(s2, rw)
-      val (s4, rw3) = materializePathFns(s3, rw2)
-      val filteredDf = s4.df.filter(exprc.compile(rw3.head, s4))
-      val keepNames = out.bindings.map(_.name).toSet
-      // see applyFilters: a kept binding's own column (e.g. the path's
-      // p@nids registered as a size() fast-path temp) is never dropped
-      val keepCols = out.bindings.flatMap(b => s4.colsOf(b)).toSet
-      val dropCols = s4.bindings.filterNot(b => keepNames(b.name))
-        .flatMap(b => s4.colsOf(b)).filterNot(keepCols)
-      out = out.withDf(filteredDf.drop(dropCols: _*))
-    }
+    where.foreach(w => out = filterBy(out, w))
 
     // sort items resolve: output aliases first (by AST equality),
     // hidden pre-projection columns next, output-scope compile last
@@ -2252,16 +2056,14 @@ final class Planner(
     if (isReturn) {
       // final output: materialize entity bindings as structs with their
       // public column names
-      // an unmatched OPTIONAL entity is a NULL value, not a struct of
-      // nulls (id is never null for a real entity)
+      // an unmatched OPTIONAL entity or path is a NULL value, not a
+      // struct of nulls (id is never null for a real entity)
       val finalCols = out.bindings.map {
-        case b: NodeB =>
-          when(col(idCol(b.name)).isNotNull, exprc.nodeStruct(b)).as(b.name)
-        case b: EdgeB =>
-          when(col(idCol(b.name)).isNotNull, exprc.edgeStruct(b)).as(b.name)
+        case b @ (_: NodeB | _: EdgeB) =>
+          when(col(idCol(b.name)).isNotNull, exprc.entityStruct(b)).as(b.name)
         case VleB(v) => col(idsCol(v)).as(v)
-        case PathB(v, _) => struct(
-          col(nidsCol(v)).as("nodes"), col(idsCol(v)).as("relationships")).as(v)
+        case PathB(v, _) => when(col(nidsCol(v)).isNotNull, struct(
+          col(nidsCol(v)).as("nodes"), col(idsCol(v)).as("relationships"))).as(v)
         case ValueB(n) => qcol(n)
       }
       out = out.rebind(out.df.select(finalCols: _*), out.bindings.map(b => ValueB(b.name)))
@@ -2991,6 +2793,10 @@ final class Planner(
   * sql/age_query.sql:49-54).
   */
 object Planner {
+  /** The id-array column a nodes()/relationships() call reads, whether it
+    * holds edges, and the edge labels it can hold. */
+  private[cypher] final case class IdArray(ids: String, isEdge: Boolean, relTypes: Set[String])
+
   /** Hard cap on the distinct-key probe behind `SET n = <runtime map>`.
     * Each key becomes a typed property column, so key cardinality IS
     * schema width — a pathological map (e.g. user-id-keyed) must fail

@@ -131,10 +131,19 @@ object Bfs {
     * diagnostic for the early-exit spec; not part of the API. */
   @volatile private[graft] var lastDepthExecuted: Int = 0
 
-  /** @param edges   (id, start_id, end_id) — pre-oriented for direction
+  /** Default [[shortestPaths]] explosion cap — named so the conf
+    * override below can tell "caller kept the default" apart from "a
+    * caller chose a cap deliberately". */
+  val DefaultMaxPaths: Long = 1000000L
+
+  /** Shortest paths from every source to every target, by level-wise
+    * frontier expansion.
+    *
+    * @param edges   (id, start_id, end_id) — pre-oriented for direction
     * @param sources source vertex ids: (id)
     * @param targets target vertex ids: (id); paths are reported on first
     *                (= minimal-hop) arrival of a (source, target) pair
+    * @param maxDepth the most hops a path may take
     * @param all     keep every equal-length shortest path, not just one
     * @param maxPaths hard cap on materialized paths when all=true
     *                (reference caps too: age_vle.c:3215-3266). The
@@ -145,13 +154,10 @@ object Bfs {
     *                distributed, never driver-collected), so a cluster
     *                with the shuffle capacity for a bigger answer can
     *                raise it deliberately without a code change.
-    * @return (src_id, dst_id, edge_ids array<long>, hops)
+    * @param withNodes also return each path's vertex ids, in path order
+    * @return (src_id, dst_id, edge_ids array<long>, hops), plus
+    *         node_ids array<long> when withNodes
     */
-  /** Default [[shortestPaths]] explosion cap — named so the conf
-    * override below can tell "caller kept the default" apart from "a
-    * caller chose a cap deliberately". */
-  val DefaultMaxPaths: Long = 1000000L
-
   def shortestPaths(
       edges: DataFrame,
       sources: DataFrame,
